@@ -7,7 +7,8 @@ import org.apache.spark.sql.functions._
 /** Shared plumbing for the fit-once artifact family (keep-lists, IVF
   * quantizers, MinHash/bigram signature stores, co-occurrence edges,
   * language profiles): a CONTENT fingerprint to key stored artifacts
-  * and an atomic ensure-built accessor.
+  * and [[fitOnce]], the one place that turns (input, family, tag,
+  * parameters) into a warehouse path and builds it atomically.
   *
   * Why not key by row count: a corpus regenerated with the same
   * cardinality but different content would silently serve stale
@@ -26,18 +27,24 @@ import org.apache.spark.sql.functions._
   */
 object Artifacts {
 
-  /** (sessionId, plan semanticHash) → fingerprint; makes repeat calls
-    * within a session free (no listing, no Spark action). */
+  /** (sessionId, plan semanticHash, input file names) → fingerprint;
+    * makes repeat calls within a session free (no file status calls,
+    * no Spark action). The file names come from the listing the plan
+    * already holds, and the plan hash alone does not change when the
+    * files under a path are rewritten: with the names in the key, a
+    * new read of a rewritten input misses the cache. */
   private val fpCache =
     new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   def fingerprintOf(df: DataFrame): String = {
+    val files = df.inputFiles.sorted
     val key = System.identityHashCode(df.sparkSession) + ":" +
-      df.queryExecution.analyzed.semanticHash()
-    fpCache.computeIfAbsent(key, _ => compute(df))
+      df.queryExecution.analyzed.semanticHash() + ":" +
+      fnv(files.mkString("\n"))
+    fpCache.computeIfAbsent(key, _ => compute(df, files))
   }
 
-  private def compute(df: DataFrame): String = {
+  private def compute(df: DataFrame, files: Array[String]): String = {
     // Session-STABLE plan signature. semanticHash() is NOT stable
     // across JVMs — it hashes relation objects whose FileIndex uses
     // identity hashCode — so keying on it silently rebuilt every
@@ -52,11 +59,10 @@ object Artifacts {
       .treeString(verbose = true, addSuffix = false,
         maxFields = Int.MaxValue, printOperatorId = false)
       .replaceAll("@[0-9a-fA-F]+", "")
-    val files = df.inputFiles
     val body: String =
       if (files.nonEmpty) {
         val conf = df.sparkSession.sparkContext.hadoopConfiguration
-        files.sorted.map { f =>
+        files.map { f =>
           val p = new Path(f)
           val st = p.getFileSystem(conf).getFileStatus(p)
           s"$f|${st.getLen}|${st.getModificationTime}"
@@ -68,25 +74,50 @@ object Artifacts {
           count(lit(1)).as("n")).head()
         s"content|${r.getLong(0)}|${r.getLong(1)}"
       }
-    // FNV-1a over the inventory string → a short stable hex token
+    fnv(s"$planHash\n$body")
+  }
+
+  /** FNV-1a over a string → a short stable hex token. */
+  private def fnv(s: String): String = {
     var h = 0xcbf29ce484222325L
-    (s"$planHash\n$body").foreach { c => h ^= c; h *= 0x100000001b3L }
+    s.foreach { c => h ^= c; h *= 0x100000001b3L }
     java.lang.Long.toHexString(h)
+  }
+
+  /** The fit-once artifact for `input`, built by `build` on first use:
+    * `<warehouse>/<family>/[<kind>_]<tag>_<fingerprint>[_<param>…]`.
+    * The dataset tag is sanitised to one path segment; the content
+    * fingerprint and every parameter are in the key, so a rewritten
+    * input or a changed parameter builds a new artifact and later
+    * calls with the same key find the built one. `build` writes the
+    * artifact to the temp path it is given. */
+  def fitOnce(input: DataFrame, family: String, datasetTag: String,
+      kind: String = "", params: Seq[Any] = Nil)(
+      build: String => Unit): String = {
+    val spark = input.sparkSession
+    val warehouse = spark.conf.get("spark.sql.warehouse.dir")
+    val tag = datasetTag.replaceAll("[^A-Za-z0-9._-]", "_")
+    val name = (Seq(kind).filter(_.nonEmpty) ++
+      Seq(tag, fingerprintOf(input)) ++ params.map(_.toString)).mkString("_")
+    ensure(spark, s"$warehouse/$family/$name")(build)
   }
 
   /** Build-once accessor: if `path/_SUCCESS` does not exist, run
     * `build` against a temp sibling and atomically rename it into
     * place. Concurrent sessions race safely: the loser's rename fails
     * against the winner's directory and its temp output is discarded —
-    * readers only ever see a complete artifact. */
-  def ensure(spark: SparkSession, path: String)(
+    * readers only ever see a complete artifact. A failed build leaves
+    * nothing behind: its temp directory is deleted before the failure
+    * propagates. */
+  private def ensure(spark: SparkSession, path: String)(
       build: String => Unit): String = {
     val target = new Path(path)
     val fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(new Path(path, "_SUCCESS"))) {
       val tmp = new Path(
         path + ".tmp-" + java.util.UUID.randomUUID.toString.take(8))
-      build(tmp.toString)
+      try build(tmp.toString)
+      catch { case t: Throwable => fs.delete(tmp, true); throw t }
       // re-check: Hadoop rename onto an existing directory would nest
       // tmp inside it — if another session won the race, just discard
       if (fs.exists(new Path(path, "_SUCCESS")) || !fs.rename(tmp, target))

@@ -128,31 +128,29 @@ object Bpe {
     merges.toSeq
   }
 
+  /** Key parameters of the BPE stores. The word-filter regex is one of
+    * them: a filter change must invalidate stored merges, not silently
+    * serve the old vocabulary. */
+  private def storeParams: Seq[Any] =
+    Seq(TopWords, NumMerges, Integer.toHexString(WordRe.hashCode))
+
   /** Fit-once merge table for a dataset: persisted to the warehouse
     * keyed by the corpus content fingerprint (any input rewrite → new
     * key), built exactly once per dataset version. */
   def mergesFor(docs: DataFrame, datasetTag: String): Seq[Merge] = {
     val spark = docs.sparkSession
-    val fp = graft.engine.io.Artifacts.fingerprintOf(docs)
-    val warehouse = spark.conf.get("spark.sql.warehouse.dir")
-    val safe = datasetTag.replaceAll("[^A-Za-z0-9._-]", "_")
-    // the word-filter regex is part of the key: a filter change must
-    // invalidate stored merges, not silently serve the old vocabulary
-    val wre = Integer.toHexString(WordRe.hashCode)
-    val path = graft.engine.io.Artifacts.ensure(spark,
-      s"$warehouse/graft_bpe/merges_${safe}_${fp}_${TopWords}_" +
-        s"${NumMerges}_$wre") {
-      tmp =>
-        val top = wordCounts(docs)
-          .orderBy(desc("cnt"), asc("word")).limit(TopWords)
-          .collect().map(r => (r.getString(0), r.getLong(1))).toSeq
-        val ms = trainMerges(top, NumMerges)
-        val schema = StructType(Seq(StructField("rank", IntegerType),
-          StructField("lhs", StringType), StructField("rhs", StringType)))
-        spark.createDataFrame(
-          spark.sparkContext.parallelize(
-            ms.map(m => Row(m.rank, m.lhs, m.rhs)), 1), schema)
-          .coalesce(1).write.mode("overwrite").parquet(tmp)
+    val path = graft.engine.io.Artifacts.fitOnce(docs, "graft_bpe",
+      datasetTag, "merges", storeParams) { tmp =>
+      val top = wordCounts(docs)
+        .orderBy(desc("cnt"), asc("word")).limit(TopWords)
+        .collect().map(r => (r.getString(0), r.getLong(1))).toSeq
+      val ms = trainMerges(top, NumMerges)
+      val schema = StructType(Seq(StructField("rank", IntegerType),
+        StructField("lhs", StringType), StructField("rhs", StringType)))
+      spark.createDataFrame(
+        spark.sparkContext.parallelize(
+          ms.map(m => Row(m.rank, m.lhs, m.rhs)), 1), schema)
+        .coalesce(1).write.mode("overwrite").parquet(tmp)
     }
     spark.read.parquet(path).collect()
       .map(r => Merge(r.getInt(0), r.getString(1), r.getString(2)))
@@ -221,16 +219,9 @@ object Bpe {
     * consumer" is still corpus scans; a 4-column store read is not). */
   def tokensStoreFor(docs: DataFrame, datasetTag: String): DataFrame = {
     val spark = docs.sparkSession
-    val fp = graft.engine.io.Artifacts.fingerprintOf(docs)
-    val warehouse = spark.conf.get("spark.sql.warehouse.dir")
-    val safe = datasetTag.replaceAll("[^A-Za-z0-9._-]", "_")
-    val wre = Integer.toHexString(WordRe.hashCode)
-    val path = graft.engine.io.Artifacts.ensure(spark,
-      s"$warehouse/graft_bpe/tokens_${safe}_${fp}_${TopWords}_" +
-        s"${NumMerges}_$wre") {
-      tmp =>
-        tokensPerDoc(docs, datasetTag)
-          .write.mode("overwrite").parquet(tmp)
+    val path = graft.engine.io.Artifacts.fitOnce(docs, "graft_bpe",
+      datasetTag, "tokens", storeParams) { tmp =>
+      tokensPerDoc(docs, datasetTag).write.mode("overwrite").parquet(tmp)
     }
     spark.read.parquet(path)
   }

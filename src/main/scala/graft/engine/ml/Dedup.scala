@@ -30,17 +30,14 @@ object Dedup {
   private val trackedCaches =
     scala.collection.mutable.ArrayBuffer.empty[DataFrame]
 
-  private def trackCache(df: DataFrame): DataFrame =
-    trackedCaches.synchronized { val c = df.cache(); trackedCaches += c; c }
-
-  /** Public tracked cache for intermediates reused several times within
+  /** Tracked cache for intermediates reused several times within
     * ONE query invocation (the edge relation of an iterative graph key,
     * a rank map consumed by two joins). MEMORY_AND_DISK, so an
     * oversized relation spills instead of OOMing at scale; released by
     * the runner's existing [[unpersistTracked]] sweep, so nothing
     * persists across queries or runs. */
   def cacheTracked(df: DataFrame): DataFrame =
-    if (sys.env.get("GRAFT_NO_CACHE").contains("1")) df else trackCache(df)
+    trackedCaches.synchronized { val c = df.cache(); trackedCaches += c; c }
 
   def unpersistTracked(): Unit = trackedCaches.synchronized {
     trackedCaches.foreach(df =>
@@ -86,7 +83,7 @@ object Dedup {
     // once per side (the metric udf blocks exchange reuse) — and at
     // scale the capped inverted index is exactly what a set-similarity
     // join materializes once anyway
-    trackCache(assign.withColumn("bucket_n", count(lit(1)).over(w))
+    cacheTracked(assign.withColumn("bucket_n", count(lit(1)).over(w))
       .filter(col("bucket_n") >= 2 && keep(col("bucket_n")))
       .drop("bucket_n"))
   }
@@ -192,7 +189,7 @@ object Dedup {
         }
       }
       .toDF("doc_id", "sh_h", "sig")
-      .transform(trackCache)
+      .transform(cacheTracked)
   }
 
   /** LSH banding: split each signature into (bands × rowsPerBand), hash
@@ -316,18 +313,14 @@ object Dedup {
   def bandIndexFor(docs: DataFrame, datasetTag: String,
       numHashes: Int = 32, bands: Int = 4, rowsPerBand: Int = 8,
       maxBucket: Int = 10000, seed: Long = 42L): DataFrame = {
-    val spark = docs.sparkSession
-    val fp = graft.engine.io.Artifacts.fingerprintOf(docs)
-    val warehouse = spark.conf.get("spark.sql.warehouse.dir")
-    val safe = datasetTag.replaceAll("[^A-Za-z0-9._-]", "_")
-    val path = graft.engine.io.Artifacts.ensure(spark,
-      s"$warehouse/graft_signatures/bands_${safe}_${fp}_" +
-        s"${numHashes}_${bands}_${rowsPerBand}_${maxBucket}_$seed") { tmp =>
+    val path = graft.engine.io.Artifacts.fitOnce(docs, "graft_signatures",
+      datasetTag, "bands",
+      Seq(numHashes, bands, rowsPerBand, maxBucket, seed)) { tmp =>
       bandedCapped(minhashStoreFor(docs, datasetTag, numHashes, seed),
         bands, rowsPerBand, maxBucket)
         .write.mode("overwrite").parquet(tmp)
     }
-    spark.read.parquet(path)
+    docs.sparkSession.read.parquet(path)
   }
 
   /** Exact Jaccard on candidate pairs. Two stages: a MinHash-estimate
@@ -366,16 +359,11 @@ object Dedup {
     * re-sweeping the text. */
   def minhashStoreFor(docs: DataFrame, datasetTag: String,
       numHashes: Int = 32, seed: Long = 42L): DataFrame = {
-    val spark = docs.sparkSession
-    val fp = graft.engine.io.Artifacts.fingerprintOf(docs)
-    val warehouse = spark.conf.get("spark.sql.warehouse.dir")
-    val safe = datasetTag.replaceAll("[^A-Za-z0-9._-]", "_")
-    val path = graft.engine.io.Artifacts.ensure(spark,
-      s"$warehouse/graft_signatures/minhash_${safe}_${fp}_" +
-        s"${numHashes}_$seed") { tmp =>
+    val path = graft.engine.io.Artifacts.fitOnce(docs, "graft_signatures",
+      datasetTag, "minhash", Seq(numHashes, seed)) { tmp =>
       signatures(docs, numHashes, seed).write.mode("overwrite").parquet(tmp)
     }
-    trackCache(spark.read.parquet(path))
+    cacheTracked(docs.sparkSession.read.parquet(path))
   }
 
   /** MinHash-LSH near-dup pipeline: shingle → sign → band → verify.
@@ -511,7 +499,7 @@ object Dedup {
   def ngramJaccardPairs(docs: DataFrame, threshold: Double,
       freqOrdered: Boolean = false, maxBucket: Int = 10000): DataFrame = {
     // reused by the prefix index + verify joins
-    val grams = trackCache(bigramSets(docs))
+    val grams = cacheTracked(bigramSets(docs))
     val cand = ngramCandidates(grams, threshold, freqOrdered, maxBucket)
     graft.engine.expr.GraftFunctions.ensureRegistered(docs.sparkSession)
     cand
@@ -586,15 +574,11 @@ object Dedup {
     * so regenerated data re-signs — see
     * [[graft.engine.io.Artifacts.fingerprintOf]]. */
   def signatureStoreFor(docs: DataFrame, datasetTag: String): DataFrame = {
-    val spark = docs.sparkSession
-    val fp = graft.engine.io.Artifacts.fingerprintOf(docs)
-    val warehouse = spark.conf.get("spark.sql.warehouse.dir")
-    val safe = datasetTag.replaceAll("[^A-Za-z0-9._-]", "_")
-    val path = graft.engine.io.Artifacts.ensure(spark,
-      s"$warehouse/graft_signatures/${safe}_$fp") { tmp =>
+    val path = graft.engine.io.Artifacts.fitOnce(docs, "graft_signatures",
+      datasetTag) { tmp =>
       bigramSets(docs).write.mode("overwrite").parquet(tmp)
     }
-    spark.read.parquet(path)
+    docs.sparkSession.read.parquet(path)
   }
 
   def incrementalNearDups(existing: DataFrame, batch: DataFrame,
@@ -610,7 +594,7 @@ object Dedup {
       case Some(tag) => signatureStoreFor(existing, tag)
       case None      => bigramSets(existing)
     }
-    val grams = trackCache(
+    val grams = cacheTracked(
       existingSigs.withColumn("is_new", lit(false))
         .unionByName(bigramSets(batch).withColumn("is_new", lit(true))))
     val plenSql =
@@ -682,7 +666,7 @@ object Dedup {
     * test-asserted by forcing each path on the same graph. */
   def resolvePairs(pairs: DataFrame, docs: DataFrame,
       maxRounds: Int = 50, collectThreshold: Long = 100000L): DataFrame = {
-    val p = trackCache(pairs.select(col("doc_a"), col("doc_b")).distinct())
+    val p = cacheTracked(pairs.select(col("doc_a"), col("doc_b")).distinct())
     if (p.count() <= collectThreshold) resolveOnDriver(p, docs)
     else resolveDistributed(p, docs, maxRounds)
   }
@@ -695,19 +679,15 @@ object Dedup {
     * re-resolves. */
   def keepListFor(docs: DataFrame, datasetTag: String,
       threshold: Double): DataFrame = {
-    val spark = docs.sparkSession
-    val fp = graft.engine.io.Artifacts.fingerprintOf(docs)
-    val warehouse = spark.conf.get("spark.sql.warehouse.dir")
-    val safe = datasetTag.replaceAll("[^A-Za-z0-9._-]", "_")
     val t = math.round(threshold * 1000)
-    val path = graft.engine.io.Artifacts.ensure(spark,
-      s"$warehouse/graft_keeplists/${safe}_${fp}_t$t") { tmp =>
+    val path = graft.engine.io.Artifacts.fitOnce(docs, "graft_keeplists",
+      datasetTag, params = Seq(s"t$t")) { tmp =>
       resolvePairs(
         ngramJaccardPairs(docs, threshold).select("doc_a", "doc_b"), docs)
         .write.mode("overwrite").parquet(tmp)
       unpersistTracked()
     }
-    spark.read.parquet(path)
+    docs.sparkSession.read.parquet(path)
   }
 
   private def resolveOnDriver(pairs: DataFrame,
@@ -742,7 +722,7 @@ object Dedup {
 
   private def resolveDistributed(pairs: DataFrame, docs: DataFrame,
       maxRounds: Int): DataFrame = {
-    val edges = trackCache(
+    val edges = cacheTracked(
       pairs.select(col("doc_a").as("src"), col("doc_b").as("dst"))
         .union(pairs.select(col("doc_b").as("src"),
           col("doc_a").as("dst")))

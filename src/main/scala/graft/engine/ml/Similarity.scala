@@ -53,12 +53,8 @@ object Similarity {
     // paid — sim_search_topk regressed 0.43→0.64 s from the r14 spread
     // (r14-verdict item 4). Callers with LARGE probe sets pre-spread the
     // corpus themselves (see batchGroundTruthFor, where the spread
-    // measured a win). GRAFT_BF_SPREAD=1 restores the r14 shape for A/B.
-    val spreadEmb =
-      if (sys.env.get("GRAFT_BF_SPREAD").contains("1"))
-        graft.engine.ops.Scale.spreadForCompute(emb)
-      else emb
-    val scored = spreadEmb
+    // measured a win).
+    val scored = emb
       .crossJoin(broadcast(probeDf))
       .filter(col("vec_id") =!= col("probe_id"))
       .select(col("probe_id"), col("vec_id"),
@@ -613,17 +609,11 @@ object Similarity {
   def quantizerFor(emb: DataFrame, datasetTag: String, nCells: Int = 16,
       seed: Long = 42L): Quantizer = {
     val spark = emb.sparkSession
-    val fp = graft.engine.io.Artifacts.fingerprintOf(emb)
-    val key = s"${datasetTag}|$fp|$nCells|$seed"
-    quantizerCache.computeIfAbsent(key, _ => {
-      val warehouse = spark.conf.get("spark.sql.warehouse.dir")
-      val safe = datasetTag.replaceAll("[^A-Za-z0-9._-]", "_")
-      val path = graft.engine.io.Artifacts.ensure(spark,
-        s"$warehouse/graft_quantizers/${safe}_${fp}_${nCells}_${seed}_w1") {
-        tmp => saveQuantizer(spark, fitCentroids(emb, nCells, seed), tmp)
-      }
-      loadQuantizer(spark, path)
-    })
+    val path = graft.engine.io.Artifacts.fitOnce(emb, "graft_quantizers",
+      datasetTag, params = Seq(nCells, seed, "w1")) { tmp =>
+      saveQuantizer(spark, fitCentroids(emb, nCells, seed), tmp)
+    }
+    quantizerCache.computeIfAbsent(path, _ => loadQuantizer(spark, path))
   }
 
   /** [[ivfTopKWith]] against the per-dataset cached/persisted quantizer
@@ -715,40 +705,23 @@ object Similarity {
     * index. Keyed by both inputs' content fingerprints. */
   def appendedIndexFor(base: DataFrame, batch: DataFrame,
       datasetTag: String, nCells: Int = 16, seed: Long = 42L): String = {
-    val spark = base.sparkSession
-    val fpB = graft.engine.io.Artifacts.fingerprintOf(base)
-    val fpN = graft.engine.io.Artifacts.fingerprintOf(batch)
-    val warehouse = spark.conf.get("spark.sql.warehouse.dir")
-    val safe = datasetTag.replaceAll("[^A-Za-z0-9._-]", "_")
-    graft.engine.io.Artifacts.ensure(spark,
-      s"$warehouse/graft_cell_index/append_${safe}_${fpB}_${fpN}" +
-        s"_${nCells}_${seed}_w1") { tmp =>
+    val fpBatch = graft.engine.io.Artifacts.fingerprintOf(batch)
+    graft.engine.io.Artifacts.fitOnce(base, "graft_cell_index", datasetTag,
+      "append", Seq(fpBatch, nCells, seed, "w1")) { tmp =>
       writeCellIndex(base, tmp, datasetTag, nCells, seed)
-      appendCellIndex(spark, tmp, batch)
+      appendCellIndex(base.sparkSession, tmp, batch)
     }
   }
-
-  private val cellIndexCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   /** Build-once accessor for the cell-partitioned index of a dataset:
     * first call writes it under the warehouse, later calls (any
     * session — checked via _SUCCESS) return the existing path. */
   def cellIndexFor(emb: DataFrame, datasetTag: String, nCells: Int = 16,
-      seed: Long = 42L, replication: Int = 1): String = {
-    val spark = emb.sparkSession
-    val fp = graft.engine.io.Artifacts.fingerprintOf(emb)
-    val key = s"$datasetTag|$fp|$nCells|$seed|$replication"
-    cellIndexCache.computeIfAbsent(key, _ => {
-      val warehouse = spark.conf.get("spark.sql.warehouse.dir")
-      val safe = datasetTag.replaceAll("[^A-Za-z0-9._-]", "_")
-      graft.engine.io.Artifacts.ensure(spark,
-        s"$warehouse/graft_cell_index/${safe}_${fp}_${nCells}_${seed}" +
-          s"_r${replication}_w1") { tmp =>
-        writeCellIndex(emb, tmp, datasetTag, nCells, seed, replication)
-      }
-    })
-  }
+      seed: Long = 42L, replication: Int = 1): String =
+    graft.engine.io.Artifacts.fitOnce(emb, "graft_cell_index", datasetTag,
+      params = Seq(nCells, seed, s"r$replication", "w1")) { tmp =>
+      writeCellIndex(emb, tmp, datasetTag, nCells, seed, replication)
+    }
 
   /** IVF search over a cell-partitioned index written by
     * [[writeCellIndex]]. Probe cells are computed driver-side from the
@@ -806,12 +779,8 @@ object Similarity {
     * set is small enough to pin exactly. */
   def batchGroundTruthFor(emb: DataFrame, datasetTag: String,
       k: Int): DataFrame = {
-    val spark = emb.sparkSession
-    val fp = graft.engine.io.Artifacts.fingerprintOf(emb)
-    val warehouse = spark.conf.get("spark.sql.warehouse.dir")
-    val safe = datasetTag.replaceAll("[^A-Za-z0-9._-]", "_")
-    val path = graft.engine.io.Artifacts.ensure(spark,
-      s"$warehouse/graft_groundtruth/batch_cosine_${safe}_${fp}_$k") { tmp =>
+    val path = graft.engine.io.Artifacts.fitOnce(emb, "graft_groundtruth",
+      datasetTag, "batch_cosine", Seq(k)) { tmp =>
       // the batch probe set is ~10% of the corpus, so the |emb|×|probes|
       // loop is heavy enough to earn the spread (r14 A/B win) — the
       // small-probe entry point no longer spreads, so spread here
@@ -819,7 +788,7 @@ object Similarity {
         batchProbes(emb), k)
         .write.mode("overwrite").parquet(tmp)
     }
-    spark.read.parquet(path)
+    emb.sparkSession.read.parquet(path)
   }
 
   /** Large-probe-set IVF — the missing quadrant of the family: the
@@ -986,7 +955,7 @@ object Similarity {
     // Re-entrancy contract: the target must be absent/empty. Without
     // this, a second invocation appends hot-cell rewrites next to the
     // previous compaction's files (duplicating rows), and an
-    // interrupted Artifacts.ensure rename could nest a tmp dir inside
+    // interrupted Artifacts.fitOnce rename could nest a tmp dir inside
     // a half-built index.
     val target = new org.apache.hadoop.fs.Path(targetPath)
     require(!fs.exists(target) || fs.listStatus(target).isEmpty,
@@ -1009,7 +978,7 @@ object Similarity {
       new org.apache.hadoop.fs.Path(s"$targetPath/_quantizer"),
       false, conf)
     // When every cell is cold-copied, no Spark write runs and no
-    // _SUCCESS lands — Artifacts.ensure callers would treat the
+    // _SUCCESS lands — Artifacts.fitOnce callers would treat the
     // compacted index as unbuilt forever. Emit the marker explicitly
     // so the artifact is complete on both paths.
     fs.create(new org.apache.hadoop.fs.Path(targetPath, "_SUCCESS"),
@@ -1026,11 +995,7 @@ object Similarity {
     // NO spreadForCompute here (r15): see bruteForceTopK — this entry
     // point only ever serves the tiny label-stratified probe set, where
     // the repartition exchange costs more than the parallelism pays.
-    val spreadEmb =
-      if (sys.env.get("GRAFT_BF_SPREAD").contains("1"))
-        graft.engine.ops.Scale.spreadForCompute(emb)
-      else emb
-    val scored = spreadEmb
+    val scored = emb
       .crossJoin(broadcast(probeDf))
       .filter(col("vec_id") =!= col("probe_id"))
       .select(col("probe_id"), col("vec_id"),
@@ -1054,18 +1019,14 @@ object Similarity {
     * fingerprint like the quantizer; metric ∈ {cosine, euclid}. */
   def groundTruthFor(emb: DataFrame, datasetTag: String, k: Int,
       metric: String = "cosine"): DataFrame = {
-    val spark = emb.sparkSession
-    val fp = graft.engine.io.Artifacts.fingerprintOf(emb)
-    val warehouse = spark.conf.get("spark.sql.warehouse.dir")
-    val safe = datasetTag.replaceAll("[^A-Za-z0-9._-]", "_")
-    val path = graft.engine.io.Artifacts.ensure(spark,
-      s"$warehouse/graft_groundtruth/${metric}_${safe}_${fp}_$k") { tmp =>
+    val path = graft.engine.io.Artifacts.fitOnce(emb, "graft_groundtruth",
+      datasetTag, metric, Seq(k)) { tmp =>
       val p = probes(emb)
       (if (metric == "euclid") bruteForceTopKEuclid(emb, p, k)
        else bruteForceTopK(emb, p, k))
         .write.mode("overwrite").parquet(tmp)
     }
-    spark.read.parquet(path)
+    emb.sparkSession.read.parquet(path)
   }
 
   /** Per-probe recall audit of an ANN result against the exact top-k

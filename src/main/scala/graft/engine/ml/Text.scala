@@ -328,16 +328,12 @@ object Text {
     * dataset tag + content fingerprint so regenerated data refits. */
   def langIdProfileFor(docs: DataFrame, datasetTag: String,
       topK: Int = 40): DataFrame = {
-    val spark = docs.sparkSession
-    val fp = graft.engine.io.Artifacts.fingerprintOf(docs)
-    val warehouse = spark.conf.get("spark.sql.warehouse.dir")
-    val safe = datasetTag.replaceAll("[^A-Za-z0-9._-]", "_")
-    val path = graft.engine.io.Artifacts.ensure(spark,
-      s"$warehouse/graft_lang_profiles/profile_${safe}_${fp}_$topK") { tmp =>
+    val path = graft.engine.io.Artifacts.fitOnce(docs, "graft_lang_profiles",
+      datasetTag, "profile", Seq(topK)) { tmp =>
       langIdProfile(docs, topK).coalesce(1).write.mode("overwrite")
         .parquet(tmp)
     }
-    spark.read.parquet(path)
+    docs.sparkSession.read.parquet(path)
   }
 
   /** Language-ID by character-trigram profile overlap: learn the topK

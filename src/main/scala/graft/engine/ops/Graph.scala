@@ -20,12 +20,8 @@ object Graph {
     * relation and apply their own threshold — the 6M-pair projection
     * agg is paid once, not per query. */
   def coOccurrenceEdgesFor(pairs: DataFrame, datasetTag: String): DataFrame = {
-    val spark = pairs.sparkSession
-    val fp = graft.engine.io.Artifacts.fingerprintOf(pairs)
-    val warehouse = spark.conf.get("spark.sql.warehouse.dir")
-    val safe = datasetTag.replaceAll("[^A-Za-z0-9._-]", "_")
-    val path = graft.engine.io.Artifacts.ensure(spark,
-      s"$warehouse/graft_graph_edges/${safe}_$fp") { tmp =>
+    val path = graft.engine.io.Artifacts.fitOnce(pairs, "graft_graph_edges",
+      datasetTag) { tmp =>
       pairs
         .groupBy("pk")
         .agg(sort_array(collect_set(col("sk"))).as("sks"))
@@ -37,7 +33,7 @@ object Graph {
         .agg(count(lit(1)).as("w"))
         .write.mode("overwrite").parquet(tmp)
     }
-    spark.read.parquet(path)
+    pairs.sparkSession.read.parquet(path)
   }
 
   /** PageRank by `iterations` rounds of the power method over a
@@ -118,18 +114,14 @@ object Graph {
     * once (artifact-keyed like the co-occurrence projection) makes
     * every round a small parquet read. */
   def bipartiteEdgesFor(pairs: DataFrame, datasetTag: String): DataFrame = {
-    val spark = pairs.sparkSession
-    val fp = graft.engine.io.Artifacts.fingerprintOf(pairs)
-    val warehouse = spark.conf.get("spark.sql.warehouse.dir")
-    val safe = datasetTag.replaceAll("[^A-Za-z0-9._-]", "_")
-    val path = graft.engine.io.Artifacts.ensure(spark,
-      s"$warehouse/graft_graph_edges/bip_${safe}_$fp") { tmp =>
+    val path = graft.engine.io.Artifacts.fitOnce(pairs, "graft_graph_edges",
+      datasetTag, "bip") { tmp =>
       val e0 = pairs.select(col("a"), col("b")).distinct()
       e0.select(col("a").as("src"), col("b").as("dst"))
         .unionByName(e0.select(col("b").as("src"), col("a").as("dst")))
         .write.mode("overwrite").parquet(tmp)
     }
-    spark.read.parquet(path)
+    pairs.sparkSession.read.parquet(path)
   }
 
   /** Persisted label-propagation result — the fit-once form: both the
@@ -139,16 +131,12 @@ object Graph {
     * Fingerprint-keyed on the edge relation like every other store. */
   def labelPropagationFor(edges: DataFrame, iterations: Int,
       datasetTag: String): DataFrame = {
-    val spark = edges.sparkSession
-    val fp = graft.engine.io.Artifacts.fingerprintOf(edges)
-    val warehouse = spark.conf.get("spark.sql.warehouse.dir")
-    val safe = datasetTag.replaceAll("[^A-Za-z0-9._-]", "_")
-    val path = graft.engine.io.Artifacts.ensure(spark,
-      s"$warehouse/graft_graph_labels/${safe}_r${iterations}_$fp") { tmp =>
+    val path = graft.engine.io.Artifacts.fitOnce(edges, "graft_graph_labels",
+      datasetTag, params = Seq(s"r$iterations")) { tmp =>
       labelPropagationImpl(edges, iterations)
         .write.mode("overwrite").parquet(tmp)
     }
-    spark.read.parquet(path)
+    edges.sparkSession.read.parquet(path)
   }
 
   /** Persisted single-seed personalized PageRank — the fit-once form
@@ -162,12 +150,8 @@ object Graph {
     * faster than re-deriving edges per round. */
   def personalizedPagerankFor(edges: DataFrame, iterations: Int,
       datasetTag: String): DataFrame = {
-    val spark = edges.sparkSession
-    val fp = graft.engine.io.Artifacts.fingerprintOf(edges)
-    val warehouse = spark.conf.get("spark.sql.warehouse.dir")
-    val safe = datasetTag.replaceAll("[^A-Za-z0-9._-]", "_")
-    val path = graft.engine.io.Artifacts.ensure(spark,
-      s"$warehouse/graft_graph_ppr/${safe}_r${iterations}_$fp") { tmp =>
+    val path = graft.engine.io.Artifacts.fitOnce(edges, "graft_graph_ppr",
+      datasetTag, params = Seq(s"r$iterations")) { tmp =>
       val deg = edges.groupBy("src").agg(count(lit(1)).as("deg"))
       val ed = edges.join(deg, Seq("src")).localCheckpoint(true)
       val seed = ed.filter(col("src") % 2 === 0)
@@ -199,7 +183,7 @@ object Graph {
       }
       pi.write.mode("overwrite").parquet(tmp)
     }
-    spark.read.parquet(path)
+    edges.sparkSession.read.parquet(path)
   }
 
   private def labelPropagationImpl(edges: DataFrame,

@@ -1,7 +1,6 @@
 package graft.engine.stream
 
 import org.apache.spark.sql.{DataFrame, Dataset, Row}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
@@ -44,28 +43,13 @@ object Sinks {
     // per map task reaches the exchange and nothing is sorted;
     // (t_us, event_id) is unique per user so the argmax is total —
     // identical rows to the old row_number()=1 pick.
-    // GRAFT_SINK_R13=1 restores the r13 rank-window pick + unclustered
-    // write for A/B (r15 re-adjudication of the r14 rewrite, verdict
-    // item 3); GRAFT_SINK_WINPICK / GRAFT_SINK_NOCLUSTER flip the two
-    // halves independently.
-    val winPick = sys.env.get("GRAFT_SINK_R13").contains("1") ||
-      sys.env.get("GRAFT_SINK_WINPICK").contains("1")
-    val noCluster = sys.env.get("GRAFT_SINK_R13").contains("1") ||
-      sys.env.get("GRAFT_SINK_NOCLUSTER").contains("1")
-    def latestPerKey(df: DataFrame): DataFrame =
-      if (winPick) {
-        val w = org.apache.spark.sql.expressions.Window
-          .partitionBy("user_id")
-          .orderBy(col("t_us").desc, col("event_id").desc)
-        df.withColumn("_rn", row_number().over(w))
-          .filter(col("_rn") === 1).drop("_rn")
-      } else df.groupBy("user_id")
-        .agg(max_by(
-          struct((cols.filterNot(_ == "user_id") :+ "bucket").map(col): _*),
-          struct(col("t_us"), col("event_id"))).as("_r"))
-        .select(col("user_id") +:
-          (cols.filterNot(_ == "user_id") :+ "bucket")
-            .map(c => col(s"_r.$c").as(c)): _*)
+    def latestPerKey(df: DataFrame): DataFrame = df.groupBy("user_id")
+      .agg(max_by(
+        struct((cols.filterNot(_ == "user_id") :+ "bucket").map(col): _*),
+        struct(col("t_us"), col("event_id"))).as("_r"))
+      .select(col("user_id") +:
+        (cols.filterNot(_ == "user_id") :+ "bucket")
+          .map(c => col(s"_r.$c").as(c)): _*)
     // latest per key within the batch first: shrinks the merge input.
     // Persisted because it feeds TWO jobs — the touched-bucket probe
     // and the merge write — and recomputing it repeats the batch scan
@@ -99,9 +83,8 @@ object Sinks {
     // directory (tasks × buckets small files per batch, re-read by the
     // NEXT batch's merge). maxRecordsPerFile keeps a hot bucket from
     // becoming one oversized file at scale.
-    (if (noCluster) merged.write
-     else merged.repartition(col("bucket"))
-       .write.option("maxRecordsPerFile", 5000000))
+    merged.repartition(col("bucket"))
+      .write.option("maxRecordsPerFile", 5000000)
       .partitionBy("bucket")
       .option("partitionOverwriteMode", "dynamic")
       .mode("overwrite")

@@ -455,7 +455,7 @@ object IoQueries {
     // scan_merge_schema's read-side merge: evolve a STORED table in
     // place. The old file generation is conform-rewritten to the v2
     // metadata (the new column backfilled as a TYPED null) and swapped
-    // in atomically (stage + rename — the same move Artifacts.ensure
+    // in atomically (stage + rename — the same move Artifacts.fitOnce
     // makes); the new writer generation appends rows that carry the
     // column; the evolved table then reads BY NAME through the catalog
     // with one schema across both generations. At 100 TB the rewrite

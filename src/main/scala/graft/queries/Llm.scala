@@ -1413,14 +1413,12 @@ object Llm {
         val base = emb.filter(col("vec_id") % 5 =!= 0)
         val batch = emb.filter(col("vec_id") % 5 === 0)
         val idx = Similarity.appendedIndexFor(base, batch, d)
-        val fp = graft.engine.io.Artifacts.fingerprintOf(emb)
-        val warehouse = s.conf.get("spark.sql.warehouse.dir")
-        val compacted = graft.engine.io.Artifacts.ensure(s,
-          // _w1 versions the artifact with the r12 spherical quantizer
-          // (a pre-whitening compacted index must not be reused — the
-          // partition-sweep caught exactly this via loadQuantizer's
-          // fail-fast)
-          s"$warehouse/graft_cell_index/compact_${fp}_16_42_w1") { tmp =>
+        // _w1 versions the artifact with the r12 spherical quantizer
+        // (a pre-whitening compacted index must not be reused — the
+        // partition-sweep caught exactly this via loadQuantizer's
+        // fail-fast)
+        val compacted = graft.engine.io.Artifacts.fitOnce(emb,
+          "graft_cell_index", d, "compact", Seq(16, 42, "w1")) { tmp =>
           Similarity.compactCellIndex(s, idx, tmp)
         }
         val probes = Similarity.probes(emb)
