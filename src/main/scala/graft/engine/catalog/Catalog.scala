@@ -1,5 +1,6 @@
 package graft.engine.catalog
 
+import graft.engine.io.Storage
 import graft.engine.meta.TableMeta
 import graft.engine.ops.Conform
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -20,7 +21,7 @@ object Catalog {
     * metadata's own table name), reading from `location`. */
   def register(spark: SparkSession, meta: TableMeta, location: String,
       viewName: Option[String] = None): DataFrame = {
-    val df = Conform.conform(spark.read.parquet(location), meta)
+    val df = Conform.conform(Storage.readParquet(spark, location), meta)
     df.createOrReplaceTempView(viewName.getOrElse(meta.name))
     df
   }

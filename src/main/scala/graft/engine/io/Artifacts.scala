@@ -2,6 +2,8 @@ package graft.engine.io
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.{CatalogFileIndex,
+  HadoopFsRelation, LogicalRelation, PartitioningAwareFileIndex}
 import org.apache.spark.sql.functions._
 
 /** Shared plumbing for the fit-once artifact family (keep-lists, IVF
@@ -27,24 +29,40 @@ import org.apache.spark.sql.functions._
   */
 object Artifacts {
 
-  /** (sessionId, plan semanticHash, input file names) → fingerprint;
-    * makes repeat calls within a session free (no file status calls,
-    * no Spark action). The file names come from the listing the plan
-    * already holds, and the plan hash alone does not change when the
-    * files under a path are rewritten: with the names in the key, a
-    * new read of a rewritten input misses the cache. */
+  /** (sessionId, plan semanticHash, input file inventory) →
+    * fingerprint; makes repeat calls within a session free (no Spark
+    * action). The plan hash alone does not change when the files under
+    * a path are rewritten, so the key also holds the inventory: a new
+    * read of a rewritten input — even one that keeps every file name —
+    * misses the cache. */
   private val fpCache =
     new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   def fingerprintOf(df: DataFrame): String = {
-    val files = df.inputFiles.sorted
+    val files = inventory(df)
     val key = System.identityHashCode(df.sparkSession) + ":" +
       df.queryExecution.analyzed.semanticHash() + ":" +
       fnv(files.mkString("\n"))
     fpCache.computeIfAbsent(key, _ => compute(df, files))
   }
 
-  private def compute(df: DataFrame, files: Array[String]): String = {
+  /** `path|length|mtime` of every input file, sorted, from the listing
+    * the plan's file indexes made when the DataFrame was built — no
+    * storage call. Relations without a file index contribute nothing. */
+  private def inventory(df: DataFrame): Seq[String] =
+    df.queryExecution.optimizedPlan.collect {
+      case l: LogicalRelation => l.relation
+    }.flatMap {
+      case r: HadoopFsRelation => r.location match {
+        case idx: PartitioningAwareFileIndex => idx.allFiles()
+        case idx: CatalogFileIndex => idx.filterPartitions(Nil).allFiles()
+        case _ => Nil
+      }
+      case _ => Nil
+    }.map(st => s"${st.getPath.toUri}|${st.getLen}|${st.getModificationTime}")
+      .distinct.sorted
+
+  private def compute(df: DataFrame, files: Seq[String]): String = {
     // Session-STABLE plan signature. semanticHash() is NOT stable
     // across JVMs — it hashes relation objects whose FileIndex uses
     // identity hashCode — so keying on it silently rebuilt every
@@ -60,14 +78,8 @@ object Artifacts {
         maxFields = Int.MaxValue, printOperatorId = false)
       .replaceAll("@[0-9a-fA-F]+", "")
     val body: String =
-      if (files.nonEmpty) {
-        val conf = df.sparkSession.sparkContext.hadoopConfiguration
-        files.map { f =>
-          val p = new Path(f)
-          val st = p.getFileSystem(conf).getFileStatus(p)
-          s"$f|${st.getLen}|${st.getModificationTime}"
-        }.mkString("\n")
-      } else {
+      if (files.nonEmpty) files.mkString("\n")
+      else {
         val cols = df.columns.map(c => s"`$c`").mkString(", ")
         val r = df.agg(
           expr(s"coalesce(bit_xor(xxhash64(struct($cols))), 0L)").as("x"),

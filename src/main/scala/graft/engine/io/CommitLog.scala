@@ -150,7 +150,7 @@ object CommitLog {
     val c = commits(spark, root).find(_.version == version).getOrElse(
       throw new IllegalArgumentException(
         s"version $version not in commit log at $root"))
-    spark.read.parquet(resolveData(root, c))
+    Storage.readParquet(spark, resolveData(root, c))
   }
 
   /** SHALLOW CLONE (Delta's CLONE): a new table whose first commit
@@ -184,7 +184,7 @@ object CommitLog {
   def readLatest(spark: SparkSession, root: String): DataFrame = {
     val c = latest(spark, root).getOrElse(
       throw new IllegalArgumentException(s"empty commit log at $root"))
-    spark.read.parquet(resolveData(root, c))
+    Storage.readParquet(spark, resolveData(root, c))
   }
 
   /** Change-data-feed read: the row-level changes between two committed

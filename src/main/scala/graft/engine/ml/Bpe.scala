@@ -152,7 +152,7 @@ object Bpe {
           ms.map(m => Row(m.rank, m.lhs, m.rhs)), 1), schema)
         .coalesce(1).write.mode("overwrite").parquet(tmp)
     }
-    spark.read.parquet(path).collect()
+    graft.engine.io.Storage.readParquet(spark, path).collect()
       .map(r => Merge(r.getInt(0), r.getString(1), r.getString(2)))
       .sortBy(_.rank).toSeq
   }
@@ -223,7 +223,7 @@ object Bpe {
       datasetTag, "tokens", storeParams) { tmp =>
       tokensPerDoc(docs, datasetTag).write.mode("overwrite").parquet(tmp)
     }
-    spark.read.parquet(path)
+    graft.engine.io.Storage.readParquet(spark, path)
   }
 
   // ------------------------------------------------------------------

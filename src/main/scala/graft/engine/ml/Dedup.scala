@@ -320,7 +320,7 @@ object Dedup {
         bands, rowsPerBand, maxBucket)
         .write.mode("overwrite").parquet(tmp)
     }
-    docs.sparkSession.read.parquet(path)
+    graft.engine.io.Storage.readParquet(docs.sparkSession, path)
   }
 
   /** Exact Jaccard on candidate pairs. Two stages: a MinHash-estimate
@@ -363,7 +363,7 @@ object Dedup {
       datasetTag, "minhash", Seq(numHashes, seed)) { tmp =>
       signatures(docs, numHashes, seed).write.mode("overwrite").parquet(tmp)
     }
-    cacheTracked(docs.sparkSession.read.parquet(path))
+    cacheTracked(graft.engine.io.Storage.readParquet(docs.sparkSession, path))
   }
 
   /** MinHash-LSH near-dup pipeline: shingle → sign → band → verify.
@@ -578,7 +578,7 @@ object Dedup {
       datasetTag) { tmp =>
       bigramSets(docs).write.mode("overwrite").parquet(tmp)
     }
-    docs.sparkSession.read.parquet(path)
+    graft.engine.io.Storage.readParquet(docs.sparkSession, path)
   }
 
   def incrementalNearDups(existing: DataFrame, batch: DataFrame,
@@ -687,7 +687,7 @@ object Dedup {
         .write.mode("overwrite").parquet(tmp)
       unpersistTracked()
     }
-    docs.sparkSession.read.parquet(path)
+    graft.engine.io.Storage.readParquet(docs.sparkSession, path)
   }
 
   private def resolveOnDriver(pairs: DataFrame,

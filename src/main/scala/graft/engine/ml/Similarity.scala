@@ -573,7 +573,8 @@ object Similarity {
 
   def loadQuantizer(spark: org.apache.spark.sql.SparkSession,
       path: String): Quantizer = {
-    val rows = spark.read.parquet(path).orderBy("cell").collect()
+    val rows = graft.engine.io.Storage.readParquet(spark, path)
+      .orderBy("cell").collect()
       .map(r => (r.getInt(0), r.getSeq[Double](1).toArray))
     val cells = rows.filter(_._1 >= 0).map(_._2)
     val whitenRows = rows.filter(_._1 < 0).sortBy(r => -r._1).map(_._2)
@@ -743,7 +744,7 @@ object Similarity {
     import spark.implicits._
     val probeCellDf = probeCells.toSeq.toDF("probe_id", "cell")
       .join(probeDf.select(col("probe_id"), col("probe_emb")), Seq("probe_id"))
-    val indexed = spark.read.parquet(indexPath)
+    val indexed = graft.engine.io.Storage.readParquet(spark, indexPath)
       .filter(col("cell").isin(allCells: _*)) // prunes partitions
     // (r14 note: spreadForCompute on the pruned-cell read was A/B'd —
     // the probed cells are small enough that the repartition exchange
@@ -788,7 +789,7 @@ object Similarity {
         batchProbes(emb), k)
         .write.mode("overwrite").parquet(tmp)
     }
-    emb.sparkSession.read.parquet(path)
+    graft.engine.io.Storage.readParquet(emb.sparkSession, path)
   }
 
   /** Large-probe-set IVF — the missing quadrant of the family: the
@@ -1026,7 +1027,7 @@ object Similarity {
        else bruteForceTopK(emb, p, k))
         .write.mode("overwrite").parquet(tmp)
     }
-    emb.sparkSession.read.parquet(path)
+    graft.engine.io.Storage.readParquet(emb.sparkSession, path)
   }
 
   /** Per-probe recall audit of an ANN result against the exact top-k

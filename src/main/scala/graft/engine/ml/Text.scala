@@ -333,7 +333,7 @@ object Text {
       langIdProfile(docs, topK).coalesce(1).write.mode("overwrite")
         .parquet(tmp)
     }
-    docs.sparkSession.read.parquet(path)
+    graft.engine.io.Storage.readParquet(docs.sparkSession, path)
   }
 
   /** Language-ID by character-trigram profile overlap: learn the topK

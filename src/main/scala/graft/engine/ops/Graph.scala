@@ -33,7 +33,7 @@ object Graph {
         .agg(count(lit(1)).as("w"))
         .write.mode("overwrite").parquet(tmp)
     }
-    pairs.sparkSession.read.parquet(path)
+    graft.engine.io.Storage.readParquet(pairs.sparkSession, path)
   }
 
   /** PageRank by `iterations` rounds of the power method over a
@@ -121,7 +121,7 @@ object Graph {
         .unionByName(e0.select(col("b").as("src"), col("a").as("dst")))
         .write.mode("overwrite").parquet(tmp)
     }
-    pairs.sparkSession.read.parquet(path)
+    graft.engine.io.Storage.readParquet(pairs.sparkSession, path)
   }
 
   /** Persisted label-propagation result — the fit-once form: both the
@@ -136,7 +136,7 @@ object Graph {
       labelPropagationImpl(edges, iterations)
         .write.mode("overwrite").parquet(tmp)
     }
-    edges.sparkSession.read.parquet(path)
+    graft.engine.io.Storage.readParquet(edges.sparkSession, path)
   }
 
   /** Persisted single-seed personalized PageRank — the fit-once form
@@ -183,7 +183,7 @@ object Graph {
       }
       pi.write.mode("overwrite").parquet(tmp)
     }
-    edges.sparkSession.read.parquet(path)
+    graft.engine.io.Storage.readParquet(edges.sparkSession, path)
   }
 
   private def labelPropagationImpl(edges: DataFrame,

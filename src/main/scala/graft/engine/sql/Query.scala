@@ -30,7 +30,7 @@ object Query {
       if (exists) {
         val df =
           if (t == "events") graft.Tables.events(spark, dir)
-          else spark.read.parquet(path)
+          else graft.engine.io.Storage.readParquet(spark, path)
         df.createOrReplaceTempView(t)
       }
       exists

@@ -70,7 +70,7 @@ object Sinks {
       fs.listStatus(root).exists(_.getPath.getName.startsWith("bucket="))
     val existing =
       if (targetExists)
-        spark.read.parquet(targetDir)
+        graft.engine.io.Storage.readParquet(spark, targetDir)
           .filter(col("bucket").isin(touched.map(Integer.valueOf): _*))
       else spark.emptyDataFrame
         .select(lit(0L).as("user_id"), lit(0L).as("event_id"),
@@ -129,6 +129,6 @@ object Sinks {
       upsertBatch(base.filter(pmod(col("event_id"), lit(nChunks)) === i),
         targetDir, nBuckets)
     } finally base.unpersist()
-    spark.read.parquet(targetDir).drop("bucket")
+    graft.engine.io.Storage.readParquet(spark, targetDir).drop("bucket")
   }
 }

@@ -63,6 +63,31 @@ class ArtifactsSpec extends AnyFunSuite with SparkFixture {
     assert(spark.read.parquet(again).count() === 20)
   }
 
+  test("a same-name in-place rewrite of an input file builds a new artifact") {
+    val dir = inputDir("inplace")
+    spark.range(10).toDF("id").coalesce(1).write.parquet(dir)
+    val df = spark.read.parquet(dir)
+    val tag = fresh("inplace")
+    var builds = 0
+    def get(d: org.apache.spark.sql.DataFrame) =
+      Artifacts.fitOnce(d, family, tag) { tmp => builds += 1; writeIds(d)(tmp) }
+    val base = get(df)
+    // replace the one part file by another parquet file under its name
+    val src = inputDir("inplace_src")
+    spark.range(100, 120).toDF("id").coalesce(1).write.parquet(src)
+    def part(d: String) = fs(d).listStatus(new Path(d)).map(_.getPath)
+      .filter(_.getName.endsWith(".parquet")).toSeq
+    val Seq(target) = part(dir)
+    org.apache.hadoop.fs.FileUtil.copy(fs(src), part(src).head, fs(dir),
+      target, false, true, spark.sparkContext.hadoopConfiguration)
+    val reread = spark.read.parquet(dir)
+    assert(reread.inputFiles.toSeq === df.inputFiles.toSeq)
+    val again = get(reread)
+    assert(again !== base)
+    assert(builds === 2)
+    assert(spark.read.parquet(again).count() === 20)
+  }
+
   test("a tag with slashes and spaces becomes one safe path segment") {
     val df = input(inputDir("tag"), 5)
     val path = Artifacts.fitOnce(df, family, s"/data/my corpus/${fresh("v")}",

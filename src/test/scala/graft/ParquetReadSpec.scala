@@ -1,0 +1,141 @@
+package graft
+
+import graft.engine.io.Storage
+import org.apache.hadoop.fs.{FileUtil, Path}
+import org.apache.spark.sql.DataFrame
+import org.scalatest.funsuite.AnyFunSuite
+
+/** [[graft.engine.io.Storage.readParquet]]: the same DataFrame as
+  * `spark.read.parquet`, without the schema-inference job on a repeat
+  * read of unchanged files. */
+class ParquetReadSpec extends AnyFunSuite with SparkFixture {
+
+  private def dir(name: String): String =
+    s"${sys.props("java.io.tmpdir")}/graft_test/" +
+      s"parquet_read_${name}_${System.nanoTime()}"
+
+  private def fs(path: String) =
+    new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
+
+  /** The one `part-*.parquet` file Spark wrote under `d`. */
+  private def partFile(d: String): Path =
+    fs(d).listStatus(new Path(d)).map(_.getPath)
+      .filter(p => p.getName.startsWith("part-") &&
+        p.getName.endsWith(".parquet"))
+      .toSeq match {
+        case Seq(p) => p
+        case other => fail(s"expected one part file in $d: $other")
+      }
+
+  /** `body`'s result and the number of Spark jobs it launched. Job
+    * starts reach the status tracker through the listener bus, so a
+    * sentinel job in a second group is waited for first: once it is
+    * visible, every job `body` started is too. */
+  private def jobsOf[T](body: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val group = s"parquet_read_${System.nanoTime()}"
+    sc.setJobGroup(group, "measured", interruptOnCancel = false)
+    val out = try body finally sc.clearJobGroup()
+    sc.setJobGroup(group + "_sentinel", "sentinel", interruptOnCancel = false)
+    try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+    val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+    while (sc.statusTracker.getJobIdsForGroup(group + "_sentinel").isEmpty &&
+        System.nanoTime() < deadline) Thread.sleep(10)
+    assert(sc.statusTracker.getJobIdsForGroup(group + "_sentinel").nonEmpty)
+    (out, sc.statusTracker.getJobIdsForGroup(group).length)
+  }
+
+  private def assertSame(got: DataFrame, want: DataFrame): Unit = {
+    assert(got.schema === want.schema)
+    assert(got.columns.toSeq === want.columns.toSeq)
+    assert(got.count() === want.count())
+    assert(got.exceptAll(want).isEmpty)
+    assert(want.exceptAll(got).isEmpty)
+  }
+
+  test("a repeat read of an unchanged path launches no job") {
+    val d = dir("repeat")
+    spark.range(20).selectExpr("id", "cast(id AS string) AS s")
+      .write.parquet(d)
+    val (_, first) = jobsOf(Storage.readParquet(spark, d))
+    assert(first >= 1)
+    val (again, second) = jobsOf(Storage.readParquet(spark, d))
+    assert(second === 0)
+    assert(again.count() === 20)
+  }
+
+  test("flat, partitioned and nanosecond-timestamp reads match spark.read") {
+    val flatDir = dir("flat")
+    spark.range(30).selectExpr("id", "id * 0.5 AS x", "cast(id AS string) AS s")
+      .coalesce(1).write.parquet(flatDir)
+    val flat = partFile(flatDir).toString
+    val bucketed = dir("bucketed")
+    spark.range(40).selectExpr("id", "cast(id % 4 AS int) AS bucket",
+      "cast(id AS string) AS s").write.partitionBy("bucket").parquet(bucketed)
+    assert(spark.conf.get("spark.sql.legacy.parquet.nanosAsLong") === "true")
+    val events = s"$sf/events.parquet"
+    Seq(flat, bucketed, events).foreach { p =>
+      Storage.readParquet(spark, p)
+      val (cached, jobs) = jobsOf(Storage.readParquet(spark, p))
+      assert(jobs === 0, p)
+      assertSame(cached, spark.read.parquet(p))
+    }
+    assert(Storage.readParquet(spark, bucketed).columns.last === "bucket")
+  }
+
+  test("a path overwritten with a different schema reads the new schema") {
+    val d = dir("overwrite")
+    spark.range(5).toDF("a").write.parquet(d)
+    assert(Storage.readParquet(spark, d).columns.toSeq === Seq("a"))
+    assert(Storage.readParquet(spark, d).columns.toSeq === Seq("a"))
+    spark.range(7).selectExpr("cast(id AS string) AS b", "id AS c")
+      .write.mode("overwrite").parquet(d)
+    assertSame(Storage.readParquet(spark, d), spark.read.parquet(d))
+    assert(Storage.readParquet(spark, d).columns.toSeq === Seq("b", "c"))
+  }
+
+  test("a same-name in-place file replacement is seen") {
+    val d = dir("inplace")
+    spark.range(5).toDF("a").coalesce(1).write.parquet(d)
+    val src = dir("inplace_src")
+    spark.range(9).selectExpr("id AS k", "cast(id AS string) AS v")
+      .coalesce(1).write.parquet(src)
+    val target = partFile(d)
+    assert(Storage.readParquet(spark, d).columns.toSeq === Seq("a"))
+    FileUtil.copy(fs(src), partFile(src), fs(d), target, false, true,
+      spark.sparkContext.hadoopConfiguration)
+    assert(partFile(d) === target)
+    val got = Storage.readParquet(spark, d)
+    assert(got.columns.toSeq === Seq("k", "v"))
+    assertSame(got, spark.read.parquet(d))
+  }
+
+  test("a missing path fails like spark.read.parquet") {
+    val missing = dir("missing")
+    val want = intercept[Throwable](spark.read.parquet(missing))
+    val got = intercept[Throwable](Storage.readParquet(spark, missing))
+    assert(got.getClass === want.getClass)
+    assert(got.getMessage === want.getMessage)
+  }
+
+  test("the schema cache holds at most its cap, least recent out first") {
+    val base = dir("cap")
+    spark.range(3).toDF("id").coalesce(1).write.parquet(base)
+    val part = partFile(base)
+    val paths = (0 until 5).map { i =>
+      val p = new Path(s"$base/copy_$i.parquet")
+      FileUtil.copy(fs(base), part, fs(base), p, false, true,
+        spark.sparkContext.hadoopConfiguration)
+      p.toString
+    }
+    val cache = new Storage.SchemaCache(3)
+    paths.foreach { p =>
+      assert(Storage.readParquet(spark, p, cache).count() === 3)
+      assert(cache.size <= 3)
+    }
+    assert(cache.size === 3)
+    // the most recent path is still kept, the first one was dropped
+    assert(jobsOf(Storage.readParquet(spark, paths.last, cache))._2 === 0)
+    assert(jobsOf(Storage.readParquet(spark, paths.head, cache))._2 >= 1)
+  }
+}
