@@ -127,12 +127,17 @@ object CommitLog {
     require(scheme == null || scheme == "file",
       s"claimVersion needs a local commit root (got '$root'); " +
         "non-local stores need a conditional-put claim")
+    // a file: URI names the same directory the Hadoop readers list;
+    // Paths.get on its string would be a relative path under the cwd
+    val commits =
+      if (scheme == "file") Paths.get(java.net.URI.create(commitsDir(root)))
+      else Paths.get(commitsDir(root))
     val line = s"${rec.version}|${rec.baseVersion}|${rec.action}|${rec.dataDir}"
-    val tmp = Paths.get(commitsDir(root),
+    val tmp = commits.resolve(
       s".tmp-${java.util.UUID.randomUUID().toString.take(8)}")
-    Files.createDirectories(tmp.getParent)
+    Files.createDirectories(commits)
     Files.write(tmp, line.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    val target = Paths.get(commitsDir(root), f"v${rec.version}%08d.json")
+    val target = commits.resolve(f"v${rec.version}%08d.json")
     try {
       Files.createLink(target, tmp) // atomic claim: O_EXCL-equivalent
       true

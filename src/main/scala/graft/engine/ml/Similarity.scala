@@ -59,12 +59,37 @@ object Similarity {
       .filter(col("vec_id") =!= col("probe_id"))
       .select(col("probe_id"), col("vec_id"),
         expr("graft_cosine(probe_emb, embedding)").as("cos"))
+    topKByCos(scored, k)
+  }
+
+  /** The per-probe ranking tail every cosine top-k path shares: rank
+    * each probe's scored `(probe_id, vec_id, cos)` rows by cos desc,
+    * vec_id asc, keep `rn <= k`, and emit `(probe_id, rn, vec_id,
+    * score)` with the score rounded to 6 places. */
+  private def topKByCos(scored: DataFrame, k: Int): DataFrame = {
     val w = Window.partitionBy("probe_id")
       .orderBy(desc("cos"), asc("vec_id"))
     scored.withColumn("rn", row_number().over(w))
       .filter(col("rn") <= k)
       .select(col("probe_id"), col("rn"), col("vec_id"),
         round(col("cos"), 6).as("score"))
+  }
+
+  /** Both sides of an IVF search bucketed to quantizer cells: corpus
+    * vectors to their nearest cell, probes exploded to their `nProbe`
+    * nearest. The corpus is spread first, since the per-row quantizer
+    * UDF and the cosine loop ride the scan stage (see bruteForceTopK);
+    * the spread is a no-op once splits >= cores. */
+  private def cellBuckets(emb: DataFrame, probeDf: DataFrame,
+      centroids: Quantizer, nProbe: Int): (DataFrame, DataFrame) = {
+    val cellOf = udf((a: Seq[Float]) => nearestCellsOf(centroids)(a, 1).head)
+    val cellsOf = udf((a: Seq[Float]) => nearestCellsOf(centroids)(a, nProbe))
+    val bucketed = graft.engine.ops.Scale.spreadForCompute(emb)
+      .select(col("vec_id"), col("embedding"),
+        cellOf(col("embedding")).as("cell"))
+    val probeCells = probeDf.select(col("probe_id"), col("probe_emb"),
+      explode(cellsOf(col("probe_emb"))).as("cell"))
+    (bucketed, probeCells)
   }
 
   /** Fit the seeded KMeans coarse quantizer and return its centroids —
@@ -758,12 +783,7 @@ object Similarity {
       // probed cells — dedup before ranking so a vector never occupies
       // two top-k slots
       .dropDuplicates("probe_id", "vec_id")
-    val w = Window.partitionBy("probe_id")
-      .orderBy(desc("cos"), asc("vec_id"))
-    scored.withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= k)
-      .select(col("probe_id"), col("rn"), col("vec_id"),
-        round(col("cos"), 6).as("score"))
+    topKByCos(scored, k)
   }
 
   /** The batch probe relation for large-probe-set search: every 10th
@@ -810,27 +830,14 @@ object Similarity {
       datasetTag: String, nCells: Int = 16, nProbe: Int = 6,
       seed: Long = 42L): DataFrame = {
     GraftFunctions.ensureRegistered(emb.sparkSession)
-    val centroids = quantizerFor(emb, datasetTag, nCells, seed)
-    val cellOf = udf((a: Seq[Float]) => nearestCellsOf(centroids)(a, 1).head)
-    val cellsOf = udf((a: Seq[Float]) => nearestCellsOf(centroids)(a, nProbe))
-    // spreadForCompute: the per-row quantizer UDF + cosine loop ride
-    // the scan stage (see bruteForceTopK) — no-op once splits >= cores
-    val bucketed = graft.engine.ops.Scale.spreadForCompute(emb)
-      .select(col("vec_id"), col("embedding"),
-        cellOf(col("embedding")).as("cell"))
-    val probeCells = probeDf.select(col("probe_id"), col("probe_emb"),
-      explode(cellsOf(col("probe_emb"))).as("cell"))
+    val (bucketed, probeCells) = cellBuckets(emb, probeDf,
+      quantizerFor(emb, datasetTag, nCells, seed), nProbe)
     val scored = bucketed.hint("shuffle_hash")
       .join(probeCells, Seq("cell"))
       .filter(col("vec_id") =!= col("probe_id"))
       .select(col("probe_id"), col("vec_id"),
         expr("graft_cosine(probe_emb, embedding)").as("cos"))
-    val w = Window.partitionBy("probe_id")
-      .orderBy(desc("cos"), asc("vec_id"))
-    scored.withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= k)
-      .select(col("probe_id"), col("rn"), col("vec_id"),
-        round(col("cos"), 6).as("score"))
+    topKByCos(scored, k)
   }
 
   /** IVF search against an already-fitted quantizer (see
@@ -838,26 +845,13 @@ object Similarity {
   def ivfTopKWith(emb: DataFrame, probeDf: DataFrame, k: Int,
       centroids: Quantizer, nProbe: Int = 6): DataFrame = {
     GraftFunctions.ensureRegistered(emb.sparkSession)
-    val cellOf = udf((a: Seq[Float]) => nearestCellsOf(centroids)(a, 1).head)
-    val cellsOf = udf((a: Seq[Float]) => nearestCellsOf(centroids)(a, nProbe))
-
-    // spreadForCompute: the per-row quantizer UDF + cosine loop ride
-    // the scan stage (see bruteForceTopK) — no-op once splits >= cores
-    val bucketed = graft.engine.ops.Scale.spreadForCompute(emb)
-      .select(col("vec_id"), col("embedding"),
-        cellOf(col("embedding")).as("cell"))
-    val probeCells = probeDf.select(col("probe_id"), col("probe_emb"),
-      explode(cellsOf(col("probe_emb"))).as("cell"))
+    val (bucketed, probeCells) =
+      cellBuckets(emb, probeDf, centroids, nProbe)
     val scored = bucketed.join(broadcast(probeCells), "cell")
       .filter(col("vec_id") =!= col("probe_id"))
       .select(col("probe_id"), col("vec_id"),
         expr("graft_cosine(probe_emb, embedding)").as("cos"))
-    val w = Window.partitionBy("probe_id")
-      .orderBy(desc("cos"), asc("vec_id"))
-    scored.withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= k)
-      .select(col("probe_id"), col("rn"), col("vec_id"),
-        round(col("cos"), 6).as("score"))
+    topKByCos(scored, k)
   }
 
   /** TWO-TIER search — the production recall/cost shape: a cheap
@@ -915,12 +909,7 @@ object Similarity {
         Seq("probe_id"))
       .select(col("probe_id"), col("vec_id"),
         expr("graft_cosine(probe_emb, embedding)").as("cos"))
-    val w = Window.partitionBy("probe_id")
-      .orderBy(desc("cos"), asc("vec_id"))
-    rescored.withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= k)
-      .select(col("probe_id"), col("rn"), col("vec_id"),
-        round(col("cos"), 6).as("score"))
+    topKByCos(rescored, k)
   }
 
   /** LSM compaction for the cell-partitioned index, THRESHOLD-DRIVEN:

@@ -20,10 +20,17 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * executor read (e.g. 4096 buckets × 25 GB).
   *
   * Last-writer-wins is max-by-(t_us, event_id) per key — associative
-  * and commutative, so replaying batches in ANY order (or twice, after
-  * a failure) converges to the same table: the sink is idempotent
-  * without a transaction log, which is exactly what foreachBatch's
-  * at-least-once contract requires.
+  * and commutative, so replaying a batch that COMMITTED (in any order,
+  * or twice) converges to the same table.
+  *
+  * NOT crash-safe: there is no transaction log under this sink. Spark's
+  * dynamic-overwrite commit (`HadoopMapReduceCommitProtocol.commitJob`)
+  * deletes each touched bucket's final directory and then renames the
+  * staged one into place. A crash between the two loses that bucket's
+  * earlier rows, and a `foreachBatch` replay cannot restore them: it
+  * re-merges the batch against the now-empty bucket. The window is
+  * per bucket, from its delete to its rename, in every batch. Landing
+  * each batch as a `CommitLog` version would close it.
   */
 object Sinks {
 
@@ -93,8 +100,10 @@ object Sinks {
   }
 
   /** The streaming wrapper: land `events` (the raw schema) into the
-    * bucketed target via foreachBatch. At-least-once delivery + the
-    * idempotent merge above = effectively-exactly-once table state. */
+    * bucketed target via foreachBatch. At-least-once delivery plus the
+    * order-free merge above gives exactly-once table state only while
+    * no bucket commit dies between its delete and its rename (see the
+    * object doc). */
   def foreachBatchUpsert(events: DataFrame, targetDir: String,
       checkpointDir: String, nBuckets: Int = 16): StreamingQuery =
     events

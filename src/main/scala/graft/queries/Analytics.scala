@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.Tables._
+import graft.queries.Fragments._
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -208,13 +209,7 @@ object Analytics {
                    JOIN deg dg ON dg.src = e.src
                  GROUP BY e.dst) c ON c.node = r.node)"""
         }.mkString(",\n")
-        s"""WITH e0 AS (
-              SELECT DISTINCT CAST(l_suppkey AS BIGINT) * 2 AS a,
-                     CAST(l_partkey AS BIGINT) * 2 + 1 AS b
-              FROM lineitem),
-            edges AS (
-              SELECT a AS src, b AS dst FROM e0
-              UNION ALL SELECT b, a FROM e0),
+        s"""WITH $BipartiteEdgesCte,
             deg AS (SELECT src, COUNT(*) AS deg FROM edges GROUP BY src),
             nn AS (SELECT CAST(COUNT(*) AS DOUBLE) AS n FROM deg),
             r0 AS (
@@ -237,37 +232,14 @@ object Analytics {
         // persisted bipartite edge artifact: 3 rounds × 1 edge
         // reference each — without it the lineitem distinct re-derives
         // per round (measured 5.9 s → the artifact read path)
-        val edges = graft.engine.ops.Graph.bipartiteEdgesFor(
-          lineitem(s, d)
-            .select((col("l_suppkey").cast("bigint") * 2).as("a"),
-              (col("l_partkey").cast("bigint") * 2 + 1).as("b")),
-          s"${d}_bipsp")
+        val edges = supplierPartEdges(s, d)
         graft.engine.ops.Graph.labelPropagationFor(edges, 3,
             s"${d}_bipsp")
           .orderBy("node")
-      }, {
-        val rounds = (1 to 3).map { i =>
-          s"""lp$i AS MATERIALIZED (
-               SELECT node, label FROM (
-                 SELECT e.dst AS node, l.label, COUNT(*) AS c,
-                        ROW_NUMBER() OVER (PARTITION BY e.dst
-                          ORDER BY COUNT(*) DESC, l.label ASC) AS rn
-                 FROM edges e JOIN lp${i - 1} l ON l.node = e.src
-                 GROUP BY e.dst, l.label)
-               WHERE rn = 1)"""
-        }.mkString(",\n")
-        s"""WITH e0 AS (
-              SELECT DISTINCT CAST(l_suppkey AS BIGINT) * 2 AS a,
-                     CAST(l_partkey AS BIGINT) * 2 + 1 AS b
-              FROM lineitem),
-            edges AS (
-              SELECT a AS src, b AS dst FROM e0
-              UNION ALL SELECT b, a FROM e0),
-            lp0 AS (
-              SELECT DISTINCT src AS node, src AS label FROM edges),
-            $rounds
-            SELECT node, label FROM lp3 ORDER BY node"""
-      }),
+      },
+      s"""WITH $BipartiteEdgesCte,
+          $LabelPropCte
+          SELECT node, label FROM lp3 ORDER BY node"""),
 
     // MODULARITY of the label-prop partition — the number that says
     // whether those communities MEAN anything (Newman Q: fraction of
@@ -283,11 +255,7 @@ object Analytics {
     Q("graph_modularity",
       (s, d) => {
         import org.apache.spark.sql.expressions.Window
-        val edges = graft.engine.ops.Graph.bipartiteEdgesFor(
-          lineitem(s, d)
-            .select((col("l_suppkey").cast("bigint") * 2).as("a"),
-              (col("l_partkey").cast("bigint") * 2 + 1).as("b")),
-          s"${d}_bipsp")
+        val edges = supplierPartEdges(s, d)
         // the SAME persisted label store graph_label_prop reads: the
         // 3-round chain is a fit-once artifact, and the two endpoint
         // joins here read it, not recompute it
@@ -316,52 +284,33 @@ object Analytics {
               .over(wAll).cast("double"), 8))
           .select("community", "e_in_dir", "d_c", "q_term", "modularity")
           .orderBy("community")
-      }, {
-        val rounds = (1 to 3).map { i =>
-          s"""lp$i AS MATERIALIZED (
-               SELECT node, label FROM (
-                 SELECT e.dst AS node, l.label, COUNT(*) AS c,
-                        ROW_NUMBER() OVER (PARTITION BY e.dst
-                          ORDER BY COUNT(*) DESC, l.label ASC) AS rn
-                 FROM edges e JOIN lp${i - 1} l ON l.node = e.src
-                 GROUP BY e.dst, l.label)
-               WHERE rn = 1)"""
-        }.mkString(",\n")
-        s"""WITH e0 AS (
-              SELECT DISTINCT CAST(l_suppkey AS BIGINT) * 2 AS a,
-                     CAST(l_partkey AS BIGINT) * 2 + 1 AS b
-              FROM lineitem),
-            edges AS (
-              SELECT a AS src, b AS dst FROM e0
-              UNION ALL SELECT b, a FROM e0),
-            lp0 AS (
-              SELECT DISTINCT src AS node, src AS label FROM edges),
-            $rounds,
-            tagged AS (
-              SELECT ls.label AS c_src, ld.label AS c_dst
-              FROM edges e
-              JOIN lp3 ls ON ls.node = e.src
-              JOIN lp3 ld ON ld.node = e.dst),
-            m AS (SELECT COUNT(*) AS m_dir FROM tagged),
-            per_c AS (
-              SELECT c_src AS community,
-                     COUNT(CASE WHEN c_src = c_dst THEN 1 END)
-                       AS e_in_dir,
-                     COUNT(*) AS d_c
-              FROM tagged GROUP BY 1),
-            terms AS (
-              SELECT community, e_in_dir, d_c,
-                     ROUND(CAST(e_in_dir AS DOUBLE) / m_dir -
-                           (CAST(d_c AS DOUBLE) / m_dir) *
-                           (CAST(d_c AS DOUBLE) / m_dir), 8) + 0.0
-                       AS q_term
-              FROM per_c, m)
-            SELECT community, e_in_dir, d_c, q_term,
-                   ROUND(CAST((SELECT
-                     SUM(CAST(q_term AS DECIMAL(14,8))) FROM terms)
-                     AS DOUBLE), 8) AS modularity
-            FROM terms ORDER BY community"""
-      }),
+      },
+      s"""WITH $BipartiteEdgesCte,
+          $LabelPropCte,
+          tagged AS (
+            SELECT ls.label AS c_src, ld.label AS c_dst
+            FROM edges e
+            JOIN lp3 ls ON ls.node = e.src
+            JOIN lp3 ld ON ld.node = e.dst),
+          m AS (SELECT COUNT(*) AS m_dir FROM tagged),
+          per_c AS (
+            SELECT c_src AS community,
+                   COUNT(CASE WHEN c_src = c_dst THEN 1 END)
+                     AS e_in_dir,
+                   COUNT(*) AS d_c
+            FROM tagged GROUP BY 1),
+          terms AS (
+            SELECT community, e_in_dir, d_c,
+                   ROUND(CAST(e_in_dir AS DOUBLE) / m_dir -
+                         (CAST(d_c AS DOUBLE) / m_dir) *
+                         (CAST(d_c AS DOUBLE) / m_dir), 8) + 0.0
+                     AS q_term
+            FROM per_c, m)
+          SELECT community, e_in_dir, d_c, q_term,
+                 ROUND(CAST((SELECT
+                   SUM(CAST(q_term AS DECIMAL(14,8))) FROM terms)
+                   AS DOUBLE), 8) AS modularity
+          FROM terms ORDER BY community"""),
 
     // Z-order (Morton) clustering key: interleave the bits of two
     // dimensions so sorting by the key co-locates rows close in BOTH —
@@ -469,17 +418,7 @@ object Analytics {
         val (nodeTri, _) = triangleCounts(s, d)
         nodeTri.orderBy("node")
       },
-      """WITH sp AS (
-           SELECT DISTINCT l_partkey AS pk, l_suppkey AS sk FROM lineitem),
-         edges AS (
-           SELECT x.sk AS a, y.sk AS b
-           FROM sp x JOIN sp y ON x.pk = y.pk AND x.sk < y.sk
-           GROUP BY 1, 2 HAVING COUNT(*) >= 25),
-         tri AS (
-           SELECT e1.a AS u, e1.b AS v, e2.b AS t
-           FROM edges e1
-             JOIN edges e2 ON e1.b = e2.a
-             JOIN edges e3 ON e1.a = e3.a AND e2.b = e3.b)
+      s"""WITH $CoSupplyTrianglesCte
          SELECT node, COUNT(*) AS n_triangles FROM (
            SELECT u AS node FROM tri
            UNION ALL SELECT v FROM tri
@@ -771,16 +710,7 @@ object Analytics {
                 (col("n") * col("syy") - col("sy") * col("sy"))
                   .cast("double")), 6).as("assortativity"))
       },
-      """WITH op AS (
-           SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk
-           FROM lineitem),
-         e AS (
-           SELECT x.pk AS a, y.pk AS b
-           FROM op x JOIN op y ON x.ok = y.ok AND x.pk < y.pk
-           GROUP BY 1, 2 HAVING COUNT(*) >= 2),
-         und AS (
-           SELECT a AS u, b AS v FROM e
-           UNION ALL SELECT b, a FROM e),
+      s"""WITH $CoOrderGraphCte,
          deg AS (SELECT u, COUNT(*) AS du FROM und GROUP BY 1),
          pairs AS (
            SELECT x.du AS du, y.du AS dv
@@ -896,16 +826,7 @@ object Analytics {
           .select(col("u").as("node"), col("deg").as("core_deg"))
           .orderBy("node")
       },
-      """WITH op AS (
-           SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk
-           FROM lineitem),
-         e AS (
-           SELECT x.pk AS a, y.pk AS b
-           FROM op x JOIN op y ON x.ok = y.ok AND x.pk < y.pk
-           GROUP BY 1, 2 HAVING COUNT(*) >= 2),
-         und AS (
-           SELECT a AS u, b AS v FROM e
-           UNION ALL SELECT b, a FROM e),
+      s"""WITH $CoOrderGraphCte,
          a0 AS (SELECT DISTINCT u FROM und),
          a1 AS (SELECT d.u FROM und d JOIN a0 x ON d.u = x.u
                 JOIN a0 y ON d.v = y.u GROUP BY d.u HAVING COUNT(*) >= 2),
@@ -931,56 +852,14 @@ object Analytics {
     // once.
     Q("time_autocorr",
       (s, d) => {
-        import org.apache.spark.sql.expressions.Window
-        import org.apache.spark.sql.types.DecimalType
-        val daily = orders(s, d)
-          .groupBy(col("o_orderdate").cast("date").as("day"))
-          .agg(sum(col("o_totalprice").cast(DecimalType(18, 2))).as("x"))
-        val w = Window.orderBy("day")
-        val pairs = daily
-          .select(col("x"),
-            lag(col("x"), 1).over(w).as("l1"),
-            lag(col("x"), 2).over(w).as("l2"),
-            lag(col("x"), 3).over(w).as("l3"))
-          .selectExpr("x", "stack(3, 1, l1, 2, l2, 3, l3) AS (k, y)")
-          .filter(col("y").isNotNull)
-        pairs.groupBy("k")
-          .agg(count(lit(1)).as("n"),
-            sum(col("x")).as("sx"), sum(col("y")).as("sy"),
-            sum((col("x") * col("y")).cast(DecimalType(38, 6))).as("sxy"),
-            sum((col("x") * col("x")).cast(DecimalType(38, 6))).as("sxx"),
-            sum((col("y") * col("y")).cast(DecimalType(38, 6))).as("syy"))
+        lagMoments(s, d)
           .select(col("k"), col("n").as("n_pairs"),
-            round((col("n").cast("double") * col("sxy").cast("double") -
-              col("sx").cast("double") * col("sy").cast("double")) /
-              sqrt((col("n").cast("double") * col("sxx").cast("double") -
-                col("sx").cast("double") * col("sx").cast("double")) *
-                (col("n").cast("double") * col("syy").cast("double") -
-                  col("sy").cast("double") * col("sy").cast("double"))),
-              6).as("autocorr"))
+            round(lagCorr, 6).as("autocorr"))
           .orderBy("k")
       },
-      """WITH daily AS (
-           SELECT CAST(o_orderdate AS DATE) AS day,
-                  SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS x
-           FROM orders GROUP BY 1),
-         lagged AS (
-           SELECT x, lag(x, 1) OVER (ORDER BY day) AS l1,
-                  lag(x, 2) OVER (ORDER BY day) AS l2,
-                  lag(x, 3) OVER (ORDER BY day) AS l3
-           FROM daily),
-         pairs AS (
-           SELECT 1 AS k, x, l1 AS y FROM lagged WHERE l1 IS NOT NULL
-           UNION ALL
-           SELECT 2, x, l2 FROM lagged WHERE l2 IS NOT NULL
-           UNION ALL
-           SELECT 3, x, l3 FROM lagged WHERE l3 IS NOT NULL),
-         m AS (
-           SELECT k, COUNT(*) AS n, SUM(x) AS sx, SUM(y) AS sy,
-                  SUM(CAST(x * y AS DECIMAL(38,6))) AS sxy,
-                  SUM(CAST(x * x AS DECIMAL(38,6))) AS sxx,
-                  SUM(CAST(y * y AS DECIMAL(38,6))) AS syy
-           FROM pairs GROUP BY k)
+      s"""WITH $DailyRevXCte,
+         $LagPairsCte,
+         $LagMomentsCte
          SELECT k, CAST(n AS BIGINT) AS n_pairs,
                 ROUND((CAST(n AS DOUBLE) * CAST(sxy AS DOUBLE) -
                        CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE)) /
@@ -1011,17 +890,7 @@ object Analytics {
               .as("clustering_coef"))
           .orderBy("node")
       },
-      """WITH sp AS (
-           SELECT DISTINCT l_partkey AS pk, l_suppkey AS sk FROM lineitem),
-         edges AS (
-           SELECT x.sk AS a, y.sk AS b
-           FROM sp x JOIN sp y ON x.pk = y.pk AND x.sk < y.sk
-           GROUP BY 1, 2 HAVING COUNT(*) >= 25),
-         tri AS (
-           SELECT e1.a AS u, e1.b AS v, e2.b AS t
-           FROM edges e1
-             JOIN edges e2 ON e1.b = e2.a
-             JOIN edges e3 ON e1.a = e3.a AND e2.b = e3.b),
+      s"""WITH $CoSupplyTrianglesCte,
          tc AS (
            SELECT node, COUNT(*) AS n_tri FROM (
              SELECT u AS node FROM tri
@@ -1263,14 +1132,7 @@ object Analytics {
     Q("time_survival_km",
       (s, d) => {
         import org.apache.spark.sql.expressions.Window
-        val ev = events(s, d).select(col("user_id"), col("event_type"),
-          (unix_micros(col("ts")) / lit(86400000000L)).cast("long")
-            .as("day"))
-        val firstClick = ev.filter(col("event_type") === "click")
-          .groupBy("user_id").agg(min(col("day")).as("d0"))
-        val firstBuy = ev.filter(col("event_type") === "purchase")
-          .groupBy("user_id").agg(min(col("day")).as("dp"))
-        val users = firstClick.join(firstBuy, Seq("user_id"), "left")
+        val users = firstClickBuy(s, d)
           .select(col("user_id"),
             when(col("dp").isNotNull && col("dp") >= col("d0"),
               col("dp") - col("d0")).as("t_event"))
@@ -1296,16 +1158,7 @@ object Analytics {
             round(col("s"), 6).as("survival"))
           .orderBy("day")
       },
-      """WITH ev AS (
-           SELECT user_id, event_type,
-                  epoch_us(ts) // 86400000000 AS day
-           FROM events),
-         fc AS (
-           SELECT user_id, MIN(day) AS d0 FROM ev
-           WHERE event_type = 'click' GROUP BY 1),
-         fb AS (
-           SELECT user_id, MIN(day) AS dp FROM ev
-           WHERE event_type = 'purchase' GROUP BY 1),
+      s"""WITH $FirstClickBuyCte,
          users AS (
            SELECT fc.user_id,
                   CASE WHEN dp IS NOT NULL AND dp >= d0
@@ -1348,24 +1201,7 @@ object Analytics {
     // calendar-bounded.
     Q("time_sax_symbolize",
       (s, d) => {
-        val daily = orders(s, d)
-          .groupBy(to_date(col("o_orderdate")).as("day"))
-          .agg(sum(col("o_totalprice")
-            .cast(org.apache.spark.sql.types.DecimalType(18, 2)))
-            .as("rev"))
-        val m = daily.agg(count(lit(1)).as("n"),
-          sum(col("rev")).as("sx"),
-          sum((col("rev") * col("rev"))
-            .cast(org.apache.spark.sql.types.DecimalType(38, 4)))
-            .as("sx2"))
-        daily.crossJoin(broadcast(m))
-          .withColumn("mu", col("sx").cast("double") / col("n"))
-          .withColumn("sd", sqrt(
-            col("sx2").cast("double") / col("n") -
-              (col("sx").cast("double") / col("n")) *
-              (col("sx").cast("double") / col("n"))))
-          .withColumn("z",
-            (col("rev").cast("double") - col("mu")) / col("sd"))
+        dailyRevZ(s, d)
           .select(date_format(col("day"), "yyyy-MM-dd").as("day"),
             round(col("rev").cast("double"), 2).as("revenue"),
             // + 0.0: a small negative z rounds to -0.0 in one engine
@@ -1377,14 +1213,7 @@ object Analytics {
               .otherwise("d").as("sax_symbol"))
           .orderBy("day")
       },
-      """WITH daily AS (
-           SELECT CAST(o_orderdate AS DATE) AS day,
-                  SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS rev
-           FROM orders GROUP BY 1),
-         m AS (
-           SELECT COUNT(*) AS n, SUM(rev) AS sx,
-                  SUM(CAST(rev * rev AS DECIMAL(38,4))) AS sx2
-           FROM daily),
+      s"""WITH $SaxMomentsCte,
          z AS (
            SELECT day, rev,
                   (CAST(rev AS DOUBLE) - mu) / sd AS z
@@ -1412,24 +1241,7 @@ object Analytics {
     Q("time_sax_runs",
       (s, d) => {
         import org.apache.spark.sql.expressions.Window
-        val daily = orders(s, d)
-          .groupBy(to_date(col("o_orderdate")).as("day"))
-          .agg(sum(col("o_totalprice")
-            .cast(org.apache.spark.sql.types.DecimalType(18, 2)))
-            .as("rev"))
-        val m = daily.agg(count(lit(1)).as("n"),
-          sum(col("rev")).as("sx"),
-          sum((col("rev") * col("rev"))
-            .cast(org.apache.spark.sql.types.DecimalType(38, 4)))
-            .as("sx2"))
-        val sym = daily.crossJoin(broadcast(m))
-          .withColumn("mu", col("sx").cast("double") / col("n"))
-          .withColumn("sd", sqrt(
-            col("sx2").cast("double") / col("n") -
-              (col("sx").cast("double") / col("n")) *
-              (col("sx").cast("double") / col("n"))))
-          .withColumn("z",
-            (col("rev").cast("double") - col("mu")) / col("sd"))
+        val sym = dailyRevZ(s, d)
           .select(col("day"),
             when(col("z") < -0.6745, "a")
               .when(col("z") < 0.0, "b")
@@ -1452,14 +1264,7 @@ object Analytics {
             col("run_start"), col("run_end"), col("run_days"))
           .orderBy("run_id")
       },
-      """WITH daily AS (
-           SELECT CAST(o_orderdate AS DATE) AS day,
-                  SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS rev
-           FROM orders GROUP BY 1),
-         m AS (
-           SELECT COUNT(*) AS n, SUM(rev) AS sx,
-                  SUM(CAST(rev * rev AS DECIMAL(38,4))) AS sx2
-           FROM daily),
+      s"""WITH $SaxMomentsCte,
          sym AS (
            SELECT day,
                   CASE WHEN z < -0.6745 THEN 'a'
@@ -2020,11 +1825,7 @@ object Analytics {
         // fit checkpoints the degree-annotated edges once and keeps
         // the rounds one linear deferred chain (measured: per-round
         // eager materialization pays 8× job latency for nothing)
-        val edges = graft.engine.ops.Graph.bipartiteEdgesFor(
-          lineitem(s, d)
-            .select((col("l_suppkey").cast("bigint") * 2).as("a"),
-              (col("l_partkey").cast("bigint") * 2 + 1).as("b")),
-          s"${d}_bipsp")
+        val edges = supplierPartEdges(s, d)
         val pi = graft.engine.ops.Graph.personalizedPagerankFor(
           edges, 8, s"${d}_bipsp")
         val top = pi.orderBy(desc("pi"), col("node")).limit(10)
@@ -2179,33 +1980,8 @@ object Analytics {
     // pivot row → 3 output rows.
     Q("time_pacf",
       (s, d) => {
-        import org.apache.spark.sql.expressions.Window
-        import org.apache.spark.sql.types.DecimalType
-        val daily = orders(s, d)
-          .groupBy(col("o_orderdate").cast("date").as("day"))
-          .agg(sum(col("o_totalprice").cast(DecimalType(18, 2))).as("x"))
-        val w = Window.orderBy("day")
-        val pairs = daily
-          .select(col("x"),
-            lag(col("x"), 1).over(w).as("l1"),
-            lag(col("x"), 2).over(w).as("l2"),
-            lag(col("x"), 3).over(w).as("l3"))
-          .selectExpr("x", "stack(3, 1, l1, 2, l2, 3, l3) AS (k, y)")
-          .filter(col("y").isNotNull)
-        val rho = pairs.groupBy("k")
-          .agg(count(lit(1)).as("n"),
-            sum(col("x")).as("sx"), sum(col("y")).as("sy"),
-            sum((col("x") * col("y")).cast(DecimalType(38, 6))).as("sxy"),
-            sum((col("x") * col("x")).cast(DecimalType(38, 6))).as("sxx"),
-            sum((col("y") * col("y")).cast(DecimalType(38, 6))).as("syy"))
-          .select(col("k"),
-            ((col("n").cast("double") * col("sxy").cast("double") -
-              col("sx").cast("double") * col("sy").cast("double")) /
-              sqrt((col("n").cast("double") * col("sxx").cast("double") -
-                col("sx").cast("double") * col("sx").cast("double")) *
-                (col("n").cast("double") * col("syy").cast("double") -
-                  col("sy").cast("double") * col("sy").cast("double"))))
-              .as("rho"))
+        val rho = lagMoments(s, d)
+          .select(col("k"), lagCorr.as("rho"))
         rho.groupBy()
           .agg(max(when(col("k") === 1, col("rho"))).as("r1"),
             max(when(col("k") === 2, col("rho"))).as("r2"),
@@ -2226,27 +2002,9 @@ object Analytics {
             round(col("pacf"), 6).as("pacf"))
           .orderBy("k")
       },
-      """WITH daily AS (
-           SELECT CAST(o_orderdate AS DATE) AS day,
-                  SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS x
-           FROM orders GROUP BY 1),
-         lagged AS (
-           SELECT x, lag(x, 1) OVER (ORDER BY day) AS l1,
-                  lag(x, 2) OVER (ORDER BY day) AS l2,
-                  lag(x, 3) OVER (ORDER BY day) AS l3
-           FROM daily),
-         pairs AS (
-           SELECT 1 AS k, x, l1 AS y FROM lagged WHERE l1 IS NOT NULL
-           UNION ALL
-           SELECT 2, x, l2 FROM lagged WHERE l2 IS NOT NULL
-           UNION ALL
-           SELECT 3, x, l3 FROM lagged WHERE l3 IS NOT NULL),
-         m AS (
-           SELECT k, COUNT(*) AS n, SUM(x) AS sx, SUM(y) AS sy,
-                  SUM(CAST(x * y AS DECIMAL(38,6))) AS sxy,
-                  SUM(CAST(x * x AS DECIMAL(38,6))) AS sxx,
-                  SUM(CAST(y * y AS DECIMAL(38,6))) AS syy
-           FROM pairs GROUP BY k),
+      s"""WITH $DailyRevXCte,
+         $LagPairsCte,
+         $LagMomentsCte,
          rho AS (
            SELECT k,
                   (CAST(n AS DOUBLE) * CAST(sxy AS DOUBLE) -
@@ -2339,9 +2097,7 @@ object Analytics {
         // materialized relation instead of re-scanning orders — at
         // 100 TB a 4× scan of the fact table is the real cost here
         // (the Dedup.keepListFor localCheckpoint precedent)
-        val daily = orders(s, d)
-          .groupBy(col("o_orderdate").cast("date").as("day"))
-          .agg(sum(col("o_totalprice").cast(DecimalType(18, 2))).as("x"))
+        val daily = dailyRevX(s, d)
           .localCheckpoint(true)
         val sStat = daily.as("a").join(daily.as("b"),
             col("a.day") < col("b.day"))
@@ -2362,10 +2118,7 @@ object Analytics {
               .as("z_score"),
             signum(col("s_stat")).cast("int").as("trend_sign"))
       },
-      """WITH daily AS (
-           SELECT CAST(o_orderdate AS DATE) AS day,
-                  SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS x
-           FROM orders GROUP BY 1),
+      s"""WITH $DailyRevXCte,
          s AS (
            SELECT CAST(SUM(CASE WHEN b.x > a.x THEN 1
                                 WHEN b.x < a.x THEN -1
@@ -3091,20 +2844,11 @@ object Analytics {
       (s, d) => {
         import org.apache.spark.sql.expressions.Window
         import org.apache.spark.sql.types.DecimalType
-        val daily = orders(s, d)
-          .groupBy(col("o_orderdate").cast("date").as("day"))
-          .agg(sum(col("o_totalprice").cast(DecimalType(18, 2))).as("x"))
+        val daily = dailyRevX(s, d)
         val glob = daily.agg(count(lit(1)).as("n"),
           sum(col("x")).as("s"),
           sum((col("x") * col("x")).cast(DecimalType(38, 4))).as("sxx"))
-        val w = Window.orderBy("day")
-        val lagsums = daily
-          .select(col("x"),
-            lag(col("x"), 1).over(w).as("l1"),
-            lag(col("x"), 2).over(w).as("l2"),
-            lag(col("x"), 3).over(w).as("l3"))
-          .selectExpr("x", "stack(3, 1, l1, 2, l2, 3, l3) AS (k, y)")
-          .filter(col("y").isNotNull)
+        val lagsums = lagPairs(daily)
           .groupBy("k")
           .agg(sum((col("x") * col("y")).cast(DecimalType(38, 4)))
             .as("sxy"),
@@ -3134,24 +2878,11 @@ object Analytics {
                 (col("n").cast("double") - col("k"))), 4).as("q_lb"))
           .withColumn("reject_white_noise_05", col("q_lb") > 7.815)
       },
-      """WITH daily AS (
-           SELECT CAST(o_orderdate AS DATE) AS day,
-                  SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS x
-           FROM orders GROUP BY 1),
+      s"""WITH $DailyRevXCte,
          gm AS (SELECT COUNT(*) AS n, SUM(x) AS s,
                        SUM(CAST(x * x AS DECIMAL(38,4))) AS sxx
                 FROM daily),
-         lagged AS (
-           SELECT x, lag(x, 1) OVER (ORDER BY day) AS l1,
-                  lag(x, 2) OVER (ORDER BY day) AS l2,
-                  lag(x, 3) OVER (ORDER BY day) AS l3
-           FROM daily),
-         pairs AS (
-           SELECT 1 AS k, x, l1 AS y FROM lagged WHERE l1 IS NOT NULL
-           UNION ALL
-           SELECT 2, x, l2 FROM lagged WHERE l2 IS NOT NULL
-           UNION ALL
-           SELECT 3, x, l3 FROM lagged WHERE l3 IS NOT NULL),
+         $LagPairsCte,
          lagsums AS (
            SELECT k, SUM(CAST(x * y AS DECIMAL(38,4))) AS sxy,
                   SUM(x) AS spx, SUM(y) AS spy, COUNT(*) AS np
@@ -3217,36 +2948,10 @@ object Analytics {
               .as("szy"),
             expr("CAST(sum(CAST(y*y AS DECIMAL(38,4))) AS DOUBLE)")
               .as("syy"))
-          .selectExpr("n",
-            """ROUND((
-                 ((syy - sy*sy/n) - (sxy - sx*sy/n)*(sxy - sx*sy/n)
-                    / (sxx - sx*sx/n))
-                 - ((syy - sy*sy/n)
-                    - (((szz - sz*sz/n)*(sxy - sx*sy/n)
-                        - (sxz - sx*sz/n)*(szy - sz*sy/n))
-                       / ((sxx - sx*sx/n)*(szz - sz*sz/n)
-                          - (sxz - sx*sz/n)*(sxz - sx*sz/n))
-                         * (sxy - sx*sy/n)
-                       + ((sxx - sx*sx/n)*(szy - sz*sy/n)
-                          - (sxz - sx*sz/n)*(sxy - sx*sy/n))
-                       / ((sxx - sx*sx/n)*(szz - sz*sz/n)
-                          - (sxz - sx*sz/n)*(sxz - sx*sz/n))
-                         * (szy - sz*sy/n)))
-               ) * (n - 3)
-               / ((syy - sy*sy/n)
-                  - (((szz - sz*sz/n)*(sxy - sx*sy/n)
-                      - (sxz - sx*sz/n)*(szy - sz*sy/n))
-                     / ((sxx - sx*sx/n)*(szz - sz*sz/n)
-                        - (sxz - sx*sz/n)*(sxz - sx*sz/n))
-                       * (sxy - sx*sy/n)
-                     + ((sxx - sx*sx/n)*(szy - sz*sy/n)
-                        - (sxz - sx*sz/n)*(sxy - sx*sy/n))
-                     / ((sxx - sx*sx/n)*(szz - sz*sz/n)
-                        - (sxz - sx*sz/n)*(sxz - sx*sz/n))
-                       * (szy - sz*sy/n))), 4) + 0.0D AS f_stat""")
+          .selectExpr("n", s"$GrangerF + 0.0D AS f_stat")
           .withColumn("granger_05", col("f_stat") > 3.8415)
       },
-      """WITH daily AS (
+      s"""WITH daily AS (
            SELECT CAST(o_orderdate AS DATE) AS day,
                   SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS rev,
                   CAST(COUNT(*) AS DECIMAL(18,0)) AS cnt
@@ -3269,58 +2974,8 @@ object Analytics {
                   CAST(SUM(CAST(y*y AS DECIMAL(38,4))) AS DOUBLE) AS syy
            FROM lagged WHERE x IS NOT NULL)
          SELECT n,
-                ROUND((
-                  ((syy - sy*sy/n) - (sxy - sx*sy/n)*(sxy - sx*sy/n)
-                     / (sxx - sx*sx/n))
-                  - ((syy - sy*sy/n)
-                     - (((szz - sz*sz/n)*(sxy - sx*sy/n)
-                         - (sxz - sx*sz/n)*(szy - sz*sy/n))
-                        / ((sxx - sx*sx/n)*(szz - sz*sz/n)
-                           - (sxz - sx*sz/n)*(sxz - sx*sz/n))
-                          * (sxy - sx*sy/n)
-                        + ((sxx - sx*sx/n)*(szy - sz*sy/n)
-                           - (sxz - sx*sz/n)*(sxy - sx*sy/n))
-                        / ((sxx - sx*sx/n)*(szz - sz*sz/n)
-                           - (sxz - sx*sz/n)*(sxz - sx*sz/n))
-                          * (szy - sz*sy/n)))
-                ) * (n - 3)
-                / ((syy - sy*sy/n)
-                   - (((szz - sz*sz/n)*(sxy - sx*sy/n)
-                       - (sxz - sx*sz/n)*(szy - sz*sy/n))
-                      / ((sxx - sx*sx/n)*(szz - sz*sz/n)
-                         - (sxz - sx*sz/n)*(sxz - sx*sz/n))
-                        * (sxy - sx*sy/n)
-                      + ((sxx - sx*sx/n)*(szy - sz*sy/n)
-                         - (sxz - sx*sz/n)*(sxy - sx*sy/n))
-                      / ((sxx - sx*sx/n)*(szz - sz*sz/n)
-                         - (sxz - sx*sz/n)*(sxz - sx*sz/n))
-                        * (szy - sz*sy/n))), 4) + 0.0 AS f_stat,
-                (ROUND((
-                  ((syy - sy*sy/n) - (sxy - sx*sy/n)*(sxy - sx*sy/n)
-                     / (sxx - sx*sx/n))
-                  - ((syy - sy*sy/n)
-                     - (((szz - sz*sz/n)*(sxy - sx*sy/n)
-                         - (sxz - sx*sz/n)*(szy - sz*sy/n))
-                        / ((sxx - sx*sx/n)*(szz - sz*sz/n)
-                           - (sxz - sx*sz/n)*(sxz - sx*sz/n))
-                          * (sxy - sx*sy/n)
-                        + ((sxx - sx*sx/n)*(szy - sz*sy/n)
-                           - (sxz - sx*sz/n)*(sxy - sx*sy/n))
-                        / ((sxx - sx*sx/n)*(szz - sz*sz/n)
-                           - (sxz - sx*sz/n)*(sxz - sx*sz/n))
-                          * (szy - sz*sy/n)))
-                ) * (n - 3)
-                / ((syy - sy*sy/n)
-                   - (((szz - sz*sz/n)*(sxy - sx*sy/n)
-                       - (sxz - sx*sz/n)*(szy - sz*sy/n))
-                      / ((sxx - sx*sx/n)*(szz - sz*sz/n)
-                         - (sxz - sx*sz/n)*(sxz - sx*sz/n))
-                        * (sxy - sx*sy/n)
-                      + ((sxx - sx*sx/n)*(szy - sz*sy/n)
-                         - (sxz - sx*sz/n)*(sxy - sx*sy/n))
-                      / ((sxx - sx*sx/n)*(szz - sz*sz/n)
-                         - (sxz - sx*sz/n)*(sxz - sx*sz/n))
-                        * (szy - sz*sy/n))), 4) + 0.0 > 3.8415)
+                $GrangerF + 0.0 AS f_stat,
+                ($GrangerF + 0.0 > 3.8415)
                   AS granger_05
          FROM m"""),
 
@@ -3430,10 +3085,7 @@ object Analytics {
                 col("n")), 6).as("kpss_eta"))
           .withColumn("reject_stationary_05", col("kpss_eta") > 0.463)
       },
-      """WITH daily AS (
-           SELECT CAST(o_orderdate AS DATE) AS day,
-                  SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS x
-           FROM orders GROUP BY 1),
+      s"""WITH $DailyRevXCte,
          gm AS (SELECT COUNT(*) AS n, SUM(x) AS s,
                        SUM(CAST(x * x AS DECIMAL(38,4))) AS sxx
                 FROM daily),
@@ -3598,11 +3250,7 @@ object Analytics {
     Q("time_adf",
       (s, d) => {
         import org.apache.spark.sql.expressions.Window
-        val daily = orders(s, d)
-          .groupBy(col("o_orderdate").cast("date").as("day"))
-          .agg(expr(
-            "CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))*100) AS BIGINT)")
-            .as("y"))
+        val daily = dailyCents(s, d)
         val w = Window.orderBy("day")
         val ser = daily
           .withColumn("ylag", lag("y", 1).over(w))
@@ -3640,11 +3288,7 @@ object Analytics {
             """rho / sqrt(((crr - rho*cxr - phi*czr) / (n - 3))
                  * czz / det) < -2.86D AS stationary_05""")
       },
-      """WITH daily AS (
-           SELECT CAST(o_orderdate AS DATE) AS day,
-                  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))*100)
-                    AS BIGINT) AS y
-           FROM orders GROUP BY 1),
+      s"""WITH $DailyCentsCte,
          ser0 AS (
            SELECT day, y,
                   LAG(y, 1) OVER (ORDER BY day) AS ylag
@@ -3801,11 +3445,7 @@ object Analytics {
     Q("time_theil_u2",
       (s, d) => {
         import org.apache.spark.sql.expressions.Window
-        val daily = orders(s, d)
-          .groupBy(col("o_orderdate").cast("date").as("day"))
-          .agg(expr(
-            "CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))*100) AS BIGINT)")
-            .as("y"))
+        val daily = dailyCents(s, d)
         val w = Window.orderBy("day")
         val ser = daily
           .withColumn("f7", lag("y", 7).over(w))
@@ -3827,11 +3467,7 @@ object Analytics {
             expr("CAST(sse7 AS DOUBLE) < CAST(sse1 AS DOUBLE)")
               .as("beats_naive"))
       },
-      """WITH daily AS (
-           SELECT CAST(o_orderdate AS DATE) AS day,
-                  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))*100)
-                    AS BIGINT) AS y
-           FROM orders GROUP BY 1),
+      s"""WITH $DailyCentsCte,
          ser AS (
            SELECT y,
                   LAG(y, 7) OVER (ORDER BY day) AS f7,
@@ -3864,11 +3500,7 @@ object Analytics {
     // windows (rn ≥ 14) are emitted.
     Q("time_rsi",
       (s, d) => {
-        val daily = orders(s, d)
-          .groupBy(col("o_orderdate").cast("date").as("day"))
-          .agg(expr(
-            "CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))*100) AS BIGINT)")
-            .as("y"))
+        val daily = dailyCents(s, d)
         val w = Window.orderBy("day")
         val w14 = Window.orderBy("day").rowsBetween(-13, 0)
         daily.withColumn("delta", col("y") - lag("y", 1).over(w))
@@ -3884,11 +3516,7 @@ object Analytics {
                       / 10000.0D END""").as("rsi14"))
           .orderBy("day")
       },
-      """WITH daily AS (
-           SELECT CAST(o_orderdate AS DATE) AS day,
-                  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))*100)
-                    AS BIGINT) AS y
-           FROM orders GROUP BY 1),
+      s"""WITH $DailyCentsCte,
          dd AS (SELECT day, y,
                   y - LAG(y, 1) OVER (ORDER BY day) AS delta
                 FROM daily),
@@ -3918,11 +3546,7 @@ object Analytics {
     // aggregate over the calendar-bounded grain; one row travels.
     Q("time_variance_ratio",
       (s, d) => {
-        val daily = orders(s, d)
-          .groupBy(col("o_orderdate").cast("date").as("day"))
-          .agg(expr(
-            "CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))*100) AS BIGINT)")
-            .as("y"))
+        val daily = dailyCents(s, d)
         val w = Window.orderBy("day")
         daily.withColumn("d1", col("y") - lag("y", 1).over(w))
           .withColumn("d5", col("y") - lag("y", 5).over(w))
@@ -3944,11 +3568,7 @@ object Analytics {
             expr("""CASE WHEN vden = 0.0D THEN NULL ELSE
                       vnum < vden END""").as("mean_reverting"))
       },
-      """WITH daily AS (
-           SELECT CAST(o_orderdate AS DATE) AS day,
-                  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))*100)
-                    AS BIGINT) AS y
-           FROM orders GROUP BY 1),
+      s"""WITH $DailyCentsCte,
          ser AS (SELECT y,
                    y - LAG(y, 1) OVER (ORDER BY day) AS d1,
                    y - LAG(y, 5) OVER (ORDER BY day) AS d5
@@ -4019,13 +3639,7 @@ object Analytics {
                     AS DOUBLE) / 8.0D""").as("katz"))
           .orderBy("node")
       },
-      """WITH e0 AS (
-           SELECT DISTINCT CAST(l_suppkey AS BIGINT) * 2 AS a,
-                  CAST(l_partkey AS BIGINT) * 2 + 1 AS b
-           FROM lineitem),
-         edges AS (
-           SELECT a AS src, b AS dst FROM e0
-           UNION ALL SELECT b, a FROM e0),
+      s"""WITH $BipartiteEdgesCte,
          w1 AS (SELECT dst AS node, CAST(COUNT(*) AS HUGEINT) AS w
                 FROM edges GROUP BY 1),
          w2 AS (SELECT e.dst AS node, SUM(p.w) AS w
@@ -4050,11 +3664,7 @@ object Analytics {
     // constant series (denominator 0) is NULL on both engines.
     Q("time_mase",
       (s, d) => {
-        val daily = orders(s, d)
-          .groupBy(col("o_orderdate").cast("date").as("day"))
-          .agg(expr(
-            "CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))*100) AS BIGINT)")
-            .as("y"))
+        val daily = dailyCents(s, d)
         val w = Window.orderBy("day")
         daily.withColumn("f7", lag("y", 7).over(w))
           .withColumn("f1", lag("y", 1).over(w))
@@ -4075,11 +3685,7 @@ object Analytics {
             expr("""CASE WHEN sae1 = 0 THEN NULL ELSE
                       sae7 < sae1 END""").as("beats_naive"))
       },
-      """WITH daily AS (
-           SELECT CAST(o_orderdate AS DATE) AS day,
-                  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))*100)
-                    AS BIGINT) AS y
-           FROM orders GROUP BY 1),
+      s"""WITH $DailyCentsCte,
          ser AS (SELECT y,
                    LAG(y, 7) OVER (ORDER BY day) AS f7,
                    LAG(y, 1) OVER (ORDER BY day) AS f1
@@ -4111,11 +3717,7 @@ object Analytics {
     // over the calendar-bounded daily grain + a TakeOrdered(1).
     Q("time_pettitt",
       (s, d) => {
-        val daily = orders(s, d)
-          .groupBy(col("o_orderdate").cast("date").as("day"))
-          .agg(expr(
-            "CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))*100) AS BIGINT)")
-            .as("y"))
+        val daily = dailyCents(s, d)
         val tot = daily.agg(count(lit(1)).as("n"))
         val wv = Window.orderBy("y")
         val wt = Window.partitionBy("y")
@@ -4138,11 +3740,7 @@ object Analytics {
                       / (CAST(n AS DOUBLE)*n*n + CAST(n AS DOUBLE)*n)),
                     6) + 0.0D""").as("p_value"))
       },
-      """WITH daily AS (
-           SELECT CAST(o_orderdate AS DATE) AS day,
-                  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))*100)
-                    AS BIGINT) AS y
-           FROM orders GROUP BY 1),
+      s"""WITH $DailyCentsCte,
          tot AS (SELECT CAST(COUNT(*) AS BIGINT) AS n FROM daily),
          r AS (SELECT day, y,
                  2 * RANK() OVER (ORDER BY y)
@@ -4206,13 +3804,7 @@ object Analytics {
                     / 10000.0D""").as("avg_neighbor_degree"))
           .orderBy("degree")
       },
-      """WITH e0 AS (
-           SELECT DISTINCT CAST(l_suppkey AS BIGINT) * 2 AS a,
-                  CAST(l_partkey AS BIGINT) * 2 + 1 AS b
-           FROM lineitem),
-         edges AS (
-           SELECT a AS src, b AS dst FROM e0
-           UNION ALL SELECT b, a FROM e0),
+      s"""WITH $BipartiteEdgesCte,
          deg AS (SELECT dst AS node, CAST(COUNT(*) AS BIGINT) AS degv
                  FROM edges GROUP BY 1),
          per AS (SELECT e.dst AS node,
@@ -4245,11 +3837,7 @@ object Analytics {
     // + one 7-row rollup.
     Q("time_seasonal_index_mult",
       (s, d) => {
-        val daily = orders(s, d)
-          .groupBy(col("o_orderdate").cast("date").as("day"))
-          .agg(expr(
-            "CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))*100) AS BIGINT)")
-            .as("y"))
+        val daily = dailyCents(s, d)
         val spine = daily.agg(min("day").as("lo"), max("day").as("hi"))
           .select(explode(expr("sequence(lo, hi, interval 1 day)"))
             .as("day"))
@@ -4273,11 +3861,7 @@ object Analytics {
                     END""").as("seasonal_index"))
           .orderBy("dow")
       },
-      """WITH daily AS (
-           SELECT CAST(o_orderdate AS DATE) AS day,
-                  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))*100)
-                    AS BIGINT) AS y
-           FROM orders GROUP BY 1),
+      s"""WITH $DailyCentsCte,
          b AS (SELECT MIN(day) AS lo, MAX(day) AS hi FROM daily),
          spine AS (SELECT CAST(unnest(generate_series(lo, hi,
                      INTERVAL 1 DAY)) AS DATE) AS day FROM b),
@@ -4315,11 +3899,7 @@ object Analytics {
     // One lag window over the calendar grain + one aggregate.
     Q("time_ar1_halflife",
       (s, d) => {
-        val daily = orders(s, d)
-          .groupBy(col("o_orderdate").cast("date").as("day"))
-          .agg(expr(
-            "CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))*100) AS BIGINT)")
-            .as("y"))
+        val daily = dailyCents(s, d)
         val w = Window.orderBy("day")
         daily.withColumn("x", lag("y", 1).over(w))
           .filter(col("x").isNotNull)
@@ -4342,11 +3922,7 @@ object Analytics {
                     ROUND(ln(2.0D) / (-ln(phi)), 4) + 0.0D
                     END""").as("halflife_days"))
       },
-      """WITH daily AS (
-           SELECT CAST(o_orderdate AS DATE) AS day,
-                  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))*100)
-                    AS BIGINT) AS y
-           FROM orders GROUP BY 1),
+      s"""WITH $DailyCentsCte,
          p AS (SELECT y, LAG(y, 1) OVER (ORDER BY day) AS x
                FROM daily),
          m AS (SELECT CAST(COUNT(*) AS BIGINT) AS n,
@@ -4386,11 +3962,7 @@ object Analytics {
     // over the calendar grain.
     Q("time_durbin_watson",
       (s, d) => {
-        val daily = orders(s, d)
-          .groupBy(col("o_orderdate").cast("date").as("day"))
-          .agg(expr(
-            "CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))*100) AS BIGINT)")
-            .as("y"))
+        val daily = dailyCents(s, d)
         val w = Window.orderBy("day")
         daily.withColumn("f1", lag("y", 1).over(w))
           .agg(count(lit(1)).as("n"),
@@ -4412,11 +3984,7 @@ object Analytics {
                     WHEN num * 2 > den * 5 THEN 'negative'
                     ELSE 'none' END""").as("autocorrelation"))
       },
-      """WITH daily AS (
-           SELECT CAST(o_orderdate AS DATE) AS day,
-                  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))*100)
-                    AS BIGINT) AS y
-           FROM orders GROUP BY 1),
+      s"""WITH $DailyCentsCte,
          ser AS (SELECT y, LAG(y, 1) OVER (ORDER BY day) AS f1
                  FROM daily),
          m AS (SELECT CAST(COUNT(*) AS BIGINT) AS n,
@@ -4452,11 +4020,7 @@ object Analytics {
     // over the calendar grain.
     Q("time_smape",
       (s, d) => {
-        val daily = orders(s, d)
-          .groupBy(col("o_orderdate").cast("date").as("day"))
-          .agg(expr(
-            "CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))*100) AS BIGINT)")
-            .as("y"))
+        val daily = dailyCents(s, d)
         val w = Window.orderBy("day")
         daily.withColumn("f7", lag("y", 7).over(w))
           .withColumn("f1", lag("y", 1).over(w))
@@ -4478,11 +4042,7 @@ object Analytics {
                     div (2 * n_days) / 10000.0D""").as("smape_naive_pct"),
             expr("s7 < s1").as("beats_naive"))
       },
-      """WITH daily AS (
-           SELECT CAST(o_orderdate AS DATE) AS day,
-                  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))*100)
-                    AS BIGINT) AS y
-           FROM orders GROUP BY 1),
+      s"""WITH $DailyCentsCte,
          ser AS (SELECT y,
                    LAG(y, 7) OVER (ORDER BY day) AS f7,
                    LAG(y, 1) OVER (ORDER BY day) AS f1
@@ -4518,11 +4078,7 @@ object Analytics {
     // windows over the calendar grain; output is day-grain bounded.
     Q("time_stochastic_k",
       (s, d) => {
-        val daily = orders(s, d)
-          .groupBy(col("o_orderdate").cast("date").as("day"))
-          .agg(expr(
-            "CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))*100) AS BIGINT)")
-            .as("y"))
+        val daily = dailyCents(s, d)
         val w14 = Window.orderBy("day").rowsBetween(-13, 0)
         daily
           .withColumn("mn", min("y").over(w14))
@@ -4542,11 +4098,7 @@ object Analytics {
             expr("CAST(d4 AS DOUBLE) / 10000.0D").as("d_pct"))
           .orderBy("day")
       },
-      """WITH daily AS (
-           SELECT CAST(o_orderdate AS DATE) AS day,
-                  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))*100)
-                    AS BIGINT) AS y
-           FROM orders GROUP BY 1),
+      s"""WITH $DailyCentsCte,
          r AS (
            SELECT day, y,
                   MIN(y) OVER w AS mn, MAX(y) OVER w AS mx,
@@ -4580,14 +4132,7 @@ object Analytics {
     // KM curve cross-checks. One day-grain window chain.
     Q("event_nelson_aalen",
       (s, d) => {
-        val ev = events(s, d).select(col("user_id"), col("event_type"),
-          (unix_micros(col("ts")) / lit(86400000000L)).cast("long")
-            .as("day"))
-        val firstClick = ev.filter(col("event_type") === "click")
-          .groupBy("user_id").agg(min(col("day")).as("d0"))
-        val firstBuy = ev.filter(col("event_type") === "purchase")
-          .groupBy("user_id").agg(min(col("day")).as("dp"))
-        val users = firstClick.join(firstBuy, Seq("user_id"), "left")
+        val users = firstClickBuy(s, d)
           .select(col("user_id"),
             when(col("dp").isNotNull && col("dp") >= col("d0"),
               col("dp") - col("d0")).as("t_event"))
@@ -4614,16 +4159,7 @@ object Analytics {
               .as("na_survival"))
           .orderBy("day")
       },
-      """WITH ev AS (
-           SELECT user_id, event_type,
-                  epoch_us(ts) // 86400000000 AS day
-           FROM events),
-         fc AS (
-           SELECT user_id, MIN(day) AS d0 FROM ev
-           WHERE event_type = 'click' GROUP BY 1),
-         fb AS (
-           SELECT user_id, MIN(day) AS dp FROM ev
-           WHERE event_type = 'purchase' GROUP BY 1),
+      s"""WITH $FirstClickBuyCte,
          users AS (
            SELECT fc.user_id,
                   CASE WHEN dp IS NOT NULL AND dp >= d0
@@ -4661,14 +4197,7 @@ object Analytics {
     // the survival siblings.
     Q("event_logrank",
       (s, d) => {
-        val ev = events(s, d).select(col("user_id"), col("event_type"),
-          (unix_micros(col("ts")) / lit(86400000000L)).cast("long")
-            .as("day"))
-        val firstClick = ev.filter(col("event_type") === "click")
-          .groupBy("user_id").agg(min(col("day")).as("d0"))
-        val firstBuy = ev.filter(col("event_type") === "purchase")
-          .groupBy("user_id").agg(min(col("day")).as("dp"))
-        val users = firstClick.join(firstBuy, Seq("user_id"), "left")
+        val users = firstClickBuy(s, d)
           .select((col("user_id") % 2).as("arm"),
             when(col("dp").isNotNull && col("dp") >= col("d0"),
               col("dp") - col("d0")).as("t_event"))
@@ -4717,16 +4246,7 @@ object Analytics {
                          > ${StatCrit.Chi2_95_Df1}D END""")
               .as("significant"))
       },
-      """WITH ev AS (
-           SELECT user_id, event_type,
-                  epoch_us(ts) // 86400000000 AS day
-           FROM events),
-         fc AS (
-           SELECT user_id, MIN(day) AS d0 FROM ev
-           WHERE event_type = 'click' GROUP BY 1),
-         fb AS (
-           SELECT user_id, MIN(day) AS dp FROM ev
-           WHERE event_type = 'purchase' GROUP BY 1),
+      s"""WITH $FirstClickBuyCte,
          users AS (
            SELECT fc.user_id % 2 AS arm,
                   CASE WHEN dp IS NOT NULL AND dp >= d0
@@ -4792,11 +4312,7 @@ object Analytics {
     // calendar grain; output is day-grain bounded.
     Q("time_bollinger",
       (s, d) => {
-        val daily = orders(s, d)
-          .groupBy(col("o_orderdate").cast("date").as("day"))
-          .agg(expr(
-            "CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))*100) AS BIGINT)")
-            .as("y"))
+        val daily = dailyCents(s, d)
         val w20 = Window.orderBy("day").rowsBetween(-19, 0)
         daily
           .withColumn("n", count(lit(1)).over(w20))
@@ -4824,11 +4340,7 @@ object Analytics {
                     + 0.0D END""").as("pct_b"))
           .orderBy("day")
       },
-      """WITH daily AS (
-           SELECT CAST(o_orderdate AS DATE) AS day,
-                  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))*100)
-                    AS BIGINT) AS y
-           FROM orders GROUP BY 1),
+      s"""WITH $DailyCentsCte,
          r AS (
            SELECT day, y,
                   COUNT(*) OVER w AS n,
@@ -4926,13 +4438,7 @@ object Analytics {
                FROM edges e JOIN x${i - 1} x ON x.node = e.src
                GROUP BY 1)"""
         }.mkString(",\n")
-        s"""WITH e0 AS (
-              SELECT DISTINCT CAST(l_suppkey AS BIGINT) * 2 AS a,
-                     CAST(l_partkey AS BIGINT) * 2 + 1 AS b
-              FROM lineitem),
-            edges AS (
-              SELECT a AS src, b AS dst FROM e0
-              UNION ALL SELECT b, a FROM e0),
+        s"""WITH $BipartiteEdgesCte,
             x0 AS (
               SELECT DISTINCT src AS node, CAST(1 AS HUGEINT) AS xv
               FROM edges),

@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.Tables._
+import graft.queries.Fragments._
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -956,21 +957,7 @@ object Behavior {
     Q("event_attribution",
       (s, d) => {
         import org.apache.spark.sql.expressions.Window
-        val ev = events(s, d).select(col("event_id"), col("user_id"),
-          col("event_type"), unix_micros(col("ts")).as("t"),
-          col("props"))
-        val clicks = ev.filter(col("event_type") === "click")
-          .select(col("user_id"), col("event_id").as("c_id"),
-            col("t").as("c_t"),
-            concat(lit("ch"),
-              get_json_object(col("props"), "$.k").cast("long") % 5)
-              .as("channel"))
-        val purchases = ev.filter(col("event_type") === "purchase")
-          .select(col("event_id").as("p_id"), col("user_id"),
-            col("t").as("p_t"))
-        val touches = purchases.join(clicks, Seq("user_id"))
-          .filter(col("c_t") < col("p_t") &&
-            col("p_t") - col("c_t") <= 3600000000L)
+        val touches = clickTouches(s, d)
         val wP = Window.partitionBy("p_id")
         val wLast = Window.partitionBy("p_id")
           .orderBy(desc("c_t"), desc("c_id"))
@@ -988,14 +975,7 @@ object Behavior {
             sum(col("is_last")).as("last_touch_credit"))
           .orderBy("channel")
       },
-      """WITH clicks AS (
-           SELECT user_id, event_id AS c_id, epoch_us(ts) AS c_t,
-                  'ch' || (CAST(json_extract_string(props, '$.k')
-                    AS BIGINT) % 5) AS channel
-           FROM events WHERE event_type = 'click'),
-         purchases AS (
-           SELECT event_id AS p_id, user_id, epoch_us(ts) AS p_t
-           FROM events WHERE event_type = 'purchase'),
+      s"""WITH $ClickPurchaseCte,
          touches AS (
            SELECT p.p_id, c.c_id, c.c_t, c.channel
            FROM purchases p JOIN clicks c USING (user_id)
@@ -1446,21 +1426,7 @@ object Behavior {
     // order-free and hash-exact. One windowed pass + one channel agg.
     Q("event_attribution_ushape",
       (s, d) => {
-        val ev = events(s, d).select(col("event_id"), col("user_id"),
-          col("event_type"), unix_micros(col("ts")).as("t"),
-          col("props"))
-        val clicks = ev.filter(col("event_type") === "click")
-          .select(col("user_id"), col("event_id").as("c_id"),
-            col("t").as("c_t"),
-            concat(lit("ch"),
-              get_json_object(col("props"), "$.k").cast("long") % 5)
-              .as("channel"))
-        val purchases = ev.filter(col("event_type") === "purchase")
-          .select(col("event_id").as("p_id"), col("user_id"),
-            col("t").as("p_t"))
-        val touches = purchases.join(clicks, Seq("user_id"))
-          .filter(col("c_t") < col("p_t") &&
-            col("p_t") - col("c_t") <= 3600000000L)
+        val touches = clickTouches(s, d)
         val wP = Window.partitionBy("p_id")
         val wAsc = wP.orderBy(asc("c_t"), asc("c_id"))
         touches
@@ -1479,14 +1445,7 @@ object Behavior {
               .as("ushape_credit"))
           .orderBy("channel")
       },
-      """WITH clicks AS (
-           SELECT user_id, event_id AS c_id, epoch_us(ts) AS c_t,
-                  'ch' || (CAST(json_extract_string(props, '$.k')
-                    AS BIGINT) % 5) AS channel
-           FROM events WHERE event_type = 'click'),
-         purchases AS (
-           SELECT event_id AS p_id, user_id, epoch_us(ts) AS p_t
-           FROM events WHERE event_type = 'purchase'),
+      s"""WITH $ClickPurchaseCte,
          touches AS (
            SELECT p_id, channel, c_t, c_id
            FROM purchases JOIN clicks USING (user_id)
@@ -1874,39 +1833,12 @@ object Behavior {
             (col("pi").cast("double") / 1.0e12).as("pi_stationary"),
             lit(8).as("n_iter"))
           .orderBy("event_type")
-      }, {
-        val steps = (1 to 8).map { i =>
-          s"""p$i AS (
-               SELECT ty.u, CAST(COALESCE(sq.pi, 0) AS BIGINT) AS pi
-               FROM ty LEFT JOIN (
-                 SELECT t.v AS u, SUM((p.pi * t.wt) // t.wu) AS pi
-                 FROM p${i - 1} p JOIN t ON t.u = p.u
-                 GROUP BY t.v) sq ON sq.u = ty.u)"""
-        }.mkString(",\n         ")
-        s"""WITH ev AS (
-              SELECT user_id, event_type, epoch_us(ts) AS tm, event_id
-              FROM events),
-            tr AS (
-              SELECT event_type AS u,
-                     LEAD(event_type) OVER (PARTITION BY user_id
-                       ORDER BY tm, event_id) AS v
-              FROM ev),
-            e AS (SELECT u, v, CAST(COUNT(*) AS BIGINT) AS wt FROM tr
-                  WHERE v IS NOT NULL GROUP BY 1, 2),
-            rs AS (SELECT u, CAST(SUM(wt) AS BIGINT) AS wu FROM e
-                   GROUP BY 1),
-            t AS (SELECT e.u, e.v, e.wt, rs.wu FROM e
-                  JOIN rs ON rs.u = e.u),
-            ty AS (SELECT DISTINCT u FROM e),
-            p0 AS (SELECT u, CAST(1000000000000 //
-                     (SELECT COUNT(*) FROM ty) AS BIGINT) AS pi
-                   FROM ty),
-            $steps
-            SELECT u AS event_type,
-                   CAST(pi AS DOUBLE) / 1e12 AS pi_stationary,
-                   8 AS n_iter
-            FROM p8 ORDER BY event_type"""
-      }),
+      },
+      s"""WITH $MarkovPowerCte
+          SELECT u AS event_type,
+                 CAST(pi AS DOUBLE) / 1e12 AS pi_stationary,
+                 8 AS n_iter
+          FROM p8 ORDER BY event_type"""),
 
     // PER-SERIES RATE ANOMALY — a trailing-window Poisson test per
     // (event_type, day): each day's count against the mean of its own
@@ -2106,51 +2038,24 @@ object Behavior {
             col("entropy_rate_bits"),
             round(log(col("n_states").cast("double")) / log(lit(2.0)),
               6).as("max_entropy_bits"))
-      }, {
-        val steps = (1 to 8).map { i =>
-          s"""p$i AS (
-               SELECT ty.u, CAST(COALESCE(sq.pi, 0) AS BIGINT) AS pi
-               FROM ty LEFT JOIN (
-                 SELECT t.v AS u, SUM((p.pi * t.wt) // t.wu) AS pi
-                 FROM p${i - 1} p JOIN t ON t.u = p.u
-                 GROUP BY t.v) sq ON sq.u = ty.u)"""
-        }.mkString(",\n         ")
-        s"""WITH ev AS (
-              SELECT user_id, event_type, epoch_us(ts) AS tm, event_id
-              FROM events),
-            tr AS (
-              SELECT event_type AS u,
-                     LEAD(event_type) OVER (PARTITION BY user_id
-                       ORDER BY tm, event_id) AS v
-              FROM ev),
-            e AS (SELECT u, v, CAST(COUNT(*) AS BIGINT) AS wt FROM tr
-                  WHERE v IS NOT NULL GROUP BY 1, 2),
-            rs AS (SELECT u, CAST(SUM(wt) AS BIGINT) AS wu FROM e
-                   GROUP BY 1),
-            t AS (SELECT e.u, e.v, e.wt, rs.wu FROM e
-                  JOIN rs ON rs.u = e.u),
-            ty AS (SELECT DISTINCT u FROM e),
-            p0 AS (SELECT u, CAST(1000000000000 //
-                     (SELECT COUNT(*) FROM ty) AS BIGINT) AS pi
-                   FROM ty),
-            $steps,
-            terms AS (
-              SELECT CAST(
-                (CAST(pi AS DOUBLE) / 1e12) *
-                (CAST(wt AS DOUBLE) / CAST(wu AS DOUBLE)) *
-                (ln(CAST(wu AS DOUBLE) / CAST(wt AS DOUBLE)) / ln(2.0))
-                AS DECIMAL(20,15)) AS term
-              FROM t JOIN p8 ON p8.u = t.u),
-            ns AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_states FROM p8)
-            SELECT n_states,
-                   CAST((SELECT COUNT(*) FROM terms) AS BIGINT)
-                     AS n_transitions,
-                   ROUND(CAST((SELECT SUM(term) FROM terms) AS DOUBLE),
-                     6) AS entropy_rate_bits,
-                   ROUND(ln(CAST(n_states AS DOUBLE)) / ln(2.0), 6)
-                     AS max_entropy_bits
-            FROM ns"""
-      }),
+      },
+      s"""WITH $MarkovPowerCte,
+          terms AS (
+            SELECT CAST(
+              (CAST(pi AS DOUBLE) / 1e12) *
+              (CAST(wt AS DOUBLE) / CAST(wu AS DOUBLE)) *
+              (ln(CAST(wu AS DOUBLE) / CAST(wt AS DOUBLE)) / ln(2.0))
+              AS DECIMAL(20,15)) AS term
+            FROM t JOIN p8 ON p8.u = t.u),
+          ns AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_states FROM p8)
+          SELECT n_states,
+                 CAST((SELECT COUNT(*) FROM terms) AS BIGINT)
+                   AS n_transitions,
+                 ROUND(CAST((SELECT SUM(term) FROM terms) AS DOUBLE),
+                   6) AS entropy_rate_bits,
+                 ROUND(ln(CAST(n_states AS DOUBLE)) / ln(2.0), 6)
+                   AS max_entropy_bits
+          FROM ns"""),
 
     // CONVERGENCE CURVE of the power iteration behind
     // event_markov_stationary: total-variation distance
@@ -2179,36 +2084,10 @@ object Behavior {
               .as("tv_distance"))
           .orderBy("t")
       }, {
-        val steps = (1 to 8).map { i =>
-          s"""p$i AS (
-               SELECT ty.u, CAST(COALESCE(sq.pi, 0) AS BIGINT) AS pi
-               FROM ty LEFT JOIN (
-                 SELECT t.v AS u, SUM((p.pi * t.wt) // t.wu) AS pi
-                 FROM p${i - 1} p JOIN t ON t.u = p.u
-                 GROUP BY t.v) sq ON sq.u = ty.u)"""
-        }.mkString(",\n            ")
         val tagged = (1 to 8).map { t =>
           s"SELECT $t AS t, u, pi FROM p$t"
         }.mkString("\n              UNION ALL ")
-        s"""WITH ev AS (
-              SELECT user_id, event_type, epoch_us(ts) AS tm, event_id
-              FROM events),
-            tr AS (
-              SELECT event_type AS u,
-                     LEAD(event_type) OVER (PARTITION BY user_id
-                       ORDER BY tm, event_id) AS v
-              FROM ev),
-            e AS (SELECT u, v, CAST(COUNT(*) AS BIGINT) AS wt FROM tr
-                  WHERE v IS NOT NULL GROUP BY 1, 2),
-            rs AS (SELECT u, CAST(SUM(wt) AS BIGINT) AS wu FROM e
-                   GROUP BY 1),
-            t AS (SELECT e.u, e.v, e.wt, rs.wu FROM e
-                  JOIN rs ON rs.u = e.u),
-            ty AS (SELECT DISTINCT u FROM e),
-            p0 AS (SELECT u, CAST(1000000000000 //
-                     (SELECT COUNT(*) FROM ty) AS BIGINT) AS pi
-                   FROM ty),
-            $steps,
+        s"""WITH $MarkovPowerCte,
             tagged AS (
               $tagged)
             SELECT CAST(x.t AS INTEGER) AS t,
@@ -3059,10 +2938,7 @@ object Behavior {
     // the same integers on both engines.
     Q("ab_cohens_d",
       (s, d) => {
-        val pu = events(s, d).groupBy("user_id")
-          .agg(sum(expr("CAST(CAST(value AS DECIMAL(18,2))*100 AS BIGINT)"))
-            .as("cents"))
-          .select((col("user_id") % 2).as("arm"), col("cents"))
+        val pu = userSpendByArm(s, d)
         pu.agg(
             sum(when(col("arm") === 0, 1L).otherwise(0L)).as("n0"),
             sum(when(col("arm") === 1, 1L).otherwise(0L)).as("n1"),
@@ -3094,11 +2970,7 @@ object Behavior {
                  * (1.0D - 3.0D / (4.0D * (n0 + n1) - 9.0D)), 6)
                + 0.0D AS hedges_g""")
       },
-      """WITH pu AS (
-           SELECT user_id % 2 AS arm,
-                  SUM(CAST(CAST(value AS DECIMAL(18,2))*100 AS BIGINT))
-                    AS cents
-           FROM events GROUP BY user_id),
+      s"""WITH $UserSpendCte,
          m AS (SELECT
              SUM(CASE WHEN arm = 0 THEN 1 ELSE 0 END) AS n0,
              SUM(CASE WHEN arm = 1 THEN 1 ELSE 0 END) AS n1,
@@ -3192,10 +3064,7 @@ object Behavior {
     // sizes the NEXT test). One aggregate of exact decimal moments.
     Q("ab_power_mde",
       (s, d) => {
-        val pu = events(s, d).groupBy("user_id")
-          .agg(sum(expr("CAST(CAST(value AS DECIMAL(18,2))*100 AS BIGINT)"))
-            .as("cents"))
-          .select((col("user_id") % 2).as("arm"), col("cents"))
+        val pu = userSpendByArm(s, d)
         pu.agg(
             sum(when(col("arm") === 0, 1L).otherwise(0L)).as("n0"),
             sum(when(col("arm") === 1, 1L).otherwise(0L)).as("n1"),
@@ -3218,11 +3087,7 @@ object Behavior {
                  / (CAST(s AS DOUBLE) / (n0 + n1)), 6)
                + 0.0D AS mde_rel""")
       },
-      """WITH pu AS (
-           SELECT user_id % 2 AS arm,
-                  SUM(CAST(CAST(value AS DECIMAL(18,2))*100 AS BIGINT))
-                    AS cents
-           FROM events GROUP BY user_id),
+      s"""WITH $UserSpendCte,
          m AS (SELECT
              SUM(CASE WHEN arm = 0 THEN 1 ELSE 0 END) AS n0,
              SUM(CASE WHEN arm = 1 THEN 1 ELSE 0 END) AS n1,
@@ -3788,18 +3653,7 @@ object Behavior {
             expr("""CASE WHEN hadj IS NULL THEN NULL ELSE
                     hadj > 9.487729036781154D END""").as("significant"))
       },
-      """WITH base AS (
-           SELECT CAST(substring(o_orderpriority, 1, 1) AS INT) AS g,
-                  CAST(l_quantity AS INT) AS q
-           FROM lineitem JOIN orders ON l_orderkey = o_orderkey),
-         hist AS (
-           SELECT q, CAST(COUNT(*) AS BIGINT) AS t,
-             CAST(SUM(CASE WHEN g = 1 THEN 1 ELSE 0 END) AS BIGINT) AS t1,
-             CAST(SUM(CASE WHEN g = 2 THEN 1 ELSE 0 END) AS BIGINT) AS t2,
-             CAST(SUM(CASE WHEN g = 3 THEN 1 ELSE 0 END) AS BIGINT) AS t3,
-             CAST(SUM(CASE WHEN g = 4 THEN 1 ELSE 0 END) AS BIGINT) AS t4,
-             CAST(SUM(CASE WHEN g = 5 THEN 1 ELSE 0 END) AS BIGINT) AS t5
-           FROM base GROUP BY 1),
+      s"""WITH $PriorityQtyHistCte,
          ranked AS (
            SELECT t, t1, t2, t3, t4, t5,
                   2 * (SUM(t) OVER (ORDER BY q) - t) + t + 1 AS mr2
@@ -3854,13 +3708,7 @@ object Behavior {
     // compares EXACT cross-multiplied integers — never a rounded δ.
     Q("ab_cliffs_delta",
       (s, d) => {
-        val base = lineitem(s, d)
-          .filter(col("l_returnflag").isin("R", "A"))
-          .select(col("l_quantity").cast("int").as("q"),
-            (col("l_returnflag") === "R").as("arm"))
-        val hist = base.groupBy("q").agg(
-          sum(when(col("arm"), 1L).otherwise(0L)).as("t1"),
-          sum(when(!col("arm"), 1L).otherwise(0L)).as("t0"))
+        val hist = returnFlagHist(s, d)
         val w = Window.orderBy("q")
         hist.withColumn("c0", sum(col("t0")).over(w))
           .agg(
@@ -4339,18 +4187,7 @@ object Behavior {
                     WHEN z < -${StatCrit.Z975}D THEN 'decreasing'
                     ELSE 'none' END""").as("trend"))
       },
-      """WITH base AS (
-           SELECT CAST(substring(o_orderpriority, 1, 1) AS INT) AS g,
-                  CAST(l_quantity AS INT) AS q
-           FROM lineitem JOIN orders ON l_orderkey = o_orderkey),
-         hist AS (
-           SELECT q, CAST(COUNT(*) AS BIGINT) AS t,
-             CAST(SUM(CASE WHEN g = 1 THEN 1 ELSE 0 END) AS BIGINT) AS t1,
-             CAST(SUM(CASE WHEN g = 2 THEN 1 ELSE 0 END) AS BIGINT) AS t2,
-             CAST(SUM(CASE WHEN g = 3 THEN 1 ELSE 0 END) AS BIGINT) AS t3,
-             CAST(SUM(CASE WHEN g = 4 THEN 1 ELSE 0 END) AS BIGINT) AS t4,
-             CAST(SUM(CASE WHEN g = 5 THEN 1 ELSE 0 END) AS BIGINT) AS t5
-           FROM base GROUP BY 1),
+      s"""WITH $PriorityQtyHistCte,
          cum AS (
            SELECT t, t1, t2, t3, t4, t5,
                   SUM(t1) OVER (ORDER BY q) - t1 AS c1,
@@ -4839,13 +4676,7 @@ object Behavior {
     // histogram.
     Q("ab_ks_2sample",
       (s, d) => {
-        val hist = lineitem(s, d)
-          .filter(col("l_returnflag").isin("R", "A"))
-          .select(col("l_quantity").cast("int").as("q"),
-            (col("l_returnflag") === "R").as("arm"))
-          .groupBy("q").agg(
-            sum(when(col("arm"), 1L).otherwise(0L)).as("t1"),
-            sum(when(!col("arm"), 1L).otherwise(0L)).as("t0"))
+        val hist = returnFlagHist(s, d)
         val w = Window.orderBy("q")
         val cum = hist
           .withColumn("c1", sum(col("t1")).over(w))
@@ -4875,14 +4706,7 @@ object Behavior {
                     2.0D * exp(-2.0D * lam2) < 0.05D END""")
               .as("significant"))
       },
-      """WITH hist AS (
-           SELECT CAST(l_quantity AS INT) AS q,
-             CAST(SUM(CASE WHEN l_returnflag = 'R' THEN 1 ELSE 0 END)
-               AS BIGINT) AS t1,
-             CAST(SUM(CASE WHEN l_returnflag = 'A' THEN 1 ELSE 0 END)
-               AS BIGINT) AS t0
-           FROM lineitem WHERE l_returnflag IN ('R', 'A')
-           GROUP BY 1),
+      s"""WITH $ReturnFlagHistCte,
          cum AS (
            SELECT t1, t0,
                   SUM(t1) OVER (ORDER BY q) AS c1,
@@ -5140,13 +4964,7 @@ object Behavior {
     // integer digits hold the worst cell to ~1e19 rows).
     Q("ab_anderson_darling",
       (s, d) => {
-        val hist = lineitem(s, d)
-          .filter(col("l_returnflag").isin("R", "A"))
-          .select(col("l_quantity").cast("int").as("q"),
-            (col("l_returnflag") === "R").as("arm"))
-          .groupBy("q").agg(
-            sum(when(col("arm"), 1L).otherwise(0L)).as("t1"),
-            sum(when(!col("arm"), 1L).otherwise(0L)).as("t0"))
+        val hist = returnFlagHist(s, d)
         val w = Window.orderBy("q")
         val cum = hist
           .withColumn("c1", sum(col("t1")).over(w))
@@ -5171,14 +4989,7 @@ object Behavior {
                              * n_acknowledged), 4) + 0.0D
                     END""").as("a2"))
       },
-      """WITH hist AS (
-           SELECT CAST(l_quantity AS INT) AS q,
-             CAST(SUM(CASE WHEN l_returnflag = 'R' THEN 1 ELSE 0 END)
-               AS BIGINT) AS t1,
-             CAST(SUM(CASE WHEN l_returnflag = 'A' THEN 1 ELSE 0 END)
-               AS BIGINT) AS t0
-           FROM lineitem WHERE l_returnflag IN ('R', 'A')
-           GROUP BY 1),
+      s"""WITH $ReturnFlagHistCte,
          cum AS (
            SELECT t1, t0,
                   SUM(t1) OVER (ORDER BY q) AS c1,
@@ -5222,13 +5033,7 @@ object Behavior {
     // output is a 9-row decile profile.
     Q("ab_quantile_effects",
       (s, d) => {
-        val hist = lineitem(s, d)
-          .filter(col("l_returnflag").isin("R", "A"))
-          .select(col("l_quantity").cast("int").as("q"),
-            (col("l_returnflag") === "R").as("arm"))
-          .groupBy("q").agg(
-            sum(when(col("arm"), 1L).otherwise(0L)).as("t1"),
-            sum(when(!col("arm"), 1L).otherwise(0L)).as("t0"))
+        val hist = returnFlagHist(s, d)
         val w = Window.orderBy("q")
         val cum = hist
           .withColumn("c1", sum(col("t1")).over(w))
@@ -5251,14 +5056,7 @@ object Behavior {
               col("qr") - col("qa")).as("qte"))
           .orderBy("decile")
       },
-      """WITH hist AS (
-           SELECT CAST(l_quantity AS INT) AS q,
-             CAST(SUM(CASE WHEN l_returnflag = 'R' THEN 1 ELSE 0 END)
-               AS BIGINT) AS t1,
-             CAST(SUM(CASE WHEN l_returnflag = 'A' THEN 1 ELSE 0 END)
-               AS BIGINT) AS t0
-           FROM lineitem WHERE l_returnflag IN ('R', 'A')
-           GROUP BY 1),
+      s"""WITH $ReturnFlagHistCte,
          cum AS (
            SELECT q,
                   SUM(t1) OVER (ORDER BY q) AS c1,

@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.Tables._
+import graft.queries.Fragments._
 import graft.engine.ml.Text
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
@@ -23,33 +24,8 @@ object Curation {
     * benchmark-contamination set. `curate_corpus` aggregates these into
     * the audit; `curate_apply` emits the surviving rows. */
   private val curateCtes: String =
-    s"""WITH RECURSIVE grams AS (
-            SELECT DISTINCT doc_id, lang, source,
-                   unnest(list_transform(range(1, len(string_split(text,' '))),
-                     i -> string_split(text,' ')[i] || ' ' ||
-                          string_split(text,' ')[i+1])) AS g
-            FROM documents),
-          sizes AS (SELECT doc_id, COUNT(*) AS sz FROM grams GROUP BY 1),
-          common AS (
-            SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS n_common
-            FROM grams a JOIN grams b
-              ON a.lang = b.lang AND a.source = b.source AND a.g = b.g
-             AND a.doc_id < b.doc_id
-            GROUP BY 1, 2),
-          pairs AS (
-            SELECT doc_a, doc_b
-            FROM common
-              JOIN sizes sa ON sa.doc_id = doc_a
-              JOIN sizes sb ON sb.doc_id = doc_b
-            WHERE n_common / CAST(sa.sz + sb.sz - n_common AS DOUBLE) >= 0.05),
-          edges AS (
-            SELECT doc_a AS u, doc_b AS v FROM pairs
-            UNION
-            SELECT doc_b AS u, doc_a AS v FROM pairs),
-          reach(u, v) AS (
-            SELECT doc_id, doc_id FROM documents
-            UNION
-            SELECT r.u, e.v FROM reach r JOIN edges e ON r.v = e.u),
+    s"""WITH RECURSIVE $BigramJaccardCte,
+          $BigramClosureCte,
           keep AS (
             SELECT u AS doc_id, MIN(v) AS keep_id FROM reach GROUP BY u),
           w5 AS (
@@ -1626,33 +1602,8 @@ FROM wt ORDER BY lang, source"""),
               .cast("double") / 1.0e6).as("survival_rate"))
           .orderBy("source")
       },
-      """WITH RECURSIVE grams AS (
-           SELECT DISTINCT doc_id, lang, source,
-                  unnest(list_transform(range(1, len(string_split(text,' '))),
-                    i -> string_split(text,' ')[i] || ' ' ||
-                         string_split(text,' ')[i+1])) AS g
-           FROM documents),
-         sizes AS (SELECT doc_id, COUNT(*) AS sz FROM grams GROUP BY 1),
-         common AS (
-           SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS n_common
-           FROM grams a JOIN grams b
-             ON a.lang = b.lang AND a.source = b.source AND a.g = b.g
-            AND a.doc_id < b.doc_id
-           GROUP BY 1, 2),
-         pairs AS (
-           SELECT doc_a, doc_b
-           FROM common
-             JOIN sizes sa ON sa.doc_id = doc_a
-             JOIN sizes sb ON sb.doc_id = doc_b
-           WHERE n_common / CAST(sa.sz + sb.sz - n_common AS DOUBLE) >= 0.05),
-         edges AS (
-           SELECT doc_a AS u, doc_b AS v FROM pairs
-           UNION
-           SELECT doc_b AS u, doc_a AS v FROM pairs),
-         reach(u, v) AS (
-           SELECT doc_id, doc_id FROM documents
-           UNION
-           SELECT r.u, e.v FROM reach r JOIN edges e ON r.v = e.u),
+      s"""WITH RECURSIVE $BigramJaccardCte,
+         $BigramClosureCte,
          resolved AS (
            SELECT u AS doc_id, MIN(v) AS keep_id FROM reach GROUP BY u),
          pre AS (
@@ -1964,11 +1915,7 @@ FROM wt ORDER BY lang, source"""),
     // exchange + one source rollup.
     Q("text_simpson_diversity",
       (s, d) => {
-        val wc = documents(s, d)
-          .select(col("source"),
-            explode(split(col("text"), " ")).as("w"))
-          .filter(col("w") =!= "")
-          .groupBy("source", "w").agg(count(lit(1)).as("c"))
+        val wc = sourceWordCounts(s, d)
         wc.groupBy("source")
           .agg(count(lit(1)).as("vocab"), sum("c").as("n_tokens"),
             sum(col("c").cast(DecimalType(38, 0)) * (col("c") - 1))
@@ -1987,12 +1934,7 @@ FROM wt ORDER BY lang, source"""),
               .as("effective_vocab"))
           .orderBy("source")
       },
-      """WITH wc AS (
-           SELECT source, w, CAST(COUNT(*) AS BIGINT) AS c
-           FROM (SELECT source,
-                        UNNEST(string_split(text, ' ')) AS w
-                 FROM documents)
-           WHERE w <> '' GROUP BY 1, 2),
+      s"""WITH $SourceWordCountCte,
          g AS (
            SELECT source, CAST(COUNT(*) AS BIGINT) AS vocab,
                   CAST(SUM(c) AS BIGINT) AS n_tokens,
@@ -2020,11 +1962,7 @@ FROM wt ORDER BY lang, source"""),
     // the sibling keys.
     Q("text_yule_k",
       (s, d) => {
-        val wc = documents(s, d)
-          .select(col("source"),
-            explode(split(col("text"), " ")).as("w"))
-          .filter(col("w") =!= "")
-          .groupBy("source", "w").agg(count(lit(1)).as("c"))
+        val wc = sourceWordCounts(s, d)
         wc.groupBy("source")
           .agg(count(lit(1)).as("vocab"), sum("c").as("n_tokens"),
             sum(col("c").cast(DecimalType(38, 0)) * col("c")).as("s2"))
@@ -2036,12 +1974,7 @@ FROM wt ORDER BY lang, source"""),
                            * n_tokens) / 10000.0D END""").as("yule_k"))
           .orderBy("source")
       },
-      """WITH wc AS (
-           SELECT source, w, CAST(COUNT(*) AS BIGINT) AS c
-           FROM (SELECT source,
-                        UNNEST(string_split(text, ' ')) AS w
-                 FROM documents)
-           WHERE w <> '' GROUP BY 1, 2),
+      s"""WITH $SourceWordCountCte,
          g AS (
            SELECT source, CAST(COUNT(*) AS BIGINT) AS vocab,
                   CAST(SUM(c) AS BIGINT) AS n_tokens,
@@ -2064,11 +1997,7 @@ FROM wt ORDER BY lang, source"""),
     // word) partial-agg exchange + source rollup as the siblings.
     Q("text_hapax_ratio",
       (s, d) => {
-        val wc = documents(s, d)
-          .select(col("source"),
-            explode(split(col("text"), " ")).as("w"))
-          .filter(col("w") =!= "")
-          .groupBy("source", "w").agg(count(lit(1)).as("c"))
+        val wc = sourceWordCounts(s, d)
         wc.groupBy("source")
           .agg(count(lit(1)).as("vocab"), sum("c").as("n_tokens"),
             sum(when(col("c") === 1, 1L).otherwise(0L)).as("hapax"),
@@ -2083,12 +2012,7 @@ FROM wt ORDER BY lang, source"""),
               .as("hapax_token_share"))
           .orderBy("source")
       },
-      """WITH wc AS (
-           SELECT source, w, CAST(COUNT(*) AS BIGINT) AS c
-           FROM (SELECT source,
-                        UNNEST(string_split(text, ' ')) AS w
-                 FROM documents)
-           WHERE w <> '' GROUP BY 1, 2),
+      s"""WITH $SourceWordCountCte,
          g AS (
            SELECT source, CAST(COUNT(*) AS BIGINT) AS vocab,
                   CAST(SUM(c) AS BIGINT) AS n_tokens,
@@ -2119,11 +2043,7 @@ FROM wt ORDER BY lang, source"""),
     // engines. One histogram exchange + a ≤|sources|-row fit.
     Q("text_heaps_law",
       (s, d) => {
-        val wc = documents(s, d)
-          .select(col("source"),
-            explode(split(col("text"), " ")).as("w"))
-          .filter(col("w") =!= "")
-          .groupBy("source", "w").agg(count(lit(1)).as("c"))
+        val wc = sourceWordCounts(s, d)
         wc.groupBy("source")
           .agg(count(lit(1)).as("v"), sum("c").as("n"))
           .select(
@@ -2152,12 +2072,7 @@ FROM wt ORDER BY lang, source"""),
                       - beta * CAST(sx AS DOUBLE)) / k), 4) + 0.0D
                     END""").as("heaps_k"))
       },
-      """WITH wc AS (
-           SELECT source, w, CAST(COUNT(*) AS BIGINT) AS c
-           FROM (SELECT source,
-                        UNNEST(string_split(text, ' ')) AS w
-                 FROM documents)
-           WHERE w <> '' GROUP BY 1, 2),
+      s"""WITH $SourceWordCountCte,
          g AS (
            SELECT source, CAST(COUNT(*) AS BIGINT) AS v,
                   CAST(SUM(c) AS BIGINT) AS n
@@ -2207,11 +2122,7 @@ FROM wt ORDER BY lang, source"""),
     // both outputs land via the half-up idiom; no float in any path.
     Q("text_chao1_richness",
       (s, d) => {
-        val wc = documents(s, d)
-          .select(col("source"),
-            explode(split(col("text"), " ")).as("w"))
-          .filter(col("w") =!= "")
-          .groupBy("source", "w").agg(count(lit(1)).as("c"))
+        val wc = sourceWordCounts(s, d)
         wc.groupBy("source")
           .agg(count(lit(1)).as("vocab"), sum("c").as("n_tokens"),
             sum(when(col("c") === 1, 1L).otherwise(0L)).as("v1"),
@@ -2227,12 +2138,7 @@ FROM wt ORDER BY lang, source"""),
                     END""").as("coverage"))
           .orderBy("source")
       },
-      """WITH wc AS (
-           SELECT source, w, CAST(COUNT(*) AS BIGINT) AS c
-           FROM (SELECT source,
-                        UNNEST(string_split(text, ' ')) AS w
-                 FROM documents)
-           WHERE w <> '' GROUP BY 1, 2),
+      s"""WITH $SourceWordCountCte,
          g AS (
            SELECT source, CAST(COUNT(*) AS BIGINT) AS vocab,
                   CAST(SUM(c) AS BIGINT) AS n_tokens,
@@ -2263,11 +2169,7 @@ FROM wt ORDER BY lang, source"""),
     // word) histogram exchange as the yule/hapax/chao1 siblings.
     Q("text_lexical_richness",
       (s, d) => {
-        val wc = documents(s, d)
-          .select(col("source"),
-            explode(split(col("text"), " ")).as("w"))
-          .filter(col("w") =!= "")
-          .groupBy("source", "w").agg(count(lit(1)).as("c"))
+        val wc = sourceWordCounts(s, d)
         wc.groupBy("source")
           .agg(count(lit(1)).as("vocab"), sum("c").as("n_tokens"),
             sum(when(col("c") === 1, 1L).otherwise(0L)).as("v1"),
@@ -2287,12 +2189,7 @@ FROM wt ORDER BY lang, source"""),
                     div (2 * vocab) / 1000000.0D END""").as("sichel_s"))
           .orderBy("source")
       },
-      """WITH wc AS (
-           SELECT source, w, CAST(COUNT(*) AS BIGINT) AS c
-           FROM (SELECT source,
-                        UNNEST(string_split(text, ' ')) AS w
-                 FROM documents)
-           WHERE w <> '' GROUP BY 1, 2),
+      s"""WITH $SourceWordCountCte,
          g AS (
            SELECT source, CAST(COUNT(*) AS BIGINT) AS vocab,
                   CAST(SUM(c) AS BIGINT) AS n_tokens,

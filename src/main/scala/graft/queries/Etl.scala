@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.Tables._
+import graft.queries.Fragments._
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -208,17 +209,7 @@ object Etl {
             col("valid_to").isNull.cast("int"))
           .orderBy("o_custkey", "valid_from", "o_orderkey")
       },
-      """SELECT o_custkey, o_orderkey,
-                epoch_us(o_orderdate) AS valid_from,
-                LEAD(epoch_us(o_orderdate), 1) OVER (
-                  PARTITION BY o_custkey
-                  ORDER BY epoch_us(o_orderdate), o_orderkey) AS valid_to,
-                CAST(LEAD(epoch_us(o_orderdate), 1) OVER (
-                  PARTITION BY o_custkey
-                  ORDER BY epoch_us(o_orderdate), o_orderkey) IS NULL
-                  AS INT) AS is_current
-         FROM orders
-         ORDER BY o_custkey, valid_from, o_orderkey"""),
+      Scd2HistorySql),
 
     // INCREMENTAL SCD2 merge — the production form of scd2_history
     // (which rebuilds from scratch): apply a delta batch of new
@@ -259,17 +250,7 @@ object Etl {
       },
       // the from-scratch recompute over ALL observations — incremental
       // apply must be indistinguishable from it
-      """SELECT o_custkey, o_orderkey,
-                epoch_us(o_orderdate) AS valid_from,
-                LEAD(epoch_us(o_orderdate), 1) OVER (
-                  PARTITION BY o_custkey
-                  ORDER BY epoch_us(o_orderdate), o_orderkey) AS valid_to,
-                CAST(LEAD(epoch_us(o_orderdate), 1) OVER (
-                  PARTITION BY o_custkey
-                  ORDER BY epoch_us(o_orderdate), o_orderkey) IS NULL
-                  AS INT) AS is_current
-         FROM orders
-         ORDER BY o_custkey, valid_from, o_orderkey"""),
+      Scd2HistorySql),
 
     // Cross-pipeline reconciliation — the migration-validation op: two
     // pipeline outputs compared per partition-key on row count, exact

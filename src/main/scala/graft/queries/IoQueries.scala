@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.Tables._
+import graft.queries.Fragments._
 import graft.engine.ops.Conform
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -540,15 +541,7 @@ object IoQueries {
             .select(lit(version).as("version"), col("n_rows"), col("total"))
         audit(1).unionByName(audit(2)).orderBy("version")
       },
-      """WITH v1 AS (
-           SELECT o_orderkey AS k, o_totalprice AS v FROM orders
-           WHERE o_orderkey % 2 = 0),
-         v2 AS (
-           SELECT k, CASE WHEN k % 10 = 0
-                  THEN CAST(CAST(v AS DECIMAL(18,2)) *
-                       CAST(1.10 AS DECIMAL(3,2)) AS DOUBLE)
-                  ELSE v END AS v
-           FROM v1)
+      s"""WITH $UpsertChainCte
          SELECT 1 AS version, COUNT(*) AS n_rows,
                 ROUND(CAST(SUM(CAST(v AS DECIMAL(18,4))) AS DOUBLE), 2)
                   AS total
@@ -574,31 +567,7 @@ object IoQueries {
     Q("table_commit_log",
       (s, d) => {
         import graft.engine.io.CommitLog
-        val root = scratch(d, "commitlog")
-        val fs = new org.apache.hadoop.fs.Path(root)
-          .getFileSystem(s.sparkContext.hadoopConfiguration)
-        fs.delete(new org.apache.hadoop.fs.Path(root), true)
-        CommitLog.init(s, root)
-        val v1 = orders(s, d).filter(col("o_orderkey") % 2 === 0)
-          .select(col("o_orderkey").as("k"), col("o_totalprice").as("v"))
-        CommitLog.commit(s, root, "snapshot") { (dir, _) =>
-          v1.write.parquet(dir)
-        }
-        // upsert derived AS OF the observed base — the shape a racing
-        // writer re-runs against the new base on conflict
-        CommitLog.commit(s, root, "upsert") { (dir, base) =>
-          CommitLog.readVersion(s, root, base).withColumn("v",
-            when(col("k") % 10 === 0,
-              (col("v").cast(DecimalType(18, 2)) *
-                lit(new java.math.BigDecimal("1.10"))).cast("double"))
-              .otherwise(col("v")))
-            .write.parquet(dir)
-        }
-        CommitLog.commit(s, root, "delete") { (dir, base) =>
-          CommitLog.readVersion(s, root, base)
-            .filter(col("k") % 100 =!= 0)
-            .write.parquet(dir)
-        }
+        val root = commitLogChain(s, d, "commitlog")
         val audits = CommitLog.commits(s, root).map { c =>
           CommitLog.readVersion(s, root, c.version)
             .agg(count(lit(1)).as("n_rows"),
@@ -611,15 +580,7 @@ object IoQueries {
         }
         audits.reduce(_ unionByName _).orderBy("version")
       },
-      """WITH v1 AS (
-           SELECT o_orderkey AS k, o_totalprice AS v FROM orders
-           WHERE o_orderkey % 2 = 0),
-         v2 AS (
-           SELECT k, CASE WHEN k % 10 = 0
-                  THEN CAST(CAST(v AS DECIMAL(18,2)) *
-                       CAST(1.10 AS DECIMAL(3,2)) AS DOUBLE)
-                  ELSE v END AS v
-           FROM v1),
+      s"""WITH $UpsertChainCte,
          v3 AS (SELECT * FROM v2 WHERE k % 100 <> 0)
          SELECT 1 AS version, 'snapshot' AS action, 0 AS base_version,
                 COUNT(*) AS n_rows,
@@ -724,41 +685,11 @@ object IoQueries {
     Q("table_changes",
       (s, d) => {
         import graft.engine.io.CommitLog
-        val root = scratch(d, "cdf")
-        val fs = new org.apache.hadoop.fs.Path(root)
-          .getFileSystem(s.sparkContext.hadoopConfiguration)
-        fs.delete(new org.apache.hadoop.fs.Path(root), true)
-        CommitLog.init(s, root)
-        val v1 = orders(s, d).filter(col("o_orderkey") % 2 === 0)
-          .select(col("o_orderkey").as("k"), col("o_totalprice").as("v"))
-        CommitLog.commit(s, root, "snapshot") { (dir, _) =>
-          v1.write.parquet(dir)
-        }
-        CommitLog.commit(s, root, "upsert") { (dir, base) =>
-          CommitLog.readVersion(s, root, base).withColumn("v",
-            when(col("k") % 10 === 0,
-              (col("v").cast(DecimalType(18, 2)) *
-                lit(new java.math.BigDecimal("1.10"))).cast("double"))
-              .otherwise(col("v")))
-            .write.parquet(dir)
-        }
-        CommitLog.commit(s, root, "delete") { (dir, base) =>
-          CommitLog.readVersion(s, root, base)
-            .filter(col("k") % 100 =!= 0)
-            .write.parquet(dir)
-        }
+        val root = commitLogChain(s, d, "cdf")
         CommitLog.changes(s, root, 1, 3, Seq("k"))
           .orderBy("_commit_version", "_change_type", "k")
       },
-      """WITH v1 AS (
-           SELECT o_orderkey AS k, o_totalprice AS v FROM orders
-           WHERE o_orderkey % 2 = 0),
-         v2 AS (
-           SELECT k, CASE WHEN k % 10 = 0
-                  THEN CAST(CAST(v AS DECIMAL(18,2)) *
-                       CAST(1.10 AS DECIMAL(3,2)) AS DOUBLE)
-                  ELSE v END AS v
-           FROM v1)
+      s"""WITH $UpsertChainCte
          SELECT k, v, _change_type, _commit_version FROM (
            SELECT k, v, 'update_preimage' AS _change_type,
                   2 AS _commit_version
@@ -1103,28 +1034,7 @@ object IoQueries {
     Q("stream_cdf_consume",
       (s, d) => {
         import graft.engine.io.CommitLog
-        val root = scratch(d, "cdfview")
-        val fsys = new org.apache.hadoop.fs.Path(root)
-          .getFileSystem(s.sparkContext.hadoopConfiguration)
-        fsys.delete(new org.apache.hadoop.fs.Path(root), true)
-        CommitLog.init(s, root)
-        CommitLog.commit(s, root, "snapshot") { (dir, _) =>
-          orders(s, d).filter(col("o_orderkey") % 2 === 0)
-            .select(col("o_orderkey").as("k"), col("o_totalprice").as("v"))
-            .write.parquet(dir)
-        }
-        CommitLog.commit(s, root, "upsert") { (dir, base) =>
-          CommitLog.readVersion(s, root, base).withColumn("v",
-            when(col("k") % 10 === 0,
-              (col("v").cast(DecimalType(18, 2)) *
-                lit(new java.math.BigDecimal("1.10"))).cast("double"))
-              .otherwise(col("v")))
-            .write.parquet(dir)
-        }
-        CommitLog.commit(s, root, "delete") { (dir, base) =>
-          CommitLog.readVersion(s, root, base)
-            .filter(col("k") % 100 =!= 0).write.parquet(dir)
-        }
+        val root = commitLogChain(s, d, "cdfview")
         val sign = when(col("_change_type").isin("insert",
           "update_postimage"), 1).otherwise(-1)
         val deltas = CommitLog.changes(s, root, 1, 3, Seq("k"))
@@ -1142,15 +1052,7 @@ object IoQueries {
       },
       // the head snapshot aggregated DIRECTLY — the maintained state
       // must be indistinguishable from it
-      """WITH v1 AS (
-           SELECT o_orderkey AS k, o_totalprice AS v FROM orders
-           WHERE o_orderkey % 2 = 0),
-         v2 AS (
-           SELECT k, CASE WHEN k % 10 = 0
-                  THEN CAST(CAST(v AS DECIMAL(18,2)) *
-                       CAST(1.10 AS DECIMAL(3,2)) AS DOUBLE)
-                  ELSE v END AS v
-           FROM v1),
+      s"""WITH $UpsertChainCte,
          v3 AS (SELECT * FROM v2 WHERE k % 100 <> 0)
          SELECT k % 5 AS g, COUNT(*) AS n,
                 ROUND(CAST(SUM(CAST(v AS DECIMAL(18,4))) AS DOUBLE), 2)

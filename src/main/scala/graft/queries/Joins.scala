@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.Tables._
+import graft.queries.Fragments._
 import org.apache.spark.sql.functions._
 
 /** Join operators (SURVEY.md §2.3).
@@ -187,12 +188,7 @@ object Joins {
           .agg(count(lit(1)).as("n_pairs"))
           .orderBy("user_id")
       },
-      """SELECT e1.user_id AS user_id, COUNT(*) AS n_pairs
-         FROM events e1 JOIN events e2
-           ON e1.user_id = e2.user_id
-          AND epoch_us(e2.ts) > epoch_us(e1.ts)
-          AND epoch_us(e2.ts) <= epoch_us(e1.ts) + 3600000000
-         GROUP BY 1 ORDER BY user_id"""),
+      EventPairsWithinHourSql),
 
     // The SCALE path for the interval join above: quantize time into
     // window-width buckets and join on (user, bucket) with the probe
@@ -219,12 +215,7 @@ object Joins {
           .agg(count(lit(1)).as("n_pairs"))
           .orderBy("user_id")
       },
-      """SELECT e1.user_id AS user_id, COUNT(*) AS n_pairs
-         FROM events e1 JOIN events e2
-           ON e1.user_id = e2.user_id
-          AND epoch_us(e2.ts) > epoch_us(e1.ts)
-          AND epoch_us(e2.ts) <= epoch_us(e1.ts) + 3600000000
-         GROUP BY 1 ORDER BY user_id"""),
+      EventPairsWithinHourSql),
 
     // As-of join (no native Spark operator): each purchase event matched
     // to the same user's latest prior click. Expressed as a window scan

@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.Tables._
+import graft.queries.Fragments._
 import graft.engine.ml.{Dedup, Similarity, Text}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
@@ -14,13 +15,6 @@ import org.apache.spark.sql.types.DecimalType
 object Llm {
 
   private val P = 1000000007L
-
-  /** The engine's seeded MinHash coefficients as SQL VALUES rows — the
-    * dedup_near oracle replicates the full LSH pipeline and inlines
-    * these so it can never drift from what the engine hashes with. */
-  private val MinhashCoeffRows: String =
-    Dedup.minhashCoeffs().zipWithIndex
-      .map { case ((a, b), k) => s"($k, $a, $b)" }.mkString(", ")
 
   /** Fixed query term set shared by the BM25 consumers. */
   private val Bm25Terms = Seq("join", "filter", "hash")
@@ -203,52 +197,13 @@ object Llm {
       (s, d) => Dedup.nearMinHash(documents(s, d), 0.8,
           datasetTag = Some(d))
         .orderBy("doc_a", "doc_b"),
-      s"""WITH coeffs(k, a, b) AS (VALUES $MinhashCoeffRows),
-          trigrams AS (
-            SELECT doc_id, unnest(list_transform(range(1, length(text) - 1),
-              i -> substring(text, i, 3))) AS g
-            FROM documents),
-          ghash AS (
-            SELECT DISTINCT doc_id,
-              CASE WHEN hu >= 9223372036854775808::HUGEINT
-                   THEN (hu - 18446744073709551616::HUGEINT)::BIGINT
-                   ELSE hu::BIGINT END AS h
-            FROM (
-              SELECT doc_id, list_reduce(
-                list_prepend(14695981039346656037::HUGEINT,
-                  list_transform(range(1, 4),
-                    i -> ascii(substring(g, i, 1))::HUGEINT)),
-                (h, c) -> ((xor(h::UBIGINT, c::UBIGINT))::HUGEINT
-                           * 1099511628211::HUGEINT)
-                          % 18446744073709551616::HUGEINT) AS hu
-              FROM trigrams)),
-          hp AS (
-            SELECT doc_id, h,
-                   ((h % 2147483647) + 2147483647) % 2147483647 AS hp
-            FROM ghash),
+      s"""WITH $MinhashHashCte,
+          $MinhashHpCte,
           sizes AS (SELECT doc_id, COUNT(*) AS sz FROM ghash GROUP BY 1),
-          sigs AS (
-            SELECT doc_id, k, MIN((a * hp + b) % 2147483647) AS sig
-            FROM hp, coeffs GROUP BY doc_id, k),
-          sigvec AS (
-            SELECT doc_id, list(sig ORDER BY k) AS sig
-            FROM sigs GROUP BY doc_id),
-          bands AS (
-            SELECT doc_id, bi AS band_idx,
-                   sig[bi * 8 + 1 : bi * 8 + 8] AS bandsig
-            FROM sigvec, (SELECT unnest(range(0, 4)) AS bi)),
-          cand AS (
-            SELECT DISTINCT x.doc_id AS doc_a, y.doc_id AS doc_b
-            FROM bands x JOIN bands y
-              ON x.band_idx = y.band_idx AND x.bandsig = y.bandsig
-             AND x.doc_id < y.doc_id),
-          est AS (
-            SELECT doc_a, doc_b
-            FROM cand
-              JOIN sigvec sa ON sa.doc_id = doc_a
-              JOIN sigvec sb ON sb.doc_id = doc_b
-            WHERE len(list_filter(range(1, 33), i -> sa.sig[i] = sb.sig[i]))
-                  / 32.0 >= 0.8 - 0.2),
+          $MinhashSigCte,
+          $MinhashBandsCte,
+          $MinhashCandCte,
+          $MinhashEstCte,
           hlist AS (SELECT doc_id, list(h) AS hs FROM hp GROUP BY doc_id),
           verified AS (
             SELECT doc_a, doc_b,
@@ -282,39 +237,10 @@ object Llm {
       (s, d) => Dedup.bandAudit(documents(s, d), maxBucket = 4,
           datasetTag = Some(d))
         .orderBy("band_idx"),
-      s"""WITH coeffs(k, a, b) AS (VALUES $MinhashCoeffRows),
-          trigrams AS (
-            SELECT doc_id, unnest(list_transform(range(1, length(text) - 1),
-              i -> substring(text, i, 3))) AS g
-            FROM documents),
-          ghash AS (
-            SELECT DISTINCT doc_id,
-              CASE WHEN hu >= 9223372036854775808::HUGEINT
-                   THEN (hu - 18446744073709551616::HUGEINT)::BIGINT
-                   ELSE hu::BIGINT END AS h
-            FROM (
-              SELECT doc_id, list_reduce(
-                list_prepend(14695981039346656037::HUGEINT,
-                  list_transform(range(1, 4),
-                    i -> ascii(substring(g, i, 1))::HUGEINT)),
-                (h, c) -> ((xor(h::UBIGINT, c::UBIGINT))::HUGEINT
-                           * 1099511628211::HUGEINT)
-                          % 18446744073709551616::HUGEINT) AS hu
-              FROM trigrams)),
-          hp AS (
-            SELECT doc_id, h,
-                   ((h % 2147483647) + 2147483647) % 2147483647 AS hp
-            FROM ghash),
-          sigs AS (
-            SELECT doc_id, k, MIN((a * hp + b) % 2147483647) AS sig
-            FROM hp, coeffs GROUP BY doc_id, k),
-          sigvec AS (
-            SELECT doc_id, list(sig ORDER BY k) AS sig
-            FROM sigs GROUP BY doc_id),
-          bands AS (
-            SELECT doc_id, bi AS band_idx,
-                   sig[bi * 8 + 1 : bi * 8 + 8] AS bandsig
-            FROM sigvec, (SELECT unnest(range(0, 4)) AS bi)),
+      s"""WITH $MinhashHashCte,
+          $MinhashHpCte,
+          $MinhashSigCte,
+          $MinhashBandsCte,
           buckets AS (
             SELECT band_idx, bandsig, COUNT(*) AS n
             FROM bands GROUP BY 1, 2)
@@ -338,35 +264,12 @@ object Llm {
     Q("dedup_band_tuning",
       (s, d) => Dedup.bandTuning(documents(s, d), datasetTag = Some(d))
         .orderBy("bands"),
-      s"""WITH coeffs(k, a, b) AS (VALUES $MinhashCoeffRows),
-          trigrams AS (
-            SELECT doc_id, unnest(list_transform(range(1, length(text) - 1),
-              i -> substring(text, i, 3))) AS g
-            FROM documents),
-          ghash AS (
-            SELECT DISTINCT doc_id,
-              CASE WHEN hu >= 9223372036854775808::HUGEINT
-                   THEN (hu - 18446744073709551616::HUGEINT)::BIGINT
-                   ELSE hu::BIGINT END AS h
-            FROM (
-              SELECT doc_id, list_reduce(
-                list_prepend(14695981039346656037::HUGEINT,
-                  list_transform(range(1, 4),
-                    i -> ascii(substring(g, i, 1))::HUGEINT)),
-                (h, c) -> ((xor(h::UBIGINT, c::UBIGINT))::HUGEINT
-                           * 1099511628211::HUGEINT)
-                          % 18446744073709551616::HUGEINT) AS hu
-              FROM trigrams)),
+      s"""WITH $MinhashHashCte,
           hp AS (
             SELECT doc_id,
                    ((h % 2147483647) + 2147483647) % 2147483647 AS hp
             FROM ghash),
-          sigs AS (
-            SELECT doc_id, k, MIN((a * hp + b) % 2147483647) AS sig
-            FROM hp, coeffs GROUP BY doc_id, k),
-          sigvec AS (
-            SELECT doc_id, list(sig ORDER BY k) AS sig
-            FROM sigs GROUP BY doc_id),
+          $MinhashSigCte,
           cfg AS (
             SELECT 2 AS bands, 16 AS rows_per_band
             UNION ALL SELECT 4, 8
@@ -401,29 +304,7 @@ object Llm {
     Q("dedup_simhash",
       (s, d) => Dedup.nearSimHash(documents(s, d), 3)
         .orderBy("doc_a", "doc_b"),
-      """WITH words AS (
-           SELECT doc_id, unnest(string_split(text, ' ')) AS w
-           FROM documents),
-         whash AS (
-           SELECT doc_id, list_reduce(
-             list_prepend(14695981039346656037::HUGEINT,
-               list_transform(range(1, length(w) + 1),
-                 i -> ascii(substring(w, i, 1))::HUGEINT)),
-             (h, c) -> ((xor(h::UBIGINT, c::UBIGINT))::HUGEINT
-                        * 1099511628211::HUGEINT)
-                       % 18446744073709551616::HUGEINT) AS h
-           FROM words),
-         wsigned AS (
-           SELECT doc_id,
-                  CASE WHEN h >= 9223372036854775808::HUGEINT
-                       THEN (h - 18446744073709551616::HUGEINT)::BIGINT
-                       ELSE h::BIGINT END AS sh
-           FROM whash),
-         sums AS (
-           SELECT doc_id, b,
-                  SUM(CASE WHEN (sh >> b) & 1 = 1 THEN 1 ELSE -1 END) AS s
-           FROM wsigned, (SELECT unnest(range(0, 64)) AS b)
-           GROUP BY doc_id, b),
+      s"""WITH $SimhashBitSumsCte,
          sim AS (
            SELECT doc_id,
                   CAST(SUM(CASE WHEN s > 0 THEN
@@ -442,19 +323,7 @@ object Llm {
     Q("dedup_ngram",
       (s, d) => Dedup.ngramJaccardPairs(documents(s, d), 0.12)
         .orderBy("doc_a", "doc_b"),
-      """WITH grams AS (
-           SELECT DISTINCT doc_id, lang, source,
-                  unnest(list_transform(range(1, len(string_split(text,' '))),
-                    i -> string_split(text,' ')[i] || ' ' ||
-                         string_split(text,' ')[i+1])) AS g
-           FROM documents),
-         sizes AS (SELECT doc_id, COUNT(*) AS sz FROM grams GROUP BY 1),
-         common AS (
-           SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS n_common
-           FROM grams a JOIN grams b
-             ON a.lang = b.lang AND a.source = b.source AND a.g = b.g
-            AND a.doc_id < b.doc_id
-           GROUP BY 1, 2)
+      s"""WITH $BigramJaccardCte
          SELECT doc_a, doc_b,
                 ROUND(n_common / CAST(sa.sz + sb.sz - n_common AS DOUBLE), 4)
                   AS jaccard
@@ -482,19 +351,7 @@ object Llm {
           existingTag = Some(s"${d}_inc"))
           .orderBy("doc_a", "doc_b")
       },
-      """WITH grams AS (
-           SELECT DISTINCT doc_id, lang, source,
-                  unnest(list_transform(range(1, len(string_split(text,' '))),
-                    i -> string_split(text,' ')[i] || ' ' ||
-                         string_split(text,' ')[i+1])) AS g
-           FROM documents),
-         sizes AS (SELECT doc_id, COUNT(*) AS sz FROM grams GROUP BY 1),
-         common AS (
-           SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS n_common
-           FROM grams a JOIN grams b
-             ON a.lang = b.lang AND a.source = b.source AND a.g = b.g
-            AND a.doc_id < b.doc_id
-           GROUP BY 1, 2)
+      s"""WITH $BigramJaccardCte
          SELECT doc_a, doc_b,
                 ROUND(n_common / CAST(sa.sz + sb.sz - n_common AS DOUBLE), 4)
                   AS jaccard
@@ -515,33 +372,8 @@ object Llm {
     Q("dedup_resolve",
       (s, d) => Dedup.keepListFor(documents(s, d), d, 0.05)
         .orderBy("doc_id"),
-      """WITH RECURSIVE grams AS (
-           SELECT DISTINCT doc_id, lang, source,
-                  unnest(list_transform(range(1, len(string_split(text,' '))),
-                    i -> string_split(text,' ')[i] || ' ' ||
-                         string_split(text,' ')[i+1])) AS g
-           FROM documents),
-         sizes AS (SELECT doc_id, COUNT(*) AS sz FROM grams GROUP BY 1),
-         common AS (
-           SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS n_common
-           FROM grams a JOIN grams b
-             ON a.lang = b.lang AND a.source = b.source AND a.g = b.g
-            AND a.doc_id < b.doc_id
-           GROUP BY 1, 2),
-         pairs AS (
-           SELECT doc_a, doc_b
-           FROM common
-             JOIN sizes sa ON sa.doc_id = doc_a
-             JOIN sizes sb ON sb.doc_id = doc_b
-           WHERE n_common / CAST(sa.sz + sb.sz - n_common AS DOUBLE) >= 0.05),
-         edges AS (
-           SELECT doc_a AS u, doc_b AS v FROM pairs
-           UNION
-           SELECT doc_b AS u, doc_a AS v FROM pairs),
-         reach(u, v) AS (
-           SELECT doc_id, doc_id FROM documents
-           UNION
-           SELECT r.u, e.v FROM reach r JOIN edges e ON r.v = e.u)
+      s"""WITH RECURSIVE $BigramJaccardCte,
+         $BigramClosureCte
          SELECT u AS doc_id, MIN(v) AS keep_id
          FROM reach GROUP BY u ORDER BY doc_id"""),
 
@@ -553,33 +385,8 @@ object Llm {
         .groupBy("keep_id").agg(count(lit(1)).as("cluster_size"))
         .groupBy("cluster_size").agg(count(lit(1)).as("n_clusters"))
         .orderBy("cluster_size"),
-      """WITH RECURSIVE grams AS (
-           SELECT DISTINCT doc_id, lang, source,
-                  unnest(list_transform(range(1, len(string_split(text,' '))),
-                    i -> string_split(text,' ')[i] || ' ' ||
-                         string_split(text,' ')[i+1])) AS g
-           FROM documents),
-         sizes AS (SELECT doc_id, COUNT(*) AS sz FROM grams GROUP BY 1),
-         common AS (
-           SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS n_common
-           FROM grams a JOIN grams b
-             ON a.lang = b.lang AND a.source = b.source AND a.g = b.g
-            AND a.doc_id < b.doc_id
-           GROUP BY 1, 2),
-         pairs AS (
-           SELECT doc_a, doc_b
-           FROM common
-             JOIN sizes sa ON sa.doc_id = doc_a
-             JOIN sizes sb ON sb.doc_id = doc_b
-           WHERE n_common / CAST(sa.sz + sb.sz - n_common AS DOUBLE) >= 0.05),
-         edges AS (
-           SELECT doc_a AS u, doc_b AS v FROM pairs
-           UNION
-           SELECT doc_b AS u, doc_a AS v FROM pairs),
-         reach(u, v) AS (
-           SELECT doc_id, doc_id FROM documents
-           UNION
-           SELECT r.u, e.v FROM reach r JOIN edges e ON r.v = e.u),
+      s"""WITH RECURSIVE $BigramJaccardCte,
+         $BigramClosureCte,
          keep AS (
            SELECT u AS doc_id, MIN(v) AS keep_id FROM reach GROUP BY u),
          csize AS (
@@ -615,33 +422,8 @@ object Llm {
             (col("doc_id") === col("canonical_id")).as("is_canonical"))
           .orderBy("doc_id")
       },
-      """WITH RECURSIVE grams AS (
-           SELECT DISTINCT doc_id, lang, source,
-                  unnest(list_transform(range(1, len(string_split(text,' '))),
-                    i -> string_split(text,' ')[i] || ' ' ||
-                         string_split(text,' ')[i+1])) AS g
-           FROM documents),
-         sizes AS (SELECT doc_id, COUNT(*) AS sz FROM grams GROUP BY 1),
-         common AS (
-           SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS n_common
-           FROM grams a JOIN grams b
-             ON a.lang = b.lang AND a.source = b.source AND a.g = b.g
-            AND a.doc_id < b.doc_id
-           GROUP BY 1, 2),
-         pairs AS (
-           SELECT doc_a, doc_b
-           FROM common
-             JOIN sizes sa ON sa.doc_id = doc_a
-             JOIN sizes sb ON sb.doc_id = doc_b
-           WHERE n_common / CAST(sa.sz + sb.sz - n_common AS DOUBLE) >= 0.05),
-         edges AS (
-           SELECT doc_a AS u, doc_b AS v FROM pairs
-           UNION
-           SELECT doc_b AS u, doc_a AS v FROM pairs),
-         reach(u, v) AS (
-           SELECT doc_id, doc_id FROM documents
-           UNION
-           SELECT r.u, e.v FROM reach r JOIN edges e ON r.v = e.u),
+      s"""WITH RECURSIVE $BigramJaccardCte,
+         $BigramClosureCte,
          keep AS (
            SELECT u AS doc_id, MIN(v) AS keep_id FROM reach GROUP BY u),
          q AS (
@@ -688,33 +470,8 @@ object Llm {
             round(lit(1.0) / col("cluster_size"), 6).as("weight"))
           .orderBy("doc_id")
       },
-      """WITH RECURSIVE grams AS (
-           SELECT DISTINCT doc_id, lang, source,
-                  unnest(list_transform(range(1, len(string_split(text,' '))),
-                    i -> string_split(text,' ')[i] || ' ' ||
-                         string_split(text,' ')[i+1])) AS g
-           FROM documents),
-         sizes AS (SELECT doc_id, COUNT(*) AS sz FROM grams GROUP BY 1),
-         common AS (
-           SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS n_common
-           FROM grams a JOIN grams b
-             ON a.lang = b.lang AND a.source = b.source AND a.g = b.g
-            AND a.doc_id < b.doc_id
-           GROUP BY 1, 2),
-         pairs AS (
-           SELECT doc_a, doc_b
-           FROM common
-             JOIN sizes sa ON sa.doc_id = doc_a
-             JOIN sizes sb ON sb.doc_id = doc_b
-           WHERE n_common / CAST(sa.sz + sb.sz - n_common AS DOUBLE) >= 0.05),
-         edges AS (
-           SELECT doc_a AS u, doc_b AS v FROM pairs
-           UNION
-           SELECT doc_b AS u, doc_a AS v FROM pairs),
-         reach(u, v) AS (
-           SELECT doc_id, doc_id FROM documents
-           UNION
-           SELECT r.u, e.v FROM reach r JOIN edges e ON r.v = e.u),
+      s"""WITH RECURSIVE $BigramJaccardCte,
+         $BigramClosureCte,
          keep AS (
            SELECT u AS doc_id, MIN(v) AS keep_id FROM reach GROUP BY u),
          csize AS (
@@ -791,33 +548,8 @@ object Llm {
           .select("doc_id", "lang", "source", "n_chars")
           .orderBy("doc_id")
       },
-      """WITH RECURSIVE grams AS (
-           SELECT DISTINCT doc_id, lang, source,
-                  unnest(list_transform(range(1, len(string_split(text,' '))),
-                    i -> string_split(text,' ')[i] || ' ' ||
-                         string_split(text,' ')[i+1])) AS g
-           FROM documents),
-         sizes AS (SELECT doc_id, COUNT(*) AS sz FROM grams GROUP BY 1),
-         common AS (
-           SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS n_common
-           FROM grams a JOIN grams b
-             ON a.lang = b.lang AND a.source = b.source AND a.g = b.g
-            AND a.doc_id < b.doc_id
-           GROUP BY 1, 2),
-         pairs AS (
-           SELECT doc_a, doc_b
-           FROM common
-             JOIN sizes sa ON sa.doc_id = doc_a
-             JOIN sizes sb ON sb.doc_id = doc_b
-           WHERE n_common / CAST(sa.sz + sb.sz - n_common AS DOUBLE) >= 0.05),
-         edges AS (
-           SELECT doc_a AS u, doc_b AS v FROM pairs
-           UNION
-           SELECT doc_b AS u, doc_a AS v FROM pairs),
-         reach(u, v) AS (
-           SELECT doc_id, doc_id FROM documents
-           UNION
-           SELECT r.u, e.v FROM reach r JOIN edges e ON r.v = e.u),
+      s"""WITH RECURSIVE $BigramJaccardCte,
+         $BigramClosureCte,
          resolved AS (
            SELECT u AS doc_id, MIN(v) AS keep_id FROM reach GROUP BY u)
          SELECT d.doc_id, d.lang, d.source, d.n_chars
@@ -833,17 +565,9 @@ object Llm {
       (s, d) => Similarity.knnGraph(embeddings(s, d), 3,
           datasetTag = Some(d))
         .orderBy("vec_id", "rn"),
-      """WITH scored AS (
+      s"""WITH scored AS (
            SELECT a.vec_id, b.vec_id AS nbr_id,
-             list_reduce(list_transform(range(1, 65),
-               i -> CAST(a.embedding[i] AS DOUBLE) *
-                    CAST(b.embedding[i] AS DOUBLE)), (x, y) -> x + y) /
-             (sqrt(list_reduce(list_transform(range(1, 65),
-               i -> CAST(a.embedding[i] AS DOUBLE) *
-                    CAST(a.embedding[i] AS DOUBLE)), (x, y) -> x + y)) *
-              sqrt(list_reduce(list_transform(range(1, 65),
-               i -> CAST(b.embedding[i] AS DOUBLE) *
-                    CAST(b.embedding[i] AS DOUBLE)), (x, y) -> x + y)))
+             ${cos64("a.embedding", "b.embedding")}
              AS cos
            FROM embeddings a JOIN embeddings b
              ON a.label = b.label AND a.vec_id <> b.vec_id),
@@ -874,17 +598,9 @@ object Llm {
       (s, d) => Similarity.embeddingNearDup(embeddings(s, d), 0.4,
           datasetTag = Some(d))
         .orderBy("vec_a", "vec_b"),
-      """WITH pairs AS (
+      s"""WITH pairs AS (
            SELECT a.label, a.vec_id AS vec_a, b.vec_id AS vec_b,
-             list_reduce(list_transform(range(1, 65),
-               i -> CAST(a.embedding[i] AS DOUBLE) *
-                    CAST(b.embedding[i] AS DOUBLE)), (x, y) -> x + y) /
-             (sqrt(list_reduce(list_transform(range(1, 65),
-               i -> CAST(a.embedding[i] AS DOUBLE) *
-                    CAST(a.embedding[i] AS DOUBLE)), (x, y) -> x + y)) *
-              sqrt(list_reduce(list_transform(range(1, 65),
-               i -> CAST(b.embedding[i] AS DOUBLE) *
-                    CAST(b.embedding[i] AS DOUBLE)), (x, y) -> x + y)))
+             ${cos64("a.embedding", "b.embedding")}
              AS cos
            FROM embeddings a JOIN embeddings b
              ON a.label = b.label AND a.vec_id < b.vec_id)
@@ -903,17 +619,9 @@ object Llm {
       (s, d) => Similarity.embeddingNearPairsTopK(embeddings(s, d), 3,
           datasetTag = Some(d))
         .orderBy("label", "rn"),
-      """WITH pairs AS (
+      s"""WITH pairs AS (
            SELECT a.label, a.vec_id AS vec_a, b.vec_id AS vec_b,
-             list_reduce(list_transform(range(1, 65),
-               i -> CAST(a.embedding[i] AS DOUBLE) *
-                    CAST(b.embedding[i] AS DOUBLE)), (x, y) -> x + y) /
-             (sqrt(list_reduce(list_transform(range(1, 65),
-               i -> CAST(a.embedding[i] AS DOUBLE) *
-                    CAST(a.embedding[i] AS DOUBLE)), (x, y) -> x + y)) *
-              sqrt(list_reduce(list_transform(range(1, 65),
-               i -> CAST(b.embedding[i] AS DOUBLE) *
-                    CAST(b.embedding[i] AS DOUBLE)), (x, y) -> x + y)))
+             ${cos64("a.embedding", "b.embedding")}
              AS cos
            FROM embeddings a JOIN embeddings b
              ON a.label = b.label AND a.vec_id < b.vec_id),
@@ -932,21 +640,10 @@ object Llm {
         Similarity.bruteForceTopK(emb, Similarity.probes(emb), 5)
           .orderBy("probe_id", "rn")
       },
-      """WITH probe_ids AS (
-           SELECT MIN(vec_id) AS probe_id FROM embeddings GROUP BY label),
-         p AS (SELECT e.vec_id AS probe_id, e.embedding AS probe_emb
-               FROM embeddings e JOIN probe_ids ON e.vec_id = probe_id),
+      s"""WITH $ProbeCte,
          scored AS (
            SELECT p.probe_id, e.vec_id,
-             list_reduce(list_transform(range(1, 65),
-               i -> CAST(p.probe_emb[i] AS DOUBLE) *
-                    CAST(e.embedding[i] AS DOUBLE)), (x, y) -> x + y) /
-             (sqrt(list_reduce(list_transform(range(1, 65),
-               i -> CAST(p.probe_emb[i] AS DOUBLE) *
-                    CAST(p.probe_emb[i] AS DOUBLE)), (x, y) -> x + y)) *
-              sqrt(list_reduce(list_transform(range(1, 65),
-               i -> CAST(e.embedding[i] AS DOUBLE) *
-                    CAST(e.embedding[i] AS DOUBLE)), (x, y) -> x + y)))
+             ${cos64("p.probe_emb", "e.embedding")}
              AS cos
            FROM p CROSS JOIN embeddings e WHERE e.vec_id <> p.probe_id),
          ranked AS (
@@ -1024,18 +721,7 @@ object Llm {
          cos AS (
            SELECT e.vec_id AS doc_id,
                   ROUND(
-                    list_reduce(list_transform(range(1, 65),
-                      i -> CAST(p.probe_emb[i] AS DOUBLE) *
-                           CAST(e.embedding[i] AS DOUBLE)),
-                      (x, y) -> x + y) /
-                    (sqrt(list_reduce(list_transform(range(1, 65),
-                      i -> CAST(p.probe_emb[i] AS DOUBLE) *
-                           CAST(p.probe_emb[i] AS DOUBLE)),
-                      (x, y) -> x + y)) *
-                     sqrt(list_reduce(list_transform(range(1, 65),
-                      i -> CAST(e.embedding[i] AS DOUBLE) *
-                           CAST(e.embedding[i] AS DOUBLE)),
-                      (x, y) -> x + y))), 6) AS cosv
+                    ${cos64("p.probe_emb", "e.embedding")}, 6) AS cosv
            FROM embeddings e CROSS JOIN probe p),
          cos_rank AS (
            SELECT doc_id, r_dense FROM (
@@ -1097,21 +783,10 @@ object Llm {
             round(col("n_overlap") / 5.0, 2).as("recall_at_5"))
           .orderBy("probe_id")
       },
-      """WITH probe_ids AS (
-           SELECT MIN(vec_id) AS probe_id FROM embeddings GROUP BY label),
-         p AS (SELECT e.vec_id AS probe_id, e.embedding AS probe_emb
-               FROM embeddings e JOIN probe_ids ON e.vec_id = probe_id),
+      s"""WITH $ProbeCte,
          scored AS (
            SELECT p.probe_id, e.vec_id,
-             ROUND(list_reduce(list_transform(range(1, 65),
-               i -> CAST(p.probe_emb[i] AS DOUBLE) *
-                    CAST(e.embedding[i] AS DOUBLE)), (x, y) -> x + y) /
-             (sqrt(list_reduce(list_transform(range(1, 65),
-               i -> CAST(p.probe_emb[i] AS DOUBLE) *
-                    CAST(p.probe_emb[i] AS DOUBLE)), (x, y) -> x + y)) *
-              sqrt(list_reduce(list_transform(range(1, 65),
-               i -> CAST(e.embedding[i] AS DOUBLE) *
-                    CAST(e.embedding[i] AS DOUBLE)), (x, y) -> x + y))),
+             ROUND(${cos64("p.probe_emb", "e.embedding")},
                6) AS cos_full,
              ROUND(list_reduce(list_transform(range(1, 17),
                i -> CAST(p.probe_emb[i] AS DOUBLE) *
@@ -1232,10 +907,7 @@ object Llm {
             col("vec_id"), round(col("dot"), 6).as("score"))
           .orderBy("probe_id", "rn")
       },
-      """WITH probe_ids AS (
-           SELECT MIN(vec_id) AS probe_id FROM embeddings GROUP BY label),
-         p AS (SELECT e.vec_id AS probe_id, e.embedding AS probe_emb
-               FROM embeddings e JOIN probe_ids ON e.vec_id = probe_id),
+      s"""WITH $ProbeCte,
          scored AS (
            SELECT p.probe_id, e.vec_id,
              list_reduce(list_transform(range(1, 65),
@@ -1270,16 +942,12 @@ object Llm {
       (s, d) => {
         val emb = embeddings(s, d)
         val probes = Similarity.probes(emb)
-        Similarity.recallAudit(
-            Similarity.annTopK(emb, probes, 5, numTables = 5,
-              datasetTag = Some(d)),
-            Similarity.groundTruthFor(emb, d, 5, "euclid"),
-            5, minRecall = 0.6, minMeanRecall = 0.9)
-          .orderBy("probe_id")
+        recallAudit5(
+          Similarity.annTopK(emb, probes, 5, numTables = 5,
+            datasetTag = Some(d)),
+          Similarity.groundTruthFor(emb, d, 5, "euclid"))
       },
-      """SELECT MIN(vec_id) AS probe_id, CAST(5 AS BIGINT) AS n_ann,
-                TRUE AS probe_ok, TRUE AS mean_ok
-         FROM embeddings GROUP BY label ORDER BY probe_id"""),
+      ProbeRecallOkSql),
 
     Q("sim_ann_ivf",
       (s, d) => {
@@ -1287,15 +955,11 @@ object Llm {
         val probes = Similarity.probes(emb)
         // fit-once: the quantizer is cached per dataset (and persisted
         // to the warehouse), so repeat queries skip the fit entirely
-        Similarity.recallAudit(
-            Similarity.ivfTopKCached(emb, probes, 5, d, nProbe = 14),
-            Similarity.groundTruthFor(emb, d, 5, "cosine"),
-            5, minRecall = 0.6, minMeanRecall = 0.9)
-          .orderBy("probe_id")
+        recallAudit5(
+          Similarity.ivfTopKCached(emb, probes, 5, d, nProbe = 14),
+          Similarity.groundTruthFor(emb, d, 5, "cosine"))
       },
-      """SELECT MIN(vec_id) AS probe_id, CAST(5 AS BIGINT) AS n_ann,
-                TRUE AS probe_ok, TRUE AS mean_ok
-         FROM embeddings GROUP BY label ORDER BY probe_id"""),
+      ProbeRecallOkSql),
 
     // Large-probe-set IVF (the probe relation is a TABLE, not a
     // broadcastable handful): both sides bucket to quantizer cells and
@@ -1314,11 +978,9 @@ object Llm {
         // nProbe/nCells ratio is an artifact of the test-scale
         // nCells=16 — production cell counts (~sqrt N) keep the probed
         // fraction small at the same absolute nProbe.
-        Similarity.recallAudit(
-            Similarity.ivfTopKBatch(emb, probes, 5, d, nProbe = 14),
-            Similarity.batchGroundTruthFor(emb, d, 5),
-            5, minRecall = 0.6, minMeanRecall = 0.9)
-          .orderBy("probe_id")
+        recallAudit5(
+          Similarity.ivfTopKBatch(emb, probes, 5, d, nProbe = 14),
+          Similarity.batchGroundTruthFor(emb, d, 5))
       },
       """SELECT vec_id AS probe_id, CAST(5 AS BIGINT) AS n_ann,
                 TRUE AS probe_ok, TRUE AS mean_ok
@@ -1334,15 +996,11 @@ object Llm {
         val emb = embeddings(s, d)
         val probes = Similarity.probes(emb)
         val idx = Similarity.cellIndexFor(emb, d)
-        Similarity.recallAudit(
-            Similarity.ivfTopKIndexed(s, idx, probes, 5, nProbe = 14),
-            Similarity.groundTruthFor(emb, d, 5, "cosine"),
-            5, minRecall = 0.6, minMeanRecall = 0.9)
-          .orderBy("probe_id")
+        recallAudit5(
+          Similarity.ivfTopKIndexed(s, idx, probes, 5, nProbe = 14),
+          Similarity.groundTruthFor(emb, d, 5, "cosine"))
       },
-      """SELECT MIN(vec_id) AS probe_id, CAST(5 AS BIGINT) AS n_ann,
-                TRUE AS probe_ok, TRUE AS mean_ok
-         FROM embeddings GROUP BY label ORDER BY probe_id"""),
+      ProbeRecallOkSql),
 
     // Incremental index maintenance — the operation that makes IVF
     // viable as a LIVING index: a new embedding batch (every 5th
@@ -1363,16 +1021,12 @@ object Llm {
         val base = emb.filter(col("vec_id") % 5 =!= 0)
         val batch = emb.filter(col("vec_id") % 5 === 0)
         val idx = Similarity.appendedIndexFor(base, batch, d)
-        Similarity.recallAudit(
-            Similarity.ivfTopKIndexed(s, idx, Similarity.probes(emb), 5,
-              nProbe = 14),
-            Similarity.groundTruthFor(emb, d, 5, "cosine"),
-            5, minRecall = 0.6, minMeanRecall = 0.9)
-          .orderBy("probe_id")
+        recallAudit5(
+          Similarity.ivfTopKIndexed(s, idx, Similarity.probes(emb), 5,
+            nProbe = 14),
+          Similarity.groundTruthFor(emb, d, 5, "cosine"))
       },
-      """SELECT MIN(vec_id) AS probe_id, CAST(5 AS BIGINT) AS n_ann,
-                TRUE AS probe_ok, TRUE AS mean_ok
-         FROM embeddings GROUP BY label ORDER BY probe_id"""),
+      ProbeRecallOkSql),
 
     // TWO-TIER re-ranked search — the production recall/cost shape:
     // an int8 first pass over widened probe cells (nProbe=14) keeps
@@ -1386,15 +1040,11 @@ object Llm {
       (s, d) => {
         val emb = embeddings(s, d)
         val probes = Similarity.probes(emb)
-        Similarity.recallAudit(
-            Similarity.ivfTopKRerank(emb, probes, 5, d),
-            Similarity.groundTruthFor(emb, d, 5, "cosine"),
-            5, minRecall = 0.6, minMeanRecall = 0.9)
-          .orderBy("probe_id")
+        recallAudit5(
+          Similarity.ivfTopKRerank(emb, probes, 5, d),
+          Similarity.groundTruthFor(emb, d, 5, "cosine"))
       },
-      """SELECT MIN(vec_id) AS probe_id, CAST(5 AS BIGINT) AS n_ann,
-                TRUE AS probe_ok, TRUE AS mean_ok
-         FROM embeddings GROUP BY label ORDER BY probe_id"""),
+      ProbeRecallOkSql),
 
     // LSM COMPACTION for the cell-partitioned index — the close of
     // the append loop: sim_index_append accumulates segment files per
@@ -1589,25 +1239,7 @@ object Llm {
     Q("text_langid",
       (s, d) => Text.langIdPredict(documents(s, d), datasetTag = Some(d))
         .orderBy("doc_id"),
-      """WITH grams AS (
-           SELECT lang, unnest(list_transform(range(1, length(text) - 1),
-             i -> substring(text, i, 3))) AS g
-           FROM documents),
-         profile AS (
-           SELECT lang, g FROM (
-             SELECT lang, g, ROW_NUMBER() OVER (PARTITION BY lang
-               ORDER BY COUNT(*) DESC, g ASC) AS rk
-             FROM grams GROUP BY lang, g)
-           WHERE rk <= 40),
-         docgrams AS (
-           SELECT DISTINCT doc_id,
-             unnest(list_transform(range(1, length(text) - 1),
-               i -> substring(text, i, 3))) AS g
-           FROM documents),
-         overlap AS (
-           SELECT d.doc_id, p.lang, COUNT(*) AS n
-           FROM docgrams d JOIN profile p USING (g)
-           GROUP BY 1, 2)
+      s"""WITH $LangIdOverlapCte
          SELECT doc_id, lang AS predicted_lang, n AS overlap FROM (
            SELECT doc_id, lang, n, ROW_NUMBER() OVER (PARTITION BY doc_id
              ORDER BY n DESC, lang ASC) AS rn
@@ -1660,22 +1292,14 @@ object Llm {
             round(col("cos"), 6).as("score"))
           .orderBy("probe_id", "rn")
       },
-      """WITH probe_ids AS (
+      s"""WITH probe_ids AS (
            SELECT MIN(vec_id) AS probe_id FROM embeddings GROUP BY label),
          p AS (SELECT e.vec_id AS probe_id, e.label AS probe_label,
                       e.embedding AS probe_emb
                FROM embeddings e JOIN probe_ids ON e.vec_id = probe_id),
          scored AS (
            SELECT p.probe_id, e.vec_id,
-             list_reduce(list_transform(range(1, 65),
-               i -> CAST(p.probe_emb[i] AS DOUBLE) *
-                    CAST(e.embedding[i] AS DOUBLE)), (x, y) -> x + y) /
-             (sqrt(list_reduce(list_transform(range(1, 65),
-               i -> CAST(p.probe_emb[i] AS DOUBLE) *
-                    CAST(p.probe_emb[i] AS DOUBLE)), (x, y) -> x + y)) *
-              sqrt(list_reduce(list_transform(range(1, 65),
-               i -> CAST(e.embedding[i] AS DOUBLE) *
-                    CAST(e.embedding[i] AS DOUBLE)), (x, y) -> x + y)))
+             ${cos64("p.probe_emb", "e.embedding")}
              AS cos
            FROM embeddings e CROSS JOIN p
            WHERE e.vec_id % 3 = 0 AND e.label <> p.probe_label),
@@ -1797,15 +1421,7 @@ object Llm {
     // shuffle on the pack key, sequential packing only within a group.
     Q("pack_sequences",
       (s, d) => {
-        import org.apache.spark.sql.expressions.Window
-        val w = Window.partitionBy("source").orderBy("doc_id")
-          .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        graft.engine.ml.Bpe.tokensStoreFor(documents(s, d), d)
-          .select(col("doc_id"), col("source"), col("n_tokens"))
-          .withColumn("cum_tokens", sum(col("n_tokens")).over(w))
-          .withColumn("bin",
-            ((col("cum_tokens") - col("n_tokens")) / 4096L)
-              .cast("long"))
+        packedBins(s, d)
           .select("source", "doc_id", "n_tokens", "bin")
           .orderBy("source", "doc_id")
       },
@@ -1830,15 +1446,7 @@ ORDER BY source, doc_id"""),
     // identical doubles over exact integer counts.
     Q("pack_efficiency",
       (s, d) => {
-        import org.apache.spark.sql.expressions.Window
-        val w = Window.partitionBy("source").orderBy("doc_id")
-          .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        graft.engine.ml.Bpe.tokensStoreFor(documents(s, d), d)
-          .select(col("doc_id"), col("source"), col("n_tokens"))
-          .withColumn("cum_tokens", sum(col("n_tokens")).over(w))
-          .withColumn("bin",
-            ((col("cum_tokens") - col("n_tokens")) / 4096L)
-              .cast("long"))
+        packedBins(s, d)
           .groupBy("source")
           .agg(count(lit(1)).as("n_docs"),
             sum(col("n_tokens")).as("n_tokens"),
@@ -2199,10 +1807,7 @@ GROUP BY source ORDER BY source"""),
             round(sqrt(col("d2").cast("double")), 6).as("dist"))
           .orderBy("probe_id", "rn")
       },
-      """WITH probe_ids AS (
-           SELECT MIN(vec_id) AS probe_id FROM embeddings GROUP BY label),
-         p AS (SELECT e.vec_id AS probe_id, e.embedding AS probe_emb
-               FROM embeddings e JOIN probe_ids ON e.vec_id = probe_id),
+      s"""WITH $ProbeCte,
          scored AS (
            SELECT p.probe_id, e.vec_id,
              list_reduce(list_transform(range(1, 65),
@@ -2278,10 +1883,7 @@ GROUP BY source ORDER BY source"""),
             (col("rn_aug") === col("rn_dot")).as("order_preserved"))
           .orderBy("probe_id", "rn")
       },
-      """WITH probe_ids AS (
-           SELECT MIN(vec_id) AS probe_id FROM embeddings GROUP BY label),
-         p AS (SELECT e.vec_id AS probe_id, e.embedding AS probe_emb
-               FROM embeddings e JOIN probe_ids ON e.vec_id = probe_id),
+      s"""WITH $ProbeCte,
          n2t AS (
            SELECT vec_id, embedding,
                   list_reduce(list_transform(range(1, 65),
@@ -2437,45 +2039,12 @@ GROUP BY source ORDER BY source"""),
               .as("abs_err"))
           .orderBy("doc_a", "doc_b")
       },
-      s"""WITH coeffs(k, a, b) AS (VALUES $MinhashCoeffRows),
-          trigrams AS (
-            SELECT doc_id, unnest(list_transform(range(1, length(text) - 1),
-              i -> substring(text, i, 3))) AS g
-            FROM documents),
-          ghash AS (
-            SELECT DISTINCT doc_id,
-              CASE WHEN hu >= 9223372036854775808::HUGEINT
-                   THEN (hu - 18446744073709551616::HUGEINT)::BIGINT
-                   ELSE hu::BIGINT END AS h
-            FROM (
-              SELECT doc_id, list_reduce(
-                list_prepend(14695981039346656037::HUGEINT,
-                  list_transform(range(1, 4),
-                    i -> ascii(substring(g, i, 1))::HUGEINT)),
-                (h, c) -> ((xor(h::UBIGINT, c::UBIGINT))::HUGEINT
-                           * 1099511628211::HUGEINT)
-                          % 18446744073709551616::HUGEINT) AS hu
-              FROM trigrams)),
-          hp AS (
-            SELECT doc_id, h,
-                   ((h % 2147483647) + 2147483647) % 2147483647 AS hp
-            FROM ghash),
+      s"""WITH $MinhashHashCte,
+          $MinhashHpCte,
           sizes AS (SELECT doc_id, COUNT(*) AS sz FROM ghash GROUP BY 1),
-          sigs AS (
-            SELECT doc_id, k, MIN((a * hp + b) % 2147483647) AS sig
-            FROM hp, coeffs GROUP BY doc_id, k),
-          sigvec AS (
-            SELECT doc_id, list(sig ORDER BY k) AS sig
-            FROM sigs GROUP BY doc_id),
-          bands AS (
-            SELECT doc_id, bi AS band_idx,
-                   sig[bi * 8 + 1 : bi * 8 + 8] AS bandsig
-            FROM sigvec, (SELECT unnest(range(0, 4)) AS bi)),
-          cand AS (
-            SELECT DISTINCT x.doc_id AS doc_a, y.doc_id AS doc_b
-            FROM bands x JOIN bands y
-              ON x.band_idx = y.band_idx AND x.bandsig = y.bandsig
-             AND x.doc_id < y.doc_id),
+          $MinhashSigCte,
+          $MinhashBandsCte,
+          $MinhashCandCte,
           est AS (
             SELECT doc_a, doc_b,
                    len(list_filter(range(1, 33),
@@ -2568,30 +2137,8 @@ GROUP BY source ORDER BY source"""),
           .agg(count(lit(1)).as("n_docs"))
           .orderBy("lang", "predicted_lang")
       },
-      """WITH grams AS (
-           SELECT lang, unnest(list_transform(range(1, length(text) - 1),
-             i -> substring(text, i, 3))) AS g
-           FROM documents),
-         profile AS (
-           SELECT lang, g FROM (
-             SELECT lang, g, ROW_NUMBER() OVER (PARTITION BY lang
-               ORDER BY COUNT(*) DESC, g ASC) AS rk
-             FROM grams GROUP BY lang, g)
-           WHERE rk <= 40),
-         docgrams AS (
-           SELECT DISTINCT doc_id,
-             unnest(list_transform(range(1, length(text) - 1),
-               i -> substring(text, i, 3))) AS g
-           FROM documents),
-         overlap AS (
-           SELECT d.doc_id, p.lang, COUNT(*) AS n
-           FROM docgrams d JOIN profile p USING (g)
-           GROUP BY 1, 2),
-         pred AS (
-           SELECT doc_id, lang AS predicted_lang FROM (
-             SELECT doc_id, lang, ROW_NUMBER() OVER (PARTITION BY doc_id
-               ORDER BY n DESC, lang ASC) AS rn
-             FROM overlap) WHERE rn = 1)
+      s"""WITH $LangIdOverlapCte,
+         $LangIdPredCte
          SELECT dd.lang, p.predicted_lang, COUNT(*) AS n_docs
          FROM documents dd JOIN pred p USING (doc_id)
          GROUP BY 1, 2 ORDER BY lang, predicted_lang"""),
@@ -2614,30 +2161,8 @@ GROUP BY source ORDER BY source"""),
             col("predicted_lang"), col("n_chars"))
           .orderBy("doc_id")
       },
-      """WITH grams AS (
-           SELECT lang, unnest(list_transform(range(1, length(text) - 1),
-             i -> substring(text, i, 3))) AS g
-           FROM documents),
-         profile AS (
-           SELECT lang, g FROM (
-             SELECT lang, g, ROW_NUMBER() OVER (PARTITION BY lang
-               ORDER BY COUNT(*) DESC, g ASC) AS rk
-             FROM grams GROUP BY lang, g)
-           WHERE rk <= 40),
-         docgrams AS (
-           SELECT DISTINCT doc_id,
-             unnest(list_transform(range(1, length(text) - 1),
-               i -> substring(text, i, 3))) AS g
-           FROM documents),
-         overlap AS (
-           SELECT d.doc_id, p.lang, COUNT(*) AS n
-           FROM docgrams d JOIN profile p USING (g)
-           GROUP BY 1, 2),
-         pred AS (
-           SELECT doc_id, lang AS predicted_lang FROM (
-             SELECT doc_id, lang, ROW_NUMBER() OVER (PARTITION BY doc_id
-               ORDER BY n DESC, lang ASC) AS rn
-             FROM overlap) WHERE rn = 1)
+      s"""WITH $LangIdOverlapCte,
+         $LangIdPredCte
          SELECT doc_id, dd.lang AS declared_lang, p.predicted_lang,
                 n_chars
          FROM documents dd JOIN pred p USING (doc_id)
@@ -2667,52 +2192,13 @@ GROUP BY source ORDER BY source"""),
           .agg(count(lit(1)).as("n_dup_pairs"))
           .orderBy("source_a", "source_b")
       },
-      s"""WITH coeffs(k, a, b) AS (VALUES $MinhashCoeffRows),
-          trigrams AS (
-            SELECT doc_id, unnest(list_transform(range(1, length(text) - 1),
-              i -> substring(text, i, 3))) AS g
-            FROM documents),
-          ghash AS (
-            SELECT DISTINCT doc_id,
-              CASE WHEN hu >= 9223372036854775808::HUGEINT
-                   THEN (hu - 18446744073709551616::HUGEINT)::BIGINT
-                   ELSE hu::BIGINT END AS h
-            FROM (
-              SELECT doc_id, list_reduce(
-                list_prepend(14695981039346656037::HUGEINT,
-                  list_transform(range(1, 4),
-                    i -> ascii(substring(g, i, 1))::HUGEINT)),
-                (h, c) -> ((xor(h::UBIGINT, c::UBIGINT))::HUGEINT
-                           * 1099511628211::HUGEINT)
-                          % 18446744073709551616::HUGEINT) AS hu
-              FROM trigrams)),
-          hp AS (
-            SELECT doc_id, h,
-                   ((h % 2147483647) + 2147483647) % 2147483647 AS hp
-            FROM ghash),
+      s"""WITH $MinhashHashCte,
+          $MinhashHpCte,
           sizes AS (SELECT doc_id, COUNT(*) AS sz FROM ghash GROUP BY 1),
-          sigs AS (
-            SELECT doc_id, k, MIN((a * hp + b) % 2147483647) AS sig
-            FROM hp, coeffs GROUP BY doc_id, k),
-          sigvec AS (
-            SELECT doc_id, list(sig ORDER BY k) AS sig
-            FROM sigs GROUP BY doc_id),
-          bands AS (
-            SELECT doc_id, bi AS band_idx,
-                   sig[bi * 8 + 1 : bi * 8 + 8] AS bandsig
-            FROM sigvec, (SELECT unnest(range(0, 4)) AS bi)),
-          cand AS (
-            SELECT DISTINCT x.doc_id AS doc_a, y.doc_id AS doc_b
-            FROM bands x JOIN bands y
-              ON x.band_idx = y.band_idx AND x.bandsig = y.bandsig
-             AND x.doc_id < y.doc_id),
-          est AS (
-            SELECT doc_a, doc_b
-            FROM cand
-              JOIN sigvec sa ON sa.doc_id = doc_a
-              JOIN sigvec sb ON sb.doc_id = doc_b
-            WHERE len(list_filter(range(1, 33), i -> sa.sig[i] = sb.sig[i]))
-                  / 32.0 >= 0.8 - 0.2),
+          $MinhashSigCte,
+          $MinhashBandsCte,
+          $MinhashCandCte,
+          $MinhashEstCte,
           hlist AS (SELECT doc_id, list(h) AS hs FROM hp GROUP BY doc_id),
           verified AS (
             SELECT doc_a, doc_b
@@ -2767,45 +2253,12 @@ GROUP BY source ORDER BY source"""),
                           AS (threshold, n_pairs)"""))
           .orderBy("threshold")
       },
-      s"""WITH coeffs(k, a, b) AS (VALUES $MinhashCoeffRows),
-          trigrams AS (
-            SELECT doc_id, unnest(list_transform(range(1, length(text) - 1),
-              i -> substring(text, i, 3))) AS g
-            FROM documents),
-          ghash AS (
-            SELECT DISTINCT doc_id,
-              CASE WHEN hu >= 9223372036854775808::HUGEINT
-                   THEN (hu - 18446744073709551616::HUGEINT)::BIGINT
-                   ELSE hu::BIGINT END AS h
-            FROM (
-              SELECT doc_id, list_reduce(
-                list_prepend(14695981039346656037::HUGEINT,
-                  list_transform(range(1, 4),
-                    i -> ascii(substring(g, i, 1))::HUGEINT)),
-                (h, c) -> ((xor(h::UBIGINT, c::UBIGINT))::HUGEINT
-                           * 1099511628211::HUGEINT)
-                          % 18446744073709551616::HUGEINT) AS hu
-              FROM trigrams)),
-          hp AS (
-            SELECT doc_id, h,
-                   ((h % 2147483647) + 2147483647) % 2147483647 AS hp
-            FROM ghash),
+      s"""WITH $MinhashHashCte,
+          $MinhashHpCte,
           sizes AS (SELECT doc_id, COUNT(*) AS sz FROM ghash GROUP BY 1),
-          sigs AS (
-            SELECT doc_id, k, MIN((a * hp + b) % 2147483647) AS sig
-            FROM hp, coeffs GROUP BY doc_id, k),
-          sigvec AS (
-            SELECT doc_id, list(sig ORDER BY k) AS sig
-            FROM sigs GROUP BY doc_id),
-          bands AS (
-            SELECT doc_id, bi AS band_idx,
-                   sig[bi * 8 + 1 : bi * 8 + 8] AS bandsig
-            FROM sigvec, (SELECT unnest(range(0, 4)) AS bi)),
-          cand AS (
-            SELECT DISTINCT x.doc_id AS doc_a, y.doc_id AS doc_b
-            FROM bands x JOIN bands y
-              ON x.band_idx = y.band_idx AND x.bandsig = y.bandsig
-             AND x.doc_id < y.doc_id),
+          $MinhashSigCte,
+          $MinhashBandsCte,
+          $MinhashCandCte,
           hlist AS (SELECT doc_id, list(h) AS hs FROM hp GROUP BY doc_id),
           ex AS (
             SELECT doc_a, doc_b,
@@ -2995,22 +2448,14 @@ GROUP BY source ORDER BY source"""),
             round(col("cos"), 6).as("cos_sim"))
           .orderBy("probe_id", "vec_id")
       },
-      """WITH probe_ids AS (
+      s"""WITH probe_ids AS (
            SELECT MIN(vec_id) AS probe_id FROM embeddings
            GROUP BY label),
          p AS (SELECT e.vec_id AS probe_id, e.embedding AS probe_emb
                FROM embeddings e JOIN probe_ids ON e.vec_id = probe_id),
          scored AS (
            SELECT p.probe_id, e.vec_id,
-             list_reduce(list_transform(range(1, 65),
-               i -> CAST(p.probe_emb[i] AS DOUBLE) *
-                    CAST(e.embedding[i] AS DOUBLE)), (x, y) -> x + y) /
-             (sqrt(list_reduce(list_transform(range(1, 65),
-               i -> CAST(p.probe_emb[i] AS DOUBLE) *
-                    CAST(p.probe_emb[i] AS DOUBLE)), (x, y) -> x + y)) *
-              sqrt(list_reduce(list_transform(range(1, 65),
-               i -> CAST(e.embedding[i] AS DOUBLE) *
-                    CAST(e.embedding[i] AS DOUBLE)), (x, y) -> x + y)))
+             ${cos64("p.probe_emb", "e.embedding")}
                AS cos
            FROM p CROSS JOIN embeddings e WHERE e.vec_id <> p.probe_id)
          SELECT probe_id, vec_id, ROUND(cos, 6) AS cos_sim
@@ -3139,18 +2584,7 @@ GROUP BY source ORDER BY source"""),
                   JOIN probe_ids ON e.vec_id = probe_id),
             scored AS (
               SELECT p.probe_id, e.vec_id, e.embedding AS emb,
-                list_reduce(list_transform(range(1, 65),
-                  i -> CAST(p.probe_emb[i] AS DOUBLE) *
-                       CAST(e.embedding[i] AS DOUBLE)),
-                  (x, y) -> x + y) /
-                (sqrt(list_reduce(list_transform(range(1, 65),
-                  i -> CAST(p.probe_emb[i] AS DOUBLE) *
-                       CAST(p.probe_emb[i] AS DOUBLE)),
-                  (x, y) -> x + y)) *
-                 sqrt(list_reduce(list_transform(range(1, 65),
-                  i -> CAST(e.embedding[i] AS DOUBLE) *
-                       CAST(e.embedding[i] AS DOUBLE)),
-                  (x, y) -> x + y))) AS cos
+                ${cos64("p.probe_emb", "e.embedding")} AS cos
               FROM p CROSS JOIN embeddings e
               WHERE e.vec_id <> p.probe_id),
             cand AS (
@@ -3160,15 +2594,7 @@ GROUP BY source ORDER BY source"""),
               WHERE rn <= 16),
             pairs AS (
               SELECT a.probe_id, a.vec_id AS av, b.vec_id AS bv,
-                list_reduce(list_transform(range(1, 65),
-                  i -> CAST(a.emb[i] AS DOUBLE) *
-                       CAST(b.emb[i] AS DOUBLE)), (x, y) -> x + y) /
-                (sqrt(list_reduce(list_transform(range(1, 65),
-                  i -> CAST(a.emb[i] AS DOUBLE) *
-                       CAST(a.emb[i] AS DOUBLE)), (x, y) -> x + y)) *
-                 sqrt(list_reduce(list_transform(range(1, 65),
-                  i -> CAST(b.emb[i] AS DOUBLE) *
-                       CAST(b.emb[i] AS DOUBLE)), (x, y) -> x + y)))
+                ${cos64("a.emb", "b.emb")}
                   AS pc
               FROM cand a JOIN cand b
                 ON a.probe_id = b.probe_id AND a.vec_id <> b.vec_id),
@@ -3209,30 +2635,7 @@ GROUP BY source ORDER BY source"""),
               .as("biased"))
           .orderBy("b")
       },
-      """WITH words AS (
-           SELECT doc_id, unnest(string_split(text, ' ')) AS w
-           FROM documents),
-         whash AS (
-           SELECT doc_id, list_reduce(
-             list_prepend(14695981039346656037::HUGEINT,
-               list_transform(range(1, length(w) + 1),
-                 i -> ascii(substring(w, i, 1))::HUGEINT)),
-             (h, c) -> ((xor(h::UBIGINT, c::UBIGINT))::HUGEINT
-                        * 1099511628211::HUGEINT)
-                       % 18446744073709551616::HUGEINT) AS h
-           FROM words),
-         wsigned AS (
-           SELECT doc_id,
-                  CASE WHEN h >= 9223372036854775808::HUGEINT
-                       THEN (h - 18446744073709551616::HUGEINT)::BIGINT
-                       ELSE h::BIGINT END AS sh
-           FROM whash),
-         sums AS (
-           SELECT doc_id, b,
-                  SUM(CASE WHEN (sh >> b) & 1 = 1 THEN 1 ELSE -1 END)
-                    AS s
-           FROM wsigned, (SELECT unnest(range(0, 64)) AS b)
-           GROUP BY doc_id, b),
+      s"""WITH $SimhashBitSumsCte,
          n AS (SELECT CAST(COUNT(DISTINCT doc_id) AS BIGINT) AS nd
                FROM sums),
          bits AS (
@@ -3284,7 +2687,7 @@ GROUP BY source ORDER BY source"""),
             expr("ROUND(pos_cos - neg_cos, 6) + 0.0D"))
           .orderBy("anchor_id")
       },
-      """WITH a_ids AS (
+      s"""WITH a_ids AS (
            SELECT MIN(vec_id) AS anchor_id FROM embeddings GROUP BY label),
          a AS (SELECT e.vec_id AS anchor_id, e.label AS anchor_label,
                       e.embedding AS anchor_emb
@@ -3292,15 +2695,7 @@ GROUP BY source ORDER BY source"""),
          scored AS (
            SELECT a.anchor_id, a.anchor_label, e.vec_id,
                   e.label = a.anchor_label AS same,
-             list_reduce(list_transform(range(1, 65),
-               i -> CAST(a.anchor_emb[i] AS DOUBLE) *
-                    CAST(e.embedding[i] AS DOUBLE)), (x, y) -> x + y) /
-             (sqrt(list_reduce(list_transform(range(1, 65),
-               i -> CAST(a.anchor_emb[i] AS DOUBLE) *
-                    CAST(a.anchor_emb[i] AS DOUBLE)), (x, y) -> x + y)) *
-              sqrt(list_reduce(list_transform(range(1, 65),
-               i -> CAST(e.embedding[i] AS DOUBLE) *
-                    CAST(e.embedding[i] AS DOUBLE)), (x, y) -> x + y)))
+             ${cos64("a.anchor_emb", "e.embedding")}
              AS cos
            FROM a CROSS JOIN embeddings e WHERE e.vec_id <> a.anchor_id),
          ranked AS (
@@ -3347,29 +2742,8 @@ GROUP BY source ORDER BY source"""),
             expr("n_match / 5.0D").as("p_at_5"))
           .orderBy("probe_id")
       },
-      """WITH probe_ids AS (
-           SELECT MIN(vec_id) AS probe_id FROM embeddings GROUP BY label),
-         p AS (SELECT e.vec_id AS probe_id, e.label AS anchor_label,
-                      e.embedding AS probe_emb
-               FROM embeddings e JOIN probe_ids ON e.vec_id = probe_id),
-         scored AS (
-           SELECT p.probe_id, p.anchor_label, e.vec_id, e.label,
-             list_reduce(list_transform(range(1, 65),
-               i -> CAST(p.probe_emb[i] AS DOUBLE) *
-                    CAST(e.embedding[i] AS DOUBLE)), (x, y) -> x + y) /
-             (sqrt(list_reduce(list_transform(range(1, 65),
-               i -> CAST(p.probe_emb[i] AS DOUBLE) *
-                    CAST(p.probe_emb[i] AS DOUBLE)), (x, y) -> x + y)) *
-              sqrt(list_reduce(list_transform(range(1, 65),
-               i -> CAST(e.embedding[i] AS DOUBLE) *
-                    CAST(e.embedding[i] AS DOUBLE)), (x, y) -> x + y)))
-             AS cos
-           FROM p CROSS JOIN embeddings e WHERE e.vec_id <> p.probe_id),
-         ranked AS (
-           SELECT probe_id, anchor_label, label,
-                  ROW_NUMBER() OVER (PARTITION BY probe_id
-                    ORDER BY cos DESC, vec_id ASC) AS rn
-           FROM scored)
+      s"""WITH $LabeledProbeCte,
+         $LabeledRankCte
          SELECT probe_id, anchor_label,
                 CAST(sum(CASE WHEN label = anchor_label THEN 1 ELSE 0 END)
                   AS BIGINT) AS n_match,
@@ -3431,32 +2805,11 @@ GROUP BY source ORDER BY source"""),
                     + 0.0D""").as("ndcg"))
           .orderBy("probe_id")
       },
-      """WITH probe_ids AS (
-           SELECT MIN(vec_id) AS probe_id FROM embeddings GROUP BY label),
-         p AS (SELECT e.vec_id AS probe_id, e.label AS anchor_label,
-                      e.embedding AS probe_emb
-               FROM embeddings e JOIN probe_ids ON e.vec_id = probe_id),
+      s"""WITH $LabeledProbeCte,
          rel_tot AS (SELECT label AS anchor_label,
                             CAST(count(*) - 1 AS BIGINT) AS n_rel
                      FROM embeddings GROUP BY label),
-         scored AS (
-           SELECT p.probe_id, p.anchor_label, e.vec_id, e.label,
-             list_reduce(list_transform(range(1, 65),
-               i -> CAST(p.probe_emb[i] AS DOUBLE) *
-                    CAST(e.embedding[i] AS DOUBLE)), (x, y) -> x + y) /
-             (sqrt(list_reduce(list_transform(range(1, 65),
-               i -> CAST(p.probe_emb[i] AS DOUBLE) *
-                    CAST(p.probe_emb[i] AS DOUBLE)), (x, y) -> x + y)) *
-              sqrt(list_reduce(list_transform(range(1, 65),
-               i -> CAST(e.embedding[i] AS DOUBLE) *
-                    CAST(e.embedding[i] AS DOUBLE)), (x, y) -> x + y)))
-             AS cos
-           FROM p CROSS JOIN embeddings e WHERE e.vec_id <> p.probe_id),
-         ranked AS (
-           SELECT probe_id, anchor_label, label,
-                  ROW_NUMBER() OVER (PARTITION BY probe_id
-                    ORDER BY cos DESC, vec_id ASC) AS rn
-           FROM scored),
+         $LabeledRankCte,
          dcgs AS (
            SELECT probe_id, anchor_label,
              sum(CASE WHEN label = anchor_label THEN
@@ -3623,29 +2976,8 @@ GROUP BY source ORDER BY source"""),
             expr("""(2 * CAST(hits AS DECIMAL(38,0)) * 1000000 + p)
                     div (2 * p) / 1000000.0D""").as("hit_rate"))
       },
-      """WITH probe_ids AS (
-           SELECT MIN(vec_id) AS probe_id FROM embeddings GROUP BY label),
-         p AS (SELECT e.vec_id AS probe_id, e.label AS anchor_label,
-                      e.embedding AS probe_emb
-               FROM embeddings e JOIN probe_ids ON e.vec_id = probe_id),
-         scored AS (
-           SELECT p.probe_id, p.anchor_label, e.vec_id, e.label,
-             list_reduce(list_transform(range(1, 65),
-               i -> CAST(p.probe_emb[i] AS DOUBLE) *
-                    CAST(e.embedding[i] AS DOUBLE)), (x, y) -> x + y) /
-             (sqrt(list_reduce(list_transform(range(1, 65),
-               i -> CAST(p.probe_emb[i] AS DOUBLE) *
-                    CAST(p.probe_emb[i] AS DOUBLE)), (x, y) -> x + y)) *
-              sqrt(list_reduce(list_transform(range(1, 65),
-               i -> CAST(e.embedding[i] AS DOUBLE) *
-                    CAST(e.embedding[i] AS DOUBLE)), (x, y) -> x + y)))
-             AS cos
-           FROM p CROSS JOIN embeddings e WHERE e.vec_id <> p.probe_id),
-         ranked AS (
-           SELECT probe_id, anchor_label, label,
-                  ROW_NUMBER() OVER (PARTITION BY probe_id
-                    ORDER BY cos DESC, vec_id ASC) AS rn
-           FROM scored),
+      s"""WITH $LabeledProbeCte,
+         $LabeledRankCte,
          firsts AS (
            SELECT probe_id,
                   MIN(CASE WHEN label = anchor_label THEN rn END)

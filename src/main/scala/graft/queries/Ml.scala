@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.Tables._
+import graft.queries.Fragments._
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -154,47 +155,13 @@ object Ml {
     // cluster on user_id.
     Q("interval_coverage",
       (s, d) => {
-        val iv = events(s, d).select(col("user_id"),
-          (unix_micros(col("ts")) / lit(1000000L)).cast("long").as("st"))
-          .withColumn("en", col("st") + 300L)
-        val w = Window.partitionBy("user_id").orderBy("st", "en")
-        val flagged = iv
-          .withColumn("prev_max_en",
-            max(col("en")).over(w.rowsBetween(Window.unboundedPreceding, -1)))
-          .withColumn("new_island",
-            when(col("prev_max_en").isNull ||
-              col("st") > col("prev_max_en"), 1L).otherwise(0L))
-          .withColumn("island",
-            sum(col("new_island")).over(
-              w.rowsBetween(Window.unboundedPreceding, 0)))
-        flagged.groupBy("user_id", "island")
-          .agg(min(col("st")).as("ist"), max(col("en")).as("ien"))
+        eventIslands(s, d)
           .groupBy("user_id")
           .agg(count(lit(1)).as("n_islands"),
             sum(col("ien") - col("ist")).as("covered_s"))
           .orderBy("user_id")
       },
-      """WITH iv AS (
-           SELECT user_id, epoch_us(ts) // 1000000 AS st,
-                  epoch_us(ts) // 1000000 + 300 AS en
-           FROM events),
-         f AS (
-           SELECT user_id, st, en,
-                  MAX(en) OVER (PARTITION BY user_id ORDER BY st, en
-                    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
-                    AS prev_max_en
-           FROM iv),
-         g AS (
-           SELECT user_id, st, en,
-                  SUM(CASE WHEN prev_max_en IS NULL OR st > prev_max_en
-                           THEN 1 ELSE 0 END)
-                    OVER (PARTITION BY user_id ORDER BY st, en
-                          ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                    AS island
-           FROM f),
-         isl AS (
-           SELECT user_id, island, MIN(st) AS ist, MAX(en) AS ien
-           FROM g GROUP BY 1, 2)
+      s"""WITH $IslandsCte
          SELECT user_id, COUNT(*) AS n_islands,
                 CAST(SUM(ien - ist) AS BIGINT) AS covered_s
          FROM isl GROUP BY 1 ORDER BY user_id"""),
@@ -207,21 +174,7 @@ object Ml {
     // windows only.
     Q("interval_gaps",
       (s, d) => {
-        val iv = events(s, d).select(col("user_id"),
-          (unix_micros(col("ts")) / lit(1000000L)).cast("long").as("st"))
-          .withColumn("en", col("st") + 300L)
-        val w = Window.partitionBy("user_id").orderBy("st", "en")
-        val islands = iv
-          .withColumn("prev_max_en",
-            max(col("en")).over(w.rowsBetween(Window.unboundedPreceding, -1)))
-          .withColumn("new_island",
-            when(col("prev_max_en").isNull ||
-              col("st") > col("prev_max_en"), 1L).otherwise(0L))
-          .withColumn("island",
-            sum(col("new_island")).over(
-              w.rowsBetween(Window.unboundedPreceding, 0)))
-          .groupBy("user_id", "island")
-          .agg(min(col("st")).as("ist"), max(col("en")).as("ien"))
+        val islands = eventIslands(s, d)
         val wg = Window.partitionBy("user_id").orderBy("ist")
         islands
           .withColumn("next_ist", lead(col("ist"), 1).over(wg))
@@ -233,27 +186,7 @@ object Ml {
             max(col("gap_s")).as("max_gap_s"))
           .orderBy("user_id")
       },
-      """WITH iv AS (
-           SELECT user_id, epoch_us(ts) // 1000000 AS st,
-                  epoch_us(ts) // 1000000 + 300 AS en
-           FROM events),
-         f AS (
-           SELECT user_id, st, en,
-                  MAX(en) OVER (PARTITION BY user_id ORDER BY st, en
-                    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
-                    AS prev_max_en
-           FROM iv),
-         g AS (
-           SELECT user_id, st, en,
-                  SUM(CASE WHEN prev_max_en IS NULL OR st > prev_max_en
-                           THEN 1 ELSE 0 END)
-                    OVER (PARTITION BY user_id ORDER BY st, en
-                          ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                    AS island
-           FROM f),
-         isl AS (
-           SELECT user_id, island, MIN(st) AS ist, MAX(en) AS ien
-           FROM g GROUP BY 1, 2),
+      s"""WITH $IslandsCte,
          gaps AS (
            SELECT user_id,
                   LEAD(ist, 1) OVER (PARTITION BY user_id ORDER BY ist)
@@ -421,24 +354,9 @@ object Ml {
               .as("purity_pct"))
           .orderBy("cluster")
       },
-      """WITH dims AS (
-           SELECT vec_id, label, i, CAST(embedding[i] AS DOUBLE) AS v
-           FROM embeddings, LATERAL unnest(range(1, 65)) AS t(i)),
-         cent AS (
-           SELECT label AS clabel, i,
-                  CAST(SUM(CAST(v AS DECIMAL(20,10))) AS DOUBLE)
-                    / COUNT(*) AS c
-           FROM dims GROUP BY 1, 2),
-         cvecs AS (
-           SELECT clabel, list(c ORDER BY i) AS cvec
-           FROM cent GROUP BY 1),
-         d2 AS (
-           SELECT e.vec_id, e.label, cv.clabel,
-                  list_reduce(list_transform(range(1, 65),
-                    i -> (CAST(e.embedding[i] AS DOUBLE) - cv.cvec[i]) *
-                         (CAST(e.embedding[i] AS DOUBLE) - cv.cvec[i])),
-                    (x, y) -> x + y) AS d2
-           FROM embeddings e CROSS JOIN cvecs cv),
+      s"""WITH $EmbDimsCte,
+         $CentroidCte,
+         $CentroidD2Cte,
          assigned AS (
            SELECT vec_id, label, clabel,
                   ROW_NUMBER() OVER (PARTITION BY vec_id
@@ -639,27 +557,7 @@ object Ml {
     // No cartesian at any scale.
     Q("join_spatial_knn",
       (s, d) => {
-        val r = 1000L
-        def coord(key: org.apache.spark.sql.Column, salt: String) =
-          pmod(conv(substring(md5(concat(key.cast("string"), lit(salt))),
-            1, 8), 16, 10).cast("long"), lit(10000L))
-        val cust = customer(s, d).select(col("c_custkey"),
-          coord(col("c_custkey"), "x").as("cx"),
-          coord(col("c_custkey"), "y").as("cy"))
-          .withColumn("gx", floor(col("cx") / r))
-          .withColumn("gy", floor(col("cy") / r))
-        val supp = supplier(s, d).select(col("s_suppkey"),
-          coord(col("s_suppkey"), "sx").as("sx"),
-          coord(col("s_suppkey"), "sy").as("sy"))
-          .withColumn("dx", explode(array(lit(-1L), lit(0L), lit(1L))))
-          .withColumn("dy", explode(array(lit(-1L), lit(0L), lit(1L))))
-          .select(col("s_suppkey"), col("sx"), col("sy"),
-            (floor(col("sx") / r) + col("dx")).as("gx"),
-            (floor(col("sy") / r) + col("dy")).as("gy"))
-        val cand = cust.join(supp, Seq("gx", "gy"))
-          .withColumn("dist2",
-            (col("cx") - col("sx")) * (col("cx") - col("sx")) +
-              (col("cy") - col("sy")) * (col("cy") - col("sy")))
+        val cand = gridNeighbours(s, d, 1000L)
         val w = Window.partitionBy("c_custkey")
           .orderBy(col("dist2"), col("s_suppkey"))
         cand.withColumn("rk", row_number().over(w))
@@ -668,20 +566,7 @@ object Ml {
             col("s_suppkey"), col("dist2"))
           .orderBy("c_custkey", "rk")
       },
-      """WITH cust AS (
-           SELECT c_custkey,
-                  CAST(('0x' || substring(md5(CAST(c_custkey AS VARCHAR)
-                    || 'x'), 1, 8)) AS BIGINT) % 10000 AS cx,
-                  CAST(('0x' || substring(md5(CAST(c_custkey AS VARCHAR)
-                    || 'y'), 1, 8)) AS BIGINT) % 10000 AS cy
-           FROM customer),
-         supp AS (
-           SELECT s_suppkey,
-                  CAST(('0x' || substring(md5(CAST(s_suppkey AS VARCHAR)
-                    || 'sx'), 1, 8)) AS BIGINT) % 10000 AS sx,
-                  CAST(('0x' || substring(md5(CAST(s_suppkey AS VARCHAR)
-                    || 'sy'), 1, 8)) AS BIGINT) % 10000 AS sy
-           FROM supplier),
+      s"""WITH $SpatialCoordsCte,
          cand AS (
            SELECT c_custkey, s_suppkey,
                   (cx - sx) * (cx - sx) + (cy - sy) * (cy - sy) AS dist2
@@ -892,44 +777,12 @@ object Ml {
     Q("join_spatial_grid",
       (s, d) => {
         val r = 150L
-        def coord(key: org.apache.spark.sql.Column, salt: String) =
-          pmod(conv(substring(md5(concat(key.cast("string"), lit(salt))),
-            1, 8), 16, 10).cast("long"), lit(10000L))
-        val cust = customer(s, d).select(col("c_custkey"),
-          coord(col("c_custkey"), "x").as("cx"),
-          coord(col("c_custkey"), "y").as("cy"))
-          .withColumn("gx", floor(col("cx") / r))
-          .withColumn("gy", floor(col("cy") / r))
-        val supp = supplier(s, d).select(col("s_suppkey"),
-          coord(col("s_suppkey"), "sx").as("sx"),
-          coord(col("s_suppkey"), "sy").as("sy"))
-          .withColumn("dx", explode(array(lit(-1L), lit(0L), lit(1L))))
-          .withColumn("dy", explode(array(lit(-1L), lit(0L), lit(1L))))
-          .select(col("s_suppkey"), col("sx"), col("sy"),
-            (floor(col("sx") / r) + col("dx")).as("gx"),
-            (floor(col("sy") / r) + col("dy")).as("gy"))
-        cust.join(supp, Seq("gx", "gy"))
-          .withColumn("dist2",
-            (col("cx") - col("sx")) * (col("cx") - col("sx")) +
-              (col("cy") - col("sy")) * (col("cy") - col("sy")))
+        gridNeighbours(s, d, r)
           .filter(col("dist2") <= r * r)
           .select(col("c_custkey"), col("s_suppkey"), col("dist2"))
           .orderBy("c_custkey", "s_suppkey")
       },
-      """WITH cust AS (
-           SELECT c_custkey,
-                  CAST(('0x' || substring(md5(CAST(c_custkey AS VARCHAR)
-                    || 'x'), 1, 8)) AS BIGINT) % 10000 AS cx,
-                  CAST(('0x' || substring(md5(CAST(c_custkey AS VARCHAR)
-                    || 'y'), 1, 8)) AS BIGINT) % 10000 AS cy
-           FROM customer),
-         supp AS (
-           SELECT s_suppkey,
-                  CAST(('0x' || substring(md5(CAST(s_suppkey AS VARCHAR)
-                    || 'sx'), 1, 8)) AS BIGINT) % 10000 AS sx,
-                  CAST(('0x' || substring(md5(CAST(s_suppkey AS VARCHAR)
-                    || 'sy'), 1, 8)) AS BIGINT) % 10000 AS sy
-           FROM supplier)
+      s"""WITH $SpatialCoordsCte
          SELECT c_custkey, s_suppkey,
                 (cx - sx) * (cx - sx) + (cy - sy) * (cy - sy) AS dist2
          FROM cust CROSS JOIN supp
@@ -1952,9 +1805,7 @@ object Ml {
               .as("avg_margin"))
           .orderBy("label")
       },
-      """WITH dims AS (
-           SELECT vec_id, label, i, CAST(embedding[i] AS DOUBLE) AS v
-           FROM embeddings, LATERAL unnest(range(1, 65)) AS t(i)),
+      s"""WITH $EmbDimsCte,
          cent AS (
            SELECT label AS clabel, i,
                   CAST(SUM(CAST(v AS DECIMAL(20,10))) AS DOUBLE) /
@@ -2098,17 +1949,10 @@ object Ml {
               (count(lit(1)) * lit(64)), 12).as("mse_stage1"))
           .orderBy("label")
       },
-      """WITH dims AS (
+      s"""WITH dims AS (
            SELECT label, i, CAST(embedding[i] AS DOUBLE) AS v
            FROM embeddings, LATERAL unnest(range(1, 65)) AS t(i)),
-         cent AS (
-           SELECT label AS clabel, i,
-                  CAST(SUM(CAST(v AS DECIMAL(20,10))) AS DOUBLE)
-                    / COUNT(*) AS c
-           FROM dims GROUP BY 1, 2),
-         cvecs AS (
-           SELECT clabel, list(c ORDER BY i) AS cvec
-           FROM cent GROUP BY 1),
+         $CentroidCte,
          r0 AS (
            SELECT e.vec_id, e.label, e.embedding, cv.cvec,
                   list_reduce(list_transform(range(1, 65),
@@ -2651,20 +2495,9 @@ object Ml {
     // tie-broken to the smallest score via min().
     Q("ml_ks_statistic",
       (s, d) => {
-        import org.apache.spark.sql.expressions.Window
-        val h = documents(s, d)
-          .groupBy(col("n_chars").as("sc"))
-          .agg(sum(when(col("lang") === "en", 1L).otherwise(0L)).as("cp"),
-            sum(when(col("lang") =!= "en", 1L).otherwise(0L)).as("cn"))
-        val w = Window.orderBy("sc")
-          .rowsBetween(Window.unboundedPreceding, 0)
-        val cum = h
-          .withColumn("cum_p", sum("cp").over(w))
-          .withColumn("cum_n", sum("cn").over(w))
-        val tot = cum.agg(max("cum_p").as("np"), max("cum_n").as("nn"))
         // cum·n cross-products and n₊n₋ in DECIMAL(38,0) — raw LONG
         // overflows at ~3e9 docs per class
-        val gaps = cum.crossJoin(broadcast(tot))
+        val gaps = scoreCumTot(s, d)
           .withColumn("gap",
             abs(col("cum_p").cast(DecimalType(38, 0)) * col("nn") -
               col("cum_n").cast(DecimalType(38, 0)) * col("np")))
@@ -2681,20 +2514,7 @@ object Ml {
           .select(col("ks_at_score"), col("n_pos"), col("n_neg"),
             expr("ks6 / 1000000.0D").as("ks"))
       },
-      """WITH h AS (SELECT n_chars AS sc,
-             CAST(sum(CASE WHEN lang = 'en' THEN 1 ELSE 0 END) AS BIGINT)
-               AS cp,
-             CAST(sum(CASE WHEN lang <> 'en' THEN 1 ELSE 0 END) AS BIGINT)
-               AS cn
-           FROM documents GROUP BY 1),
-         cum AS (SELECT sc,
-             sum(cp) OVER (ORDER BY sc ROWS BETWEEN UNBOUNDED PRECEDING
-               AND CURRENT ROW) AS cum_p,
-             sum(cn) OVER (ORDER BY sc ROWS BETWEEN UNBOUNDED PRECEDING
-               AND CURRENT ROW) AS cum_n
-           FROM h),
-         tot AS (SELECT CAST(max(cum_p) AS BIGINT) AS np,
-                        CAST(max(cum_n) AS BIGINT) AS nn FROM cum),
+      s"""WITH $ScoreCumCte,
          gaps AS (SELECT sc,
              abs(CAST(cum_p AS HUGEINT) * nn
                  - CAST(cum_n AS HUGEINT) * np) AS gap, np, nn
@@ -2718,19 +2538,8 @@ object Ml {
     // corner + the cost at both degenerate policies for contrast.
     Q("ml_cost_threshold",
       (s, d) => {
-        import org.apache.spark.sql.expressions.Window
-        val h = documents(s, d)
-          .groupBy(col("n_chars").as("sc"))
-          .agg(sum(when(col("lang") === "en", 1L).otherwise(0L)).as("cp"),
-            sum(when(col("lang") =!= "en", 1L).otherwise(0L)).as("cn"))
-        val w = Window.orderBy("sc")
-          .rowsBetween(Window.unboundedPreceding, 0)
-        val cum = h
-          .withColumn("cum_p", sum("cp").over(w))
-          .withColumn("cum_n", sum("cn").over(w))
-        val tot = cum.agg(max("cum_p").as("np"), max("cum_n").as("nn"))
         // policy "positive iff score > sc": FN = cum_p, FP = nn - cum_n
-        val costs = cum.crossJoin(broadcast(tot))
+        val costs = scoreCumTot(s, d)
           .withColumn("cost",
             (col("nn") - col("cum_n")) * 1L + col("cum_p") * 5L)
         val best = costs.agg(min("cost").as("best_cost"))
@@ -2742,20 +2551,7 @@ object Ml {
             first(col("np") * 5L).as("cost_reject_all"),
             first(col("nn") * 1L).as("cost_accept_all"))
       },
-      """WITH h AS (SELECT n_chars AS sc,
-             CAST(sum(CASE WHEN lang = 'en' THEN 1 ELSE 0 END) AS BIGINT)
-               AS cp,
-             CAST(sum(CASE WHEN lang <> 'en' THEN 1 ELSE 0 END) AS BIGINT)
-               AS cn
-           FROM documents GROUP BY 1),
-         cum AS (SELECT sc,
-             sum(cp) OVER (ORDER BY sc ROWS BETWEEN UNBOUNDED PRECEDING
-               AND CURRENT ROW) AS cum_p,
-             sum(cn) OVER (ORDER BY sc ROWS BETWEEN UNBOUNDED PRECEDING
-               AND CURRENT ROW) AS cum_n
-           FROM h),
-         tot AS (SELECT CAST(max(cum_p) AS BIGINT) AS np,
-                        CAST(max(cum_n) AS BIGINT) AS nn FROM cum),
+      s"""WITH $ScoreCumCte,
          costs AS (SELECT sc,
              (nn - cum_n) * 1 + cum_p * 5 AS cost, np, nn
            FROM cum CROSS JOIN tot),
@@ -3211,16 +3007,7 @@ object Ml {
     // pre-training screen; profile_cramers_v is the single-pair form.
     Q("ml_chi2_select",
       (s, d) => {
-        val long = orders(s, d).select(
-          (col("o_totalprice") > 150000.0).as("label"),
-          expr("""stack(3,
-            'priority', o_orderpriority,
-            'status', o_orderstatus,
-            'month', CAST(month(o_orderdate) AS STRING))
-            AS (feature, v)"""))
-        val cells = long.groupBy("feature", "v")
-          .agg(count(when(col("label"), 1)).as("n1"),
-            count(when(!col("label"), 1)).as("n0"))
+        val cells = featureCells(s, d)
         val w = Window.partitionBy("feature")
         cells
           .withColumn("ka", count(lit(1)).over(w))
@@ -3248,19 +3035,7 @@ object Ml {
               max(col("n")).cast("double")), 6).as("cramers_v"))
           .orderBy(desc("cramers_v"), col("feature"))
       },
-      """WITH long AS (
-           SELECT (o_totalprice > 150000.0) AS label, feature, v
-           FROM orders,
-             LATERAL (VALUES
-               ('priority', o_orderpriority),
-               ('status', o_orderstatus),
-               ('month', CAST(month(o_orderdate) AS VARCHAR)))
-               AS t(feature, v)),
-         cells AS (
-           SELECT feature, v,
-                  COUNT(CASE WHEN label THEN 1 END) AS n1,
-                  COUNT(CASE WHEN NOT label THEN 1 END) AS n0
-           FROM long GROUP BY 1, 2),
+      s"""WITH $FeatureCellsCte,
          m AS (
            SELECT feature, n1, n0,
                   COUNT(*) OVER (PARTITION BY feature) AS ka,
@@ -3293,16 +3068,7 @@ object Ml {
     // textually-identical formulas; log2 via ln/ln(2) on both engines.
     Q("ml_info_gain",
       (s, d) => {
-        val long = orders(s, d).select(
-          (col("o_totalprice") > 150000.0).as("label"),
-          expr("""stack(3,
-            'priority', o_orderpriority,
-            'status', o_orderstatus,
-            'month', CAST(month(o_orderdate) AS STRING))
-            AS (feature, v)"""))
-        val cells = long.groupBy("feature", "v")
-          .agg(count(when(col("label"), 1)).as("n1"),
-            count(when(!col("label"), 1)).as("n0"))
+        val cells = featureCells(s, d)
         val w = Window.partitionBy("feature")
         def h2(a: org.apache.spark.sql.Column,
             b: org.apache.spark.sql.Column) = {
@@ -3333,19 +3099,7 @@ object Ml {
               .as("gain_ratio"))
           .orderBy(desc("gain_ratio"), col("feature"))
       },
-      """WITH long AS (
-           SELECT (o_totalprice > 150000.0) AS label, feature, v
-           FROM orders,
-             LATERAL (VALUES
-               ('priority', o_orderpriority),
-               ('status', o_orderstatus),
-               ('month', CAST(month(o_orderdate) AS VARCHAR)))
-               AS t(feature, v)),
-         cells AS (
-           SELECT feature, v,
-                  COUNT(CASE WHEN label THEN 1 END) AS n1,
-                  COUNT(CASE WHEN NOT label THEN 1 END) AS n0
-           FROM long GROUP BY 1, 2),
+      s"""WITH $FeatureCellsCte,
          m AS (
            SELECT feature, n1, n0,
                   SUM(n1) OVER (PARTITION BY feature) AS c1,
@@ -3596,17 +3350,7 @@ object Ml {
                     AS DOUBLE) / 1000000.0D""").as("ece"))
           .orderBy("bin")
       },
-      """WITH scored AS (
-           SELECT least(CAST(n_chars AS BIGINT), 2000) * 10000 // 2000
-                    AS conf4,
-                  CASE WHEN lang = 'en' THEN 1 ELSE 0 END AS pos
-           FROM documents),
-         bins AS (
-           SELECT least(conf4 // 1000, 9) AS bin,
-                  CAST(COUNT(*) AS BIGINT) AS n_b,
-                  CAST(SUM(pos) AS BIGINT) AS pos_b,
-                  CAST(SUM(conf4) AS BIGINT) AS sconf4
-           FROM scored GROUP BY 1),
+      s"""WITH $ConfidenceBinsCte,
          acc AS (
            SELECT bin, n_b,
                   (CAST(pos_b AS HUGEINT) * 10000 + n_b // 2) // n_b
@@ -4205,24 +3949,9 @@ object Ml {
                            * CAST(sb AS DOUBLE)), 6) + 0.0D
                     END""").as("adjusted_rand"))
       },
-      """WITH dims AS (
-           SELECT vec_id, label, i, CAST(embedding[i] AS DOUBLE) AS v
-           FROM embeddings, LATERAL unnest(range(1, 65)) AS t(i)),
-         cent AS (
-           SELECT label AS clabel, i,
-                  CAST(SUM(CAST(v AS DECIMAL(20,10))) AS DOUBLE)
-                    / COUNT(*) AS c
-           FROM dims GROUP BY 1, 2),
-         cvecs AS (
-           SELECT clabel, list(c ORDER BY i) AS cvec
-           FROM cent GROUP BY 1),
-         d2 AS (
-           SELECT e.vec_id, e.label, cv.clabel,
-                  list_reduce(list_transform(range(1, 65),
-                    i -> (CAST(e.embedding[i] AS DOUBLE) - cv.cvec[i]) *
-                         (CAST(e.embedding[i] AS DOUBLE) - cv.cvec[i])),
-                    (x, y) -> x + y) AS d2
-           FROM embeddings e CROSS JOIN cvecs cv),
+      s"""WITH $EmbDimsCte,
+         $CentroidCte,
+         $CentroidD2Cte,
          assigned AS (
            SELECT vec_id, label, clabel,
                   ROW_NUMBER() OVER (PARTITION BY vec_id
@@ -4463,24 +4192,9 @@ object Ml {
             expr("""(2 * CAST(misplaced AS DECIMAL(38,0)) * 1000000 + n)
                     div (2 * n) / 1000000.0D""").as("misplaced_share"))
       },
-      """WITH dims AS (
-           SELECT vec_id, label, i, CAST(embedding[i] AS DOUBLE) AS v
-           FROM embeddings, LATERAL unnest(range(1, 65)) AS t(i)),
-         cent AS (
-           SELECT label AS clabel, i,
-                  CAST(SUM(CAST(v AS DECIMAL(20,10))) AS DOUBLE)
-                    / COUNT(*) AS c
-           FROM dims GROUP BY 1, 2),
-         cvecs AS (
-           SELECT clabel, list(c ORDER BY i) AS cvec
-           FROM cent GROUP BY 1),
-         d2 AS (
-           SELECT e.vec_id, e.label, cv.clabel,
-                  list_reduce(list_transform(range(1, 65),
-                    i -> (CAST(e.embedding[i] AS DOUBLE) - cv.cvec[i]) *
-                         (CAST(e.embedding[i] AS DOUBLE) - cv.cvec[i])),
-                    (x, y) -> x + y) AS d2
-           FROM embeddings e CROSS JOIN cvecs cv),
+      s"""WITH $EmbDimsCte,
+         $CentroidCte,
+         $CentroidD2Cte,
          ab AS (
            SELECT vec_id,
                   MIN(CASE WHEN clabel = label THEN d2 END) AS a2,
@@ -4550,17 +4264,7 @@ object Ml {
                       ELSE ${StatCrit.Chi2_95(8)}D END END""")
               .as("significant"))
       },
-      """WITH scored AS (
-           SELECT least(CAST(n_chars AS BIGINT), 2000) * 10000 // 2000
-                    AS conf4,
-                  CASE WHEN lang = 'en' THEN 1 ELSE 0 END AS pos
-           FROM documents),
-         bins AS (
-           SELECT least(conf4 // 1000, 9) AS bin,
-                  CAST(COUNT(*) AS BIGINT) AS n_b,
-                  CAST(SUM(pos) AS BIGINT) AS pos_b,
-                  CAST(SUM(conf4) AS BIGINT) AS sconf4
-           FROM scored GROUP BY 1),
+      s"""WITH $ConfidenceBinsCte,
          terms AS (
            SELECT CAST(CAST(CAST(pos_b AS HUGEINT) * 10000 - sconf4
                     AS DOUBLE)

@@ -1,14 +1,13 @@
 package graft.tools
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.SparkSession
 
 /** Dump `.explain("formatted")` for named queries to plans/<tag>/<q>_<suffix>.txt —
   * the before/after plan evidence for optimization rounds.
   *   runMain graft.tools.ExplainDump <sfDir> <outDir> <suffix> q1 q2 ...
-  * Uses the bench session shape (core count from SPARK_GRAFT_CPUS like the
-  * bench runner, shuffle.partitions to match) so the dumped plan is the one
-  * the bench actually runs. The warehouse dir is derived from outDir so two
-  * concurrent dump runs never collide on saveAsTable artifacts (r14 ADVICE).
+  * Uses the bench session shape ([[Session.build]]: core count from
+  * SPARK_GRAFT_CPUS, shuffle.partitions to match) so the dumped plan is the
+  * one the bench actually runs. The warehouse dir is derived from outDir so
+  * two concurrent dump runs never collide on saveAsTable artifacts.
   */
 object ExplainDump {
   def main(args: Array[String]): Unit = {
@@ -16,15 +15,8 @@ object ExplainDump {
     val outDir = args(1)
     val suffix = args(2)
     val keys = args.drop(3)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.warehouse.dir",
-        Paths.get(outDir, ".explain_wh").toAbsolutePath.toString)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Session.build(
+      Some(Paths.get(outDir, ".explain_wh").toAbsolutePath.toString))
     spark.sparkContext.setLogLevel("ERROR")
     Files.createDirectories(Paths.get(outDir))
     keys.foreach { k =>

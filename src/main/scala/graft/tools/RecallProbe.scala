@@ -3,7 +3,7 @@ package graft.tools
 import graft.Tables
 import graft.engine.ml.Similarity
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 
 /** Recall diagnostic for the ANN family: prints the per-probe recall
   * distribution (min / p25 / mean) of each ANN path against the exact
@@ -31,11 +31,7 @@ object RecallProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val nProbes = if (args.length > 1) args.drop(1).map(_.toInt).toSeq else Seq(6, 8, 10, 12)
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = Session.build()
     spark.sparkContext.setLogLevel("ERROR")
     val emb = Tables.embeddings(spark, sfDir)
     val probes = Similarity.probes(emb)

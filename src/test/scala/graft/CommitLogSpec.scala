@@ -104,6 +104,35 @@ class CommitLogSpec extends AnyFunSuite with SparkFixture {
     assert(CommitLog.readLatest(spark, root).count() == 40)
   }
 
+  test("a file:// root: commits land in the listed log, not under the cwd") {
+    import spark.implicits._
+    val local = new java.io.File(
+      s"${sys.props("java.io.tmpdir")}/graft_commitlog_spec/file_uri")
+      .getAbsolutePath
+    val root = s"file://$local"
+    // where a string Paths.get of the URI would put the log: relative,
+    // under the working directory
+    val strayLog = new java.io.File(s"file:$local")
+    org.apache.commons.io.FileUtils.deleteDirectory(strayLog)
+    val fs = new org.apache.hadoop.fs.Path(root)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    fs.delete(new org.apache.hadoop.fs.Path(root), true)
+    CommitLog.init(spark, root)
+    val c1 = CommitLog.commit(spark, root, "snapshot") { (dir, _) =>
+      Seq((1L, 1.0)).toDF("k", "v").write.parquet(dir)
+    }
+    val c2 = CommitLog.commit(spark, root, "append") { (dir, base) =>
+      CommitLog.readVersion(spark, root, base)
+        .unionByName(Seq((2L, 2.0)).toDF("k", "v")).write.parquet(dir)
+    }
+    assert(c1.version == 1 && c2.version == 2)
+    assert(CommitLog.latest(spark, root).map(_.action).contains("append"))
+    assert(CommitLog.readLatest(spark, root).as[(Long, Double)]
+      .collect().toSet == Set((1L, 1.0), (2L, 2.0)))
+    assert(new java.io.File(local, "_commits/v00000002.json").isFile)
+    assert(!strayLog.exists(), s"commit log leaked under the cwd: $strayLog")
+  }
+
   test("vacuum keeps newest N readable, expires old data + stale orphans") {
     val root = freshRoot("vacuum")
     import spark.implicits._

@@ -16,7 +16,9 @@ the SURVEY §2 tables did before survey_check.py existed.
     1. Splits every src/main/scala/graft/queries/*.scala into per-key
        segments (a key's segment runs from its `Q("<key>"` line to the
        next definition) — each segment holds BOTH the Spark-side
-       builder and its oracle SQL.
+       builder and its oracle SQL. A segment also takes in the body of
+       every queries/Fragments.scala member it names (transitively), so
+       a formula moved into a shared fragment still flags its keys.
     2. Flags a key when its segment carries a formula marker: a
        transcendental / sqrt / pow call, a closed-form-statistics
        builtin (stddev, corr, skewness, ...), or a z/chi-square
@@ -44,6 +46,7 @@ import sys
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 QUERY_GLOB = os.path.join(ROOT, "src/main/scala/graft/queries/*.scala")
 EXEMPTIONS = os.path.join(ROOT, "tools/pins_exemptions.json")
+FRAGMENTS = os.path.join(ROOT, "src/main/scala/graft/queries/Fragments.scala")
 
 # Specs that carry first-principles recomputation tests. Pins*Spec is
 # the discipline's home; the named extras hold closed-form pins for
@@ -78,8 +81,40 @@ CRITICAL_VALUES = re.compile(
     r"3\.8415?|5\.9915?|7\.8147?|0\.6745)(?![\d])")
 
 
+def fragment_members():
+    """name -> source of each top-level member of queries/Fragments.scala
+    (its doc comment excluded), the shared oracle-SQL recipes and
+    builders keys refer to by name."""
+    members, name, body = {}, None, []
+    for line in open(FRAGMENTS).readlines():
+        m = re.match(r"  (?:private )?(?:val|def) (\w+)", line)
+        if m or re.match(r"  (/\*\*|//)", line) or line.startswith("}"):
+            if name:
+                members[name] = "".join(body)
+            name, body = (m.group(1), [line]) if m else (None, [])
+        elif name:
+            body.append(line)
+    return members
+
+
+def with_fragments(seg, members):
+    """`seg` plus the body of every Fragments member it names, followed
+    transitively — a formula moved into a shared fragment still flags
+    every key that uses it."""
+    named, todo = set(), [seg]
+    while todo:
+        text = todo.pop()
+        for name, body in members.items():
+            if name not in named and re.search(r"\b" + name + r"\b", text):
+                named.add(name)
+                todo.append(body)
+    return seg + "".join(members[n] for n in sorted(named))
+
+
 def key_segments():
-    """key -> (site, source segment from its Q( line to the next)."""
+    """key -> (site, source segment from its Q( line to the next, plus
+    the Fragments members it names)."""
+    members = fragment_members()
     segs = {}
     for path in sorted(glob.glob(QUERY_GLOB)):
         rel = os.path.relpath(path, ROOT)
@@ -106,7 +141,8 @@ def key_segments():
             start = comment_block_start(i)
             stop = (comment_block_start(defs[j + 1][0])
                     if j + 1 < len(defs) else len(lines))
-            segs[k] = (f"{rel}:{i + 1}", "".join(lines[start:stop]))
+            segs[k] = (f"{rel}:{i + 1}",
+                       with_fragments("".join(lines[start:stop]), members))
     return segs
 
 
