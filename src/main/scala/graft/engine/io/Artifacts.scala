@@ -1,9 +1,8 @@
 package graft.engine.io
 
+import graft.engine.Memo
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.execution.datasources.{CatalogFileIndex,
-  HadoopFsRelation, LogicalRelation, PartitioningAwareFileIndex}
 import org.apache.spark.sql.functions._
 
 /** Shared plumbing for the fit-once artifact family (keep-lists, IVF
@@ -29,38 +28,18 @@ import org.apache.spark.sql.functions._
   */
 object Artifacts {
 
-  /** (sessionId, plan semanticHash, input file inventory) →
-    * fingerprint; makes repeat calls within a session free (no Spark
-    * action). The plan hash alone does not change when the files under
-    * a path are rewritten, so the key also holds the inventory: a new
-    * read of a rewritten input — even one that keeps every file name —
-    * misses the cache. */
-  private val fpCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+  /** (session, plan semanticHash, hash of the input file inventory) →
+    * fingerprint, the 4,096 most recent: repeat calls in a session run
+    * no Spark action, and a new read of a rewritten input — even one
+    * keeping every file name — misses, as its inventory changed. */
+  private val fpCache = new Memo[(Int, Int, String), String](4096)
 
   def fingerprintOf(df: DataFrame): String = {
-    val files = inventory(df)
-    val key = System.identityHashCode(df.sparkSession) + ":" +
-      df.queryExecution.analyzed.semanticHash() + ":" +
-      fnv(files.mkString("\n"))
-    fpCache.computeIfAbsent(key, _ => compute(df, files))
+    val files = Storage.inventory(df.queryExecution.optimizedPlan)
+    val key = (System.identityHashCode(df.sparkSession),
+      df.queryExecution.analyzed.semanticHash(), fnv(files.mkString("\n")))
+    fpCache.getOrElseUpdate(key)(compute(df, files))
   }
-
-  /** `path|length|mtime` of every input file, sorted, from the listing
-    * the plan's file indexes made when the DataFrame was built — no
-    * storage call. Relations without a file index contribute nothing. */
-  private def inventory(df: DataFrame): Seq[String] =
-    df.queryExecution.optimizedPlan.collect {
-      case l: LogicalRelation => l.relation
-    }.flatMap {
-      case r: HadoopFsRelation => r.location match {
-        case idx: PartitioningAwareFileIndex => idx.allFiles()
-        case idx: CatalogFileIndex => idx.filterPartitions(Nil).allFiles()
-        case _ => Nil
-      }
-      case _ => Nil
-    }.map(st => s"${st.getPath.toUri}|${st.getLen}|${st.getModificationTime}")
-      .distinct.sorted
 
   private def compute(df: DataFrame, files: Seq[String]): String = {
     // Session-STABLE plan signature. semanticHash() is NOT stable

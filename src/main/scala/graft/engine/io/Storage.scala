@@ -2,9 +2,13 @@ package graft.engine.io
 
 import java.nio.charset.StandardCharsets
 
+import graft.engine.Memo
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileStatus, FileSystem, FileUtil, Path}
+import org.apache.hadoop.fs.{FileSystem, FileUtil, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.execution.datasources.{CatalogFileIndex,
+  HadoopFsRelation, LogicalRelation, PartitioningAwareFileIndex}
 import org.apache.spark.sql.types.StructType
 
 /** Folder/object storage utilities over the Hadoop FileSystem API — the
@@ -35,19 +39,14 @@ object Storage {
   }
 
   /** All file paths under a prefix, recursive, sorted. */
-  def listFiles(spark: SparkSession, path: String): Seq[String] =
-    fileStatuses(spark, path).map(_.getPath.toString).sorted
-
-  /** Every file under a prefix, recursive; empty when it is missing. */
-  private def fileStatuses(spark: SparkSession,
-      path: String): Seq[FileStatus] = {
+  def listFiles(spark: SparkSession, path: String): Seq[String] = {
     val (f, p) = fs(spark, path)
     if (!f.exists(p)) Nil
     else {
       val it = f.listFiles(p, true)
-      val out = Seq.newBuilder[FileStatus]
-      while (it.hasNext) out += it.next()
-      out.result()
+      val out = Seq.newBuilder[String]
+      while (it.hasNext) out += it.next().getPath.toString
+      out.result().sorted
     }
   }
 
@@ -84,9 +83,7 @@ object Storage {
     finally in.close()
   }
 
-  /** The most paths whose schema [[readParquet]] keeps; the least
-    * recently read path is dropped first. Each entry holds one schema
-    * and a 64-character key. */
+  /** The most paths whose schema [[readParquet]] keeps (LRU). */
   private val SchemaCacheCap = 1024
 
   /** The session confs that change what parquet schema inference
@@ -99,64 +96,56 @@ object Storage {
     "spark.sql.parquet.mergeSchema",
     "spark.sql.caseSensitive")
 
-  /** path → (listing key, inferred schema), at most one entry per path
-    * and at most `capacity` paths, least recently used out first. */
-  private[graft] final class SchemaCache(capacity: Int) {
-    private val entries =
-      new java.util.LinkedHashMap[String, (String, StructType)](
-        16, 0.75f, true) {
-        override def removeEldestEntry(
-            e: java.util.Map.Entry[String, (String, StructType)]): Boolean =
-          this.size() > capacity
-      }
-
-    def get(path: String, key: String): Option[StructType] =
-      entries.synchronized {
-        Option(entries.get(path)).collect { case (k, s) if k == key => s }
-      }
-
-    def put(path: String, key: String, schema: StructType): Unit =
-      entries.synchronized { entries.put(path, (key, schema)) }
-
-    def size: Int = entries.synchronized { entries.size() }
-  }
+  /** path → (hash of the confs and the file inventory, inferred schema) */
+  private[graft] type SchemaCache = Memo[String, (String, StructType)]
 
   private val schemaCache = new SchemaCache(SchemaCacheCap)
 
   /** `spark.read.parquet(path)` without the schema-inference job on a
-    * repeat read. Plain `spark.read.parquet` reads a parquet footer in
-    * a Spark job every time a DataFrame is built; here the inferred
-    * schema is kept, keyed by one driver-side recursive listing of
-    * `path` — every file's (path, length, modification time), hidden
-    * files such as `_SUCCESS` included — plus the session confs that
-    * change inference. An unchanged key reads with the kept schema
-    * (no job); any rewrite, added or removed file or conf change infers
-    * again and replaces the path's entry. A same-name rewrite that
-    * keeps both the length and the modification time is not seen. A
-    * missing or empty path goes straight to `spark.read.parquet`, so
-    * callers get its errors unchanged. */
+    * repeat read. The inferred schema is kept, keyed by the session
+    * confs that change inference and the [[inventory]] of the read's
+    * own file index. A repeat read builds `spark.read.schema(kept)`
+    * (no job) and returns it only if its inventory — the exact files
+    * its scan reads — still matches; otherwise (files rewritten, added
+    * or removed, path missing or emptied, confs changed) it reads with
+    * `spark.read.parquet(path)`, with its errors, and replaces the
+    * entry. */
   def readParquet(spark: SparkSession, path: String): DataFrame =
     readParquet(spark, path, schemaCache)
 
   private[graft] def readParquet(spark: SparkSession, path: String,
       cache: SchemaCache): DataFrame = {
-    // a glob does not exist as a path, so it is read uncached too
-    val files = fileStatuses(spark, path)
-      .map(st => s"${st.getPath}|${st.getLen}|${st.getModificationTime}")
-      .sorted
-    if (files.isEmpty) spark.read.parquet(path)
-    else {
-      val confs = schemaConfs.map(k => s"$k=${spark.conf.getOption(k)}")
-      val key = sha256((confs ++ files).mkString("\n"))
-      cache.get(path, key) match {
-        case Some(schema) => spark.read.schema(schema).parquet(path)
-        case None =>
-          val df = spark.read.parquet(path)
-          cache.put(path, key, df.schema)
-          df
+    val confs = schemaConfs.map(k => s"$k=${spark.conf.getOption(k)}")
+    def key(df: DataFrame): String =
+      sha256((confs ++ inventory(df.queryExecution.analyzed)).mkString("\n"))
+    cache.get(path)
+      .map { case (k, schema) => (k, spark.read.schema(schema).parquet(path)) }
+      .collect { case (k, df) if key(df) == k => df }
+      .getOrElse {
+        val df = spark.read.parquet(path)
+        cache.put(path, (key(df), df.schema))
+        df
       }
-    }
   }
+
+  /** The engine's one file inventory, keying both [[readParquet]] and
+    * [[Artifacts.fingerprintOf]]: `path|length|mtime` of every input
+    * file of `plan`, sorted, from the listing its file indexes made when
+    * it was built (no storage call; relations without one add nothing).
+    * Known limits: a same-name rewrite that keeps both length and mtime
+    * is not seen; paths are absolute and mtimes kept, so moving a
+    * dataset or warehouse, or rebuilding an upstream artifact with the
+    * same bytes, rebuilds every artifact keyed on it. */
+  private[graft] def inventory(plan: LogicalPlan): Seq[String] =
+    plan.collect { case l: LogicalRelation => l.relation }.flatMap {
+      case r: HadoopFsRelation => r.location match {
+        case idx: PartitioningAwareFileIndex => idx.allFiles()
+        case idx: CatalogFileIndex => idx.filterPartitions(Nil).allFiles()
+        case _ => Nil
+      }
+      case _ => Nil
+    }.map(st => s"${st.getPath.toUri}|${st.getLen}|${st.getModificationTime}")
+      .distinct.sorted
 
   private def sha256(s: String): String =
     java.security.MessageDigest.getInstance("SHA-256")

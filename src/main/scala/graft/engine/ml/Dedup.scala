@@ -1,5 +1,6 @@
 package graft.engine.ml
 
+import graft.engine.Memo
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -26,9 +27,10 @@ object Dedup {
     * reused across the band/prefix and verify joins of ONE query. The
     * query runner (Bench/Verify/test) calls [[unpersistTracked]] after
     * materializing the result so repeated invocations in a long-lived
-    * session don't accumulate executor storage. */
-  private val trackedCaches =
-    scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    * session don't accumulate executor storage. Per thread, so one
+    * runner's sweep never frees another runner's caches mid-plan. */
+  private val trackedCaches = ThreadLocal.withInitial(() =>
+    scala.collection.mutable.ArrayBuffer.empty[DataFrame])
 
   /** Tracked cache for intermediates reused several times within
     * ONE query invocation (the edge relation of an iterative graph key,
@@ -36,24 +38,25 @@ object Dedup {
     * oversized relation spills instead of OOMing at scale; released by
     * the runner's existing [[unpersistTracked]] sweep, so nothing
     * persists across queries or runs. */
-  def cacheTracked(df: DataFrame): DataFrame =
-    trackedCaches.synchronized { val c = df.cache(); trackedCaches += c; c }
+  def cacheTracked(df: DataFrame): DataFrame = {
+    val c = df.cache(); trackedCaches.get += c; c
+  }
 
-  def unpersistTracked(): Unit = trackedCaches.synchronized {
-    trackedCaches.foreach(df =>
+  def unpersistTracked(): Unit = {
+    trackedCaches.get.foreach(df =>
       try df.unpersist(blocking = false) catch { case _: Throwable => () })
-    trackedCaches.clear()
+    trackedCaches.get.clear()
   }
 
   /** Count of candidate-bucket ENTRIES dropped by the hot-bucket cap,
-    * for the caller's log line — one accumulator per SparkContext. */
-  private val droppedAccs = new java.util.concurrent.ConcurrentHashMap[
-    String, org.apache.spark.util.LongAccumulator]()
+    * for the caller's log line — one per SparkContext, the 16 latest. */
+  private val droppedAccs =
+    new Memo[String, org.apache.spark.util.LongAccumulator](16)
 
   def droppedBuckets(spark: org.apache.spark.sql.SparkSession)
       : org.apache.spark.util.LongAccumulator =
-    droppedAccs.computeIfAbsent(spark.sparkContext.applicationId,
-      _ => spark.sparkContext.longAccumulator("graft.dedup.droppedBuckets"))
+    droppedAccs.getOrElseUpdate(spark.sparkContext.applicationId)(
+      spark.sparkContext.longAccumulator("graft.dedup.droppedBuckets"))
 
   /** Hot-bucket cap for candidate self-joins: a degenerate bucket (a
     * band hash shared by thousands of near-empty documents, a ubiquitous

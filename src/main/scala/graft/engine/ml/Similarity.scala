@@ -1,5 +1,6 @@
 package graft.engine.ml
 
+import graft.engine.Memo
 import graft.engine.expr.GraftFunctions
 import org.apache.spark.ml.feature.BucketedRandomProjectionLSH
 import org.apache.spark.ml.linalg.{Vector, Vectors}
@@ -531,8 +532,8 @@ object Similarity {
   /** Approximate NN via random-hyperplane LSH (seeded, deterministic).
     * Returns per-probe candidates ranked by exact euclidean distance on
     * the LSH-joined candidate set. */
-  private val lshModelCache = new java.util.concurrent.ConcurrentHashMap[
-    String, org.apache.spark.ml.feature.BucketedRandomProjectionLSHModel]()
+  private val lshModelCache = new Memo[(String, String, Double, Int),
+    org.apache.spark.ml.feature.BucketedRandomProjectionLSHModel](64)
 
   def annTopK(emb: DataFrame, probeDf: DataFrame, k: Int,
       bucketLength: Double = 2.0, numTables: Int = 3,
@@ -548,11 +549,12 @@ object Similarity {
       .setBucketLength(bucketLength).setNumHashTables(numTables)
       .setInputCol("features").setOutputCol("hashes").setSeed(42L)
     // the fitted model is just the seeded random hyperplanes (depends
-    // on dim + params, not data values) — fit once per dataset, like
-    // the IVF quantizer
+    // on dim + params, not data values) — fit once per input content
+    // fingerprint (which fixes the dim), like the IVF quantizer
     val model = datasetTag match {
-      case Some(tag) => lshModelCache.computeIfAbsent(
-        s"$tag|$bucketLength|$numTables", _ => lsh.fit(data))
+      case Some(tag) => lshModelCache.getOrElseUpdate((tag,
+        graft.engine.io.Artifacts.fingerprintOf(emb), bucketLength,
+        numTables))(lsh.fit(data))
       case None => lsh.fit(data)
     }
     val joined = model.approxSimilarityJoin(probesV, data, radius, "dist")
@@ -619,8 +621,7 @@ object Similarity {
     Quantizer(whitenRows, cells)
   }
 
-  private val quantizerCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Quantizer]()
+  private val quantizerCache = new Memo[String, Quantizer](64)
 
   /** Fit-once semantics for the coarse quantizer, made literal: the
     * first call for a (dataset, nCells, seed) key fits on a hash-sample
@@ -639,7 +640,7 @@ object Similarity {
       datasetTag, params = Seq(nCells, seed, "w1")) { tmp =>
       saveQuantizer(spark, fitCentroids(emb, nCells, seed), tmp)
     }
-    quantizerCache.computeIfAbsent(path, _ => loadQuantizer(spark, path))
+    quantizerCache.getOrElseUpdate(path)(loadQuantizer(spark, path))
   }
 
   /** [[ivfTopKWith]] against the per-dataset cached/persisted quantizer

@@ -3,6 +3,7 @@ package graft
 import graft.engine.ml.Dedup
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Near-dup behavior on planted duplicates (SURVEY §2.10, §5.2): the
@@ -178,6 +179,20 @@ class DedupSpec extends AnyFunSuite with SparkFixture {
     assert(nPref === 0L, s"capped prefix join still emitted $nPref pairs")
     assert(acc.value > 0, "no dropped-bucket count recorded for prefixes")
     Dedup.unpersistTracked()
+  }
+
+  test("another thread's unpersistTracked leaves this thread's caches") {
+    val cached = Dedup.cacheTracked(
+      spark.range(11).selectExpr("id * 13 + 5 AS tracked_by_this_thread"))
+    try {
+      val other = new Thread(() => Dedup.unpersistTracked())
+      other.start()
+      other.join(60000)
+      assert(!other.isAlive)
+      assert(cached.storageLevel != StorageLevel.NONE,
+        "another thread's sweep freed this thread's tracked cache")
+    } finally Dedup.unpersistTracked()
+    assert(cached.storageLevel === StorageLevel.NONE)
   }
 
   test("resolvePairs: components collapse transitively to min doc_id") {

@@ -118,6 +118,48 @@ class ParquetReadSpec extends AnyFunSuite with SparkFixture {
     assert(got.getMessage === want.getMessage)
   }
 
+  /** `body` throws the same exception class and message as `want`. */
+  private def assertFailsLike(want: => Any)(body: => Any): Unit = {
+    val expected = intercept[Throwable](want)
+    val got = intercept[Throwable](body)
+    assert(got.getClass === expected.getClass)
+    assert(got.getMessage === expected.getMessage)
+  }
+
+  test("a cached path that is then deleted fails like spark.read.parquet") {
+    val d = dir("deleted")
+    spark.range(4).toDF("a").write.parquet(d)
+    Storage.readParquet(spark, d)
+    assert(jobsOf(Storage.readParquet(spark, d))._2 === 0)
+    fs(d).delete(new Path(d), true)
+    assertFailsLike(spark.read.parquet(d))(Storage.readParquet(spark, d))
+  }
+
+  test("a cached path emptied of data files fails like spark.read.parquet") {
+    val d = dir("emptied")
+    spark.range(4).toDF("a").coalesce(1).write.parquet(d)
+    Storage.readParquet(spark, d)
+    assert(jobsOf(Storage.readParquet(spark, d))._2 === 0)
+    fs(d).delete(partFile(d), false)
+    assert(fs(d).exists(new Path(d, "_SUCCESS")))
+    assertFailsLike(spark.read.parquet(d))(Storage.readParquet(spark, d))
+  }
+
+  test("a glob reads like spark.read.parquet and sees a new match") {
+    val base = dir("glob")
+    Seq("x", "y").foreach(n =>
+      spark.range(6).selectExpr("id", s"'$n' AS n").write.parquet(s"$base/$n"))
+    val glob = s"$base/*"
+    Storage.readParquet(spark, glob)
+    val (cached, jobs) = jobsOf(Storage.readParquet(spark, glob))
+    assert(jobs === 0)
+    assertSame(cached, spark.read.parquet(glob))
+    spark.range(3).selectExpr("id", "'z' AS n").write.parquet(s"$base/z")
+    val grown = Storage.readParquet(spark, glob)
+    assert(grown.count() === 15)
+    assertSame(grown, spark.read.parquet(glob))
+  }
+
   test("the schema cache holds at most its cap, least recent out first") {
     val base = dir("cap")
     spark.range(3).toDF("id").coalesce(1).write.parquet(base)

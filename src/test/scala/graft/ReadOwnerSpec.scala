@@ -2,12 +2,21 @@ package graft
 
 import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
+import scala.util.matching.Regex
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Parquet reads of the engine and the table accessors go through
   * [[graft.engine.io.Storage.readParquet]], the one owner of the
-  * read-schema cache. */
+  * read-schema cache, and every engine memo is a [[graft.engine.Memo]]. */
 class ReadOwnerSpec extends AnyFunSuite {
+
+  /** `file:line` of every line of `files` that `pattern` matches. */
+  private def matches(files: Seq[Path], pattern: Regex): Seq[String] =
+    files.flatMap { f =>
+      Files.readAllLines(f).asScala.zipWithIndex.collect {
+        case (line, i) if pattern.findFirstIn(line).isDefined => s"$f:${i + 1}"
+      }
+    }
 
   test("no engine source or Tables reads parquet around Storage") {
     val root = Paths.get("src/main/scala/graft")
@@ -17,12 +26,27 @@ class ReadOwnerSpec extends AnyFunSuite {
     val sources = Files.walk(engine).iterator().asScala
       .filter(f => f.toString.endsWith(".scala") && f != owner).toSeq :+
       root.resolve("Tables.scala")
-    val read = """\.read\.parquet\(""".r
-    val hits = sources.flatMap { (f: Path) =>
-      Files.readAllLines(f).asScala.zipWithIndex.collect {
-        case (line, i) if read.findFirstIn(line).isDefined => s"$f:${i + 1}"
-      }
-    }
+    val hits = matches(sources, """\.read\.parquet\(""".r)
     assert(hits.isEmpty, hits.mkString("\n"))
+  }
+
+  test("engine memos are Memo instances; readParquet lists nothing itself") {
+    val engine = Paths.get("src/main/scala/graft/engine")
+    val memo = engine.resolve("Memo.scala")
+    assert(Files.isRegularFile(memo), memo)
+    val maps = matches(Files.walk(engine).iterator().asScala
+      .filter(f => f.toString.endsWith(".scala") && f != memo).toSeq,
+      """\b(ConcurrentHashMap|LinkedHashMap|TrieMap)\b""".r)
+    assert(maps.isEmpty, maps.mkString("\n"))
+    // each `def readParquet`: its line and every following line that is
+    // blank or indented deeper than a member of the object
+    val lines = Files.readAllLines(engine.resolve("io/Storage.scala")).asScala
+    val bodies = lines.indices.filter(i => lines(i).contains("def readParquet("))
+      .map(i => (lines(i) +: lines.drop(i + 1).takeWhile(l =>
+        l.trim.isEmpty || l.startsWith("   "))).mkString("\n"))
+    assert(bodies.size === 2)
+    val listing = ("""\b(listFiles|listStatus|listLocatedStatus|globStatus|""" +
+      """listFolder|getFileSystem|exists)\b|\bfs\(""").r
+    bodies.foreach(b => assert(listing.findFirstIn(b).isEmpty, b))
   }
 }

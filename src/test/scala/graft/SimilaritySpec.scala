@@ -87,6 +87,23 @@ class SimilaritySpec extends AnyFunSuite with SparkFixture {
     assert(r1 === r2)
   }
 
+  test("a tagged ANN call fits its own model for a new vector dimension") {
+    val spark2 = spark
+    import spark2.implicits._
+    val tag = s"spec_ann_dim_${System.nanoTime()}"
+    Seq(4, 8).foreach { dim =>
+      val rnd = new scala.util.Random(dim)
+      val vecs = (0L until 24L)
+        .map(i => (i, Seq.fill(dim)(rnd.nextFloat())))
+        .toDF("vec_id", "embedding")
+      val probes = vecs.filter(col("vec_id") < 3).select(
+        col("vec_id").as("probe_id"), col("embedding").as("probe_emb"))
+      val tagged = Similarity.annTopK(vecs, probes, 3, datasetTag = Some(tag))
+      val fresh = Similarity.annTopK(vecs, probes, 3)
+      assert(tagged.collect().toSeq === fresh.collect().toSeq, s"dim $dim")
+    }
+  }
+
   test("norm stats: 64 dims, all labels present, norms positive") {
     val stats = Similarity.normStats(emb).collect()
     assert(stats.length === emb.select("label").distinct().count())
