@@ -77,7 +77,9 @@ object Artifacts {
 
   /** The fit-once artifact for `input`, built by `build` on first use:
     * `<warehouse>/<family>/[<kind>_]<tag>_<fingerprint>[_<param>…]`.
-    * The dataset tag is sanitised to one path segment; the content
+    * The dataset tag is sanitised to one path segment, which never
+    * starts with `_` or `.` (a kind-less absolute-path tag loses its
+    * leading `/`), so Spark never skips it as hidden; the content
     * fingerprint and every parameter are in the key, so a rewritten
     * input or a changed parameter builds a new artifact and later
     * calls with the same key find the built one. `build` writes the
@@ -88,8 +90,10 @@ object Artifacts {
     val spark = input.sparkSession
     val warehouse = spark.conf.get("spark.sql.warehouse.dir")
     val tag = datasetTag.replaceAll("[^A-Za-z0-9._-]", "_")
+    // no leading `_` or `.`: Spark skips such a path as hidden
     val name = (Seq(kind).filter(_.nonEmpty) ++
       Seq(tag, fingerprintOf(input)) ++ params.map(_.toString)).mkString("_")
+      .dropWhile(c => c == '_' || c == '.')
     ensure(spark, s"$warehouse/$family/$name")(build)
   }
 

@@ -7,8 +7,13 @@ import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, FileUtil, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.hadoop.Footer
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.execution.datasources.{CatalogFileIndex,
   HadoopFsRelation, LogicalRelation, PartitioningAwareFileIndex}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat,
+  ParquetFooterReader, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.types.StructType
 
 /** Folder/object storage utilities over the Hadoop FileSystem API — the
@@ -101,15 +106,19 @@ object Storage {
 
   private val schemaCache = new SchemaCache(SchemaCacheCap)
 
-  /** `spark.read.parquet(path)` without the schema-inference job on a
-    * repeat read. The inferred schema is kept, keyed by the session
-    * confs that change inference and the [[inventory]] of the read's
-    * own file index. A repeat read builds `spark.read.schema(kept)`
-    * (no job) and returns it only if its inventory — the exact files
-    * its scan reads — still matches; otherwise (files rewritten, added
-    * or removed, path missing or emptied, confs changed) it reads with
-    * `spark.read.parquet(path)`, with its errors, and replaces the
-    * entry. */
+  /** `spark.read.parquet(path)` without the schema-inference job. The
+    * inferred schema is kept, keyed by the session confs that change
+    * inference and the [[inventory]] of the read's own file index. A
+    * repeat read builds `spark.read.schema(kept)` (no job) and returns
+    * it only if its inventory — the exact files its scan reads — still
+    * matches. A miss reads the schema on the driver from the one footer
+    * Spark's inference would read ([[footerSchema]], no job) and falls
+    * back to `spark.read.parquet(path)`, with its errors, whenever Spark
+    * would read more than that footer: `mergeSchema` on, a `_metadata`
+    * or `_common_metadata` summary present, no data file, a partition
+    * column also stored in the files, or a footer that fails to read
+    * (path missing, emptied or corrupt). Either way the miss replaces
+    * the entry. */
   def readParquet(spark: SparkSession, path: String): DataFrame =
     readParquet(spark, path, schemaCache)
 
@@ -118,15 +127,57 @@ object Storage {
     val confs = schemaConfs.map(k => s"$k=${spark.conf.getOption(k)}")
     def key(df: DataFrame): String =
       sha256((confs ++ inventory(df.queryExecution.analyzed)).mkString("\n"))
+    def keep(df: DataFrame): DataFrame = {
+      cache.put(path, (key(df), df.schema)); df
+    }
     cache.get(path)
       .map { case (k, schema) => (k, spark.read.schema(schema).parquet(path)) }
       .collect { case (k, df) if key(df) == k => df }
-      .getOrElse {
-        val df = spark.read.parquet(path)
-        cache.put(path, (key(df), df.schema))
-        df
-      }
+      .orElse(footerSchema(spark, path)
+        .map(schema => keep(spark.read.schema(schema).parquet(path))))
+      .getOrElse(keep(spark.read.parquet(path)))
   }
+
+  /** The schema `spark.read.parquet(path)` infers when it reads exactly
+    * one footer: that of the first data file by path in the file index
+    * of a schema-less read, converted as Spark's inference converts it,
+    * plus the index's partition columns. None where Spark would read
+    * anything else (see [[readParquet]]) or the read fails. */
+  private def footerSchema(spark: SparkSession,
+      path: String): Option[StructType] = {
+    val conf = spark.sessionState.conf
+    def fromIndex(r: HadoopFsRelation): Option[StructType] = {
+      val files = r.location match {
+        case idx: PartitioningAwareFileIndex => idx.allFiles()
+        case _ => Nil
+      }
+      val (summaries, data) =
+        files.partition(f => SummaryFiles(f.getPath.getName))
+      val stored = data.sortBy(_.getPath.toString).headOption
+        .filter(_ => summaries.isEmpty)
+        .map { first =>
+          val footer = ParquetFooterReader.readFooter(
+            HadoopInputFile.fromStatus(first, spark.sessionState.newHadoopConf()),
+            ParquetMetadataConverter.SKIP_ROW_GROUPS)
+          ParquetFileFormat.readSchemaFromFooter(
+            new Footer(first.getPath, footer),
+            new ParquetToSparkSchemaConverter(conf))
+        }
+      val partitions = r.partitionSchema
+      stored.filterNot(_.exists(f =>
+          partitions.exists(p => conf.resolver(p.name, f.name))))
+        .map(s => StructType(s.fields ++ partitions.fields))
+    }
+    if (conf.isParquetSchemaMergingEnabled) None
+    else scala.util.Try(spark.read.schema(StructType(Nil)).parquet(path)
+      .queryExecution.analyzed.collectFirst {
+        case l: LogicalRelation => l.relation
+      }.collect { case r: HadoopFsRelation => r }.flatMap(fromIndex))
+      .toOption.flatten
+  }
+
+  /** Parquet summary files, which Spark's inference reads first. */
+  private val SummaryFiles = Set("_metadata", "_common_metadata")
 
   /** The engine's one file inventory, keying both [[readParquet]] and
     * [[Artifacts.fingerprintOf]]: `path|length|mtime` of every input

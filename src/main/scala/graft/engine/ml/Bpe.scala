@@ -136,7 +136,8 @@ object Bpe {
 
   /** Fit-once merge table for a dataset: persisted to the warehouse
     * keyed by the corpus content fingerprint (any input rewrite → new
-    * key), built exactly once per dataset version. */
+    * key), built exactly once per dataset version and decoded once per
+    * JVM. */
   def mergesFor(docs: DataFrame, datasetTag: String): Seq[Merge] = {
     val spark = docs.sparkSession
     val path = graft.engine.io.Artifacts.fitOnce(docs, "graft_bpe",
@@ -152,10 +153,16 @@ object Bpe {
           ms.map(m => Row(m.rank, m.lhs, m.rhs)), 1), schema)
         .coalesce(1).write.mode("overwrite").parquet(tmp)
     }
-    graft.engine.io.Storage.readParquet(spark, path).collect()
-      .map(r => Merge(r.getInt(0), r.getString(1), r.getString(2)))
-      .sortBy(_.rank).toSeq
+    mergesCache.getOrElseUpdate(path)(
+      graft.engine.io.Storage.readParquet(spark, path).collect()
+        .map(r => Merge(r.getInt(0), r.getString(1), r.getString(2)))
+        .sortBy(_.rank).toSeq)
   }
+
+  /** Decoded merge tables by artifact path: the path holds the content
+    * fingerprint and every parameter, so a stored table never changes
+    * under its key and a repeat call collects nothing. */
+  private val mergesCache = new graft.engine.Memo[String, Seq[Merge]](64)
 
   /** The trained merge table as a DataFrame (the vocab_bpe surface). */
   def mergeTable(docs: DataFrame, datasetTag: String): DataFrame = {

@@ -42,10 +42,14 @@ object Dedup {
     val c = df.cache(); trackedCaches.get += c; c
   }
 
-  def unpersistTracked(): Unit = {
-    trackedCaches.get.foreach(df =>
+  def unpersistTracked(): Unit = unpersistTracked(from = 0)
+
+  /** Release this thread's tracked caches from position `from` on. */
+  private def unpersistTracked(from: Int): Unit = {
+    val tracked = trackedCaches.get
+    tracked.drop(from).foreach(df =>
       try df.unpersist(blocking = false) catch { case _: Throwable => () })
-    trackedCaches.get.clear()
+    tracked.dropRightInPlace(tracked.length - from)
   }
 
   /** Count of candidate-bucket ENTRIES dropped by the hot-bucket cap,
@@ -361,12 +365,19 @@ object Dedup {
     * run reads the stored (shingles, signature) relation instead of
     * re-sweeping the text. */
   def minhashStoreFor(docs: DataFrame, datasetTag: String,
+      numHashes: Int = 32, seed: Long = 42L): DataFrame =
+    cacheTracked(storedMinhash(docs, datasetTag, numHashes, seed))
+
+  /** The stored signatures of [[minhashStoreFor]], uncached: for a
+    * caller that reads them once per plan, where an in-memory copy
+    * would cost a pass and buy nothing. */
+  private def storedMinhash(docs: DataFrame, datasetTag: String,
       numHashes: Int = 32, seed: Long = 42L): DataFrame = {
     val path = graft.engine.io.Artifacts.fitOnce(docs, "graft_signatures",
       datasetTag, "minhash", Seq(numHashes, seed)) { tmp =>
       signatures(docs, numHashes, seed).write.mode("overwrite").parquet(tmp)
     }
-    cacheTracked(graft.engine.io.Storage.readParquet(docs.sparkSession, path))
+    graft.engine.io.Storage.readParquet(docs.sparkSession, path)
   }
 
   /** MinHash-LSH near-dup pipeline: shingle → sign → band → verify.
@@ -377,7 +388,7 @@ object Dedup {
       // both ingest-time artifacts: stored signatures AND stored band
       // index — the query starts at the candidate self-join
       jaccardVerify(candidatePairs(bandIndexFor(docs, tag)),
-        minhashStoreFor(docs, tag), threshold)
+        storedMinhash(docs, tag), threshold)
     case None =>
       val state = signatures(docs)
       jaccardVerify(lshCandidates(state), state, threshold)
@@ -685,10 +696,13 @@ object Dedup {
     val t = math.round(threshold * 1000)
     val path = graft.engine.io.Artifacts.fitOnce(docs, "graft_keeplists",
       datasetTag, params = Seq(s"t$t")) { tmp =>
-      resolvePairs(
-        ngramJaccardPairs(docs, threshold).select("doc_a", "doc_b"), docs)
+      // free only what this build cached: the caller's tracked caches
+      // on this thread stay for the caller's own sweep
+      val before = trackedCaches.get.length
+      try resolvePairs(
+          ngramJaccardPairs(docs, threshold).select("doc_a", "doc_b"), docs)
         .write.mode("overwrite").parquet(tmp)
-      unpersistTracked()
+      finally unpersistTracked(from = before)
     }
     graft.engine.io.Storage.readParquet(docs.sparkSession, path)
   }

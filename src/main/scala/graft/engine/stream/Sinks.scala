@@ -11,13 +11,16 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * merged, and dynamically overwritten.
   *
   * Scale shape: the target is hash-bucketed on the key into `nBuckets`
-  * directories. A micro-batch collects its touched bucket ids (≤
-  * nBuckets values — a driver-side set, not data), partition-prunes the
-  * target read to those buckets, merges last-writer-wins, and rewrites
-  * just those directories under dynamic partition overwrite. Cost per
-  * batch is proportional to touched-bucket size, not target size; at
-  * 100 TB the bucket count is sized so a bucket ≈ a comfortable
-  * executor read (e.g. 4096 buckets × 25 GB).
+  * directories. When the target exists, a micro-batch caches itself,
+  * collects its touched bucket ids (≤ nBuckets values — a driver-side
+  * set, not data) and partition-prunes the target read to those
+  * buckets; into an absent target there is nothing to read, so neither
+  * the probe nor the cache runs. The merge (last-writer-wins) and the
+  * partitioned write share one exchange on `bucket`, and only the
+  * touched directories are rewritten, under dynamic partition
+  * overwrite. Cost per batch is proportional to touched-bucket size,
+  * not target size; at 100 TB the bucket count is sized so a bucket ≈
+  * a comfortable executor read (e.g. 4096 buckets × 25 GB).
   *
   * Last-writer-wins is max-by-(t_us, event_id) per key — associative
   * and commutative, so replaying a batch that COMMITTED (in any order,
@@ -34,70 +37,72 @@ import org.apache.spark.sql.streaming.StreamingQuery
   */
 object Sinks {
 
+  /** The sink's row: the key `user_id`, then the payload. */
+  private val Cols = Seq("user_id", "event_id", "t_us", "event_type", "value")
+
   /** Upsert one micro-batch of (user_id, event_id, t_us, event_type,
     * value) into the bucketed target: keep, per user, the latest row by
     * (t_us, event_id) across the existing bucket contents and the
-    * batch. */
+    * batch. Into an absent target the batch's own latest rows are
+    * written; only an existing target is probed for the touched buckets
+    * and read, with the batch cached for the probe and the merge. */
   def upsertBatch(batch: DataFrame, targetDir: String,
       nBuckets: Int = 16): Unit = {
     val spark = batch.sparkSession
-    val cols = Seq("user_id", "event_id", "t_us", "event_type", "value")
-    val withBucket = batch.select(cols.map(col): _*)
+    val withBucket = batch.select(Cols.map(col): _*)
       .withColumn("bucket", pmod(hash(col("user_id")), lit(nBuckets)))
-    // last-writer-wins per key as a MAX_BY aggregate, not a rank
-    // window (r14, guide §2.3 "aggregate before you shuffle"): max_by
-    // partial-aggregates map-side, so only one candidate row per key
-    // per map task reaches the exchange and nothing is sorted;
-    // (t_us, event_id) is unique per user so the argmax is total —
-    // identical rows to the old row_number()=1 pick.
-    def latestPerKey(df: DataFrame): DataFrame = df.groupBy("user_id")
-      .agg(max_by(
-        struct((cols.filterNot(_ == "user_id") :+ "bucket").map(col): _*),
-        struct(col("t_us"), col("event_id"))).as("_r"))
-      .select(col("user_id") +:
-        (cols.filterNot(_ == "user_id") :+ "bucket")
-          .map(c => col(s"_r.$c").as(c)): _*)
-    // latest per key within the batch first: shrinks the merge input.
-    // Persisted because it feeds TWO jobs — the touched-bucket probe
-    // and the merge write — and recomputing it repeats the batch scan
-    // plus the per-key aggregate; batch-sized, freed before return.
-    val batchLatest = latestPerKey(withBucket)
-      .persist()
-    // unpersist in finally: on the live foreachBatch path a failed
-    // merge write is RETRIED by the engine (at-least-once), and a
-    // leak here would pin one cached micro-batch per attempt
-    try {
-    val touched = batchLatest.select("bucket").distinct()
-      .collect().map(_.getInt(0)) // ≤ nBuckets driver-side ints
     val root = new org.apache.hadoop.fs.Path(targetDir)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     // the dynamic-overwrite committer writes no root _SUCCESS marker —
     // presence of any bucket directory is the existence signal
     val targetExists = fs.exists(root) &&
       fs.listStatus(root).exists(_.getPath.getName.startsWith("bucket="))
-    val existing =
-      if (targetExists)
-        graft.engine.io.Storage.readParquet(spark, targetDir)
+    if (!targetExists) write(latestPerKey(withBucket), targetDir)
+    else {
+      // cached because it feeds TWO jobs — the touched-bucket probe and
+      // the merge write — and recomputing it repeats the batch scan;
+      // unpersisted in finally: on the live foreachBatch path a failed
+      // merge write is RETRIED by the engine (at-least-once), and a
+      // leak here would pin one cached micro-batch per attempt
+      val cached = withBucket.persist()
+      try {
+        val touched = cached.select("bucket").distinct()
+          .collect().map(_.getInt(0)) // ≤ nBuckets driver-side ints
+        val existing = graft.engine.io.Storage.readParquet(spark, targetDir)
           .filter(col("bucket").isin(touched.map(Integer.valueOf): _*))
-      else spark.emptyDataFrame
-        .select(lit(0L).as("user_id"), lit(0L).as("event_id"),
-          lit(0L).as("t_us"), lit("").as("event_type"),
-          lit(0.0).as("value"), lit(0).as("bucket"))
-        .limit(0)
-    val merged = latestPerKey(existing.unionByName(batchLatest))
-    // cluster the write by its partition column (guide §6): without
-    // this every merge task opens a file in every touched bucket
-    // directory (tasks × buckets small files per batch, re-read by the
-    // NEXT batch's merge). maxRecordsPerFile keeps a hot bucket from
-    // becoming one oversized file at scale.
-    merged.repartition(col("bucket"))
-      .write.option("maxRecordsPerFile", 5000000)
+        write(latestPerKey(existing.unionByName(cached)), targetDir)
+      } finally cached.unpersist()
+    }
+  }
+
+  /** Last-writer-wins per key over rows clustered ONCE by `bucket`: the
+    * aggregate groups by (bucket, user_id), which that clustering
+    * already satisfies, so the merge and the partitioned write share
+    * one exchange and each bucket lands in one task (one file per
+    * touched bucket, not tasks × buckets small files re-read by the
+    * next batch's merge). `bucket` is a function of `user_id`, so the
+    * groups are those of `user_id` alone. A MAX_BY aggregate, not a
+    * rank window: nothing is sorted, and (t_us, event_id) is unique per
+    * user, so the argmax is total. */
+  private def latestPerKey(df: DataFrame): DataFrame = {
+    val rest = Cols.filterNot(_ == "user_id")
+    df.repartition(col("bucket"))
+      .groupBy("bucket", "user_id")
+      .agg(max_by(struct(rest.map(col): _*),
+        struct(col("t_us"), col("event_id"))).as("_r"))
+      .select((col("user_id") +: rest.map(c => col(s"_r.$c").as(c)) :+
+        col("bucket")): _*)
+  }
+
+  /** Dynamic partition overwrite of the touched buckets;
+    * maxRecordsPerFile keeps a hot bucket from becoming one oversized
+    * file at scale. */
+  private def write(merged: DataFrame, targetDir: String): Unit =
+    merged.write.option("maxRecordsPerFile", 5000000)
       .partitionBy("bucket")
       .option("partitionOverwriteMode", "dynamic")
       .mode("overwrite")
       .parquet(targetDir)
-    } finally batchLatest.unpersist()
-  }
 
   /** The streaming wrapper: land `events` (the raw schema) into the
     * bucketed target via foreachBatch. At-least-once delivery plus the

@@ -2,6 +2,7 @@ package graft.queries
 
 import graft.Tables._
 import graft.queries.Fragments._
+import graft.engine.io.Storage
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -324,15 +325,14 @@ object Etl {
     // overlap the tombstones.
     Q("delete_keyed",
       (s, d) => {
-        val out = s"${sys.props("java.io.tmpdir")}/graft_io/" +
-          s"${d.replaceAll("[^a-zA-Z0-9]", "_")}_delete_keyed"
+        val out = IoQueries.scratch(d, "delete_keyed")
         val base = orders(s, d)
           .select("o_orderkey", "o_custkey", "o_totalprice")
         val tombstones = base.filter(col("o_custkey") % 100 === 7)
           .select("o_orderkey")
         base.join(tombstones, Seq("o_orderkey"), "left_anti")
           .write.mode("overwrite").parquet(out)
-        s.read.parquet(out).orderBy("o_orderkey")
+        Storage.readParquet(s, out).orderBy("o_orderkey")
       },
       """SELECT o_orderkey, o_custkey, o_totalprice
          FROM orders WHERE o_custkey % 100 <> 7
@@ -1681,7 +1681,7 @@ object Etl {
         cust.filter(col("c_custkey") % 3 =!= 0)
           .write.mode("overwrite").parquet(dimDir)
         val facts = orders(s, d).select("o_orderkey", "o_custkey")
-        val dim1 = s.read.parquet(dimDir)
+        val dim1 = Storage.readParquet(s, dimDir)
         facts.join(dim1, facts("o_custkey") === dim1("c_custkey"), "left")
           .select(col("o_orderkey"), col("o_custkey"),
             coalesce(col("c_mktsegment"), lit("UNKNOWN")).as("segment"))
@@ -1689,8 +1689,8 @@ object Etl {
         // batch 2: the stragglers arrive; append, then repair UNKNOWNs
         cust.filter(col("c_custkey") % 3 === 0)
           .write.mode("append").parquet(dimDir)
-        val dimFull = s.read.parquet(dimDir)
-        val settled = s.read.parquet(factDir)
+        val dimFull = Storage.readParquet(s, dimDir)
+        val settled = Storage.readParquet(s, factDir)
         val repaired = settled.filter(col("segment") === "UNKNOWN")
           .drop("segment")
           .join(dimFull, col("o_custkey") === dimFull("c_custkey"), "left")
@@ -1736,7 +1736,7 @@ object Etl {
             expr("CAST(CAST(o_totalprice AS DECIMAL(18,2))*100 AS BIGINT)")
               .as("cents"))
         def merge(existing: Option[String], out: String): Unit = {
-          val base = existing.map(p => s.read.parquet(p))
+          val base = existing.map(p => Storage.readParquet(s, p))
             .getOrElse(batch.limit(0))
           base.unionByName(batch)
             .groupBy("k").agg(max("cents").as("cents"))
@@ -1744,12 +1744,12 @@ object Etl {
         }
         merge(None, t1)
         merge(Some(t1), t2)
-        val a = s.read.parquet(t1)
-        val b = s.read.parquet(t2).withColumnRenamed("cents", "cents2")
+        val a = Storage.readParquet(s, t1)
+        val b = Storage.readParquet(s, t2).withColumnRenamed("cents", "cents2")
         val diff = a.join(b, Seq("k"), "full_outer")
           .filter(!(col("cents") <=> col("cents2")))
           .agg(count(lit(1)).as("n_diff"))
-        s.read.parquet(t2)
+        Storage.readParquet(s, t2)
           .agg(count(lit(1)).as("n_rows"),
             expr("sum(cents) / 100.0D").as("total"))
           .crossJoin(diff)
@@ -2018,14 +2018,14 @@ object Etl {
         val run1 = src.filter(col("o_orderdate") <= lit("1997-06-30")
           .cast("timestamp"))
         run1.write.mode("overwrite").parquet(r1Dir)
-        val hw = s.read.parquet(r1Dir)
+        val hw = Storage.readParquet(s, r1Dir)
           .agg(max("o_orderdate").as("hw"))
         src.crossJoin(broadcast(hw))
           .filter(col("o_orderdate") > col("hw"))
           .select("o_orderkey", "o_orderdate")
           .write.mode("overwrite").parquet(r2Dir)
-        val a = s.read.parquet(r1Dir)
-        val b = s.read.parquet(r2Dir)
+        val a = Storage.readParquet(s, r1Dir)
+        val b = Storage.readParquet(s, r2Dir)
         val overlap = a.select("o_orderkey")
           .intersect(b.select("o_orderkey")).count()
         val total = src.count()

@@ -2,6 +2,7 @@ package graft.queries
 
 import graft.Tables._
 import graft.queries.Fragments._
+import graft.engine.io.Storage
 import graft.engine.ops.Conform
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -123,7 +124,7 @@ object IoQueries {
           .repartitionByRange(4, col("o_orderkey"))
           .sortWithinPartitions("o_orderkey")
           .write.mode("overwrite").parquet(out)
-        val files = s.read.parquet(out)
+        val files = Storage.readParquet(s, out)
           .select(col("o_orderkey"),
             col("_metadata.file_path").as("f"))
           .groupBy("f")
@@ -305,7 +306,7 @@ object IoQueries {
             .write.mode("overwrite").partitionBy("y").parquet(out)
           o.filter(col("y") === 1996) // backfill: only this partition
             .write.mode("overwrite").partitionBy("y").parquet(out)
-          s.read.parquet(out)
+          Storage.readParquet(s, out)
             .select(col("o_orderkey"), col("o_totalprice"),
               col("y").cast("int").as("y"))
             .orderBy("o_orderkey")
@@ -321,7 +322,7 @@ object IoQueries {
         orders(s, d)
           .withColumn("y", year(col("o_orderdate")))
           .write.mode("overwrite").partitionBy("y").parquet(out)
-        s.read.parquet(out)
+        Storage.readParquet(s, out)
           .filter(col("y") === 1997) // partition pruning: lists y=1997 only
           .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"),
             col("y").cast("int").as("y"))
@@ -348,9 +349,9 @@ object IoQueries {
         events(s, d).select("event_id", "event_type", "value")
           .repartition(64)
           .write.mode("overwrite").parquet(small)
-        s.read.parquet(small).coalesce(4)
+        Storage.readParquet(s, small).coalesce(4)
           .write.mode("overwrite").parquet(big)
-        s.read.parquet(big)
+        Storage.readParquet(s, big)
           .select("event_id", "event_type", "value")
           .orderBy("event_id")
       },
@@ -396,7 +397,7 @@ object IoQueries {
           if (name.startsWith("y=") && name.drop(2).toInt < 1997)
             fs.delete(st.getPath, true)
         }
-        s.read.parquet(out)
+        Storage.readParquet(s, out)
           .select(col("o_orderkey"), col("o_totalprice"),
             col("y").cast("int").as("y"))
           .orderBy("o_orderkey")
@@ -434,7 +435,7 @@ object IoQueries {
         val left = fs.listStatus(root).map(_.getPath.getName)
           .count(_.startsWith("v="))
         def audit(n: Int) =
-          s.read.parquet(s"$base/v=$n")
+          Storage.readParquet(s, s"$base/v=$n")
             .agg(count(lit(1)).as("n_rows"), dsum(col("v"), 2).as("total"))
             .select(lit(n).as("version"), col("n_rows"), col("total"),
               lit(left).as("n_versions_left"))
@@ -480,7 +481,7 @@ object IoQueries {
         // EVOLVE: conform-rewrite the stored generation to v2 (typed
         // null backfill), atomically swap the staged rewrite in
         val staged = out + ".stage"
-        Conform.conformLenient(s.read.parquet(out), v2)
+        Conform.conformLenient(Storage.readParquet(s, out), v2)
           .write.mode("overwrite").parquet(staged)
         val fs = new org.apache.hadoop.fs.Path(out)
           .getFileSystem(s.sparkContext.hadoopConfiguration)
@@ -533,7 +534,7 @@ object IoQueries {
         // them to DECIMAL(18,4) identically — a scale-2 recast would
         // hit the HALF_UP (Spark) vs half-even (DuckDB) split on .005
         def audit(version: Int) =
-          s.read.parquet(s"$base/v=$version")
+          Storage.readParquet(s, s"$base/v=$version")
             .agg(count(lit(1)).as("n_rows"),
               round(sum(col("v").cast(
                 org.apache.spark.sql.types.DecimalType(18, 4)))
@@ -714,7 +715,7 @@ object IoQueries {
           .select("o_orderkey", "o_orderstatus")
           .orderBy("o_orderkey").coalesce(1)
           .write.mode("overwrite").parquet(out)
-        s.read.parquet(out)
+        Storage.readParquet(s, out)
           .select(col("o_orderkey"), col("o_orderstatus"),
             col("_metadata.row_index").as("row_index"))
           .orderBy("o_orderkey")
@@ -745,7 +746,7 @@ object IoQueries {
           .map(_.getPath.getName).filter(_.endsWith(".parquet"))
         require(files.nonEmpty && files.forall(_.contains(".zstd.")),
           s"expected zstd parquet files, found: ${files.mkString(",")}")
-        s.read.parquet(out)
+        Storage.readParquet(s, out)
           .groupBy("l_returnflag")
           .agg(count(lit(1)).as("n"),
             dsum(col("l_quantity"), 2).as("qty"))
@@ -1083,7 +1084,7 @@ object IoQueries {
         clusterRewriteSharded(s, d)
           .write.mode("overwrite").partitionBy("shard")
           .option("maxRecordsPerFile", 2000000).parquet(out)
-        s.read.parquet(out)
+        Storage.readParquet(s, out)
           // partition-dir values re-infer as INT; restore the BIGINT
           // the oracle's NTILE emits
           .withColumn("shard", col("shard").cast("long"))
@@ -1170,7 +1171,7 @@ object IoQueries {
               "l_partkey bloom filter")
           } finally r.close()
         }
-        s.read.parquet(out)
+        Storage.readParquet(s, out)
           .filter(col("l_partkey") % 1000 === 17)
           .agg(count(lit(1)).as("n_rows"),
             countDistinct(col("l_orderkey")).as("n_orders"),
@@ -1276,7 +1277,7 @@ object IoQueries {
               c.getStatistics != null)),
             "row group missing l_orderkey statistics")
         } finally r.close()
-        s.read.parquet(out)
+        Storage.readParquet(s, out)
           .agg(count(lit(1)).as("n_rows"),
             countDistinct("l_orderkey").as("n_orders"),
             dsum(col("l_quantity"), 2).as("qty"))
@@ -1469,7 +1470,7 @@ object IoQueries {
             col("o_orderstatus").as("status"),
             col("o_orderdate").as("odate")).as("info"))
           .write.mode("overwrite").parquet(out)
-        s.read.parquet(out)
+        Storage.readParquet(s, out)
           .groupBy()
           .agg(count(lit(1)).as("n_rows"),
             dsum(col("info.price"), 2).as("price_sum"))
@@ -1514,7 +1515,7 @@ object IoQueries {
           struct(col("o_totalprice").as("price"),
             col("o_orderstatus").as("status")).as("info"))
           .write.mode("overwrite").parquet(out)
-        s.read.parquet(out)
+        Storage.readParquet(s, out)
           .filter(col("info.price") > 400000.0)
           .groupBy()
           .agg(count(lit(1)).as("n_rows"),

@@ -2,6 +2,7 @@ package graft.queries
 
 import graft.Tables._
 import graft.queries.Fragments._
+import graft.engine.io.Storage
 import graft.engine.ml.{Dedup, Similarity, Text}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
@@ -1090,7 +1091,7 @@ object Llm {
             .map(c => fs.listStatus(c.getPath)
               .count(f => f.getPath.getName.endsWith(".parquet"))).max
         }
-        val nVectors = s.read.parquet(compacted).count()
+        val nVectors = Storage.readParquet(s, compacted).count()
         Seq((nVectors, filesAfter, identical))
           .toDF("n_vectors", "max_files_per_cell", "search_identical")
       },

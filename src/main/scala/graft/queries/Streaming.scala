@@ -108,8 +108,7 @@ object Streaming {
     // (MemoryStream → foreachBatch) is asserted in StreamingSpec.
     Q("stream_foreach_batch",
       (s, d) => {
-        val target = s"${sys.props("java.io.tmpdir")}/graft_io/" +
-          s"${d.replaceAll("[^a-zA-Z0-9]", "_")}_fb_upsert"
+        val target = IoQueries.scratch(d, "fb_upsert")
         // fresh target per run: replay convergence, not accumulation,
         // is what the oracle checks (idempotence is specced separately)
         graft.engine.io.Storage.deleteFolder(s, target)
@@ -132,8 +131,7 @@ object Streaming {
     // state-debugging surface of SURVEY §2.8.
     Q("stream_state_read",
       (s, d) => {
-        val scratch = s"${sys.props("java.io.tmpdir")}/graft_io/" +
-          s"${d.replaceAll("[^a-zA-Z0-9]", "_")}_state_read"
+        val scratch = IoQueries.scratch(d, "state_read")
         EventOps.aggStateDump(events(s, d), scratch)
           .select(col("event_type"), col("n"),
             round(col("total"), 2).as("total"))
@@ -151,8 +149,7 @@ object Streaming {
     // double-count and break the hash.
     Q("stream_restart_resume",
       (s, d) => {
-        val scratch = s"${sys.props("java.io.tmpdir")}/graft_io/" +
-          s"${d.replaceAll("[^a-zA-Z0-9]", "_")}_restart_resume"
+        val scratch = IoQueries.scratch(d, "restart_resume")
         EventOps.aggStateResume(events(s, d), scratch)
           .select(col("event_type"), col("n"),
             round(col("total"), 2).as("total"))

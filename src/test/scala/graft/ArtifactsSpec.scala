@@ -100,6 +100,20 @@ class ArtifactsSpec extends AnyFunSuite with SparkFixture {
     assert(!name.contains(" ") && !name.contains("/"), name)
   }
 
+  test("an artifact directory never starts with _ or . (Spark hides those)") {
+    val df = input(inputDir("hidden"), 4)
+    val warehouse = spark.conf.get("spark.sql.warehouse.dir")
+    Seq(s"/data/${fresh("abs")}", s".${fresh("dot")}", s"../${fresh("up")}",
+        s"_${fresh("under")}").foreach { tag =>
+      val path = Artifacts.fitOnce(df, family, tag)(writeIds(df))
+      val name = new Path(path).getName
+      assert(!name.startsWith("_") && !name.startsWith("."), s"$tag -> $name")
+      assert(new Path(path).getParent.toString ===
+        new Path(s"$warehouse/$family").toString)
+      assert(spark.read.parquet(path).count() === 4)
+    }
+  }
+
   test("a failed build leaves nothing behind and the failure propagates") {
     val df = input(inputDir("fail"), 5)
     val tag = fresh("fail")

@@ -195,6 +195,18 @@ class DedupSpec extends AnyFunSuite with SparkFixture {
     assert(cached.storageLevel === StorageLevel.NONE)
   }
 
+  test("a cold keepListFor build leaves the caller's tracked caches") {
+    val cached = Dedup.cacheTracked(
+      spark.range(7).selectExpr("id * 17 + 3 AS tracked_before_the_build"))
+    try {
+      val docs = Tables.documents(spark, sf)
+      val tag = s"keeplist_scope_${System.nanoTime()}" // a fresh key: cold
+      assert(Dedup.keepListFor(docs, tag, 0.8).count() === docs.count())
+      assert(cached.storageLevel != StorageLevel.NONE,
+        "the keep-list build freed a cache it did not make")
+    } finally Dedup.unpersistTracked()
+  }
+
   test("resolvePairs: components collapse transitively to min doc_id") {
     val spark2 = spark
     import spark2.implicits._

@@ -27,24 +27,6 @@ class ParquetReadSpec extends AnyFunSuite with SparkFixture {
         case other => fail(s"expected one part file in $d: $other")
       }
 
-  /** `body`'s result and the number of Spark jobs it launched. Job
-    * starts reach the status tracker through the listener bus, so a
-    * sentinel job in a second group is waited for first: once it is
-    * visible, every job `body` started is too. */
-  private def jobsOf[T](body: => T): (T, Int) = {
-    val sc = spark.sparkContext
-    val group = s"parquet_read_${System.nanoTime()}"
-    sc.setJobGroup(group, "measured", interruptOnCancel = false)
-    val out = try body finally sc.clearJobGroup()
-    sc.setJobGroup(group + "_sentinel", "sentinel", interruptOnCancel = false)
-    try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-    val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
-    while (sc.statusTracker.getJobIdsForGroup(group + "_sentinel").isEmpty &&
-        System.nanoTime() < deadline) Thread.sleep(10)
-    assert(sc.statusTracker.getJobIdsForGroup(group + "_sentinel").nonEmpty)
-    (out, sc.statusTracker.getJobIdsForGroup(group).length)
-  }
-
   private def assertSame(got: DataFrame, want: DataFrame): Unit = {
     assert(got.schema === want.schema)
     assert(got.columns.toSeq === want.columns.toSeq)
@@ -58,7 +40,7 @@ class ParquetReadSpec extends AnyFunSuite with SparkFixture {
     spark.range(20).selectExpr("id", "cast(id AS string) AS s")
       .write.parquet(d)
     val (_, first) = jobsOf(Storage.readParquet(spark, d))
-    assert(first >= 1)
+    assert(first === 0)
     val (again, second) = jobsOf(Storage.readParquet(spark, d))
     assert(second === 0)
     assert(again.count() === 20)
@@ -178,6 +160,50 @@ class ParquetReadSpec extends AnyFunSuite with SparkFixture {
     assert(cache.size === 3)
     // the most recent path is still kept, the first one was dropped
     assert(jobsOf(Storage.readParquet(spark, paths.last, cache))._2 === 0)
-    assert(jobsOf(Storage.readParquet(spark, paths.head, cache))._2 >= 1)
+    assert(cache.get(paths.head).isEmpty)
+  }
+
+  test("a first read of an unseen path reads one footer: no job, same frame") {
+    val flatDir = dir("first_flat")
+    spark.range(30).selectExpr("id", "id * 0.5 AS x", "cast(id AS string) AS s")
+      .coalesce(1).write.parquet(flatDir)
+    val bucketed = dir("first_bucketed")
+    spark.range(40).selectExpr("id", "cast(id % 4 AS int) AS bucket",
+      "cast(id AS string) AS s").write.partitionBy("bucket").parquet(bucketed)
+    val cache = new Storage.SchemaCache(8)
+    Seq(partFile(flatDir).toString, bucketed, s"$sf/events.parquet").foreach {
+      p =>
+        val (first, jobs) = jobsOf(Storage.readParquet(spark, p, cache))
+        assert(jobs === 0, p)
+        assertSame(first, spark.read.parquet(p))
+        assert(cache.get(p).nonEmpty, p)
+    }
+  }
+
+  test("with mergeSchema on, the first read merges like spark.read.parquet") {
+    val base = dir("merge")
+    spark.range(4).toDF("a").write.parquet(s"$base/k=1")
+    spark.range(4).selectExpr("id AS a", "id * 2 AS b").write.parquet(s"$base/k=2")
+    graft.engine.Confs.withConf(spark, "spark.sql.parquet.mergeSchema", "true") {
+      val got = Storage.readParquet(spark, base, new Storage.SchemaCache(4))
+      assert(got.columns.toSeq === Seq("a", "b", "k"))
+      assertSame(got, spark.read.parquet(base))
+    }
+  }
+
+  test("a _common_metadata summary is read like spark.read.parquet") {
+    val d = dir("summary")
+    spark.range(6).selectExpr("id AS a", "cast(id AS string) AS b")
+      .coalesce(1).write.parquet(d)
+    // a summary whose schema lists the columns in another order: Spark's
+    // inference reads it in place of any data file footer
+    val src = dir("summary_src")
+    spark.range(1).selectExpr("cast(id AS string) AS b", "id AS a")
+      .coalesce(1).write.parquet(src)
+    FileUtil.copy(fs(src), partFile(src), fs(d), new Path(d, "_common_metadata"),
+      false, true, spark.sparkContext.hadoopConfiguration)
+    val want = spark.read.parquet(d)
+    assert(want.columns.toSeq === Seq("b", "a"))
+    assertSame(Storage.readParquet(spark, d, new Storage.SchemaCache(4)), want)
   }
 }

@@ -5,9 +5,10 @@ import scala.jdk.CollectionConverters._
 import scala.util.matching.Regex
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Parquet reads of the engine and the table accessors go through
-  * [[graft.engine.io.Storage.readParquet]], the one owner of the
-  * read-schema cache, and every engine memo is a [[graft.engine.Memo]]. */
+/** Parquet reads of the engine, the registry queries and the table
+  * accessors go through [[graft.engine.io.Storage.readParquet]], the
+  * one owner of the read-schema cache, and every engine memo is a
+  * [[graft.engine.Memo]]. */
 class ReadOwnerSpec extends AnyFunSuite {
 
   /** `file:line` of every line of `files` that `pattern` matches. */
@@ -23,8 +24,9 @@ class ReadOwnerSpec extends AnyFunSuite {
     val engine = root.resolve("engine")
     val owner = engine.resolve("io/Storage.scala")
     assert(Files.isRegularFile(owner), owner)
-    val sources = Files.walk(engine).iterator().asScala
-      .filter(f => f.toString.endsWith(".scala") && f != owner).toSeq :+
+    val sources = Seq(engine, root.resolve("queries"))
+      .flatMap(d => Files.walk(d).iterator().asScala)
+      .filter(f => f.toString.endsWith(".scala") && f != owner) :+
       root.resolve("Tables.scala")
     val hits = matches(sources, """\.read\.parquet\(""".r)
     assert(hits.isEmpty, hits.mkString("\n"))

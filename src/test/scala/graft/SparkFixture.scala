@@ -12,6 +12,24 @@ trait SparkFixture extends BeforeAndAfterAll { self: Suite =>
   val sf: String = "/root/testdata/sf0.001"
 
   override def afterAll(): Unit = super.afterAll()
+
+  /** `body`'s result and the number of Spark jobs it launched. Job
+    * starts reach the status tracker through the listener bus, so a
+    * sentinel job in a second group is waited for first: once it is
+    * visible, every job `body` started is too. */
+  protected def jobsOf[T](body: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val group = s"measured_${System.nanoTime()}"
+    sc.setJobGroup(group, "measured", interruptOnCancel = false)
+    val out = try body finally sc.clearJobGroup()
+    sc.setJobGroup(group + "_sentinel", "sentinel", interruptOnCancel = false)
+    try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+    val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+    while (sc.statusTracker.getJobIdsForGroup(group + "_sentinel").isEmpty &&
+        System.nanoTime() < deadline) Thread.sleep(10)
+    assert(sc.statusTracker.getJobIdsForGroup(group + "_sentinel").nonEmpty)
+    (out, sc.statusTracker.getJobIdsForGroup(group).length)
+  }
 }
 
 object SparkFixture {
