@@ -33,13 +33,13 @@ object Tables {
     * value-preserving and lands on the exact µs DuckDB's `epoch_us()`
     * reads. Either way downstream sees µs TimestampType (SURVEY §7.4 R2). */
   def events(s: SparkSession, d: String): DataFrame = {
-    // nanosAsLong is set once at session init (Verify/Bench/SparkFixture
-    // builders); only fall back to setting it here for ad-hoc sessions
-    // that never configured it, so repeated calls can't race other
-    // readers by re-mutating session conf.
-    if (!s.conf.getOption("spark.sql.legacy.parquet.nanosAsLong")
-        .contains("true"))
-      s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    // every graft session builder sets nanosAsLong; a read cannot set it
+    // for itself, because the parquet reader reads it again when the
+    // plan executes, after any scope this call could open has closed
+    require(s.conf.getOption("spark.sql.legacy.parquet.nanosAsLong")
+        .contains("true"),
+      "events needs spark.sql.legacy.parquet.nanosAsLong=true on the " +
+        "session (set it when the session is built)")
     val df = table(s, d, "events")
     df.schema("ts").dataType match {
       case org.apache.spark.sql.types.LongType =>

@@ -7,9 +7,10 @@ import org.apache.spark.sql.functions._
 
 /** Shared plumbing for the fit-once artifact family (keep-lists, IVF
   * quantizers, MinHash/bigram signature stores, co-occurrence edges,
-  * language profiles): a CONTENT fingerprint to key stored artifacts
-  * and [[fitOnce]], the one place that turns (input, family, tag,
-  * parameters) into a warehouse path and builds it atomically.
+  * language profiles): a CONTENT fingerprint to key stored artifacts,
+  * [[fitOnce]], the one place that turns (input, family, tag,
+  * parameters) into a warehouse path and builds it atomically, and
+  * [[table]], the one writer and reader of a one-table artifact.
   *
   * Why not key by row count: a corpus regenerated with the same
   * cardinality but different content would silently serve stale
@@ -75,6 +76,21 @@ object Artifacts {
     java.lang.Long.toHexString(h)
   }
 
+  /** The fit-once artifact TABLE for `input`: on first use `rows` is
+    * written as parquet into the temp dir [[fitOnce]] hands out and
+    * published under the same key; every call returns the published
+    * table through [[Storage.readParquet]]. A caller shapes its rows
+    * inside `rows` (a `coalesce`, a sort); `rows` is evaluated only
+    * when the artifact is built. */
+  def table(input: DataFrame, family: String, datasetTag: String,
+      kind: String = "", params: Seq[Any] = Nil)(
+      rows: => DataFrame): DataFrame = {
+    val path = fitOnce(input, family, datasetTag, kind, params) { tmp =>
+      rows.write.mode("overwrite").parquet(tmp)
+    }
+    Storage.readParquet(input.sparkSession, path)
+  }
+
   /** The fit-once artifact for `input`, built by `build` on first use:
     * `<warehouse>/<family>/[<kind>_]<tag>_<fingerprint>[_<param>…]`.
     * The dataset tag is sanitised to one path segment, which never
@@ -83,7 +99,10 @@ object Artifacts {
     * fingerprint and every parameter are in the key, so a rewritten
     * input or a changed parameter builds a new artifact and later
     * calls with the same key find the built one. `build` writes the
-    * artifact to the temp path it is given. */
+    * artifact to the temp path it is given. A one-table artifact goes
+    * through [[table]]; `fitOnce` is for artifacts whose caller needs
+    * the path itself: a decode memo keyed on it, or a multi-part
+    * layout other readers open (a cell index with its quantizer). */
   def fitOnce(input: DataFrame, family: String, datasetTag: String,
       kind: String = "", params: Seq[Any] = Nil)(
       build: String => Unit): String = {
@@ -98,11 +117,14 @@ object Artifacts {
   }
 
   /** Build-once accessor: if `path/_SUCCESS` does not exist, run
-    * `build` against a temp sibling and atomically rename it into
-    * place. Concurrent sessions race safely: the loser's rename fails
-    * against the winner's directory and its temp output is discarded —
-    * readers only ever see a complete artifact. A failed build leaves
-    * nothing behind: its temp directory is deleted before the failure
+    * `build` against a temp sibling, mark it complete with its own
+    * `_SUCCESS` and atomically rename it into place. This is the one
+    * place that marks an artifact complete, so a build that writes
+    * without Spark (a file copy) is reused like any other. Concurrent
+    * sessions race safely: the loser's rename fails against the
+    * winner's directory and its temp output is discarded — readers
+    * only ever see a complete artifact. A failed build leaves nothing
+    * behind: its temp directory is deleted before the failure
     * propagates. */
   private def ensure(spark: SparkSession, path: String)(
       build: String => Unit): String = {
@@ -111,8 +133,10 @@ object Artifacts {
     if (!fs.exists(new Path(path, "_SUCCESS"))) {
       val tmp = new Path(
         path + ".tmp-" + java.util.UUID.randomUUID.toString.take(8))
-      try build(tmp.toString)
-      catch { case t: Throwable => fs.delete(tmp, true); throw t }
+      try {
+        build(tmp.toString)
+        fs.create(new Path(tmp, "_SUCCESS"), true).close()
+      } catch { case t: Throwable => fs.delete(tmp, true); throw t }
       // re-check: Hadoop rename onto an existing directory would nest
       // tmp inside it — if another session won the race, just discard
       if (fs.exists(new Path(path, "_SUCCESS")) || !fs.rename(tmp, target))

@@ -86,24 +86,39 @@ object CommitLog {
 
   /** Optimistic commit: stage against the observed base, then claim
     * base+1; on losing the claim, re-stage against the new base and
-    * retry. Returns the winning record. */
+    * retry. Returns the winning record. A stage that throws leaves no
+    * staging dir behind: it is deleted before the failure propagates. */
   def commit(spark: SparkSession, root: String, action: String)(
       stage: (String, Int) => Unit): Commit = {
     val f = fs(spark, root)
-    var attempt = 0
-    while (attempt < 50) {
-      attempt += 1
-      val base = latest(spark, root).map(_.version).getOrElse(0)
+    def discard(rel: String): Unit = f.delete(new Path(s"$root/$rel"), true)
+    claimNext(spark, root, "commit on") { base =>
       val rel = "data/" + java.util.UUID.randomUUID().toString.take(12)
-      stage(s"$root/$rel", base)
-      val rec = Commit(base + 1, action, base, rel)
+      try stage(s"$root/$rel", base)
+      catch { case t: Throwable => discard(rel); throw t }
+      Commit(base + 1, action, base, rel)
+    } { lost =>
+      // lost the race: discard this attempt's staging, re-derive
+      // against the winner's snapshot
+      discard(lost.dataDir)
+    }
+  }
+
+  /** The claim-retry loop of [[commit]] and [[cloneTable]]: up to 50
+    * times, build a record against the current latest version with
+    * `attempt` and claim it; `lost` undoes an attempt whose claim
+    * another writer won. Returns the claimed record. */
+  private def claimNext(spark: SparkSession, root: String, what: String)(
+      attempt: Int => Commit)(lost: Commit => Unit): Commit = {
+    var tries = 0
+    while (tries < 50) {
+      tries += 1
+      val rec = attempt(latest(spark, root).map(_.version).getOrElse(0))
       if (claimVersion(root, rec)) return rec
-      // lost the race: discard this attempt's staging and record,
-      // re-derive against the winner's snapshot
-      f.delete(new Path(s"$root/$rel"), true)
+      lost(rec)
     }
     throw new IllegalStateException(
-      s"commit on $root lost ${attempt} straight races — aborting")
+      s"$what $root lost $tries straight races — aborting")
   }
 
   /** A dataDir may be root-relative (normal commits) or absolute (a
@@ -175,15 +190,8 @@ object CommitLog {
         s"version $version not in commit log at $srcRoot"))
     val abs = resolveData(srcRoot, src)
     init(spark, dstRoot)
-    var attempt = 0
-    while (attempt < 50) {
-      attempt += 1
-      val base = latest(spark, dstRoot).map(_.version).getOrElse(0)
-      val rec = Commit(base + 1, "clone", base, abs)
-      if (claimVersion(dstRoot, rec)) return rec
-    }
-    throw new IllegalStateException(
-      s"clone into $dstRoot lost $attempt straight races — aborting")
+    claimNext(spark, dstRoot, "clone into")(
+      base => Commit(base + 1, "clone", base, abs))(_ => ())
   }
 
   def readLatest(spark: SparkSession, root: String): DataFrame = {

@@ -224,14 +224,9 @@ object Bpe {
     * decision reads instead of re-encoding the corpus per query
     * (encode is map-side cheap, but at 100 TB "cheap × every
     * consumer" is still corpus scans; a 4-column store read is not). */
-  def tokensStoreFor(docs: DataFrame, datasetTag: String): DataFrame = {
-    val spark = docs.sparkSession
-    val path = graft.engine.io.Artifacts.fitOnce(docs, "graft_bpe",
-      datasetTag, "tokens", storeParams) { tmp =>
-      tokensPerDoc(docs, datasetTag).write.mode("overwrite").parquet(tmp)
-    }
-    graft.engine.io.Storage.readParquet(spark, path)
-  }
+  def tokensStoreFor(docs: DataFrame, datasetTag: String): DataFrame =
+    graft.engine.io.Artifacts.table(docs, "graft_bpe", datasetTag, "tokens",
+      storeParams)(tokensPerDoc(docs, datasetTag))
 
   // ------------------------------------------------------------------
   // Generated DuckDB replay oracle. MATERIALIZED is load-bearing: each

@@ -1,6 +1,7 @@
 package graft.engine.ml
 
 import graft.engine.Memo
+import graft.engine.io.Artifacts
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -320,14 +321,11 @@ object Dedup {
   def bandIndexFor(docs: DataFrame, datasetTag: String,
       numHashes: Int = 32, bands: Int = 4, rowsPerBand: Int = 8,
       maxBucket: Int = 10000, seed: Long = 42L): DataFrame = {
-    val path = graft.engine.io.Artifacts.fitOnce(docs, "graft_signatures",
-      datasetTag, "bands",
-      Seq(numHashes, bands, rowsPerBand, maxBucket, seed)) { tmp =>
+    Artifacts.table(docs, "graft_signatures", datasetTag, "bands",
+      Seq(numHashes, bands, rowsPerBand, maxBucket, seed)) {
       bandedCapped(minhashStoreFor(docs, datasetTag, numHashes, seed),
         bands, rowsPerBand, maxBucket)
-        .write.mode("overwrite").parquet(tmp)
     }
-    graft.engine.io.Storage.readParquet(docs.sparkSession, path)
   }
 
   /** Exact Jaccard on candidate pairs. Two stages: a MinHash-estimate
@@ -372,13 +370,9 @@ object Dedup {
     * caller that reads them once per plan, where an in-memory copy
     * would cost a pass and buy nothing. */
   private def storedMinhash(docs: DataFrame, datasetTag: String,
-      numHashes: Int = 32, seed: Long = 42L): DataFrame = {
-    val path = graft.engine.io.Artifacts.fitOnce(docs, "graft_signatures",
-      datasetTag, "minhash", Seq(numHashes, seed)) { tmp =>
-      signatures(docs, numHashes, seed).write.mode("overwrite").parquet(tmp)
-    }
-    graft.engine.io.Storage.readParquet(docs.sparkSession, path)
-  }
+      numHashes: Int = 32, seed: Long = 42L): DataFrame =
+    Artifacts.table(docs, "graft_signatures", datasetTag, "minhash",
+      Seq(numHashes, seed))(signatures(docs, numHashes, seed))
 
   /** MinHash-LSH near-dup pipeline: shingle → sign → band → verify.
     * With `datasetTag`, the sign pass reads the persisted store. */
@@ -587,13 +581,8 @@ object Dedup {
     * would dwarf the batch itself. Keyed by (tag, content fingerprint)
     * so regenerated data re-signs — see
     * [[graft.engine.io.Artifacts.fingerprintOf]]. */
-  def signatureStoreFor(docs: DataFrame, datasetTag: String): DataFrame = {
-    val path = graft.engine.io.Artifacts.fitOnce(docs, "graft_signatures",
-      datasetTag) { tmp =>
-      bigramSets(docs).write.mode("overwrite").parquet(tmp)
-    }
-    graft.engine.io.Storage.readParquet(docs.sparkSession, path)
-  }
+  def signatureStoreFor(docs: DataFrame, datasetTag: String): DataFrame =
+    Artifacts.table(docs, "graft_signatures", datasetTag)(bigramSets(docs))
 
   def incrementalNearDups(existing: DataFrame, batch: DataFrame,
       threshold: Double, maxBucket: Int = 10000,
@@ -694,17 +683,15 @@ object Dedup {
   def keepListFor(docs: DataFrame, datasetTag: String,
       threshold: Double): DataFrame = {
     val t = math.round(threshold * 1000)
-    val path = graft.engine.io.Artifacts.fitOnce(docs, "graft_keeplists",
-      datasetTag, params = Seq(s"t$t")) { tmp =>
-      // free only what this build cached: the caller's tracked caches
-      // on this thread stay for the caller's own sweep
-      val before = trackedCaches.get.length
-      try resolvePairs(
-          ngramJaccardPairs(docs, threshold).select("doc_a", "doc_b"), docs)
-        .write.mode("overwrite").parquet(tmp)
-      finally unpersistTracked(from = before)
+    // free only what a build caches, once its rows are written: the
+    // caller's tracked caches on this thread stay for its own sweep
+    val before = trackedCaches.get.length
+    try Artifacts.table(docs, "graft_keeplists", datasetTag,
+        params = Seq(s"t$t")) {
+      resolvePairs(
+        ngramJaccardPairs(docs, threshold).select("doc_a", "doc_b"), docs)
     }
-    graft.engine.io.Storage.readParquet(docs.sparkSession, path)
+    finally unpersistTracked(from = before)
   }
 
   private def resolveOnDriver(pairs: DataFrame,

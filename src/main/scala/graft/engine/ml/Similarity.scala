@@ -600,7 +600,10 @@ object Similarity {
 
   def loadQuantizer(spark: org.apache.spark.sql.SparkSession,
       path: String): Quantizer = {
-    val rows = graft.engine.io.Storage.readParquet(spark, path)
+    // the part files themselves, not the directory: a cell index keeps
+    // its quantizer at `<index>/_quantizer`, a root Spark would log as
+    // a hidden path on every load
+    val rows = graft.engine.io.Storage.readParquet(spark, s"$path/*.parquet")
       .orderBy("cell").collect()
       .map(r => (r.getInt(0), r.getSeq[Double](1).toArray))
     val cells = rows.filter(_._1 >= 0).map(_._2)
@@ -742,7 +745,8 @@ object Similarity {
 
   /** Build-once accessor for the cell-partitioned index of a dataset:
     * first call writes it under the warehouse, later calls (any
-    * session — checked via _SUCCESS) return the existing path. */
+    * session: [[graft.engine.io.Artifacts.fitOnce]] finds the
+    * published index) return the existing path. */
   def cellIndexFor(emb: DataFrame, datasetTag: String, nCells: Int = 16,
       seed: Long = 42L, replication: Int = 1): String =
     graft.engine.io.Artifacts.fitOnce(emb, "graft_cell_index", datasetTag,
@@ -801,16 +805,14 @@ object Similarity {
     * set is small enough to pin exactly. */
   def batchGroundTruthFor(emb: DataFrame, datasetTag: String,
       k: Int): DataFrame = {
-    val path = graft.engine.io.Artifacts.fitOnce(emb, "graft_groundtruth",
-      datasetTag, "batch_cosine", Seq(k)) { tmp =>
+    graft.engine.io.Artifacts.table(emb, "graft_groundtruth", datasetTag,
+      "batch_cosine", Seq(k)) {
       // the batch probe set is ~10% of the corpus, so the |emb|×|probes|
       // loop is heavy enough to earn the spread (r14 A/B win) — the
       // small-probe entry point no longer spreads, so spread here
       bruteForceTopK(graft.engine.ops.Scale.spreadForCompute(emb),
         batchProbes(emb), k)
-        .write.mode("overwrite").parquet(tmp)
     }
-    graft.engine.io.Storage.readParquet(emb.sparkSession, path)
   }
 
   /** Large-probe-set IVF — the missing quadrant of the family: the
@@ -968,12 +970,6 @@ object Similarity {
       new org.apache.hadoop.fs.Path(s"$indexPath/_quantizer"), fs,
       new org.apache.hadoop.fs.Path(s"$targetPath/_quantizer"),
       false, conf)
-    // When every cell is cold-copied, no Spark write runs and no
-    // _SUCCESS lands — Artifacts.fitOnce callers would treat the
-    // compacted index as unbuilt forever. Emit the marker explicitly
-    // so the artifact is complete on both paths.
-    fs.create(new org.apache.hadoop.fs.Path(targetPath, "_SUCCESS"),
-      true).close()
     (before, countFiles(targetPath))
   }
 
@@ -1010,14 +1006,12 @@ object Similarity {
     * fingerprint like the quantizer; metric ∈ {cosine, euclid}. */
   def groundTruthFor(emb: DataFrame, datasetTag: String, k: Int,
       metric: String = "cosine"): DataFrame = {
-    val path = graft.engine.io.Artifacts.fitOnce(emb, "graft_groundtruth",
-      datasetTag, metric, Seq(k)) { tmp =>
+    graft.engine.io.Artifacts.table(emb, "graft_groundtruth", datasetTag,
+      metric, Seq(k)) {
       val p = probes(emb)
-      (if (metric == "euclid") bruteForceTopKEuclid(emb, p, k)
-       else bruteForceTopK(emb, p, k))
-        .write.mode("overwrite").parquet(tmp)
+      if (metric == "euclid") bruteForceTopKEuclid(emb, p, k)
+      else bruteForceTopK(emb, p, k)
     }
-    graft.engine.io.Storage.readParquet(emb.sparkSession, path)
   }
 
   /** Per-probe recall audit of an ANN result against the exact top-k

@@ -327,14 +327,9 @@ object Text {
     * re-scan would cost more than the classification itself. Keyed by
     * dataset tag + content fingerprint so regenerated data refits. */
   def langIdProfileFor(docs: DataFrame, datasetTag: String,
-      topK: Int = 40): DataFrame = {
-    val path = graft.engine.io.Artifacts.fitOnce(docs, "graft_lang_profiles",
-      datasetTag, "profile", Seq(topK)) { tmp =>
-      langIdProfile(docs, topK).coalesce(1).write.mode("overwrite")
-        .parquet(tmp)
-    }
-    graft.engine.io.Storage.readParquet(docs.sparkSession, path)
-  }
+      topK: Int = 40): DataFrame =
+    graft.engine.io.Artifacts.table(docs, "graft_lang_profiles", datasetTag,
+      "profile", Seq(topK))(langIdProfile(docs, topK).coalesce(1))
 
   /** Language-ID by character-trigram profile overlap: learn the topK
     * trigrams per labeled language, then classify each document by which

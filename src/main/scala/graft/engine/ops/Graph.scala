@@ -1,5 +1,6 @@
 package graft.engine.ops
 
+import graft.engine.io.Artifacts
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -20,8 +21,7 @@ object Graph {
     * relation and apply their own threshold — the 6M-pair projection
     * agg is paid once, not per query. */
   def coOccurrenceEdgesFor(pairs: DataFrame, datasetTag: String): DataFrame = {
-    val path = graft.engine.io.Artifacts.fitOnce(pairs, "graft_graph_edges",
-      datasetTag) { tmp =>
+    Artifacts.table(pairs, "graft_graph_edges", datasetTag) {
       pairs
         .groupBy("pk")
         .agg(sort_array(collect_set(col("sk"))).as("sks"))
@@ -31,9 +31,7 @@ object Graph {
           explode(expr("slice(sks, i + 2, size(sks))")).as("b"))
         .groupBy("a", "b")
         .agg(count(lit(1)).as("w"))
-        .write.mode("overwrite").parquet(tmp)
     }
-    graft.engine.io.Storage.readParquet(pairs.sparkSession, path)
   }
 
   /** PageRank by `iterations` rounds of the power method over a
@@ -114,14 +112,11 @@ object Graph {
     * once (artifact-keyed like the co-occurrence projection) makes
     * every round a small parquet read. */
   def bipartiteEdgesFor(pairs: DataFrame, datasetTag: String): DataFrame = {
-    val path = graft.engine.io.Artifacts.fitOnce(pairs, "graft_graph_edges",
-      datasetTag, "bip") { tmp =>
+    Artifacts.table(pairs, "graft_graph_edges", datasetTag, "bip") {
       val e0 = pairs.select(col("a"), col("b")).distinct()
       e0.select(col("a").as("src"), col("b").as("dst"))
         .unionByName(e0.select(col("b").as("src"), col("a").as("dst")))
-        .write.mode("overwrite").parquet(tmp)
     }
-    graft.engine.io.Storage.readParquet(pairs.sparkSession, path)
   }
 
   /** Persisted label-propagation result — the fit-once form: both the
@@ -131,12 +126,8 @@ object Graph {
     * Fingerprint-keyed on the edge relation like every other store. */
   def labelPropagationFor(edges: DataFrame, iterations: Int,
       datasetTag: String): DataFrame = {
-    val path = graft.engine.io.Artifacts.fitOnce(edges, "graft_graph_labels",
-      datasetTag, params = Seq(s"r$iterations")) { tmp =>
-      labelPropagationImpl(edges, iterations)
-        .write.mode("overwrite").parquet(tmp)
-    }
-    graft.engine.io.Storage.readParquet(edges.sparkSession, path)
+    Artifacts.table(edges, "graft_graph_labels", datasetTag,
+      params = Seq(s"r$iterations"))(labelPropagationImpl(edges, iterations))
   }
 
   /** Persisted single-seed personalized PageRank — the fit-once form
@@ -150,8 +141,8 @@ object Graph {
     * faster than re-deriving edges per round. */
   def personalizedPagerankFor(edges: DataFrame, iterations: Int,
       datasetTag: String): DataFrame = {
-    val path = graft.engine.io.Artifacts.fitOnce(edges, "graft_graph_ppr",
-      datasetTag, params = Seq(s"r$iterations")) { tmp =>
+    Artifacts.table(edges, "graft_graph_ppr", datasetTag,
+      params = Seq(s"r$iterations")) {
       val deg = edges.groupBy("src").agg(count(lit(1)).as("deg"))
       val ed = edges.join(deg, Seq("src")).localCheckpoint(true)
       val seed = ed.filter(col("src") % 2 === 0)
@@ -181,9 +172,8 @@ object Graph {
             (col("c") + when(col("node") === col("seed"),
               lit(150000000000L)).otherwise(lit(0L))).as("pi"))
       }
-      pi.write.mode("overwrite").parquet(tmp)
+      pi
     }
-    graft.engine.io.Storage.readParquet(edges.sparkSession, path)
   }
 
   private def labelPropagationImpl(edges: DataFrame,

@@ -2,11 +2,11 @@ package graft.tools
 
 import org.apache.spark.sql.SparkSession
 
-/** The one session shape of the tool mains (`graft.Plans`,
-  * [[ExplainDump]], [[RecallProbe]]), the same as `graft.Bench` and
-  * `graft.Verify` run: `local[n]` with n from SPARK_GRAFT_CPUS (default
-  * 4), shuffle partitions = n, UTC session time zone, nanosecond parquet
-  * timestamps read as longs, no UI, and an optional warehouse dir. */
+/** The one session shape of the mains (`graft.Verify`, `graft.Bench`,
+  * `graft.Plans`, [[ExplainDump]], [[RecallProbe]]): `local[n]` with n
+  * from SPARK_GRAFT_CPUS (default 4), shuffle partitions = n, UTC
+  * session time zone, nanosecond parquet timestamps read as longs, no
+  * UI, and an optional warehouse dir. */
 object Session {
   def build(warehouseDir: Option[String] = None): SparkSession = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")

@@ -5,7 +5,8 @@ import org.apache.hadoop.fs.Path
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The fit-once artifact key and build contract of
-  * [[graft.engine.io.Artifacts.fitOnce]]: one path per (input content,
+  * [[graft.engine.io.Artifacts.fitOnce]] and its one-table form
+  * [[graft.engine.io.Artifacts.table]]: one path per (input content,
   * family, tag, parameters), built once, never left half-built. */
 class ArtifactsSpec extends AnyFunSuite with SparkFixture {
 
@@ -136,5 +137,54 @@ class ArtifactsSpec extends AnyFunSuite with SparkFixture {
     }
     assert(builds === 1)
     assert(spark.read.parquet(path).count() === 5)
+  }
+
+  test("table writes its rows once and reads back the same rows") {
+    val df = input(inputDir("table"), 6)
+    val tag = fresh("table")
+    var builds = 0
+    def get() = Artifacts.table(df, family, tag, "t", Seq(1)) {
+      builds += 1; df.selectExpr("id", "id * 2 AS twice")
+    }
+    val first = get().collect().toSeq
+    val second = get()
+    assert(builds === 1)
+    assert(second.collect().toSeq.sortBy(_.getLong(0)) ===
+      first.sortBy(_.getLong(0)))
+    assert(second.columns.toSeq === Seq("id", "twice"))
+    assert(first.size === 6)
+  }
+
+  test("a table whose rows throw leaves no temp dir behind") {
+    val df = input(inputDir("table_fail"), 3)
+    val tag = fresh("table_fail")
+    val boom = intercept[IllegalStateException] {
+      Artifacts.table(df, family, tag) {
+        throw new IllegalStateException("rows failed")
+      }
+    }
+    assert(boom.getMessage === "rows failed")
+    val warehouse = spark.conf.get("spark.sql.warehouse.dir")
+    val root = new Path(s"$warehouse/$family")
+    val left = fs(root.toString).listStatus(root).map(_.getPath.getName)
+      .filter(_.contains(tag))
+    assert(left.isEmpty, left.mkString(", "))
+  }
+
+  test("a build that writes without Spark is marked complete and reused") {
+    val df = input(inputDir("plain"), 3)
+    val tag = fresh("plain")
+    var builds = 0
+    def get() = Artifacts.fitOnce(df, family, tag) { tmp =>
+      builds += 1
+      val out = fs(tmp).create(new Path(tmp, "payload.txt"))
+      try out.write("payload".getBytes("UTF-8")) finally out.close()
+    }
+    val first = get()
+    val second = get()
+    assert(first === second)
+    assert(builds === 1)
+    assert(fs(first).exists(new Path(first, "_SUCCESS")))
+    assert(fs(first).exists(new Path(first, "payload.txt")))
   }
 }

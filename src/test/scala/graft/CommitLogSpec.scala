@@ -104,6 +104,25 @@ class CommitLogSpec extends AnyFunSuite with SparkFixture {
     assert(CommitLog.readLatest(spark, root).count() == 40)
   }
 
+  test("a stage that throws leaves no staging dir and no commit") {
+    val root = freshRoot("failed_stage")
+    import spark.implicits._
+    val boom = intercept[IllegalStateException] {
+      CommitLog.commit(spark, root, "broken") { (dir, _) =>
+        Seq((1L, 1.0)).toDF("k", "v").write.parquet(dir)
+        throw new IllegalStateException("stage failed")
+      }
+    }
+    assert(boom.getMessage == "stage failed")
+    val fs = new org.apache.hadoop.fs.Path(root)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val data = new org.apache.hadoop.fs.Path(s"$root/data")
+    val left = if (fs.exists(data)) fs.listStatus(data).map(_.getPath.getName)
+      else Array.empty[String]
+    assert(left.isEmpty, left.mkString(", "))
+    assert(CommitLog.commits(spark, root).isEmpty)
+  }
+
   test("a file:// root: commits land in the listed log, not under the cwd") {
     import spark.implicits._
     val local = new java.io.File(

@@ -65,6 +65,16 @@ class ParquetReadSpec extends AnyFunSuite with SparkFixture {
     assert(Storage.readParquet(spark, bucketed).columns.last === "bucket")
   }
 
+  test("events fails fast on a session without nanosAsLong, leaving its conf") {
+    val conf = "spark.sql.legacy.parquet.nanosAsLong"
+    val s2 = spark.newSession()
+    s2.conf.set(conf, "false")
+    val e = intercept[IllegalArgumentException](Tables.events(s2, sf))
+    assert(e.getMessage.contains(conf), e.getMessage)
+    assert(s2.conf.get(conf) === "false")
+    assert(spark.conf.get(conf) === "true")
+  }
+
   test("a path overwritten with a different schema reads the new schema") {
     val d = dir("overwrite")
     spark.range(5).toDF("a").write.parquet(d)

@@ -7,8 +7,9 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Parquet reads of the engine, the registry queries and the table
   * accessors go through [[graft.engine.io.Storage.readParquet]], the
-  * one owner of the read-schema cache, and every engine memo is a
-  * [[graft.engine.Memo]]. */
+  * one owner of the read-schema cache, every engine memo is a
+  * [[graft.engine.Memo]], and only `engine/io` publishes a stored
+  * artifact or marks it complete. */
 class ReadOwnerSpec extends AnyFunSuite {
 
   /** `file:line` of every line of `files` that `pattern` matches. */
@@ -50,5 +51,17 @@ class ReadOwnerSpec extends AnyFunSuite {
     val listing = ("""\b(listFiles|listStatus|listLocatedStatus|globStatus|""" +
       """listFolder|getFileSystem|exists)\b|\bfs\(""").r
     bodies.foreach(b => assert(listing.findFirstIn(b).isEmpty, b))
+  }
+
+  test("publishing and completion marking stay with the io owners") {
+    val engine = Paths.get("src/main/scala/graft/engine")
+    val io = engine.resolve("io")
+    assert(Files.isRegularFile(io.resolve("Artifacts.scala")))
+    val sources = Files.walk(engine).iterator().asScala
+      .filter(f => f.toString.endsWith(".scala") && !f.startsWith(io)).toSeq
+    // a line that is not a comment and names the marker or a rename
+    val hits = matches(sources,
+      """^(?!\s*(//|\*|/\*)).*(_SUCCESS|\.rename\()""".r)
+    assert(hits.isEmpty, hits.mkString("\n"))
   }
 }
