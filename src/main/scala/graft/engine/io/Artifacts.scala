@@ -3,6 +3,9 @@ package graft.engine.io
 import graft.engine.Memo
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.execution.datasources.{CatalogFileIndex,
+  HadoopFsRelation, LogicalRelation, PartitioningAwareFileIndex}
 import org.apache.spark.sql.functions._
 
 /** Shared plumbing for the fit-once artifact family (keep-lists, IVF
@@ -36,11 +39,30 @@ object Artifacts {
   private val fpCache = new Memo[(Int, Int, String), String](4096)
 
   def fingerprintOf(df: DataFrame): String = {
-    val files = Storage.inventory(df.queryExecution.optimizedPlan)
+    val files = inventory(df.queryExecution.optimizedPlan)
     val key = (System.identityHashCode(df.sparkSession),
       df.queryExecution.analyzed.semanticHash(), fnv(files.mkString("\n")))
     fpCache.getOrElseUpdate(key)(compute(df, files))
   }
+
+  /** The file inventory a fingerprint keys on: `path|length|mtime` of
+    * every input file of `plan`, sorted, from the listing its file
+    * indexes made when it was built (no storage call; relations without
+    * one add nothing). Known limits: a same-name rewrite that keeps both
+    * length and mtime is not seen; paths are absolute and mtimes kept,
+    * so moving a dataset or warehouse, or rebuilding an upstream
+    * artifact with the same bytes, rebuilds every artifact keyed on
+    * it. */
+  private def inventory(plan: LogicalPlan): Seq[String] =
+    plan.collect { case l: LogicalRelation => l.relation }.flatMap {
+      case r: HadoopFsRelation => r.location match {
+        case idx: PartitioningAwareFileIndex => idx.allFiles()
+        case idx: CatalogFileIndex => idx.filterPartitions(Nil).allFiles()
+        case _ => Nil
+      }
+      case _ => Nil
+    }.map(st => s"${st.getPath.toUri}|${st.getLen}|${st.getModificationTime}")
+      .distinct.sorted
 
   private def compute(df: DataFrame, files: Seq[String]): String = {
     // Session-STABLE plan signature. semanticHash() is NOT stable

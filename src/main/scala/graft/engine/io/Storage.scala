@@ -2,19 +2,17 @@ package graft.engine.io
 
 import java.nio.charset.StandardCharsets
 
-import graft.engine.Memo
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, FileUtil, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.parquet.format.converter.ParquetMetadataConverter
 import org.apache.parquet.hadoop.Footer
 import org.apache.parquet.hadoop.util.HadoopInputFile
-import org.apache.spark.sql.execution.datasources.{CatalogFileIndex,
-  HadoopFsRelation, LogicalRelation, PartitioningAwareFileIndex}
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation,
+  LogicalRelation, PartitioningAwareFileIndex}
 import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat,
   ParquetFooterReader, ParquetToSparkSchemaConverter}
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
 
 /** Folder/object storage utilities over the Hadoop FileSystem API — the
   * Spark re-expression of the reference's S3 helpers (SURVEY.md §1.2
@@ -24,7 +22,8 @@ import org.apache.spark.sql.types.StructType
   * resolved per-path, so no S3 SDK coupling.
   *
   * It also owns the engine's parquet reads ([[readParquet]]), which
-  * keep each input's inferred schema between reads.
+  * read their schema from one footer on the driver and keep nothing
+  * between calls.
   */
 object Storage {
 
@@ -88,65 +87,30 @@ object Storage {
     finally in.close()
   }
 
-  /** The most paths whose schema [[readParquet]] keeps (LRU). */
-  private val SchemaCacheCap = 1024
-
-  /** The session confs that change what parquet schema inference
-    * returns for the same files. */
-  private val schemaConfs = Seq(
-    "spark.sql.legacy.parquet.nanosAsLong",
-    "spark.sql.parquet.binaryAsString",
-    "spark.sql.parquet.int96AsTimestamp",
-    "spark.sql.parquet.inferTimestampNTZ.enabled",
-    "spark.sql.parquet.mergeSchema",
-    "spark.sql.caseSensitive")
-
-  /** path → (hash of the confs and the file inventory, inferred schema) */
-  private[graft] type SchemaCache = Memo[String, (String, StructType)]
-
-  private val schemaCache = new SchemaCache(SchemaCacheCap)
-
-  /** `spark.read.parquet(path)` without the schema-inference job. The
-    * inferred schema is kept, keyed by the session confs that change
-    * inference and the [[inventory]] of the read's own file index. A
-    * repeat read builds `spark.read.schema(kept)` (no job) and returns
-    * it only if its inventory — the exact files its scan reads — still
-    * matches. A miss reads the schema on the driver from the one footer
-    * Spark's inference would read ([[footerSchema]], no job) and falls
-    * back to `spark.read.parquet(path)`, with its errors, whenever Spark
-    * would read more than that footer: `mergeSchema` on, a `_metadata`
-    * or `_common_metadata` summary present, no data file, a partition
+  /** `spark.read.parquet(path)` without the schema-inference job, and
+    * with no state kept between calls: the frame [[footerRead]] builds
+    * from the one footer Spark's inference would read, or
+    * `spark.read.parquet(path)`, with its errors, whenever Spark would
+    * read more than that footer: `mergeSchema` on, a `_metadata` or
+    * `_common_metadata` summary present, no data file, a partition
     * column also stored in the files, or a footer that fails to read
-    * (path missing, emptied or corrupt). Either way the miss replaces
-    * the entry. */
+    * (path missing, emptied or corrupt). Each call lists the path once,
+    * so a rewritten or regrown input is always read as it is now. */
   def readParquet(spark: SparkSession, path: String): DataFrame =
-    readParquet(spark, path, schemaCache)
+    footerRead(spark, path).getOrElse(spark.read.parquet(path))
 
-  private[graft] def readParquet(spark: SparkSession, path: String,
-      cache: SchemaCache): DataFrame = {
-    val confs = schemaConfs.map(k => s"$k=${spark.conf.getOption(k)}")
-    def key(df: DataFrame): String =
-      sha256((confs ++ inventory(df.queryExecution.analyzed)).mkString("\n"))
-    def keep(df: DataFrame): DataFrame = {
-      cache.put(path, (key(df), df.schema)); df
-    }
-    cache.get(path)
-      .map { case (k, schema) => (k, spark.read.schema(schema).parquet(path)) }
-      .collect { case (k, df) if key(df) == k => df }
-      .orElse(footerSchema(spark, path)
-        .map(schema => keep(spark.read.schema(schema).parquet(path))))
-      .getOrElse(keep(spark.read.parquet(path)))
-  }
-
-  /** The schema `spark.read.parquet(path)` infers when it reads exactly
-    * one footer: that of the first data file by path in the file index
-    * of a schema-less read, converted as Spark's inference converts it,
-    * plus the index's partition columns. None where Spark would read
-    * anything else (see [[readParquet]]) or the read fails. */
-  private def footerSchema(spark: SparkSession,
-      path: String): Option[StructType] = {
+  /** The frame `spark.read.parquet(path)` builds when its inference
+    * reads exactly one footer, launching no job: the relation of a
+    * schema-less read, given as data schema the footer of the first
+    * data file by path in its file index, converted as Spark's
+    * inference converts it and made nullable as Spark makes it. The
+    * read lists once, the file index of the frame it returns. None
+    * where Spark would read anything else (see [[readParquet]]) or the
+    * read fails. */
+  private def footerRead(spark: SparkSession,
+      path: String): Option[DataFrame] = {
     val conf = spark.sessionState.conf
-    def fromIndex(r: HadoopFsRelation): Option[StructType] = {
+    def fromIndex(r: HadoopFsRelation): Option[DataFrame] = {
       val files = r.location match {
         case idx: PartitioningAwareFileIndex => idx.allFiles()
         case _ => Nil
@@ -163,10 +127,10 @@ object Storage {
             new Footer(first.getPath, footer),
             new ParquetToSparkSchemaConverter(conf))
         }
-      val partitions = r.partitionSchema
       stored.filterNot(_.exists(f =>
-          partitions.exists(p => conf.resolver(p.name, f.name))))
-        .map(s => StructType(s.fields ++ partitions.fields))
+          r.partitionSchema.exists(p => conf.resolver(p.name, f.name))))
+        .map(s => spark.baseRelationToDataFrame(
+          r.copy(dataSchema = nullable(s).asInstanceOf[StructType])(spark)))
     }
     if (conf.isParquetSchemaMergingEnabled) None
     else scala.util.Try(spark.read.schema(StructType(Nil)).parquet(path)
@@ -176,30 +140,18 @@ object Storage {
       .toOption.flatten
   }
 
+  /** `t` with every struct field, array element and map value nullable,
+    * at every depth, field metadata kept: the `asNullable` (private to
+    * Spark) that `DataSource` applies to an inferred data schema. */
+  private def nullable(t: DataType): DataType = t match {
+    case s: StructType => StructType(s.fields.map(f =>
+      f.copy(dataType = nullable(f.dataType), nullable = true)))
+    case ArrayType(e, _) => ArrayType(nullable(e), containsNull = true)
+    case MapType(k, v, _) =>
+      MapType(nullable(k), nullable(v), valueContainsNull = true)
+    case other => other
+  }
+
   /** Parquet summary files, which Spark's inference reads first. */
   private val SummaryFiles = Set("_metadata", "_common_metadata")
-
-  /** The engine's one file inventory, keying both [[readParquet]] and
-    * [[Artifacts.fingerprintOf]]: `path|length|mtime` of every input
-    * file of `plan`, sorted, from the listing its file indexes made when
-    * it was built (no storage call; relations without one add nothing).
-    * Known limits: a same-name rewrite that keeps both length and mtime
-    * is not seen; paths are absolute and mtimes kept, so moving a
-    * dataset or warehouse, or rebuilding an upstream artifact with the
-    * same bytes, rebuilds every artifact keyed on it. */
-  private[graft] def inventory(plan: LogicalPlan): Seq[String] =
-    plan.collect { case l: LogicalRelation => l.relation }.flatMap {
-      case r: HadoopFsRelation => r.location match {
-        case idx: PartitioningAwareFileIndex => idx.allFiles()
-        case idx: CatalogFileIndex => idx.filterPartitions(Nil).allFiles()
-        case _ => Nil
-      }
-      case _ => Nil
-    }.map(st => s"${st.getPath.toUri}|${st.getLen}|${st.getModificationTime}")
-      .distinct.sorted
-
-  private def sha256(s: String): String =
-    java.security.MessageDigest.getInstance("SHA-256")
-      .digest(s.getBytes(StandardCharsets.UTF_8))
-      .map(b => f"$b%02x").mkString
 }

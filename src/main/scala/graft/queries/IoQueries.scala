@@ -799,9 +799,11 @@ object IoQueries {
             .count(_.getPath.getName.endsWith(".json"))
           require(n == 1, s"expected 1 file in ${st.getPath}, found $n")
         }
+        // the part files, not the directory: Spark would log the
+        // `_manifest` root as a hidden path on every read
         s.read.schema("shard INT, n_rows BIGINT, checksum BIGINT, " +
             "n_files BIGINT")
-          .json(s"$out/_manifest")
+          .json(s"$out/_manifest/*.json")
           .select("shard", "n_files", "n_rows", "checksum")
           .orderBy("shard")
       },

@@ -289,4 +289,10 @@ class EngineSpec extends AnyFunSuite with SparkFixture {
     assert(ok.subsetOf(qk), s"oracle-only keys: ${ok.diff(qk)}")
     assert(qk.size >= 70)
   }
+
+  test("export_manifest reads its manifest back without a hidden-path warning") {
+    val ignored = hiddenPathWarnings(
+      SparkEntry.queries("export_manifest")(spark, sf).collect())
+    assert(ignored.isEmpty, ignored.mkString("\n"))
+  }
 }

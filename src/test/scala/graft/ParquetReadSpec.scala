@@ -6,8 +6,8 @@ import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
 
 /** [[graft.engine.io.Storage.readParquet]]: the same DataFrame as
-  * `spark.read.parquet`, without the schema-inference job on a repeat
-  * read of unchanged files. */
+  * `spark.read.parquet`, without the schema-inference job, and always
+  * of the files as they are now. */
 class ParquetReadSpec extends AnyFunSuite with SparkFixture {
 
   private def dir(name: String): String =
@@ -152,27 +152,6 @@ class ParquetReadSpec extends AnyFunSuite with SparkFixture {
     assertSame(grown, spark.read.parquet(glob))
   }
 
-  test("the schema cache holds at most its cap, least recent out first") {
-    val base = dir("cap")
-    spark.range(3).toDF("id").coalesce(1).write.parquet(base)
-    val part = partFile(base)
-    val paths = (0 until 5).map { i =>
-      val p = new Path(s"$base/copy_$i.parquet")
-      FileUtil.copy(fs(base), part, fs(base), p, false, true,
-        spark.sparkContext.hadoopConfiguration)
-      p.toString
-    }
-    val cache = new Storage.SchemaCache(3)
-    paths.foreach { p =>
-      assert(Storage.readParquet(spark, p, cache).count() === 3)
-      assert(cache.size <= 3)
-    }
-    assert(cache.size === 3)
-    // the most recent path is still kept, the first one was dropped
-    assert(jobsOf(Storage.readParquet(spark, paths.last, cache))._2 === 0)
-    assert(cache.get(paths.head).isEmpty)
-  }
-
   test("a first read of an unseen path reads one footer: no job, same frame") {
     val flatDir = dir("first_flat")
     spark.range(30).selectExpr("id", "id * 0.5 AS x", "cast(id AS string) AS s")
@@ -180,13 +159,11 @@ class ParquetReadSpec extends AnyFunSuite with SparkFixture {
     val bucketed = dir("first_bucketed")
     spark.range(40).selectExpr("id", "cast(id % 4 AS int) AS bucket",
       "cast(id AS string) AS s").write.partitionBy("bucket").parquet(bucketed)
-    val cache = new Storage.SchemaCache(8)
     Seq(partFile(flatDir).toString, bucketed, s"$sf/events.parquet").foreach {
       p =>
-        val (first, jobs) = jobsOf(Storage.readParquet(spark, p, cache))
+        val (first, jobs) = jobsOf(Storage.readParquet(spark, p))
         assert(jobs === 0, p)
         assertSame(first, spark.read.parquet(p))
-        assert(cache.get(p).nonEmpty, p)
     }
   }
 
@@ -195,7 +172,7 @@ class ParquetReadSpec extends AnyFunSuite with SparkFixture {
     spark.range(4).toDF("a").write.parquet(s"$base/k=1")
     spark.range(4).selectExpr("id AS a", "id * 2 AS b").write.parquet(s"$base/k=2")
     graft.engine.Confs.withConf(spark, "spark.sql.parquet.mergeSchema", "true") {
-      val got = Storage.readParquet(spark, base, new Storage.SchemaCache(4))
+      val got = Storage.readParquet(spark, base)
       assert(got.columns.toSeq === Seq("a", "b", "k"))
       assertSame(got, spark.read.parquet(base))
     }
@@ -214,6 +191,54 @@ class ParquetReadSpec extends AnyFunSuite with SparkFixture {
       false, true, spark.sparkContext.hadoopConfiguration)
     val want = spark.read.parquet(d)
     assert(want.columns.toSeq === Seq("b", "a"))
-    assertSame(Storage.readParquet(spark, d, new Storage.SchemaCache(4)), want)
+    assertSame(Storage.readParquet(spark, d), want)
+  }
+
+  test("a same-name rewrite keeping length and mtime reads the new file") {
+    val a = dir("same_len_a")
+    val b = dir("same_len_b")
+    spark.range(5).toDF("a").coalesce(1).write.parquet(a)
+    spark.range(5).toDF("b").coalesce(1).write.parquet(b)
+    val (target, src) = (partFile(a), partFile(b))
+    val before = fs(a).getFileStatus(target)
+    assert(before.getLen === fs(b).getFileStatus(src).getLen)
+    assert(Storage.readParquet(spark, a).columns.toSeq === Seq("a"))
+    FileUtil.copy(fs(b), src, fs(a), target, false, true,
+      spark.sparkContext.hadoopConfiguration)
+    fs(a).setTimes(target, before.getModificationTime, -1)
+    val after = fs(a).getFileStatus(target)
+    assert((after.getLen, after.getModificationTime) ===
+      ((before.getLen, before.getModificationTime)))
+    val got = Storage.readParquet(spark, a)
+    assert(got.columns.toSeq === Seq("b"))
+    assert(got.orderBy("b").collect().map(_.getLong(0)).toSeq === (0L until 5L))
+  }
+
+  test("flat, partitioned, nested and events reads analyze like spark.read") {
+    val flat = dir("plan_flat")
+    spark.range(12).selectExpr("id", "cast(id AS string) AS s")
+      .coalesce(1).write.parquet(flat)
+    val bucketed = dir("plan_bucketed")
+    spark.range(12).selectExpr("id", "cast(id % 3 AS int) AS bucket")
+      .write.partitionBy("bucket").parquet(bucketed)
+    // spark.range's id is non-nullable, so these nested columns are
+    // stored with required fields, elements and values
+    val nested = dir("plan_nested")
+    spark.range(6).selectExpr("id", "array(id, id + 1) AS xs",
+        "map(id, named_struct('v', id)) AS m",
+        "named_struct('a', id, 'b', array(named_struct('c', id))) AS st")
+      .coalesce(1).write.parquet(nested)
+    // the string Artifacts.fingerprintOf hashes
+    def plan(df: DataFrame): String = df.queryExecution.analyzed.canonicalized
+      .treeString(verbose = true, addSuffix = false,
+        maxFields = Int.MaxValue, printOperatorId = false)
+      .replaceAll("@[0-9a-fA-F]+", "")
+    Seq(flat, bucketed, nested, s"$sf/events.parquet").foreach { p =>
+      val (got, jobs) = jobsOf(Storage.readParquet(spark, p))
+      assert(jobs === 0, p)
+      val want = spark.read.parquet(p)
+      assert(got.schema === want.schema, p)
+      assert(plan(got) === plan(want), p)
+    }
   }
 }

@@ -6,8 +6,8 @@ import scala.util.matching.Regex
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Parquet reads of the engine, the registry queries and the table
-  * accessors go through [[graft.engine.io.Storage.readParquet]], the
-  * one owner of the read-schema cache, every engine memo is a
+  * accessors go through [[graft.engine.io.Storage.readParquet]], which
+  * keeps no state between calls, every engine memo is a
   * [[graft.engine.Memo]], and only `engine/io` publishes a stored
   * artifact or marks it complete. */
 class ReadOwnerSpec extends AnyFunSuite {
@@ -47,10 +47,16 @@ class ReadOwnerSpec extends AnyFunSuite {
     val bodies = lines.indices.filter(i => lines(i).contains("def readParquet("))
       .map(i => (lines(i) +: lines.drop(i + 1).takeWhile(l =>
         l.trim.isEmpty || l.startsWith("   "))).mkString("\n"))
-    assert(bodies.size === 2)
+    assert(bodies.size === 1)
     val listing = ("""\b(listFiles|listStatus|listLocatedStatus|globStatus|""" +
       """listFolder|getFileSystem|exists)\b|\bfs\(""").r
     bodies.foreach(b => assert(listing.findFirstIn(b).isEmpty, b))
+  }
+
+  test("parquet reads keep no state across calls") {
+    val storage = Paths.get("src/main/scala/graft/engine/io/Storage.scala")
+    val hits = matches(Seq(storage), """\bMemo\b""".r)
+    assert(hits.isEmpty, hits.mkString("\n"))
   }
 
   test("publishing and completion marking stay with the io owners") {

@@ -268,27 +268,10 @@ class SimilaritySpec extends AnyFunSuite with SparkFixture {
   }
 
   test("an indexed search loads its quantizer without a hidden-path warning") {
-    import org.apache.logging.log4j.LogManager
-    import org.apache.logging.log4j.core.{LogEvent, Logger}
-    import org.apache.logging.log4j.core.appender.AbstractAppender
-    import org.apache.logging.log4j.core.config.Property
     val idx = Similarity.cellIndexFor(emb, s"quiet_${System.nanoTime()}")
-    val logger = LogManager.getLogger(
-      "org.apache.spark.sql.execution.datasources.DataSource")
-      .asInstanceOf[Logger]
-    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val appender = new AbstractAppender("quantizer-load-spec", null, null,
-        true, Property.EMPTY_ARRAY) {
-      override def append(e: LogEvent): Unit =
-        seen.add(e.getMessage.getFormattedMessage)
-    }
-    appender.start()
-    logger.addAppender(appender)
-    try Similarity.ivfTopKIndexed(spark, idx, Similarity.probes(emb), 5)
-      .collect()
-    finally { logger.removeAppender(appender); appender.stop() }
-    val ignored = seen.toArray.map(_.toString)
-      .filter(_.contains("All paths were ignored"))
+    val ignored = hiddenPathWarnings(
+      Similarity.ivfTopKIndexed(spark, idx, Similarity.probes(emb), 5)
+        .collect())
     assert(ignored.isEmpty, ignored.mkString("\n"))
   }
 

@@ -30,6 +30,31 @@ trait SparkFixture extends BeforeAndAfterAll { self: Suite =>
     assert(sc.statusTracker.getJobIdsForGroup(group + "_sentinel").nonEmpty)
     (out, sc.statusTracker.getJobIdsForGroup(group).length)
   }
+
+  /** The `All paths were ignored` warnings `DataSource` logs while
+    * `body` runs: one per read whose only root Spark treats as hidden
+    * (a name starting with `_` or `.`). */
+  protected def hiddenPathWarnings(body: => Any): Seq[String] = {
+    import org.apache.logging.log4j.LogManager
+    import org.apache.logging.log4j.core.{LogEvent, Logger}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+    val logger = LogManager.getLogger(
+      "org.apache.spark.sql.execution.datasources.DataSource")
+      .asInstanceOf[Logger]
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val appender = new AbstractAppender("hidden-path-warnings", null, null,
+        true, Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        seen.add(e.getMessage.getFormattedMessage)
+    }
+    appender.start()
+    logger.addAppender(appender)
+    try body
+    finally { logger.removeAppender(appender); appender.stop() }
+    seen.toArray.map(_.toString).filter(_.contains("All paths were ignored"))
+      .toSeq
+  }
 }
 
 object SparkFixture {
