@@ -243,6 +243,14 @@ object Dedup {
                           AS band_hash))""")).as("band"))
       .select(col("doc_id"), col("band.band_idx"), col("band.band_hash"))
 
+  /** The signatures an audit reads: the stored ones for a tagged
+    * dataset ([[minhashStoreFor]]), else a fresh sign pass. */
+  private def signaturesFor(docs: DataFrame,
+      datasetTag: Option[String]): DataFrame = datasetTag match {
+    case Some(tag) => minhashStoreFor(docs, tag)
+    case None => signatures(docs)
+  }
+
   /** Band-geometry TUNING audit: for each (bands × rowsPerBand) split
     * of the stored signature, the bucket-entry totals, pairable
     * buckets, and the pair-EMISSION count Σ n·(n−1)/2 — the candidate
@@ -254,10 +262,7 @@ object Dedup {
       datasetTag: Option[String] = None,
       configs: Seq[(Int, Int)] = Seq((2, 16), (4, 8), (8, 4)))
       : DataFrame = {
-    val sigs = datasetTag match {
-      case Some(tag) => minhashStoreFor(docs, tag)
-      case None => signatures(docs)
-    }
+    val sigs = signaturesFor(docs, datasetTag)
     configs.map { case (b, r) =>
       bandExplode(sigs, b, r)
         .groupBy("band_idx", "band_hash")
@@ -283,11 +288,7 @@ object Dedup {
   def bandAudit(docs: DataFrame, maxBucket: Int,
       datasetTag: Option[String] = None, bands: Int = 4,
       rowsPerBand: Int = 8): DataFrame = {
-    val sigs = datasetTag match {
-      case Some(tag) => minhashStoreFor(docs, tag)
-      case None => signatures(docs)
-    }
-    bandExplode(sigs, bands, rowsPerBand)
+    bandExplode(signaturesFor(docs, datasetTag), bands, rowsPerBand)
       .groupBy("band_idx", "band_hash")
       .agg(count(lit(1)).as("n"))
       .groupBy("band_idx")
@@ -335,8 +336,7 @@ object Dedup {
     * margin (0.2 below threshold ≈ 3σ of a 32-hash estimator) keeps the
     * extra recall loss negligible. */
   def jaccardVerify(candidates: DataFrame, state: DataFrame,
-      threshold: Double): DataFrame = {
-    graft.engine.expr.GraftFunctions.ensureRegistered(candidates.sparkSession)
+      threshold: Double): DataFrame =
     candidates
       .join(state.select(col("doc_id").as("doc_a"),
         col("sh_h").as("sh_a"), col("sig").as("sig_a")), Seq("doc_a"))
@@ -345,17 +345,37 @@ object Dedup {
       .filter(expr(
         """size(filter(zip_with(sig_a, sig_b, (x, y) -> x = y), v -> v))
            / cast(size(sig_a) AS double)""") >= threshold - 0.2)
+      .transform(exactJaccard(_, "sh_a", "sh_b", threshold))
+
+  /** The exact-Jaccard tail every verify shares: from each candidate
+    * pair's two sorted hashed sets (columns `setA`, `setB`), the
+    * merge-scan intersection size, the Jaccard rounded to 4 places,
+    * and the `(doc_a, doc_b, jaccard)` rows at or above `threshold`. */
+  private def exactJaccard(pairs: DataFrame, setA: String, setB: String,
+      threshold: Double): DataFrame = {
+    graft.engine.expr.GraftFunctions.ensureRegistered(pairs.sparkSession)
+    pairs
       .select(col("doc_a"), col("doc_b"),
-        expr("graft_intersect_count(sh_a, sh_b)").as("n_common"),
-        size(col("sh_a")).as("sz_a"), size(col("sh_b")).as("sz_b"))
-      // guard the union size: two empty shingle sets would give 0/0 =
-      // NaN, and Spark orders NaN above every threshold
+        expr(s"graft_intersect_count($setA, $setB)").as("n_common"),
+        size(col(setA)).as("sz_a"), size(col(setB)).as("sz_b"))
+      // guard the union size: two empty sets would give 0/0 = NaN, and
+      // Spark orders NaN above every threshold
       .filter(col("sz_a") + col("sz_b") - col("n_common") > 0)
       .withColumn("jaccard", round(col("n_common") /
         (col("sz_a") + col("sz_b") - col("n_common")).cast("double"), 4))
       .filter(col("jaccard") >= threshold)
       .select("doc_a", "doc_b", "jaccard")
   }
+
+  /** [[exactJaccard]] of candidate pairs over a bigram-set table
+    * `(doc_id, …, g)`: both sides' sets joined in by doc id. */
+  private def bigramJaccard(cand: DataFrame, grams: DataFrame,
+      threshold: Double): DataFrame =
+    exactJaccard(cand
+      .join(grams.select(col("doc_id").as("doc_a"), col("g").as("g_a")),
+        Seq("doc_a"))
+      .join(grams.select(col("doc_id").as("doc_b"), col("g").as("g_b")),
+        Seq("doc_b")), "g_a", "g_b", threshold)
 
   /** Persisted MinHash/shingle signature store — the ingest-time-
     * artifact form of [[signatures]] (same pattern as the bigram
@@ -445,35 +465,6 @@ object Dedup {
       .filter(col("hamming") <= maxHamming)
   }
 
-  /** Exact word-bigram Jaccard between documents of the same (lang,
-    * source) group — the fully-SQL-expressible near-dup variant used for
-    * oracle checking (hashing the bigrams changes set sizes by nothing
-    * at 64 bits, so the Jaccard values equal the string-set oracle's).
-    *
-    * Scale design: candidates come from a PREFIX-FILTERED inverted-index
-    * equi-join, not all pairs within the group. The prefix filter
-    * (SSJoin / the MapReduce set-similarity join of Vernica et al.,
-    * SIGMOD'10) is EXACT: Jaccard(A,B) ≥ t implies |A∩B| ≥ t·|A| and
-    * ≥ t·|B|, so under any fixed global token order the two prefixes of
-    * length |X| − ⌈t·|X|⌉ + 1 must share a token. Two global orders are
-    * supported, both exact (equivalence is test-asserted):
-    *
-    *  - `freqOrdered = false` (default): sorted 64-bit bigram hash —
-    *    zero extra passes, uniform → balanced index.
-    *  - `freqOrdered = true`: ascending document frequency, ties by
-    *    hash — the canonical PPJoin order; each document's prefix is
-    *    its RAREST tokens, minimizing Σ_token df(token)² over the
-    *    inverted index at the cost of a df pass + per-doc rank window.
-    *
-    * Measured on this corpus (sf0.1, near-uniform synthetic bigrams):
-    * the df order shrinks candidates only 0.1–2% (129782→129669 at
-    * t=0.05, 103728→101493 at t=0.5) while the extra passes cost 2–3×
-    * wall-clock — so hash order is the default here; flip to df order
-    * for real Zipfian text, where a handful of stopword bigrams
-    * otherwise dominates Σ df². Work is Σ_token df² over prefix tokens
-    * only — no O(group²) term — plus the hot-bucket cap (see
-    * [[capBuckets]]) as the backstop against a degenerate token, and
-    * exact merge-scan Jaccard verifies just the survivors. */
   /** (doc_id, lang, source, sorted bigram-hash array) — the shared
     * signature relation behind the exact-Jaccard operators. One JIT
     * mapPartitions sweep per document, hash-sorted so merge-scan
@@ -504,54 +495,53 @@ object Dedup {
       }.toDF("doc_id", "lang", "source", "g")
   }
 
+  /** Exact word-bigram Jaccard between documents of the same (lang,
+    * source) group — the fully-SQL-expressible near-dup variant used for
+    * oracle checking (hashing the bigrams changes set sizes by nothing
+    * at 64 bits, so the Jaccard values equal the string-set oracle's).
+    *
+    * Scale design: candidates come from a PREFIX-FILTERED inverted-index
+    * equi-join, not all pairs within the group. The prefix filter
+    * (SSJoin / the MapReduce set-similarity join of Vernica et al.,
+    * SIGMOD'10) is EXACT: Jaccard(A,B) ≥ t implies |A∩B| ≥ t·|A| and
+    * ≥ t·|B|, so under any fixed global token order the two prefixes of
+    * length |X| − ⌈t·|X|⌉ + 1 must share a token. The order here is the
+    * sorted 64-bit bigram hash: zero extra passes, uniform → balanced
+    * index. (PPJoin's rarest-first document-frequency order was
+    * measured on this corpus at sf0.1: 0.1–2% fewer candidates for 2–3×
+    * the wall-clock.) Work is Σ_token df² over prefix tokens only — no
+    * O(group²) term — plus the hot-bucket cap (see [[capBuckets]]) as
+    * the backstop against a degenerate token, and exact merge-scan
+    * Jaccard verifies just the survivors. */
   def ngramJaccardPairs(docs: DataFrame, threshold: Double,
-      freqOrdered: Boolean = false, maxBucket: Int = 10000): DataFrame = {
+      maxBucket: Int = 10000): DataFrame = {
     // reused by the prefix index + verify joins
     val grams = cacheTracked(bigramSets(docs))
-    val cand = ngramCandidates(grams, threshold, freqOrdered, maxBucket)
-    graft.engine.expr.GraftFunctions.ensureRegistered(docs.sparkSession)
-    cand
-      .join(grams.select(col("doc_id").as("doc_a"), col("g").as("g_a")),
-        Seq("doc_a"))
-      .join(grams.select(col("doc_id").as("doc_b"), col("g").as("g_b")),
-        Seq("doc_b"))
-      .select(col("doc_a"), col("doc_b"),
-        expr("graft_intersect_count(g_a, g_b)").as("n_common"),
-        size(col("g_a")).as("sz_a"), size(col("g_b")).as("sz_b"))
-      .filter(col("sz_a") + col("sz_b") - col("n_common") > 0) // 0/0→NaN
-      .withColumn("jaccard", round(col("n_common") /
-        (col("sz_a") + col("sz_b") - col("n_common")).cast("double"), 4))
-      .filter(col("jaccard") >= threshold)
-      .select("doc_a", "doc_b", "jaccard")
+    bigramJaccard(ngramCandidates(grams, threshold, maxBucket), grams,
+      threshold)
   }
 
-  /** Prefix-filtered candidate pairs over a (doc_id, lang, source, g)
-    * gram table — see [[ngramJaccardPairs]] for the exactness argument.
-    * Prefix length is |g| − ⌈t·|g|⌉ + 1; the 1e-9 slack absorbs binary
-    * rounding of t·|g| (a longer prefix is always safe — superset). */
-  def ngramCandidates(grams: DataFrame, threshold: Double,
-      freqOrdered: Boolean, maxBucket: Int): DataFrame = {
-    val plenSql = s"cast(size(g) - ceil($threshold * size(g) - 1e-9) + 1 AS int)"
-    val pref =
-      if (!freqOrdered)
-        // hash order: g is already hash-sorted, prefix = leading slice
-        grams.select(col("lang"), col("source"), col("doc_id"),
-          explode(expr(s"slice(g, 1, $plenSql)")).as("tok"))
-      else {
-        // document-frequency order: one df pass over the exploded gram
-        // set, then each document keeps its plen rarest tokens. Two
-        // extra shuffles (df agg by tok, rank window by doc_id) buy a
-        // strictly sparser inverted index — the PPJoin trade.
-        val toks = grams.select(col("lang"), col("source"), col("doc_id"),
-          expr(plenSql).as("plen"), explode(col("g")).as("tok"))
-        val dfreq = toks.groupBy("tok").agg(count(lit(1)).as("df"))
-        val w = Window.partitionBy("doc_id").orderBy(asc("df"), asc("tok"))
-        toks.join(dfreq, "tok")
-          .withColumn("rk", row_number().over(w))
-          .filter(col("rk") <= col("plen"))
-          .select("lang", "source", "doc_id", "tok")
-      }
-    val capped = capBuckets(pref, Seq("lang", "source", "tok"), maxBucket)
+  /** The capped hash-order prefix index of a `(doc_id, lang, source, g)`
+    * gram table: one `(lang, source, doc_id, keep…, tok)` row per prefix
+    * token, prefix length |g| − ⌈t·|g|⌉ + 1 (see [[ngramJaccardPairs]];
+    * the 1e-9 slack absorbs binary rounding of t·|g| — a longer prefix
+    * is always safe, a superset). `g` is hash-sorted, so the prefix is
+    * its leading slice. */
+  private def prefixIndex(grams: DataFrame, threshold: Double,
+      maxBucket: Int, keep: String*): DataFrame = {
+    val plenSql =
+      s"cast(size(g) - ceil($threshold * size(g) - 1e-9) + 1 AS int)"
+    val pref = grams.select(
+      (Seq("lang", "source", "doc_id") ++ keep).map(col) :+
+        explode(expr(s"slice(g, 1, $plenSql)")).as("tok"): _*)
+    capBuckets(pref, Seq("lang", "source", "tok"), maxBucket)
+  }
+
+  /** Prefix-filtered candidate pairs over a gram table: the
+    * [[prefixIndex]] self-joined on (lang, source, tok). */
+  private def ngramCandidates(grams: DataFrame, threshold: Double,
+      maxBucket: Int): DataFrame = {
+    val capped = prefixIndex(grams, threshold, maxBucket)
     distinctPairs(
       capped.select(col("lang"), col("source"),
           col("doc_id").as("doc_a"), col("tok"))
@@ -560,6 +550,16 @@ object Dedup {
           Seq("lang", "source", "tok"))
         .filter(col("doc_a") < col("doc_b")))
   }
+
+  /** Persisted bigram-signature store (same artifact pattern as
+    * [[keepListFor]] / the IVF quantizer): the screened corpus's
+    * signatures are computed ONCE at ingest and re-read by every later
+    * incremental screen — at 100 TB, re-sweeping the corpus per batch
+    * would dwarf the batch itself. Keyed by (tag, content fingerprint)
+    * so regenerated data re-signs — see
+    * [[graft.engine.io.Artifacts.fingerprintOf]]. */
+  def signatureStoreFor(docs: DataFrame, datasetTag: String): DataFrame =
+    Artifacts.table(docs, "graft_signatures", datasetTag)(bigramSets(docs))
 
   /** INCREMENTAL near-dup screen — the ingest-time shape: a new batch
     * arrives against an already-screened corpus, and only pairs
@@ -571,19 +571,8 @@ object Dedup {
     * theorem (a qualifying pair shares a prefix token under the global
     * hash order regardless of which side each doc is on), same
     * merge-scan Jaccard verify; emits (doc_a, doc_b, jaccard) with at
-    * least one side in the batch. In production the existing side's
-    * signatures/prefix index are a persisted artifact (keepListFor
-    * pattern) rather than recomputed. */
-  /** Persisted bigram-signature store (same artifact pattern as
-    * [[keepListFor]] / the IVF quantizer): the screened corpus's
-    * signatures are computed ONCE at ingest and re-read by every later
-    * incremental screen — at 100 TB, re-sweeping the corpus per batch
-    * would dwarf the batch itself. Keyed by (tag, content fingerprint)
-    * so regenerated data re-signs — see
-    * [[graft.engine.io.Artifacts.fingerprintOf]]. */
-  def signatureStoreFor(docs: DataFrame, datasetTag: String): DataFrame =
-    Artifacts.table(docs, "graft_signatures", datasetTag)(bigramSets(docs))
-
+    * least one side in the batch. With `existingTag`, the existing
+    * side's signatures are the persisted [[signatureStoreFor]] store. */
   def incrementalNearDups(existing: DataFrame, batch: DataFrame,
       threshold: Double, maxBucket: Int = 10000,
       existingTag: Option[String] = None): DataFrame = {
@@ -600,11 +589,7 @@ object Dedup {
     val grams = cacheTracked(
       existingSigs.withColumn("is_new", lit(false))
         .unionByName(bigramSets(batch).withColumn("is_new", lit(true))))
-    val plenSql =
-      s"cast(size(g) - ceil($threshold * size(g) - 1e-9) + 1 AS int)"
-    val pref = grams.select(col("lang"), col("source"), col("doc_id"),
-      col("is_new"), explode(expr(s"slice(g, 1, $plenSql)")).as("tok"))
-    val capped = capBuckets(pref, Seq("lang", "source", "tok"), maxBucket)
+    val capped = prefixIndex(grams, threshold, maxBucket, "is_new")
     val probe = capped.filter(col("is_new"))
       .select(col("lang"), col("source"), col("doc_id").as("doc_n"),
         col("tok"))
@@ -617,21 +602,7 @@ object Dedup {
         .filter(!col("new_o") || col("doc_n") < col("doc_o"))
         .select(least(col("doc_n"), col("doc_o")).as("doc_a"),
           greatest(col("doc_n"), col("doc_o")).as("doc_b")))
-    graft.engine.expr.GraftFunctions.ensureRegistered(
-      existing.sparkSession)
-    cand
-      .join(grams.select(col("doc_id").as("doc_a"), col("g").as("g_a")),
-        Seq("doc_a"))
-      .join(grams.select(col("doc_id").as("doc_b"), col("g").as("g_b")),
-        Seq("doc_b"))
-      .select(col("doc_a"), col("doc_b"),
-        expr("graft_intersect_count(g_a, g_b)").as("n_common"),
-        size(col("g_a")).as("sz_a"), size(col("g_b")).as("sz_b"))
-      .filter(col("sz_a") + col("sz_b") - col("n_common") > 0)
-      .withColumn("jaccard", round(col("n_common") /
-        (col("sz_a") + col("sz_b") - col("n_common")).cast("double"), 4))
-      .filter(col("jaccard") >= threshold)
-      .select("doc_a", "doc_b", "jaccard")
+    bigramJaccard(cand, grams, threshold)
   }
 
   /** Resolve near-dup PAIRS into the keep-list every real dedup

@@ -884,14 +884,4 @@ object Multimodal {
     PngStats(mediaId, dec.rawLen, dec.ok, dec.width.toLong,
       dec.height.toLong, rs, gs, bs, edges)
   }
-
-  /** "Resize": renormalize a feature vector to a target dimension by
-    * averaging buckets — the plumbing for a real resample kernel. */
-  def resizeFeatures(features: DataFrame, targetDim: Int): DataFrame =
-    features.withColumn("resized", expr(
-      s"""transform(sequence(0, $targetDim - 1), b ->
-            aggregate(filter(transform(sequence(0, size(features) - 1),
-                i -> struct(i AS i, element_at(features, i + 1) AS v)),
-                s -> s.i % $targetDim = b),
-              cast(0.0 AS float), (acc, s) -> acc + s.v))"""))
 }

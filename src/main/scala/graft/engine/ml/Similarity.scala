@@ -47,7 +47,6 @@ object Similarity {
     * [[graft.engine.expr.CosineSimilarity]] — one fused loop per pair,
     * bit-identical to the HOF-composed form (and the oracle). */
   def bruteForceTopK(emb: DataFrame, probeDf: DataFrame, k: Int): DataFrame = {
-    GraftFunctions.ensureRegistered(emb.sparkSession)
     // NO spreadForCompute here (r15): the cosine work is |emb|×|probes|,
     // and the label-stratified probe sets this entry point serves are
     // tiny, so the repartition exchange cost more than the parallelism
@@ -55,12 +54,18 @@ object Similarity {
     // (r14-verdict item 4). Callers with LARGE probe sets pre-spread the
     // corpus themselves (see batchGroundTruthFor, where the spread
     // measured a win).
-    val scored = emb
-      .crossJoin(broadcast(probeDf))
-      .filter(col("vec_id") =!= col("probe_id"))
+    topKByCos(probeCosines(emb.crossJoin(broadcast(probeDf))), k)
+  }
+
+  /** The scoring step every cosine probe search shares: over rows that
+    * pair a probe `(probe_id, probe_emb)` with a corpus vector
+    * `(vec_id, embedding)`, drop the probe's own vector and emit
+    * `(probe_id, vec_id, cos)` from the native fused cosine. */
+  private def probeCosines(joined: DataFrame): DataFrame = {
+    GraftFunctions.ensureRegistered(joined.sparkSession)
+    joined.filter(col("vec_id") =!= col("probe_id"))
       .select(col("probe_id"), col("vec_id"),
         expr("graft_cosine(probe_emb, embedding)").as("cos"))
-    topKByCos(scored, k)
   }
 
   /** The per-probe ranking tail every cosine top-k path shares: rank
@@ -93,24 +98,6 @@ object Similarity {
     (bucketed, probeCells)
   }
 
-  /** Fit the seeded KMeans coarse quantizer and return its centroids —
-    * shared by [[ivfTopK]] and [[embeddingNearDup]]. At 100 TB the fit
-    * runs once at ingest on a sample and the centroids ship with the
-    * dataset. */
-  /** A coarse quantizer only needs a bounded sample and a few Lloyd
-    * iterations, so the fit runs driver-local on one collected sample
-    * (≤~8192×dim doubles ≈ 4 MB): one Spark job instead of the ~10 an
-    * mllib KMeans fit schedules — measured 2–3 s saved per fitting
-    * query at sf0.1. Seeded k-means++ init keeps it deterministic;
-    * every downstream result is exact-verified against the assigned
-    * cells, so centroid micro-differences only move the recall knob.
-    *
-    * The sample is a deterministic hash-sample on vec_id — NOT
-    * `limit(n)`, which takes whichever partitions answer first: on a
-    * label- or time-clustered 100 TB layout that fits the quantizer to
-    * a skewed slice, and makes the result depend on physical layout. A
-    * hash filter sees every partition uniformly and is invariant to
-    * repartitioning. */
   /** Exact row count for the sample modulus WITHOUT a Spark job when
     * the input is a bare parquet scan: footers carry exact row counts,
     * so the cold fit reads metadata instead of scheduling a job purely
@@ -323,6 +310,25 @@ object Similarity {
       evecs(c)(r) / math.sqrt(math.max(evals(r), 0.0) + eps))
   }
 
+  /** Fit the seeded KMeans coarse quantizer and return its centroids —
+    * shared by [[ivfTopK]] and [[embeddingNearDup]]. At 100 TB the fit
+    * runs once at ingest on a sample and the centroids ship with the
+    * dataset.
+    *
+    * A coarse quantizer only needs a bounded sample and a few Lloyd
+    * iterations, so the fit runs driver-local on one collected sample
+    * (≤~8192×dim doubles ≈ 4 MB): one Spark job instead of the ~10 an
+    * mllib KMeans fit schedules — measured 2–3 s saved per fitting
+    * query at sf0.1. Seeded k-means++ init keeps it deterministic;
+    * every downstream result is exact-verified against the assigned
+    * cells, so centroid micro-differences only move the recall knob.
+    *
+    * The sample is a deterministic hash-sample on vec_id — NOT
+    * `limit(n)`, which takes whichever partitions answer first: on a
+    * label- or time-clustered 100 TB layout that fits the quantizer to
+    * a skewed slice, and makes the result depend on physical layout. A
+    * hash filter sees every partition uniformly and is invariant to
+    * repartitioning. */
   def fitCentroids(emb: DataFrame, nCells: Int,
       seed: Long): Quantizer = {
     val n = exactRowCount(emb)
@@ -481,38 +487,51 @@ object Similarity {
         col("vec_a"), col("vec_b"), round(col("cos"), 6).as("score"))
   }
 
-  private def nearPairScores(emb: DataFrame,
+  /** Directed within-label candidate pairs `(label, vec_a, vec_b)`,
+    * vec_a ≠ vec_b, under the two-regime split of [[embeddingNearDup]]:
+    * all pairs of a label with ≤ `smallLabelMax` vectors, and pairs
+    * sharing one of their `nProbe` nearest quantizer cells in a larger
+    * label. Ids only: shipping embeddings through the candidate join
+    * and dedup would shuffle the vectors repeatedly. A larger label's
+    * pair is emitted once per shared cell. */
+  private def labelCandidates(emb: DataFrame,
       nCells: Int, nProbe: Int, seed: Long,
       smallLabelMax: Int, datasetTag: Option[String]): DataFrame = {
-    GraftFunctions.ensureRegistered(emb.sparkSession)
     val sizes = emb.groupBy("label").agg(count(lit(1)).as("label_n"))
     val tagged = emb.join(broadcast(sizes), Seq("label"))
-    val small = tagged.filter(col("label_n") <= smallLabelMax)
-    val candSmall = small.select(col("label"), col("vec_id").as("vec_a"))
-      .join(small.select(col("label"), col("vec_id").as("vec_b")),
-        Seq("label"))
-      .filter(col("vec_a") < col("vec_b"))
+    def pairs(bucketed: DataFrame, keys: Seq[String]): DataFrame = {
+      def side(id: String) =
+        bucketed.select(keys.map(col) :+ col("vec_id").as(id): _*)
+      side("vec_a").join(side("vec_b"), keys)
+        .filter(col("vec_a") =!= col("vec_b"))
+        .select("label", "vec_a", "vec_b")
+    }
+    val candSmall =
+      pairs(tagged.filter(col("label_n") <= smallLabelMax), Seq("label"))
     // the label-size check is one tiny agg job; it gates the (much
     // more expensive) quantizer fit so the all-small regime never fits
     val anyLarge = sizes.filter(col("label_n") > smallLabelMax)
       .limit(1).count() > 0
-    val cand = (if (!anyLarge) candSmall else {
+    if (!anyLarge) candSmall else {
       val centroids = datasetTag match {
         case Some(tag) => quantizerFor(emb, tag, nCells, seed)
         case None      => fitCentroids(emb, nCells, seed)
       }
       val cellsOf = udf((a: Seq[Float]) => nearestCellsOf(centroids)(a, nProbe))
-      val large = tagged.filter(col("label_n") > smallLabelMax)
-      val bucketed = large.select(col("label"), col("vec_id"),
-        explode(cellsOf(col("embedding"))).as("cell"))
-      val candLarge = bucketed.select(col("label"), col("cell"),
-          col("vec_id").as("vec_a"))
-        .join(bucketed.select(col("label"), col("cell"),
-          col("vec_id").as("vec_b")), Seq("label", "cell"))
-        .filter(col("vec_a") < col("vec_b"))
-        .select("label", "vec_a", "vec_b")
-      candSmall.select("label", "vec_a", "vec_b").union(candLarge)
-    }).select("label", "vec_a", "vec_b")
+      val bucketed = tagged.filter(col("label_n") > smallLabelMax)
+        .select(col("label"), col("vec_id"),
+          explode(cellsOf(col("embedding"))).as("cell"))
+      candSmall.union(pairs(bucketed, Seq("label", "cell")))
+    }
+  }
+
+  private def nearPairScores(emb: DataFrame,
+      nCells: Int, nProbe: Int, seed: Long,
+      smallLabelMax: Int, datasetTag: Option[String]): DataFrame = {
+    GraftFunctions.ensureRegistered(emb.sparkSession)
+    val cand = labelCandidates(emb, nCells, nProbe, seed, smallLabelMax,
+        datasetTag)
+      .filter(col("vec_a") < col("vec_b"))
       // multi-probe re-emits a pair once per shared cell, from
       // DIFFERENT cell partitions — same argument as Dedup
       // .distinctPairs: dedup on a vec_a-only exchange that the verify
@@ -581,13 +600,12 @@ object Similarity {
       nCells: Int = 16, nProbe: Int = 6, seed: Long = 42L): DataFrame =
     ivfTopKWith(emb, probeDf, k, fitCentroids(emb, nCells, seed), nProbe)
 
-  /** Persist fitted quantizer centroids so the fit is a one-time ingest
-    * cost: queries load the tiny (nCells × dim) table and skip fitting.
-    * At 100 TB this is the real deployment shape — the centroids ship
-    * with the dataset like any other index metadata. */
-  /** Persist the full quantizer — whitening rows ride in the same tiny
-    * parquet as the centroids, keyed by negative cell ids (whiten row
-    * j ↦ cell −(j+1)), so the artifact still moves as one file. */
+  /** Persist a fitted quantizer so the fit is a one-time ingest cost:
+    * queries load the tiny (nCells × dim) table and skip fitting. At
+    * 100 TB this is the real deployment shape — the centroids ship with
+    * the dataset like any other index metadata. The whitening rows ride
+    * in the same parquet as the centroids, keyed by negative cell ids
+    * (whiten row j ↦ cell −(j+1)), so the artifact moves as one file. */
   def saveQuantizer(spark: org.apache.spark.sql.SparkSession,
       q: Quantizer, path: String): Unit = {
     import spark.implicits._
@@ -598,44 +616,55 @@ object Similarity {
       .coalesce(1).write.mode("overwrite").parquet(path)
   }
 
+  /** Decoded quantizers, keyed by the content fingerprint of the
+    * stored files: index metadata is decoded once and reused, and a
+    * rewrite at the same path is a new key. */
+  private val quantizerCache = new Memo[String, Quantizer](64)
+
+  /** The quantizer stored at `path` by [[saveQuantizer]]. Listing the
+    * files and reading their footer launches no job; only a first load
+    * of these files runs the decode. */
   def loadQuantizer(spark: org.apache.spark.sql.SparkSession,
       path: String): Quantizer = {
     // the part files themselves, not the directory: a cell index keeps
     // its quantizer at `<index>/_quantizer`, a root Spark would log as
     // a hidden path on every load
-    val rows = graft.engine.io.Storage.readParquet(spark, s"$path/*.parquet")
-      .orderBy("cell").collect()
-      .map(r => (r.getInt(0), r.getSeq[Double](1).toArray))
-    val cells = rows.filter(_._1 >= 0).map(_._2)
-    val whitenRows = rows.filter(_._1 < 0).sortBy(r => -r._1).map(_._2)
-    // Fail FAST on empty/truncated artifacts and on pre-round-12
-    // (whiten-less) ones: since r12 every assignment path normalizes
-    // and whitens inside Quantizer.project, so an old raw-space
-    // quantizer CANNOT be given back its original semantics here — a
-    // silent identity fallback would misassign cells (code-review
-    // r12). Current artifact paths carry a _w1 version suffix, so a
-    // whiten-less load means a truly stale or corrupt path.
-    require(cells.nonEmpty,
-      s"loadQuantizer: no centroid rows in quantizer artifact $path")
-    require(whitenRows.nonEmpty,
-      s"loadQuantizer: $path has no whitening rows — a pre-r12 " +
-        "(raw-space) quantizer artifact cannot be used with the " +
-        "spherical assignment path; refit or rebuild the index")
-    Quantizer(whitenRows, cells)
+    val stored = graft.engine.io.Storage.readParquet(spark, s"$path/*.parquet")
+    quantizerCache.getOrElseUpdate(
+        graft.engine.io.Artifacts.fingerprintOf(stored)) {
+      val rows = stored.orderBy("cell").collect()
+        .map(r => (r.getInt(0), r.getSeq[Double](1).toArray))
+      val cells = rows.filter(_._1 >= 0).map(_._2)
+      val whitenRows = rows.filter(_._1 < 0).sortBy(r => -r._1).map(_._2)
+      // Fail FAST on empty/truncated artifacts and on pre-round-12
+      // (whiten-less) ones: since r12 every assignment path normalizes
+      // and whitens inside Quantizer.project, so an old raw-space
+      // quantizer CANNOT be given back its original semantics here — a
+      // silent identity fallback would misassign cells (code-review
+      // r12). Current artifact paths carry a _w1 version suffix, so a
+      // whiten-less load means a truly stale or corrupt path. A throw
+      // stores nothing in the cache.
+      require(cells.nonEmpty,
+        s"loadQuantizer: no centroid rows in quantizer artifact $path")
+      require(whitenRows.nonEmpty,
+        s"loadQuantizer: $path has no whitening rows — a pre-r12 " +
+          "(raw-space) quantizer artifact cannot be used with the " +
+          "spherical assignment path; refit or rebuild the index")
+      Quantizer(whitenRows, cells)
+    }
   }
-
-  private val quantizerCache = new Memo[String, Quantizer](64)
 
   /** Fit-once semantics for the coarse quantizer, made literal: the
     * first call for a (dataset, nCells, seed) key fits on a hash-sample
     * and persists the centroids under the warehouse via
-    * [[saveQuantizer]]; later calls — in this session (in-memory map)
-    * or any later session (parquet) — load instead of refitting. The
-    * content fingerprint ([[graft.engine.io.Artifacts.fingerprintOf]])
-    * participates in the key so a regenerated dataset at the same path
-    * doesn't silently reuse stale centroids. This is the
-    * 100 TB deployment shape: the quantizer is index metadata fitted at
-    * ingest, shipped with the dataset, loaded by every query. */
+    * [[saveQuantizer]]; later calls — in this session (the decoded
+    * [[loadQuantizer]] cache) or any later session (parquet) — load
+    * instead of refitting. The content fingerprint
+    * ([[graft.engine.io.Artifacts.fingerprintOf]]) participates in the
+    * key so a regenerated dataset at the same path doesn't silently
+    * reuse stale centroids. This is the 100 TB deployment shape: the
+    * quantizer is index metadata fitted at ingest, shipped with the
+    * dataset, loaded by every query. */
   def quantizerFor(emb: DataFrame, datasetTag: String, nCells: Int = 16,
       seed: Long = 42L): Quantizer = {
     val spark = emb.sparkSession
@@ -643,7 +672,7 @@ object Similarity {
       datasetTag, params = Seq(nCells, seed, "w1")) { tmp =>
       saveQuantizer(spark, fitCentroids(emb, nCells, seed), tmp)
     }
-    quantizerCache.getOrElseUpdate(path)(loadQuantizer(spark, path))
+    loadQuantizer(spark, path)
   }
 
   /** [[ivfTopKWith]] against the per-dataset cached/persisted quantizer
@@ -763,7 +792,6 @@ object Similarity {
   def ivfTopKIndexed(spark: org.apache.spark.sql.SparkSession,
       indexPath: String, probeDf: DataFrame, k: Int,
       nProbe: Int = 6): DataFrame = {
-    GraftFunctions.ensureRegistered(spark)
     val centroids = loadQuantizer(spark, s"$indexPath/_quantizer")
     val probeRows = probeDf.select("probe_id", "probe_emb").collect()
       .map(r => (r.getLong(0), r.getSeq[Float](1)))
@@ -779,10 +807,7 @@ object Similarity {
     // (r14 note: spreadForCompute on the pruned-cell read was A/B'd —
     // the probed cells are small enough that the repartition exchange
     // cost more than the cosine parallelism paid; left unspread.)
-    val scored = indexed.join(broadcast(probeCellDf), Seq("cell"))
-      .filter(col("vec_id") =!= col("probe_id"))
-      .select(col("probe_id"), col("vec_id"),
-        expr("graft_cosine(probe_emb, embedding)").as("cos"))
+    val scored = probeCosines(indexed.join(broadcast(probeCellDf), Seq("cell")))
       // a replicated index stores a vector in several cells, and even
       // an unreplicated one can pair (probe, vec) through multiple
       // probed cells — dedup before ranking so a vector never occupies
@@ -832,29 +857,19 @@ object Similarity {
   def ivfTopKBatch(emb: DataFrame, probeDf: DataFrame, k: Int,
       datasetTag: String, nCells: Int = 16, nProbe: Int = 6,
       seed: Long = 42L): DataFrame = {
-    GraftFunctions.ensureRegistered(emb.sparkSession)
     val (bucketed, probeCells) = cellBuckets(emb, probeDf,
       quantizerFor(emb, datasetTag, nCells, seed), nProbe)
-    val scored = bucketed.hint("shuffle_hash")
-      .join(probeCells, Seq("cell"))
-      .filter(col("vec_id") =!= col("probe_id"))
-      .select(col("probe_id"), col("vec_id"),
-        expr("graft_cosine(probe_emb, embedding)").as("cos"))
-    topKByCos(scored, k)
+    topKByCos(probeCosines(
+      bucketed.hint("shuffle_hash").join(probeCells, Seq("cell"))), k)
   }
 
   /** IVF search against an already-fitted quantizer (see
     * [[saveQuantizer]]/[[loadQuantizer]]). */
   def ivfTopKWith(emb: DataFrame, probeDf: DataFrame, k: Int,
       centroids: Quantizer, nProbe: Int = 6): DataFrame = {
-    GraftFunctions.ensureRegistered(emb.sparkSession)
     val (bucketed, probeCells) =
       cellBuckets(emb, probeDf, centroids, nProbe)
-    val scored = bucketed.join(broadcast(probeCells), "cell")
-      .filter(col("vec_id") =!= col("probe_id"))
-      .select(col("probe_id"), col("vec_id"),
-        expr("graft_cosine(probe_emb, embedding)").as("cos"))
-    topKByCos(scored, k)
+    topKByCos(probeCosines(bucketed.join(broadcast(probeCells), "cell")), k)
   }
 
   /** TWO-TIER search — the production recall/cost shape: a cheap
@@ -875,7 +890,6 @@ object Similarity {
   def ivfTopKRerank(emb: DataFrame, probeDf: DataFrame, k: Int,
       datasetTag: String, nCells: Int = 16, nProbe: Int = 14,
       m: Int = 20, seed: Long = 42L): DataFrame = {
-    GraftFunctions.ensureRegistered(emb.sparkSession)
     val centroids = quantizerFor(emb, datasetTag, nCells, seed)
     val cellOf = udf((a: Seq[Float]) => nearestCellsOf(centroids)(a, 1).head)
     val cellsOf = udf((a: Seq[Float]) => nearestCellsOf(centroids)(a, nProbe))
@@ -910,9 +924,7 @@ object Similarity {
       .join(emb.select(col("vec_id"), col("embedding")), Seq("vec_id"))
       .join(broadcast(probeDf.select(col("probe_id"), col("probe_emb"))),
         Seq("probe_id"))
-      .select(col("probe_id"), col("vec_id"),
-        expr("graft_cosine(probe_emb, embedding)").as("cos"))
-    topKByCos(rescored, k)
+    topKByCos(probeCosines(rescored), k)
   }
 
   /** LSM compaction for the cell-partitioned index, THRESHOLD-DRIVEN:
@@ -1051,34 +1063,10 @@ object Similarity {
       seed: Long = 42L, smallLabelMax: Int = 4096,
       datasetTag: Option[String] = None): DataFrame = {
     GraftFunctions.ensureRegistered(emb.sparkSession)
-    val sizes = emb.groupBy("label").agg(count(lit(1)).as("label_n"))
-    val tagged = emb.join(broadcast(sizes), Seq("label"))
-    val small = tagged.filter(col("label_n") <= smallLabelMax)
-    // ids only until after dedup — shipping embeddings through the
-    // candidate join/distinct would shuffle the vectors repeatedly
-    val smallIds = small.select(col("label"), col("vec_id"))
-      .join(small.select(col("label"), col("vec_id").as("nbr_id")),
-        Seq("label"))
-      .filter(col("vec_id") =!= col("nbr_id"))
-      .select("vec_id", "nbr_id")
-    val anyLarge = sizes.filter(col("label_n") > smallLabelMax)
-      .limit(1).count() > 0
-    val cand = (if (!anyLarge) smallIds else {
-      val centroids = datasetTag match {
-        case Some(tag) => quantizerFor(emb, tag, nCells, seed)
-        case None      => fitCentroids(emb, nCells, seed)
-      }
-      val cellsOf = udf((a: Seq[Float]) => nearestCellsOf(centroids)(a, nProbe))
-      val large = tagged.filter(col("label_n") > smallLabelMax)
-      val bucketed = large.select(col("label"), col("vec_id"),
-        explode(cellsOf(col("embedding"))).as("cell"))
-      val largeIds = bucketed
-        .join(bucketed.select(col("label"), col("cell"),
-          col("vec_id").as("nbr_id")), Seq("label", "cell"))
-        .filter(col("vec_id") =!= col("nbr_id"))
-        .select("vec_id", "nbr_id")
-      smallIds.union(largeIds)
-    }).distinct()
+    val cand = labelCandidates(emb, nCells, nProbe, seed, smallLabelMax,
+        datasetTag)
+      .select(col("vec_a").as("vec_id"), col("vec_b").as("nbr_id"))
+      .distinct()
     val scored = cand
       .join(emb.select(col("vec_id"), col("embedding")), Seq("vec_id"))
       .join(emb.select(col("vec_id").as("nbr_id"),

@@ -31,6 +31,26 @@ object Text {
       .otherwise(typedLit(Array.empty[String]))
   }
 
+  /** Add every word n-gram of `ws` (words joined by one space) to
+    * `into`: one StringBuilder sweep, the JIT-compiled inner loop of
+    * [[explodedNgrams]] and [[repetitionProfile]]. */
+  private def addNgrams(ws: Array[String], n: Int,
+      into: java.util.Set[String]): Unit = {
+    val sb = new java.lang.StringBuilder
+    var i = 0
+    while (i <= ws.length - n) {
+      sb.setLength(0)
+      var j = 0
+      while (j < n) {
+        if (j > 0) sb.append(' ')
+        sb.append(ws(i + j))
+        j += 1
+      }
+      into.add(sb.toString)
+      i += 1
+    }
+  }
+
   /** One (doc_id, gram) row per DISTINCT word n-gram of each document —
     * the exploded form [[decontaminate]] joins on. Typed mapPartitions
     * hot loop rather than explode(wordNgrams(...)): the HOF lambda
@@ -48,19 +68,7 @@ object Text {
           if (ws.length < n) Iterator.empty
           else {
             val seen = new java.util.LinkedHashSet[String]()
-            val sb = new java.lang.StringBuilder
-            var i = 0
-            while (i <= ws.length - n) {
-              sb.setLength(0)
-              var j = 0
-              while (j < n) {
-                if (j > 0) sb.append(' ')
-                sb.append(ws(i + j))
-                j += 1
-              }
-              seen.add(sb.toString)
-              i += 1
-            }
+            addNgrams(ws, n, seen)
             scala.jdk.CollectionConverters.IteratorHasAsScala(
               seen.iterator()).asScala.map(g => (id, g))
           }
@@ -87,22 +95,8 @@ object Text {
           if (ws.length < n) (id, 0L, 0L)
           else {
             val seen = new java.util.HashSet[String]()
-            val sb = new java.lang.StringBuilder
-            var total = 0L
-            var i = 0
-            while (i <= ws.length - n) {
-              sb.setLength(0)
-              var j = 0
-              while (j < n) {
-                if (j > 0) sb.append(' ')
-                sb.append(ws(i + j))
-                j += 1
-              }
-              seen.add(sb.toString)
-              total += 1
-              i += 1
-            }
-            (id, total, seen.size.toLong)
+            addNgrams(ws, n, seen)
+            (id, (ws.length - n + 1).toLong, seen.size.toLong)
           }
         }
       }.toDF("doc_id", "n_grams", "n_distinct")

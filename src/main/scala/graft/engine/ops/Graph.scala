@@ -83,28 +83,6 @@ object Graph {
     ranks
   }
 
-  /** SYNCHRONOUS label propagation (fixed round count) — community
-    * detection by majority vote: each round every node adopts the most
-    * frequent label among its neighbours, ties broken by the SMALLEST
-    * label (a total order, so the rounds are deterministic and an
-    * external engine replays them exactly — the async/random-order
-    * variant converges faster but is unreproducible, which disqualifies
-    * it here). Labels initialize to the node id. On the undirected
-    * projections we feed it, every node has ≥1 neighbour, so the
-    * majority vote covers the full node set each round.
-    *
-    * Scale shape: per round ONE join of the static edge relation with
-    * the (node, label) frontier + one count aggregate + one rank
-    * window — all shuffled on node ids; no driver-side state, same
-    * discipline as [[pageRank]]. Fixed rounds (not convergence
-    * detection) keep the plan linear in rounds.
-    *
-    * Feed the edge relation through [[bipartiteEdgesFor]] (or another
-    * persisted artifact): each round references it once, so an
-    * unstaged derivation would recompute its fact scan per round. */
-  def labelPropagation(edges: DataFrame, iterations: Int): DataFrame =
-    labelPropagationImpl(edges, iterations)
-
   /** Persisted directed both-ways bipartite edge list — the iterative
     * consumers (label propagation, modularity) reference the edge
     * relation once per round, so re-deriving it from the fact scan
@@ -127,7 +105,7 @@ object Graph {
   def labelPropagationFor(edges: DataFrame, iterations: Int,
       datasetTag: String): DataFrame = {
     Artifacts.table(edges, "graft_graph_labels", datasetTag,
-      params = Seq(s"r$iterations"))(labelPropagationImpl(edges, iterations))
+      params = Seq(s"r$iterations"))(labelPropagation(edges, iterations))
   }
 
   /** Persisted single-seed personalized PageRank — the fit-once form
@@ -176,7 +154,26 @@ object Graph {
     }
   }
 
-  private def labelPropagationImpl(edges: DataFrame,
+  /** SYNCHRONOUS label propagation (fixed round count) — community
+    * detection by majority vote: each round every node adopts the most
+    * frequent label among its neighbours, ties broken by the SMALLEST
+    * label (a total order, so the rounds are deterministic and an
+    * external engine replays them exactly — the async/random-order
+    * variant converges faster but is unreproducible, which disqualifies
+    * it here). Labels initialize to the node id. On the undirected
+    * projections we feed it, every node has ≥1 neighbour, so the
+    * majority vote covers the full node set each round.
+    *
+    * Scale shape: per round ONE join of the static edge relation with
+    * the (node, label) frontier + one count aggregate + one rank
+    * window — all shuffled on node ids; no driver-side state, same
+    * discipline as [[pageRank]]. Fixed rounds (not convergence
+    * detection) keep the plan linear in rounds.
+    *
+    * Feed the edge relation through [[bipartiteEdgesFor]] (or another
+    * persisted artifact): each round references it once, so an
+    * unstaged derivation would recompute its fact scan per round. */
+  private def labelPropagation(edges: DataFrame,
       iterations: Int): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     var labels = edges.select(col("src").as("node")).distinct()

@@ -109,7 +109,15 @@ object EventOps {
         c("user_id").as("user_id"))
   }
 
-  case class UserState(n: Long, lastT: Long, lastId: Long, lastType: String)
+  case class UserState(n: Long, lastT: Long, lastId: Long, lastType: String) {
+    /** This state after `rows` `(user_id, event_id, event_type, t)`:
+      * each counts, and the latest by (t, event_id) sets the type. */
+    def fold(rows: Iterator[(Long, Long, String, Long)]): UserState =
+      rows.foldLeft(this) { case (st, (_, id, tpe, t)) =>
+        val isLater = t > st.lastT || (t == st.lastT && id > st.lastId)
+        if (isLater) UserState(st.n + 1, t, id, tpe) else st.copy(n = st.n + 1)
+      }
+  }
   case class UserAgg(user_id: Long, n_events: Long, last_type: String)
 
   /** Per-user state machine for [[statefulUserAggTws]]: fold each batch
@@ -128,16 +136,8 @@ object EventOps {
     override def handleInputRows(key: Long,
         rows: Iterator[(Long, Long, String, Long)],
         timerValues: TimerValues): Iterator[UserAgg] = {
-      var st =
-        if (state.exists()) state.get()
-        else UserState(0L, Long.MinValue, Long.MinValue, "")
-      rows.foreach { case (_, id, tpe, t) =>
-        val isLater = t > st.lastT || (t == st.lastT && id > st.lastId)
-        st = UserState(st.n + 1,
-          if (isLater) t else st.lastT,
-          if (isLater) id else st.lastId,
-          if (isLater) tpe else st.lastType)
-      }
+      val st = (if (state.exists()) state.get()
+        else UserState(0L, Long.MinValue, Long.MinValue, "")).fold(rows)
       state.update(st)
       Iterator.single(UserAgg(key, st.n, st.lastType))
     }
@@ -358,15 +358,8 @@ object EventOps {
       .flatMapGroupsWithState[UserState, UserAgg](
         OutputMode.Update(), GroupStateTimeout.NoTimeout()) {
         case (user, rows, state: GroupState[UserState]) =>
-          var st = state.getOption.getOrElse(UserState(0L, Long.MinValue,
-            Long.MinValue, ""))
-          rows.foreach { case (_, id, tpe, t) =>
-            val isLater = t > st.lastT || (t == st.lastT && id > st.lastId)
-            st = UserState(st.n + 1,
-              if (isLater) t else st.lastT,
-              if (isLater) id else st.lastId,
-              if (isLater) tpe else st.lastType)
-          }
+          val st = state.getOption.getOrElse(UserState(0L, Long.MinValue,
+            Long.MinValue, "")).fold(rows)
           state.update(st)
           Iterator.single(UserAgg(user, st.n, st.lastType))
       }

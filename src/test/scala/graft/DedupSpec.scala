@@ -97,66 +97,6 @@ class DedupSpec extends AnyFunSuite with SparkFixture {
     asMap.values.foreach(j => assert(j >= 0.5 && j <= 1.0))
   }
 
-  test("freq-ordered prefixes: same exact pairs, no larger candidate set") {
-    val (corpus, _, _) = planted(10)
-    val byFreq = Dedup.ngramJaccardPairs(corpus, 0.5, freqOrdered = true)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val byHash = Dedup.ngramJaccardPairs(corpus, 0.5, freqOrdered = false)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(byFreq === byHash) // exactness is ordering-invariant
-    // the df-ordered inverted index is never denser than the hash order
-    val spark2 = spark
-    import spark2.implicits._
-    val grams = corpus.select(col("doc_id"), col("lang"), col("source"),
-      col("text")).as[(Long, String, String, String)]
-      .map { case (id, lang, src, text) =>
-        val bs = text.split(' ').sliding(2).filter(_.length == 2)
-          .map(_.mkString(" ")).toSeq.distinct.sorted
-        (id, lang, src, bs.map(b => b.hashCode.toLong).sorted.toArray)
-      }.toDF("doc_id", "lang", "source", "g")
-    val nFreq = Dedup.ngramCandidates(grams, 0.5, freqOrdered = true,
-      maxBucket = 10000).count()
-    val nHash = Dedup.ngramCandidates(grams, 0.5, freqOrdered = false,
-      maxBucket = 10000).count()
-    assert(nFreq <= nHash, s"freq-ordered candidates $nFreq > hash $nHash")
-  }
-
-  test("freq-ordered prefixes beat hash order on a Zipfian corpus") {
-    // the shipped testdata is near-uniform (hash ≈ freq, measured);
-    // real text is Zipfian — a few stopword bigrams dominate df. Build
-    // such a corpus: every doc shares a stopword backbone, rare tail
-    // tokens differ. Under hash order stopword bigrams land in
-    // prefixes and explode the inverted index; under df order the
-    // prefix is the rare tail.
-    val spark2 = spark
-    import spark2.implicits._
-    val rnd = new scala.util.Random(7)
-    val docs = (0 until 300).map { i =>
-      val rare = Seq.fill(6)(s"tail${rnd.nextInt(5000)}")
-      val common = Seq.fill(24)(s"the of and to in it".split(' ')(
-        rnd.nextInt(6)))
-      (i.toLong, rnd.shuffle(common ++ rare).mkString(" "), "en", "web")
-    }.toDF("doc_id", "text", "lang", "source")
-    def gramsOf(d: org.apache.spark.sql.DataFrame) =
-      d.select(col("doc_id"), col("lang"), col("source"), col("text"))
-        .as[(Long, String, String, String)]
-        .map { case (id, lang, src, text) =>
-          val bs = text.split(' ').sliding(2).map(_.mkString(" "))
-            .toSeq.distinct
-          (id, lang, src,
-            bs.map(b => b.hashCode.toLong).distinct.sorted.toArray)
-        }.toDF("doc_id", "lang", "source", "g")
-    val g = gramsOf(docs).cache()
-    val nFreq = Dedup.ngramCandidates(g, 0.6, freqOrdered = true,
-      maxBucket = 1000000).count()
-    val nHash = Dedup.ngramCandidates(g, 0.6, freqOrdered = false,
-      maxBucket = 1000000).count()
-    assert(nFreq < nHash,
-      s"df order should prune candidates on Zipfian data: $nFreq vs $nHash")
-    g.unpersist()
-    Dedup.unpersistTracked()
-  }
-
   test("hot-bucket cap bounds a degenerate corpus and counts the drops") {
     // 1200 near-identical one-sentence docs: every band hash and every
     // prefix token lands in one giant bucket — uncapped this is a

@@ -251,6 +251,19 @@ class SimilaritySpec extends AnyFunSuite with SparkFixture {
       assert(a.toSeq === b.toSeq) }
   }
 
+  test("loadQuantizer decodes stored files once; a rewrite decodes again") {
+    val path = s"${sys.props("java.io.tmpdir")}/graft_test/qload_${System.nanoTime()}"
+    Similarity.saveQuantizer(spark, Similarity.fitCentroids(emb, 8, 3L), path)
+    val (first, _) = jobsOf(Similarity.loadQuantizer(spark, path))
+    assert(first.cells.length === 8)
+    val (again, jobs) = jobsOf(Similarity.loadQuantizer(spark, path))
+    assert(jobs === 0, s"a second load of one path launched $jobs jobs")
+    assert(again eq first)
+    // a refit with another cell count, saved at the same path
+    Similarity.saveQuantizer(spark, Similarity.fitCentroids(emb, 4, 3L), path)
+    assert(Similarity.loadQuantizer(spark, path).cells.length === 4)
+  }
+
   test("cell-partitioned IVF index ≡ the scan-and-filter IVF path") {
     val tag = s"idxtest_${System.nanoTime()}"
     val probes = Similarity.probes(emb)
