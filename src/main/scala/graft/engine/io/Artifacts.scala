@@ -1,7 +1,6 @@
 package graft.engine.io
 
 import graft.engine.Memo
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.execution.datasources.{CatalogFileIndex,
@@ -150,19 +149,17 @@ object Artifacts {
     * propagates. */
   private def ensure(spark: SparkSession, path: String)(
       build: String => Unit): String = {
-    val target = new Path(path)
-    val fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(new Path(path, "_SUCCESS"))) {
-      val tmp = new Path(
-        path + ".tmp-" + java.util.UUID.randomUUID.toString.take(8))
+    def done = Storage.exists(spark, s"$path/_SUCCESS")
+    if (!done) {
+      val tmp = path + ".tmp-" + java.util.UUID.randomUUID.toString.take(8)
       try {
-        build(tmp.toString)
-        fs.create(new Path(tmp, "_SUCCESS"), true).close()
-      } catch { case t: Throwable => fs.delete(tmp, true); throw t }
+        build(tmp)
+        Storage.writeString(spark, s"$tmp/_SUCCESS", "")
+      } catch { case t: Throwable => Storage.deleteFolder(spark, tmp); throw t }
       // re-check: Hadoop rename onto an existing directory would nest
       // tmp inside it — if another session won the race, just discard
-      if (fs.exists(new Path(path, "_SUCCESS")) || !fs.rename(tmp, target))
-        fs.delete(tmp, true)
+      if (done || !Storage.moveFolder(spark, tmp, path))
+        Storage.deleteFolder(spark, tmp)
     }
     path
   }

@@ -1,6 +1,5 @@
 package graft.engine.io
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import java.nio.file.{Files, Paths, StandardCopyOption}
@@ -51,11 +50,10 @@ object CommitLog {
 
   private def commitsDir(root: String) = s"$root/_commits"
 
-  private def fs(spark: SparkSession, p: String) =
-    new Path(p).getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-  def init(spark: SparkSession, root: String): Unit =
-    fs(spark, root).mkdirs(new Path(commitsDir(root)))
+  def init(spark: SparkSession, root: String): Unit = {
+    val (f, dir) = Storage.fs(spark, commitsDir(root))
+    f.mkdirs(dir)
+  }
 
   private def parse(line: String): Commit = {
     // single-line record "version|baseVersion|action|dataDir" — fields
@@ -68,8 +66,7 @@ object CommitLog {
   /** All committed versions, ascending. One driver-side listing of the
     * _commits dir — no data pass. */
   def commits(spark: SparkSession, root: String): Seq[Commit] = {
-    val dir = new Path(commitsDir(root))
-    val f = fs(spark, root)
+    val (f, dir) = Storage.fs(spark, commitsDir(root))
     if (!f.exists(dir)) return Seq.empty
     f.listStatus(dir).map(_.getPath)
       .filter(p => p.getName.startsWith("v") && p.getName.endsWith(".json"))
@@ -90,8 +87,7 @@ object CommitLog {
     * staging dir behind: it is deleted before the failure propagates. */
   def commit(spark: SparkSession, root: String, action: String)(
       stage: (String, Int) => Unit): Commit = {
-    val f = fs(spark, root)
-    def discard(rel: String): Unit = f.delete(new Path(s"$root/$rel"), true)
+    def discard(rel: String): Unit = Storage.deleteFolder(spark, s"$root/$rel")
     claimNext(spark, root, "commit on") { base =>
       val rel = "data/" + java.util.UUID.randomUUID().toString.take(12)
       try stage(s"$root/$rel", base)
@@ -303,11 +299,10 @@ object CommitLog {
   def vacuum(spark: SparkSession, root: String, keep: Int,
       orphanGraceMs: Long = 3600000L): Seq[Int] = {
     val all = commits(spark, root)
-    val f = fs(spark, root)
     val expired = all.dropRight(keep)
     val kept = all.takeRight(keep).map(_.dataDir.stripPrefix("data/")).toSet
     val committed = all.map(_.dataDir.stripPrefix("data/")).toSet
-    val dataRoot = new Path(s"$root/data")
+    val (f, dataRoot) = Storage.fs(spark, s"$root/data")
     if (f.exists(dataRoot)) {
       val cutoff = System.currentTimeMillis() - orphanGraceMs
       f.listStatus(dataRoot).foreach { st =>

@@ -7,6 +7,7 @@ import org.apache.hadoop.fs.{FileSystem, FileUtil, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.parquet.format.converter.ParquetMetadataConverter
 import org.apache.parquet.hadoop.Footer
+import org.apache.parquet.hadoop.metadata.ParquetMetadata
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation,
   LogicalRelation, PartitioningAwareFileIndex}
@@ -21,13 +22,15 @@ import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
   * this harness and `s3a://`/`hdfs://` on a cluster — the scheme is
   * resolved per-path, so no S3 SDK coupling.
   *
-  * It also owns the engine's parquet reads ([[readParquet]]), which
-  * read their schema from one footer on the driver and keep nothing
-  * between calls.
+  * It is the one owner of the Hadoop `FileSystem` and of parquet-mr:
+  * code outside `graft.engine.io` lists, copies, moves, deletes, writes
+  * and reads footers through these verbs. It also owns the engine's
+  * parquet reads ([[readParquet]]), which read their schema from one
+  * footer on the driver and keep nothing between calls.
   */
 object Storage {
 
-  private def fs(spark: SparkSession, path: String): (FileSystem, Path) = {
+  private[io] def fs(spark: SparkSession, path: String): (FileSystem, Path) = {
     val p = new Path(path)
     (p.getFileSystem(conf(spark)), p)
   }
@@ -66,6 +69,12 @@ object Storage {
     FileUtil.copy(fsSrc, pSrc, fsDst, pDst, false, true, conf(spark))
   }
 
+  /** Rename a folder (or file) tree to `dst`; true if it moved. */
+  def moveFolder(spark: SparkSession, src: String, dst: String): Boolean = {
+    val (f, p) = fs(spark, src)
+    f.rename(p, new Path(dst))
+  }
+
   /** Recursive delete; returns true if anything was removed. */
   def deleteFolder(spark: SparkSession, path: String): Boolean = {
     val (f, p) = fs(spark, path)
@@ -86,6 +95,12 @@ object Storage {
       StandardCharsets.UTF_8)
     finally in.close()
   }
+
+  /** The full footer of one parquet `file`, row groups included. */
+  def footer(spark: SparkSession, file: String): ParquetMetadata =
+    ParquetFooterReader.readFooter(
+      HadoopInputFile.fromPath(new Path(file), conf(spark)),
+      ParquetMetadataConverter.NO_FILTER)
 
   /** `spark.read.parquet(path)` without the schema-inference job, and
     * with no state kept between calls: the frame [[footerRead]] builds

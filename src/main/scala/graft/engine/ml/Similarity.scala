@@ -2,9 +2,10 @@ package graft.engine.ml
 
 import graft.engine.Memo
 import graft.engine.expr.GraftFunctions
+import graft.engine.io.Storage
 import org.apache.spark.ml.feature.BucketedRandomProjectionLSH
 import org.apache.spark.ml.linalg.{Vector, Vectors}
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -121,13 +122,9 @@ object Similarity {
     val files = df.inputFiles
     if (bareScan(df.queryExecution.optimizedPlan) && files.nonEmpty &&
         files.length <= 1024 && files.forall(_.endsWith(".parquet"))) {
-      val conf = df.sparkSession.sparkContext.hadoopConfiguration
-      try files.map { f =>
-        val in = org.apache.parquet.hadoop.util.HadoopInputFile
-          .fromPath(new org.apache.hadoop.fs.Path(f), conf)
-        val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-        try r.getRecordCount finally r.close()
-      }.sum
+      import scala.jdk.CollectionConverters._
+      try files.map(f => Storage.footer(df.sparkSession, f).getBlocks.asScala
+        .map(_.getRowCount).sum).sum
       catch { case scala.util.control.NonFatal(_) => df.count() }
     } else df.count()
   }
@@ -624,12 +621,15 @@ object Similarity {
   /** The quantizer stored at `path` by [[saveQuantizer]]. Listing the
     * files and reading their footer launches no job; only a first load
     * of these files runs the decode. */
-  def loadQuantizer(spark: org.apache.spark.sql.SparkSession,
-      path: String): Quantizer = {
-    // the part files themselves, not the directory: a cell index keeps
+  def loadQuantizer(spark: SparkSession, path: String): Quantizer = {
+    // the one part file itself, not the directory (a cell index keeps
     // its quantizer at `<index>/_quantizer`, a root Spark would log as
-    // a hidden path on every load
-    val stored = graft.engine.io.Storage.readParquet(spark, s"$path/*.parquet")
+    // hidden) nor a glob (Spark would log that it names no metadata
+    // directory)
+    val parts = Storage.listFiles(spark, path).filter(_.endsWith(".parquet"))
+    require(parts.size == 1, s"loadQuantizer: expected one parquet part " +
+      s"file in quantizer artifact $path, found ${parts.size}")
+    val stored = Storage.readParquet(spark, parts.head)
     quantizerCache.getOrElseUpdate(
         graft.engine.io.Artifacts.fingerprintOf(stored)) {
       val rows = stored.orderBy("cell").collect()
@@ -802,7 +802,7 @@ object Similarity {
     import spark.implicits._
     val probeCellDf = probeCells.toSeq.toDF("probe_id", "cell")
       .join(probeDf.select(col("probe_id"), col("probe_emb")), Seq("probe_id"))
-    val indexed = graft.engine.io.Storage.readParquet(spark, indexPath)
+    val indexed = Storage.readParquet(spark, indexPath)
       .filter(col("cell").isin(allCells: _*)) // prunes partitions
     // (r14 note: spreadForCompute on the pruned-cell read was A/B'd —
     // the probed cells are small enough that the repartition exchange
@@ -940,50 +940,44 @@ object Similarity {
     * rows land in one task → one file), and appends next to the
     * copied cold cells; the stored quantizer travels with the index.
     * Returns (filesBefore, filesAfter) summed over cell dirs. */
-  def compactCellIndex(spark: org.apache.spark.sql.SparkSession,
-      indexPath: String, targetPath: String,
-      segmentThreshold: Int = 1): (Long, Long) = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val root = new org.apache.hadoop.fs.Path(indexPath)
-    val fs = root.getFileSystem(conf)
-    def cellDirs(p: String) =
-      fs.listStatus(new org.apache.hadoop.fs.Path(p))
-        .filter(s => s.isDirectory && s.getPath.getName.startsWith("cell="))
-    def segments(c: org.apache.hadoop.fs.FileStatus) =
-      fs.listStatus(c.getPath)
-        .count(f => f.getPath.getName.endsWith(".parquet"))
-    def countFiles(p: String): Long =
-      cellDirs(p).map(segments(_).toLong).sum
-    val before = countFiles(indexPath)
-    val (hot, cold) = cellDirs(indexPath)
-      .partition(segments(_) > segmentThreshold)
+  def compactCellIndex(spark: SparkSession, indexPath: String,
+      targetPath: String, segmentThreshold: Int = 1): (Long, Long) = {
+    val cells = cellSegments(spark, indexPath)
+    val (hot, cold) = cells.partition(_._2 > segmentThreshold)
     // Re-entrancy contract: the target must be absent/empty. Without
     // this, a second invocation appends hot-cell rewrites next to the
     // previous compaction's files (duplicating rows), and an
     // interrupted Artifacts.fitOnce rename could nest a tmp dir inside
     // a half-built index.
-    val target = new org.apache.hadoop.fs.Path(targetPath)
-    require(!fs.exists(target) || fs.listStatus(target).isEmpty,
+    require(Storage.listFolder(spark, targetPath).isEmpty,
       s"compactCellIndex target must be empty: $targetPath")
-    fs.mkdirs(target)
-    cold.foreach { c =>
-      org.apache.hadoop.fs.FileUtil.copy(fs, c.getPath, fs,
-        new org.apache.hadoop.fs.Path(targetPath, c.getPath.getName),
-        false, conf)
+    cold.foreach { case (dir, _) =>
+      Storage.copyFolder(spark, dir,
+        s"$targetPath/${dir.substring(dir.lastIndexOf('/') + 1)}")
     }
     if (hot.nonEmpty) {
       spark.read.option("basePath", indexPath)
-        .parquet(hot.map(_.getPath.toString).toIndexedSeq: _*)
+        .parquet(hot.map(_._1): _*)
         .repartition(col("cell"))
         .write.mode("append").partitionBy("cell").parquet(targetPath)
     }
     // the quantizer travels with the index artifact
-    org.apache.hadoop.fs.FileUtil.copy(fs,
-      new org.apache.hadoop.fs.Path(s"$indexPath/_quantizer"), fs,
-      new org.apache.hadoop.fs.Path(s"$targetPath/_quantizer"),
-      false, conf)
-    (before, countFiles(targetPath))
+    Storage.copyFolder(spark, s"$indexPath/_quantizer",
+      s"$targetPath/_quantizer")
+    def total(cs: Seq[(String, Int)]) = cs.map(_._2.toLong).sum
+    (total(cells), total(cellSegments(spark, targetPath)))
   }
+
+  /** The layout of the cell index at `indexPath`: each `cell=`
+    * directory holding `.parquet` segments, with its segment count,
+    * sorted by path. */
+  private[graft] def cellSegments(spark: SparkSession,
+      indexPath: String): Seq[(String, Int)] =
+    Storage.listFiles(spark, indexPath).filter(_.endsWith(".parquet"))
+      .map(f => f.substring(0, f.lastIndexOf('/')))
+      .filter(d => d.substring(d.lastIndexOf('/') + 1).startsWith("cell="))
+      .groupBy(identity).map { case (d, fs) => (d, fs.size) }
+      .toSeq.sortBy(_._1)
 
   /** Exact top-k EUCLIDEAN neighbours per probe — the ground truth for
     * auditing distance-ranked ANN (LSH); [[bruteForceTopK]] is the

@@ -1,5 +1,6 @@
 package graft.engine.stream
 
+import graft.engine.io.Storage
 import org.apache.spark.sql.{DataFrame, Dataset, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
@@ -51,12 +52,10 @@ object Sinks {
     val spark = batch.sparkSession
     val withBucket = batch.select(Cols.map(col): _*)
       .withColumn("bucket", pmod(hash(col("user_id")), lit(nBuckets)))
-    val root = new org.apache.hadoop.fs.Path(targetDir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     // the dynamic-overwrite committer writes no root _SUCCESS marker —
     // presence of any bucket directory is the existence signal
-    val targetExists = fs.exists(root) &&
-      fs.listStatus(root).exists(_.getPath.getName.startsWith("bucket="))
+    val targetExists = Storage.listFolder(spark, targetDir)
+      .exists(p => p.substring(p.lastIndexOf('/') + 1).startsWith("bucket="))
     if (!targetExists) write(latestPerKey(withBucket), targetDir)
     else {
       // cached because it feeds TWO jobs — the touched-bucket probe and
@@ -68,7 +67,7 @@ object Sinks {
       try {
         val touched = cached.select("bucket").distinct()
           .collect().map(_.getInt(0)) // ≤ nBuckets driver-side ints
-        val existing = graft.engine.io.Storage.readParquet(spark, targetDir)
+        val existing = Storage.readParquet(spark, targetDir)
           .filter(col("bucket").isin(touched.map(Integer.valueOf): _*))
         write(latestPerKey(existing.unionByName(cached)), targetDir)
       } finally cached.unpersist()
@@ -143,6 +142,6 @@ object Sinks {
       upsertBatch(base.filter(pmod(col("event_id"), lit(nChunks)) === i),
         targetDir, nBuckets)
     } finally base.unpersist()
-    graft.engine.io.Storage.readParquet(spark, targetDir).drop("bucket")
+    Storage.readParquet(spark, targetDir).drop("bucket")
   }
 }

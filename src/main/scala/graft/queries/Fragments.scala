@@ -871,9 +871,7 @@ private[queries] object Fragments {
   def commitLogChain(s: SparkSession, d: String, name: String): String = {
     import graft.engine.io.CommitLog
     val root = IoQueries.scratch(d, name)
-    val fs = new org.apache.hadoop.fs.Path(root)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(root), true)
+    graft.engine.io.Storage.deleteFolder(s, root)
     CommitLog.init(s, root)
     val v1 = orders(s, d).filter(col("o_orderkey") % 2 === 0)
       .select(col("o_orderkey").as("k"), col("o_totalprice").as("v"))

@@ -28,6 +28,12 @@ object IoQueries {
     s"${sys.props("java.io.tmpdir")}/graft_io/p${pid}_${tag}_$name"
   }
 
+  /** The names of a folder's entries, sorted: the last path segment of
+    * each [[Storage.listFolder]] path. */
+  private def entryNames(s: org.apache.spark.sql.SparkSession,
+      dir: String): Seq[String] =
+    Storage.listFolder(s, dir).map(p => p.substring(p.lastIndexOf('/') + 1))
+
   /** The maintain_cluster_rewrite pre-write relation, split out so
     * PlanSpec can pin its physical shape: z-value per row, shard from
     * the bounded zval-histogram cumulative (the only unpartitioned
@@ -226,13 +232,10 @@ object IoQueries {
         val out = scratch(d, "binfiles")
         val rows = documents(s, d).filter(col("doc_id") < 40)
           .select("doc_id", "text").collect() // bounded: 40 small files
-        val dir = new org.apache.hadoop.fs.Path(out)
-        val fs = dir.getFileSystem(s.sparkContext.hadoopConfiguration)
-        fs.delete(dir, true); fs.mkdirs(dir)
+        Storage.deleteFolder(s, out)
         rows.foreach { r =>
-          val p = new org.apache.hadoop.fs.Path(dir, f"${r.getLong(0)}%06d.bin")
-          val os = fs.create(p, true)
-          os.write(r.getString(1).getBytes("UTF-8")); os.close()
+          Storage.writeString(s, f"$out/${r.getLong(0)}%06d.bin",
+            r.getString(1))
         }
         s.read.format("binaryFile").load(out)
           .select(
@@ -390,12 +393,9 @@ object IoQueries {
         orders(s, d).withColumn("y", year(col("o_orderdate")))
           .select("o_orderkey", "o_totalprice", "y")
           .write.mode("overwrite").partitionBy("y").parquet(out)
-        val root = new org.apache.hadoop.fs.Path(out)
-        val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration)
-        fs.listStatus(root).foreach { st =>
-          val name = st.getPath.getName
+        entryNames(s, out).foreach { name =>
           if (name.startsWith("y=") && name.drop(2).toInt < 1997)
-            fs.delete(st.getPath, true)
+            Storage.deleteFolder(s, s"$out/$name")
         }
         Storage.readParquet(s, out)
           .select(col("o_orderkey"), col("o_totalprice"),
@@ -425,15 +425,11 @@ object IoQueries {
               col("o_totalprice").as("v"))
             .write.mode("overwrite").parquet(s"$base/v=$n")
         }
-        val root = new org.apache.hadoop.fs.Path(base)
-        val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration)
-        val versions = fs.listStatus(root).map(_.getPath.getName)
-          .filter(_.startsWith("v=")).map(_.drop(2).toInt).sorted
-        versions.dropRight(2).foreach { n =>
-          fs.delete(new org.apache.hadoop.fs.Path(s"$base/v=$n"), true)
-        }
-        val left = fs.listStatus(root).map(_.getPath.getName)
-          .count(_.startsWith("v="))
+        def versions = entryNames(s, base).filter(_.startsWith("v="))
+          .map(_.drop(2).toInt).sorted
+        versions.dropRight(2)
+          .foreach(n => Storage.deleteFolder(s, s"$base/v=$n"))
+        val left = versions.size
         def audit(n: Int) =
           Storage.readParquet(s, s"$base/v=$n")
             .agg(count(lit(1)).as("n_rows"), dsum(col("v"), 2).as("total"))
@@ -483,11 +479,8 @@ object IoQueries {
         val staged = out + ".stage"
         Conform.conformLenient(Storage.readParquet(s, out), v2)
           .write.mode("overwrite").parquet(staged)
-        val fs = new org.apache.hadoop.fs.Path(out)
-          .getFileSystem(s.sparkContext.hadoopConfiguration)
-        fs.delete(new org.apache.hadoop.fs.Path(out), true)
-        fs.rename(new org.apache.hadoop.fs.Path(staged),
-          new org.apache.hadoop.fs.Path(out))
+        Storage.deleteFolder(s, out)
+        Storage.moveFolder(s, staged, out)
         // generation 2: the evolved writer appends rows WITH the column
         orders(s, d).filter(col("o_orderkey") % 2 === 1)
           .select(col("o_orderkey"), col("o_totalprice"),
@@ -740,10 +733,7 @@ object IoQueries {
             "l_returnflag")
           .write.mode("overwrite").option("compression", "zstd")
           .parquet(out)
-        val fsys = new org.apache.hadoop.fs.Path(out)
-          .getFileSystem(s.sparkContext.hadoopConfiguration)
-        val files = fsys.listStatus(new org.apache.hadoop.fs.Path(out))
-          .map(_.getPath.getName).filter(_.endsWith(".parquet"))
+        val files = entryNames(s, out).filter(_.endsWith(".parquet"))
         require(files.nonEmpty && files.forall(_.contains(".zstd.")),
           s"expected zstd parquet files, found: ${files.mkString(",")}")
         Storage.readParquet(s, out)
@@ -780,8 +770,6 @@ object IoQueries {
         val back = s.read
           .schema("doc_id BIGINT, lang STRING, text STRING, shard INT")
           .json(s"$out/data")
-        val fs = new org.apache.hadoop.fs.Path(out)
-          .getFileSystem(s.sparkContext.hadoopConfiguration)
         val manifest = back.groupBy("shard")
           .agg(count(lit(1)).as("n_rows"),
             (sum(conv(substring(md5(concat(col("doc_id").cast("string"),
@@ -792,18 +780,18 @@ object IoQueries {
           .json(s"$out/_manifest")
         // per-shard file count audited off the real directory listing —
         // the repartition(shard) pins one file per shard dir
-        val dirs = fs.listStatus(new org.apache.hadoop.fs.Path(s"$out/data"))
-          .filter(_.getPath.getName.startsWith("shard="))
-        dirs.foreach { st =>
-          val n = fs.listStatus(st.getPath)
-            .count(_.getPath.getName.endsWith(".json"))
-          require(n == 1, s"expected 1 file in ${st.getPath}, found $n")
-        }
-        // the part files, not the directory: Spark would log the
-        // `_manifest` root as a hidden path on every read
+        entryNames(s, s"$out/data").filter(_.startsWith("shard="))
+          .map(shard => s"$out/data/$shard").foreach { dir =>
+            val n = entryNames(s, dir).count(_.endsWith(".json"))
+            require(n == 1, s"expected 1 file in $dir, found $n")
+          }
+        // the listed part files, not the directory (Spark would log the
+        // `_manifest` root as a hidden path) nor a glob (Spark would log
+        // that it names no metadata directory)
         s.read.schema("shard INT, n_rows BIGINT, checksum BIGINT, " +
             "n_files BIGINT")
-          .json(s"$out/_manifest/*.json")
+          .json(Storage.listFiles(s, s"$out/_manifest")
+            .filter(_.endsWith(".json")): _*)
           .select("shard", "n_files", "n_rows", "checksum")
           .orderBy("shard")
       },
@@ -833,9 +821,7 @@ object IoQueries {
       (s, d) => {
         import graft.engine.io.CommitLog
         val root = scratch(d, "partevo")
-        val fsys = new org.apache.hadoop.fs.Path(root)
-          .getFileSystem(s.sparkContext.hadoopConfiguration)
-        fsys.delete(new org.apache.hadoop.fs.Path(root), true)
+        Storage.deleteFolder(s, root)
         CommitLog.init(s, root)
         val cut = lit("1997-01-01").cast("timestamp")
         val early = orders(s, d).filter(col("o_orderdate") < cut)
@@ -879,13 +865,13 @@ object IoQueries {
             .write.option("maxRecordsPerFile", mrf)
             .partitionBy("y", "m").parquet(dir)
         }
-        def leafDirs(p: org.apache.hadoop.fs.Path): Long = {
-          val kids = fsys.listStatus(p).filter(_.isDirectory)
-            .filterNot(_.getPath.getName.startsWith("_"))
-          if (kids.isEmpty) 1L else kids.map(k => leafDirs(k.getPath)).sum
-        }
+        // every leaf directory a partitioned write makes holds a data
+        // file, so the leaves are the data files' distinct parents
+        def leafDirs(dir: String): Long = Storage.listFiles(s, dir)
+          .filter(_.endsWith(".parquet"))
+          .map(f => f.substring(0, f.lastIndexOf('/'))).distinct.size
         val audits = CommitLog.commits(s, root).map { c =>
-          val dataPath = new org.apache.hadoop.fs.Path(s"$root/${c.dataDir}")
+          val dataPath = s"$root/${c.dataDir}"
           CommitLog.readVersion(s, root, c.version)
             .agg(count(lit(1)).as("n_rows"),
               round(sum(col("v").cast(DecimalType(18, 4)))
@@ -940,10 +926,8 @@ object IoQueries {
         import graft.engine.io.CommitLog
         val srcRoot = scratch(d, "clone_src")
         val dstRoot = scratch(d, "clone_dst")
-        val fs = new org.apache.hadoop.fs.Path(srcRoot)
-          .getFileSystem(s.sparkContext.hadoopConfiguration)
-        fs.delete(new org.apache.hadoop.fs.Path(srcRoot), true)
-        fs.delete(new org.apache.hadoop.fs.Path(dstRoot), true)
+        Storage.deleteFolder(s, srcRoot)
+        Storage.deleteFolder(s, dstRoot)
         CommitLog.init(s, srcRoot)
         CommitLog.commit(s, srcRoot, "snapshot") { (dir, _) =>
           orders(s, d).filter(col("o_orderkey") % 3 === 0)
@@ -1154,24 +1138,14 @@ object IoQueries {
           // dictionary-size threshold and take this path anyway.
           .option("parquet.enable.dictionary#l_partkey", "false")
           .parquet(out)
-        val conf = s.sparkContext.hadoopConfiguration
-        val fsys = new org.apache.hadoop.fs.Path(out)
-          .getFileSystem(conf)
-        val files = fsys.listStatus(new org.apache.hadoop.fs.Path(out))
-          .map(_.getPath).filter(_.getName.endsWith(".parquet"))
+        val files = entryNames(s, out).filter(_.endsWith(".parquet"))
         require(files.nonEmpty, s"no parquet files written under $out")
-        files.foreach { p =>
-          val in = org.apache.parquet.hadoop.util.HadoopInputFile
-            .fromPath(p, conf)
-          val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-          try {
-            val ok = r.getFooter.getBlocks.asScala.forall(
-              _.getColumns.asScala.exists(c =>
-                c.getPath.toDotString == "l_partkey" &&
-                  c.getBloomFilterOffset >= 0))
-            require(ok, s"row group in ${p.getName} missing " +
-              "l_partkey bloom filter")
-          } finally r.close()
+        files.foreach { name =>
+          val ok = Storage.footer(s, s"$out/$name").getBlocks.asScala.forall(
+            _.getColumns.asScala.exists(c =>
+              c.getPath.toDotString == "l_partkey" &&
+                c.getBloomFilterOffset >= 0))
+          require(ok, s"row group in $name missing l_partkey bloom filter")
         }
         Storage.readParquet(s, out)
           .filter(col("l_partkey") % 1000 === 17)
@@ -1199,10 +1173,7 @@ object IoQueries {
           .select("doc_id", "lang", "n_chars")
           .write.mode("overwrite").option("compression", "gzip")
           .json(out)
-        val fsys = new org.apache.hadoop.fs.Path(out)
-          .getFileSystem(s.sparkContext.hadoopConfiguration)
-        val files = fsys.listStatus(new org.apache.hadoop.fs.Path(out))
-          .map(_.getPath.getName).filter(_.startsWith("part-"))
+        val files = entryNames(s, out).filter(_.startsWith("part-"))
         require(files.nonEmpty && files.forall(_.endsWith(".json.gz")),
           s"expected gzip json files, found: ${files.mkString(",")}")
         s.read.json(out)
@@ -1260,25 +1231,16 @@ object IoQueries {
           .write.mode("overwrite")
           .option("parquet.block.size", "65536")
           .parquet(out)
-        val conf = s.sparkContext.hadoopConfiguration
-        val fsys = new org.apache.hadoop.fs.Path(out)
-          .getFileSystem(conf)
-        val files = fsys.listStatus(new org.apache.hadoop.fs.Path(out))
-          .map(_.getPath).filter(_.getName.endsWith(".parquet"))
+        val files = entryNames(s, out).filter(_.endsWith(".parquet"))
         require(files.length == 1, s"expected 1 file, got ${files.length}")
-        val r = org.apache.parquet.hadoop.ParquetFileReader.open(
-          org.apache.parquet.hadoop.util.HadoopInputFile
-            .fromPath(files.head, conf))
-        try {
-          val blocks = r.getFooter.getBlocks.asScala
-          require(blocks.size >= 2,
-            s"expected >=2 row groups at 64 KiB block size, " +
-              s"got ${blocks.size}")
-          require(blocks.forall(_.getColumns.asScala.exists(c =>
-            c.getPath.toDotString == "l_orderkey" &&
-              c.getStatistics != null)),
-            "row group missing l_orderkey statistics")
-        } finally r.close()
+        val blocks = Storage.footer(s, s"$out/${files.head}").getBlocks.asScala
+        require(blocks.size >= 2,
+          s"expected >=2 row groups at 64 KiB block size, " +
+            s"got ${blocks.size}")
+        require(blocks.forall(_.getColumns.asScala.exists(c =>
+          c.getPath.toDotString == "l_orderkey" &&
+            c.getStatistics != null)),
+          "row group missing l_orderkey statistics")
         Storage.readParquet(s, out)
           .agg(count(lit(1)).as("n_rows"),
             countDistinct("l_orderkey").as("n_orders"),
@@ -1577,12 +1539,8 @@ object IoQueries {
       (s, d) => {
         val out = scratch(d, "corruptdir")
         nation(s, d).write.mode("overwrite").parquet(out)
-        val fs = new org.apache.hadoop.fs.Path(out)
-          .getFileSystem(s.sparkContext.hadoopConfiguration)
-        val bad = new org.apache.hadoop.fs.Path(out, "part-junk.parquet")
-        val os = fs.create(bad, true)
-        os.write("this is not a parquet file".getBytes("UTF-8"))
-        os.close()
+        Storage.writeString(s, s"$out/part-junk.parquet",
+          "this is not a parquet file")
         s.read.option("ignoreCorruptFiles", "true").parquet(out)
           .agg(count(lit(1)).as("n_rows"),
             countDistinct(col("n_nationkey")).as("n_keys"),

@@ -80,9 +80,7 @@ object Joins {
         val wh = s.conf.get("spark.sql.warehouse.dir")
         Seq("graft_orders_bq", "graft_customer_bq").foreach { t =>
           s.sql(s"DROP TABLE IF EXISTS $t")
-          val p = new org.apache.hadoop.fs.Path(s"$wh/$t")
-          p.getFileSystem(s.sparkContext.hadoopConfiguration)
-            .delete(p, true)
+          graft.engine.io.Storage.deleteFolder(s, s"$wh/$t")
         }
         graft.engine.ops.Scale.writeBucketed(
           orders(s, d), "graft_orders_bq", 8, Seq("o_custkey"))

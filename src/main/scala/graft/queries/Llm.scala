@@ -1083,14 +1083,7 @@ object Llm {
         val rComp = graft.engine.ml.Dedup.cacheTracked(results(compacted))
         val identical = rIdx.exceptAll(rComp).isEmpty &&
           rComp.exceptAll(rIdx).isEmpty
-        val filesAfter = {
-          val root = new org.apache.hadoop.fs.Path(compacted)
-          val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration)
-          fs.listStatus(root)
-            .filter(st => st.isDirectory && st.getPath.getName.startsWith("cell="))
-            .map(c => fs.listStatus(c.getPath)
-              .count(f => f.getPath.getName.endsWith(".parquet"))).max
-        }
+        val filesAfter = Similarity.cellSegments(s, compacted).map(_._2).max
         val nVectors = Storage.readParquet(s, compacted).count()
         Seq((nVectors, filesAfter, identical))
           .toDF("n_vectors", "max_files_per_cell", "search_identical")

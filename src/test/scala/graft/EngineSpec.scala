@@ -7,6 +7,7 @@ import graft.engine.ml.Multimodal.{MediaMeta, MediaRow}
 import graft.engine.udf.Udfs
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+import scala.jdk.CollectionConverters._
 
 /** Engine utility verbs: storage, catalog, multimodal plumbing, UDAF —
   * the reference-parity surface without SQL oracles (SURVEY §1.2, §2.9,
@@ -25,6 +26,21 @@ class EngineSpec extends AnyFunSuite with SparkFixture {
     assert(Storage.listFiles(spark, base).size === 2)
     Storage.copyFolder(spark, s"$base/a", s"$base/b")
     assert(Storage.readString(spark, s"$base/b/y.txt") === "hello")
+    // a move leaves no source and the same tree at the destination
+    assert(Storage.moveFolder(spark, s"$base/b", s"$base/c"))
+    assert(!Storage.exists(spark, s"$base/b"))
+    assert(Storage.listFolder(spark, s"$base/c").map(_.split('/').last) ===
+      Seq("x.json", "y.txt"))
+    assert(Storage.readString(spark, s"$base/c/x.json") === """{"k": 1}""")
+    // the full footer's row groups add up to the file's rows
+    spark.range(0, 50000).selectExpr("id", "id * 3 AS v").coalesce(1)
+      .write.option("parquet.block.size", "65536").parquet(s"$base/pq")
+    val file = Storage.listFiles(spark, s"$base/pq")
+      .filter(_.endsWith(".parquet")).head
+    val groups = Storage.footer(spark, file).getBlocks.asScala
+      .map(_.getRowCount)
+    assert(groups.size >= 2, groups)
+    assert(groups.sum === spark.read.parquet(file).count())
     assert(Storage.deleteFolder(spark, base))
     assert(!Storage.exists(spark, base))
     assert(Storage.listFolder(spark, base).isEmpty)

@@ -8,8 +8,9 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Parquet reads of the engine, the registry queries and the table
   * accessors go through [[graft.engine.io.Storage.readParquet]], which
   * keeps no state between calls, every engine memo is a
-  * [[graft.engine.Memo]], and only `engine/io` publishes a stored
-  * artifact or marks it complete. */
+  * [[graft.engine.Memo]], only `engine/io` publishes a stored
+  * artifact or marks it complete, and only `engine/io` touches the
+  * Hadoop file system or parquet-mr. */
 class ReadOwnerSpec extends AnyFunSuite {
 
   /** `file:line` of every line of `files` that `pattern` matches. */
@@ -68,6 +69,20 @@ class ReadOwnerSpec extends AnyFunSuite {
     // a line that is not a comment and names the marker or a rename
     val hits = matches(sources,
       """^(?!\s*(//|\*|/\*)).*(_SUCCESS|\.rename\()""".r)
+    assert(hits.isEmpty, hits.mkString("\n"))
+  }
+
+  test("only engine/io touches the Hadoop file system or parquet-mr") {
+    val root = Paths.get("src/main/scala/graft")
+    val io = root.resolve("engine/io")
+    assert(Files.isRegularFile(io.resolve("Storage.scala")))
+    val sources = Files.walk(root).iterator().asScala
+      .filter(f => f.toString.endsWith(".scala") && !f.startsWith(io)).toSeq
+    // a line that is not a comment and names a Hadoop or parquet-mr
+    // type, a file-system resolution or a Hadoop file copy
+    val hits = matches(sources, ("""^(?!\s*(//|\*|/\*)).*""" +
+      """(org\.apache\.hadoop|org\.apache\.parquet|\bgetFileSystem\b|""" +
+      """\bFileUtil\b)""").r)
     assert(hits.isEmpty, hits.mkString("\n"))
   }
 }

@@ -31,17 +31,20 @@ trait SparkFixture extends BeforeAndAfterAll { self: Suite =>
     (out, sc.statusTracker.getJobIdsForGroup(group).length)
   }
 
-  /** The `All paths were ignored` warnings `DataSource` logs while
-    * `body` runs: one per read whose only root Spark treats as hidden
-    * (a name starting with `_` or `.`). */
+  /** The path warnings Spark logs while `body` runs: `DataSource`'s
+    * `All paths were ignored`, one per read whose only root Spark treats
+    * as hidden (a name starting with `_` or `.`), and `FileStreamSink`'s
+    * `Assume no metadata directory`, one per read of a path that names
+    * no file, such as a glob. */
   protected def hiddenPathWarnings(body: => Any): Seq[String] = {
     import org.apache.logging.log4j.LogManager
     import org.apache.logging.log4j.core.{LogEvent, Logger}
     import org.apache.logging.log4j.core.appender.AbstractAppender
     import org.apache.logging.log4j.core.config.Property
-    val logger = LogManager.getLogger(
-      "org.apache.spark.sql.execution.datasources.DataSource")
-      .asInstanceOf[Logger]
+    val loggers = Seq(
+      "org.apache.spark.sql.execution.datasources.DataSource",
+      "org.apache.spark.sql.execution.streaming.sinks.FileStreamSink")
+      .map(LogManager.getLogger(_).asInstanceOf[Logger])
     val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     val appender = new AbstractAppender("hidden-path-warnings", null, null,
         true, Property.EMPTY_ARRAY) {
@@ -49,10 +52,12 @@ trait SparkFixture extends BeforeAndAfterAll { self: Suite =>
         seen.add(e.getMessage.getFormattedMessage)
     }
     appender.start()
-    logger.addAppender(appender)
+    loggers.foreach(_.addAppender(appender))
     try body
-    finally { logger.removeAppender(appender); appender.stop() }
-    seen.toArray.map(_.toString).filter(_.contains("All paths were ignored"))
+    finally { loggers.foreach(_.removeAppender(appender)); appender.stop() }
+    seen.toArray.map(_.toString).filter(m =>
+        m.contains("All paths were ignored") ||
+          m.contains("Assume no metadata directory"))
       .toSeq
   }
 }
