@@ -72,9 +72,4 @@ object TableMeta {
     }
     TableMeta(name, cols, str(j \ "location"), parts, str(j \ "description"))
   }
-
-  /** Derive metadata from a Spark schema (the reverse direction). */
-  def fromSchema(name: String, schema: StructType): TableMeta =
-    TableMeta(name, schema.fields.toSeq.map(f =>
-      ColumnMeta(f.name, TypeMap.fromSpark(f.dataType))))
 }

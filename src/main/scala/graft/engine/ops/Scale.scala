@@ -189,36 +189,6 @@ object Scale {
     within.unionByName(across).unionByName(across2)
   }
 
-  /** Two-level blocked cumulative sum — the parallel form of
-    * `SUM(v) OVER (PARTITION BY parts ORDER BY ord ROWS UNBOUNDED
-    * PRECEDING)` for LOW-CARDINALITY `parts` (a 3-value flag puts the
-    * whole corpus behind 3 window tasks; the max/median task-skew the
-    * guide's §2.5 calls out). Level 1 runs the window PARTITIONED BY
-    * (parts, blk) where `blk = blockOf(ord)` must be monotone
-    * non-decreasing in `ord` (e.g. `ord div 2^k`), so each task sorts
-    * one bounded block; level 2 prefixes the per-block sums with a
-    * window over the BLOCK-grain relation (domain-sized, tiny — the
-    * zval-histogram discipline) and broadcasts them back. Exact
-    * integer arithmetic throughout: cum is identical to the
-    * single-window form for any input. Requires `v` long-typed. */
-  def blockedCumSum(df: DataFrame, parts: Seq[String], ord: String,
-      v: String, blockOf: Column, out: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val b = df.withColumn("_blk", blockOf)
-    val w1 = Window.partitionBy((parts :+ "_blk").map(col): _*)
-      .orderBy(ord).rowsBetween(Window.unboundedPreceding, 0)
-    val within = b.withColumn("_cumw", sum(col(v)).over(w1))
-    val w2 = Window.partitionBy(parts.map(col): _*).orderBy("_blk")
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val prefix = b.groupBy((parts :+ "_blk").map(col): _*)
-      .agg(sum(col(v)).as("_bsum"))
-      .withColumn("_bpre", coalesce(sum(col("_bsum")).over(w2), lit(0L)))
-      .select((parts :+ "_blk").map(col) :+ col("_bpre"): _*)
-    within.join(broadcast(prefix), parts :+ "_blk")
-      .withColumn(out, col("_cumw") + col("_bpre"))
-      .drop("_blk", "_cumw", "_bpre")
-  }
-
   /** Range-repartition by a sort key before a sorted write — the layout
     * that makes downstream range predicates prune files. */
   def writeSortedByRange(df: DataFrame, path: String, sortCols: Seq[String],

@@ -1152,8 +1152,9 @@ object Aggregates {
           .agg(expr("CAST(sum(CAST(l_quantity AS BIGINT)) AS BIGINT)")
             .as("wsum"))
         val tot = h.groupBy("flag").agg(sum("wsum").as("wt"))
-        // (r14 note: blockedCumSum A/B'd here too — slower at this
-        // scale, same verdict as ml_spearman_corr; plain window stays.)
+        // (r14 note: a blocked cumulative sum was A/B'd here too — slower
+        // at this scale, same verdict as ml_spearman_corr; plain window
+        // stays.)
         val w = Window.partitionBy("flag").orderBy("cents")
           .rowsBetween(Window.unboundedPreceding, 0)
         h.withColumn("cw", sum("wsum").over(w))

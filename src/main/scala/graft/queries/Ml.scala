@@ -2670,11 +2670,10 @@ object Ml {
         val base = lineitem(s, d).select(col("l_returnflag").as("g"),
           col("l_quantity").cast(DecimalType(18, 2)).as("x"),
           col("l_extendedprice").cast(DecimalType(18, 2)).as("y"))
-        // (r14 note: a two-level blockedCumSum was A/B'd here to
+        // (r14 note: a two-level blocked cumulative sum was A/B'd here to
         // lift the |g|=3 window-task ceiling — the extra block
         // aggregate + prefix join measured SLOWER at this scale
-        // (2.3 vs 3.1 s, stable control); the plain window stays.
-        // Scale.blockedCumSum remains the device for true skew.)
+        // (2.3 vs 3.1 s, stable control); the plain window stays.)
         // (r15 note: verdict item 5's "both rank maps in one pass" —
         // stack (x, y) into (dim, v), one corpus aggregate, one
         // (g, dim)-partitioned window, filter per dim — was built and

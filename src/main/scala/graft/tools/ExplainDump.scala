@@ -1,5 +1,6 @@
 package graft.tools
 import java.nio.file.{Files, Paths}
+import org.apache.spark.sql.SparkSession
 
 /** Dump `.explain("formatted")` for named queries to plans/<tag>/<q>_<suffix>.txt —
   * the before/after plan evidence for optimization rounds.
@@ -11,13 +12,18 @@ import java.nio.file.{Files, Paths}
   */
 object ExplainDump {
   def main(args: Array[String]): Unit = {
-    val sfDir = args(0)
     val outDir = args(1)
-    val suffix = args(2)
-    val keys = args.drop(3)
-    val spark = Session.build(
+    val spark = Session.build(warehouseDir =
       Some(Paths.get(outDir, ".explain_wh").toAbsolutePath.toString))
     spark.sparkContext.setLogLevel("ERROR")
+    dump(spark, args(0), outDir, args(2), args.drop(3).toSeq)
+    spark.stop()
+  }
+
+  /** Write the formatted plan of each of `keys` over `sfDir` to
+    * `<outDir>/<key>_<suffix>.txt`. */
+  def dump(spark: SparkSession, sfDir: String, outDir: String,
+      suffix: String, keys: Seq[String]): Unit = {
     Files.createDirectories(Paths.get(outDir))
     keys.foreach { k =>
       val df = graft.SparkEntry.queries(k)(spark, sfDir)
@@ -27,6 +33,5 @@ object ExplainDump {
       graft.engine.ml.Dedup.unpersistTracked()
       println(s"wrote $outDir/${k}_$suffix.txt")
     }
-    spark.stop()
   }
 }

@@ -2,17 +2,19 @@ package graft.tools
 
 import org.apache.spark.sql.SparkSession
 
-/** The one session shape of the mains (`graft.Verify`, `graft.Bench`,
-  * `graft.Plans`, [[ExplainDump]], [[RecallProbe]]): `local[n]` with n
-  * from SPARK_GRAFT_CPUS (default 4), shuffle partitions = n, UTC
-  * session time zone, nanosecond parquet timestamps read as longs, no
-  * UI, and an optional warehouse dir. */
+/** The one graft session shape, for every session under `src/`: the
+  * mains (`graft.Verify`, `graft.Bench`, [[ExplainDump]],
+  * [[RecallProbe]]) build it with `cores` from SPARK_GRAFT_CPUS
+  * (default 4), the test suites' `SparkFixture` with its fixed 4.
+  * `local[cores]`, shuffle partitions = cores, UTC session time zone,
+  * nanosecond parquet timestamps read as longs (`Tables.events` fails
+  * fast without it), no UI, and an optional warehouse dir. */
 object Session {
-  def build(warehouseDir: Option[String] = None): SparkSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+  def build(cores: Int = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt,
+      warehouseDir: Option[String] = None): SparkSession = {
     val b = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
+      .master(s"local[$cores]")
+      .config("spark.sql.shuffle.partitions", cores.toString)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")

@@ -32,6 +32,15 @@ class PlanSpec extends AnyFunSuite with SparkFixture {
     assert(plan("join_broadcast").contains("BroadcastHashJoin"))
   }
 
+  test("ExplainDump writes join_broadcast's broadcast plan to <key>_<suffix>.txt") {
+    val out = java.nio.file.Files.createTempDirectory("graft_explain")
+    graft.tools.ExplainDump.dump(spark, sf, out.toString, "t",
+      Seq("join_broadcast"))
+    val dumped = java.nio.file.Files.readString(
+      out.resolve("join_broadcast_t.txt"))
+    assert(dumped.contains("BroadcastHashJoin"), dumped)
+  }
+
   test("join_multiway broadcasts every dimension side") {
     val p = plan("join_multiway")
     // lineitem⋈orders is the one big join; customer/nation/region broadcast

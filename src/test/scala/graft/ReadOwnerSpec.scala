@@ -9,8 +9,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * accessors go through [[graft.engine.io.Storage.readParquet]], which
   * keeps no state between calls, every engine memo is a
   * [[graft.engine.Memo]], only `engine/io` publishes a stored
-  * artifact or marks it complete, and only `engine/io` touches the
-  * Hadoop file system or parquet-mr. */
+  * artifact or marks it complete, only `engine/io` touches the
+  * Hadoop file system or parquet-mr, and every session is built by
+  * [[graft.tools.Session]]. */
 class ReadOwnerSpec extends AnyFunSuite {
 
   /** `file:line` of every line of `files` that `pattern` matches. */
@@ -83,6 +84,18 @@ class ReadOwnerSpec extends AnyFunSuite {
     val hits = matches(sources, ("""^(?!\s*(//|\*|/\*)).*""" +
       """(org\.apache\.hadoop|org\.apache\.parquet|\bgetFileSystem\b|""" +
       """\bFileUtil\b)""").r)
+    assert(hits.isEmpty, hits.mkString("\n"))
+  }
+
+  test("one session shape") {
+    val owner = Paths.get("src/main/scala/graft/tools/Session.scala")
+    assert(Files.isRegularFile(owner), owner)
+    val sources = Seq("src/main/scala", "src/test/scala")
+      .flatMap(d => Files.walk(Paths.get(d)).iterator().asScala)
+      .filter(f => f.toString.endsWith(".scala") && f != owner)
+    // a line that is not a comment and starts a session builder
+    val hits = matches(sources,
+      """^(?!\s*(//|\*|/\*)).*\bSparkSession\.builder\(""".r)
     assert(hits.isEmpty, hits.mkString("\n"))
   }
 }

@@ -64,14 +64,7 @@ trait SparkFixture extends BeforeAndAfterAll { self: Suite =>
 
 object SparkFixture {
   lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val s = graft.tools.Session.build(cores = 4)
     s.sparkContext.setLogLevel("WARN")
     s
   }
