@@ -27,14 +27,14 @@ object SparkEntry {
 
   /** One entry per implemented operator from SURVEY.md §2.
     *
-    * Registry contract note (r14): CONSTRUCTION IS NOT FREE for every
-    * key. A handful of queries (vec_pq, vec_kmeans, sample_coreset,
-    * agg_countmin_sweep, the event_markov_* family, …) eagerly run
-    * bounded Spark jobs at DataFrame-construction time — collecting a
-    * by-construction-bounded seed/codebook/sketch (the MLlib
-    * collect-and-broadcast shape) before returning the plan. Tooling
+    * Registry contract note: CONSTRUCTION IS NOT FREE for every key.
+    * Some queries run bounded Spark jobs while they build their
+    * DataFrame, collecting a by-construction-bounded seed, codebook,
+    * sketch or candidate pool (the MLlib collect-and-broadcast shape),
+    * and the IO keys write before they read. `WindowCensusSpec` pins
+    * which keys may do so and how many jobs each may launch. Tooling
     * that calls `queries(k)(spark, d)` just to inspect the plan pays
-    * that bounded execution; nothing is memoized across invocations. */
+    * that execution; nothing is memoized across invocations. */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
     all.map(q => q.name -> q.fn).toMap
 

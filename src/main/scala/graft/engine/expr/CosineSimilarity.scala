@@ -1,6 +1,7 @@
 package graft.engine.expr
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -44,25 +45,8 @@ case class CosineSimilarity(left: Expression, right: Expression)
   // form, which null-pads) — never a silently-wrong prefix similarity
   override def nullable: Boolean = true
 
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
-    val n = x.numElements()
-    if (n != y.numElements()) return null
-    var dot = 0.0
-    var na = 0.0
-    var nb = 0.0
-    var i = 0
-    while (i < n) {
-      val xi = x.getFloat(i).toDouble
-      val yi = y.getFloat(i).toDouble
-      dot += xi * yi
-      na += xi * xi
-      nb += yi * yi
-      i += 1
-    }
-    dot / (math.sqrt(na) * math.sqrt(nb))
-  }
+  override def nullSafeEval(a: Any, b: Any): Any =
+    CosineSimilarity.of(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
 
   override protected def doGenCode(ctx: CodegenContext,
       ev: ExprCode): ExprCode =
@@ -97,6 +81,31 @@ case class CosineSimilarity(left: Expression, right: Expression)
     copy(left = newLeft, right = newRight)
 }
 
+object CosineSimilarity {
+
+  /** The fold on the JVM side: index-ascending sums of x·y, x² and y²
+    * in double, then dot/(√na·√nb); null when the lengths differ.
+    * Interpreted evaluation and driver-side callers both run this one
+    * copy; `doGenCode` emits the same loop as Java. */
+  def of(x: ArrayData, y: ArrayData): java.lang.Double = {
+    val n = x.numElements()
+    if (n != y.numElements()) return null
+    var dot = 0.0
+    var na = 0.0
+    var nb = 0.0
+    var i = 0
+    while (i < n) {
+      val xi = x.getFloat(i).toDouble
+      val yi = y.getFloat(i).toDouble
+      dot += xi * yi
+      na += xi * xi
+      nb += yi * yi
+      i += 1
+    }
+    dot / (math.sqrt(na) * math.sqrt(nb))
+  }
+}
+
 /** Registration for the engine's native expressions. */
 object GraftFunctions {
 
@@ -121,10 +130,14 @@ object GraftFunctions {
     }))
 
   /** Idempotent per-session registration (for sessions not built with
-    * [[GraftExtensions]], e.g. the driver's own harness session). */
-  def ensureRegistered(spark: SparkSession): Unit =
+    * [[GraftExtensions]], e.g. the driver's own harness session): only
+    * the names the session's registry lacks are registered, so a repeat
+    * call replaces nothing. */
+  def ensureRegistered(spark: SparkSession): Unit = {
+    val registry = spark.sessionState.functionRegistry
     builders.foreach { case (name, builder) =>
-      spark.sessionState.functionRegistry
-        .createOrReplaceTempFunction(name, builder, "built-in")
+      if (!registry.functionExists(FunctionIdentifier(name)))
+        registry.createOrReplaceTempFunction(name, builder, "built-in")
     }
+  }
 }

@@ -702,6 +702,8 @@ object Dedup {
         .union(pairs.select(col("doc_b").as("src"),
           col("doc_a").as("dst")))
         .distinct())
+    // every round of the loop below reads the labels: cut them from the
+    // docs lineage (a local checkpoint is lost if an executor fails)
     var labels = docs.select(col("doc_id"),
       col("doc_id").as("keep_id")).localCheckpoint(true)
     var converged = false
@@ -717,7 +719,9 @@ object Dedup {
         .select(col("doc_id"),
           least(col("keep_id"),
             coalesce(col("neigh_keep"), col("keep_id"))).as("keep_id"))
-      // pointer halving: follow the label's own label one hop
+      // pointer halving: follow the label's own label one hop; the
+      // checkpoint cuts a lineage that grows each round until
+      // convergence (lost if an executor fails)
       val updated = propagated
         .join(propagated.select(col("doc_id").as("keep_id"),
           col("keep_id").as("root_keep")), Seq("keep_id"), "left")

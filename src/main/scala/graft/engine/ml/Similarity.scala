@@ -61,12 +61,15 @@ object Similarity {
   /** The scoring step every cosine probe search shares: over rows that
     * pair a probe `(probe_id, probe_emb)` with a corpus vector
     * `(vec_id, embedding)`, drop the probe's own vector and emit
-    * `(probe_id, vec_id, cos)` from the native fused cosine. */
-  private def probeCosines(joined: DataFrame): DataFrame = {
+    * `(probe_id, vec_id, cos, embedding)` from the native fused cosine.
+    * A caller that never reads `embedding` has it pruned before its
+    * rank window. */
+  private[graft] def probeCosines(joined: DataFrame): DataFrame = {
     GraftFunctions.ensureRegistered(joined.sparkSession)
     joined.filter(col("vec_id") =!= col("probe_id"))
       .select(col("probe_id"), col("vec_id"),
-        expr("graft_cosine(probe_emb, embedding)").as("cos"))
+        expr("graft_cosine(probe_emb, embedding)").as("cos"),
+        col("embedding"))
   }
 
   /** The per-probe ranking tail every cosine top-k path shares: rank

@@ -1081,12 +1081,9 @@ object Analytics {
       (s, d) => {
         // (r14 note: caching this edge relation was A/B'd and measured
         // slightly slower — ReuseExchange covers the 3 consumers.)
-        // r15 (verdict item 1): eager localCheckpoint instead — truncates
-        // the logical plan so the a1/h1/a2 chain and the final join no
-        // longer carry the join+distinct subtree 4×.
-        // localCheckpoint keeps the blocks executor-local: cheaper than a
-        // reliable checkpoint() but lost on executor failure, which then
-        // fails the query instead of recomputing the lineage.
+        // eager localCheckpoint: the a1/h1/a2 chain and the final join
+        // would each carry the join+distinct lineage again (4×); the
+        // blocks are lost if an executor fails, failing the query.
         val edges = orders(s, d).select(col("o_custkey"), col("o_orderkey"))
           .join(lineitem(s, d).select(col("l_orderkey").as("o_orderkey"),
             col("l_partkey")), Seq("o_orderkey"))
@@ -1653,14 +1650,9 @@ object Analytics {
             lineitem(s, d).select(col("l_partkey").as("pk"),
               col("l_suppkey").as("sk")), s"${d}_cosupply")
           .filter(col("w") >= 25)
-        // r15 (verdict item 1): eager localCheckpoint — the undirected
-        // relation is referenced by all 4 BFS-level joins plus the seed
-        // pick, and each level's plan otherwise carries (and AQE
-        // replans) the artifact-read+filter+union subtree of every
-        // previous level.
-        // localCheckpoint keeps the blocks executor-local: cheaper than a
-        // reliable checkpoint() but lost on executor failure, which then
-        // fails the query instead of recomputing the lineage.
+        // eager localCheckpoint: each BFS level would carry (and AQE
+        // replan) the read+filter+union lineage of every earlier level;
+        // the blocks are lost if an executor fails, failing the query.
         val und = e.select(col("a").as("u"), col("b").as("v"))
           .unionByName(e.select(col("b").as("u"), col("a").as("v")))
           .localCheckpoint(true)
@@ -2096,7 +2088,8 @@ object Analytics {
         // four consumers (both pair-join sides, n, ties) read the
         // materialized relation instead of re-scanning orders — at
         // 100 TB a 4× scan of the fact table is the real cost here
-        // (the Dedup.keepListFor localCheckpoint precedent)
+        // (the Dedup.keepListFor localCheckpoint precedent); the
+        // blocks are lost if an executor fails, failing the query
         val daily = dailyRevX(s, d)
           .localCheckpoint(true)
         val sStat = daily.as("a").join(daily.as("b"),
@@ -4388,14 +4381,10 @@ object Analytics {
         // ReuseExchange already dedups the distinct's exchanges, so the
         // cache only added a materialization barrier and measured
         // consistently SLOWER; left uncached.)
-        // r15 (verdict item 1): eager localCheckpoint instead — unlike
-        // a cache it TRUNCATES the logical plan, so the 3 iterate
-        // joins + the final total/rescale no longer carry (and AQE no
-        // longer replans) the scan+distinct subtree every round; the
-        // sim_search_mmr lesson.
-        // localCheckpoint keeps the blocks executor-local: cheaper than a
-        // reliable checkpoint() but lost on executor failure, which then
-        // fails the query instead of recomputing the lineage.
+        // eager localCheckpoint: unlike a cache it cuts the logical
+        // plan, so no iterate round carries (and AQE replans) the
+        // scan+distinct lineage again; the blocks are lost if an
+        // executor fails, failing the query.
         val edges = e0.select(col("a").as("src"), col("b").as("dst"))
           .union(e0.select(col("b").as("src"), col("a").as("dst")))
           .localCheckpoint(true)

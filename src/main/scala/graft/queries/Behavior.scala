@@ -42,20 +42,18 @@ object Behavior {
       .groupBy(col("event_type").as("u"), col("to_type").as("v"))
       .agg(count(lit(1)).as("wt"))
     val rowsum = edges.groupBy("u").agg(sum("wt").as("wu"))
-    // eager checkpoint: the transition relation is |types|²-bounded BY
-    // CONSTRUCTION (event types are a small closed vocabulary) and is
-    // consumed by the collect below plus the entropy caller's join
-    val trans = edges.join(rowsum, Seq("u")).localCheckpoint(true)
     // r14 (guide §1.2 step 1): the 8 power-iteration rounds previously
     // ran as nested 5-row join/aggregate plans — a caller tagging all 8
     // rounds paid ~36 AQE jobs of pure scheduling on relations of a few
-    // ROWS. The chain state is bounded by construction, so collect the
-    // transition matrix once (the countmin-sketch discipline) and run
-    // the identical exact-integer recurrence on the driver: Scala Long
-    // `*`, `/` (operands positive) and `+` reproduce Spark's non-ANSI
-    // long arithmetic bit-for-bit, so every pi_t value is unchanged —
-    // the oracle replays the same recurrence and still hash-matches.
-    val tRows = trans.select("u", "v", "wt", "wu").collect()
+    // ROWS. The transition relation is |types|²-bounded BY CONSTRUCTION
+    // (event types are a small closed vocabulary), so collect it once
+    // (the countmin-sketch discipline) and run the identical
+    // exact-integer recurrence on the driver: Scala Long `*`, `/`
+    // (operands positive) and `+` reproduce Spark's non-ANSI long
+    // arithmetic bit-for-bit, so every pi_t value is unchanged — the
+    // oracle replays the same recurrence and still hash-matches.
+    val tRows = edges.join(rowsum, Seq("u")).select("u", "v", "wt", "wu")
+      .collect()
       .map(r => (r.getString(0), r.getString(1), r.getLong(2),
         r.getLong(3)))
     val types = tRows.map(_._1).distinct.sorted.toSeq
@@ -72,6 +70,7 @@ object Behavior {
       pisBuf += pi
     }
     import s.implicits._
+    val trans = tRows.toSeq.toDF("u", "v", "wt", "wu")
     val pis = pisBuf.toSeq.map(m =>
       types.map(u => (u, m(u))).toDF("u", "pi"))
     (trans, pis)
@@ -1823,8 +1822,8 @@ object Behavior {
     // and no float ever enters the recursion (the small downward
     // drift from truncation is deterministic and identical). The
     // heavy pass is the one per-user lead() window; the iteration
-    // runs over the |types|²-bounded transition relation (8 chained
-    // domain-sized joins — bounded plan, no driver loop over data).
+    // runs on the driver over the collected |types|²-bounded
+    // transition relation (markovParts).
     Q("event_markov_stationary",
       (s, d) => {
         val (_, pis) = markovParts(s, d, 8)

@@ -2462,87 +2462,68 @@ GROUP BY source ORDER BY source"""),
     // λ·sim(probe, x) − (1−λ)·max_{s∈S} sim(x, s) with λ = 0.5, so
     // near-duplicates of an already-selected result are penalized —
     // the retrieval-side counterpart of SemDeDup's corpus-side
-    // pruning. Greedy selection is inherently sequential in k, so it
-    // runs as 4 unrolled selection stages over a top-16 candidate
-    // pool per probe (pool from the usual broadcast-probe scan +
-    // per-probe TakeOrdered window; the 16×16 pair-similarity
-    // relation is domain-sized). Parity: every cosine is the
-    // SEQUENTIAL plain-double HOF fold (bit-identical across
-    // engines), argmax ties break on vec_id, and each stage's argmax
-    // is a rank-1 window over a ≤16-row partition — deterministic
-    // selection, no order-sensitive float aggregation anywhere.
+    // pruning. The usual broadcast-probe scan + per-probe rank window
+    // keeps a top-16 pool per probe; the pool (≤ 16 × #labels rows) is
+    // collected once and the greedy picks, sequential in k, run on the
+    // driver. Parity: every cosine is the SEQUENTIAL plain-double fold
+    // (the pair cosines through the expression's own JVM copy), and
+    // every argmax orders as Spark does and breaks ties on vec_id.
     Q("sim_search_mmr",
       (s, d) => {
+        import org.apache.spark.sql.catalyst.util.{ArrayData, SQLOrderingUtil}
         import org.apache.spark.sql.expressions.Window
-        graft.engine.expr.GraftFunctions.ensureRegistered(s)
+        import graft.engine.expr.CosineSimilarity
+        import s.implicits._
         val emb = embeddings(s, d)
-        // native fused cosine (codegen) — bit-identical to the
-        // HOF-composed fold (CosineSimilarity scaladoc) and ~10×
-        // cheaper on the corpus-sized candidate scan
-        val scoredAll = emb
-          .crossJoin(broadcast(graft.engine.ml.Similarity.probes(emb)))
-          .filter(col("vec_id") =!= col("probe_id"))
-          .select(col("probe_id"), col("vec_id"), col("embedding"),
-            expr("graft_cosine(probe_emb, embedding)").as("cos"))
+        // the vectors ride along with their cosines: the rank-16 filter
+        // puts a partial group limit before the window's exchange, so
+        // at most 16 rows per probe and partition are shuffled
         val wP = Window.partitionBy("probe_id")
           .orderBy(desc("cos"), col("vec_id"))
-        // EAGER CHECKPOINT of the one corpus-cost stage: the rank
-        // window runs over NARROW (probe, vec, cos) rows — attaching
-        // the 64-float arrays before the window would shuffle them
-        // for every scored row; instead the 160 winners re-join the
-        // embedding relation afterwards. Unmaterialized, the greedy
-        // recursion below re-ran this scan ~15× (measured 15 s at
-        // sf0.1); checkpointed it runs once.
-        // (r14 note: a lazy tracked cache was tried here instead of the
-        // eager localCheckpoints — planning re-exploded to 19 s because
-        // only checkpointing truncates the LOGICAL plan; cache
-        // substitution still carries the 2^rounds analyzed tree. The
-        // eager checkpoints stay.)
-        val cand = scoredAll.drop("embedding")
+        val pool = Similarity.probeCosines(
+            emb.crossJoin(broadcast(Similarity.probes(emb))))
           .withColumn("rn", row_number().over(wP))
-          .filter(col("rn") <= 16).drop("rn")
-          .join(emb.select(col("vec_id"), col("embedding")),
-            Seq("vec_id"))
-          .localCheckpoint(true)
-        val pairs = cand.select(col("probe_id"), col("vec_id").as("av"),
-            col("embedding").as("aemb"))
-          .join(cand.select(col("probe_id"), col("vec_id").as("bv"),
-            col("embedding").as("bemb")), Seq("probe_id"))
-          .filter(col("av") =!= col("bv"))
-          .select(col("probe_id"), col("av"), col("bv"),
-            expr("graft_cosine(aemb, bemb)").as("pc"))
-          .localCheckpoint(true)
-        var sel = cand.withColumn("r0", row_number().over(wP))
-          .filter(col("r0") === 1)
-          .select(col("probe_id"), col("vec_id"),
-            lit(1L).as("rk"), col("cos").as("mmr"))
-        (2 to 5).foreach { t =>
-          val pen = pairs
-            .join(sel.select(col("probe_id"), col("vec_id").as("bv")),
-              Seq("probe_id", "bv"))
-            .groupBy(col("probe_id"), col("av"))
-            .agg(max("pc").as("pen"))
-          val scored = cand
-            .join(sel.select(col("probe_id"), col("vec_id")),
-              Seq("probe_id", "vec_id"), "left_anti")
-            .join(pen.select(col("probe_id"), col("av").as("vec_id"),
-              col("pen")), Seq("probe_id", "vec_id"))
-            .withColumn("score",
-              lit(0.5) * col("cos") - lit(0.5) * col("pen"))
-          val wS = Window.partitionBy("probe_id")
-            .orderBy(desc("score"), col("vec_id"))
-          val pick = scored.withColumn("r", row_number().over(wS))
-            .filter(col("r") === 1)
-            .select(col("probe_id"), col("vec_id"),
-              lit(t.toLong).as("rk"), col("score").as("mmr"))
-          // checkpoint the ≤40-row selection each stage: pick_t
-          // references sel_{t-1} twice (penalty join + anti-join), so
-          // the deferred chain doubles per stage — 2^4 nested
-          // subplans at collect time (measured 7 s of pure planning/
-          // scheduling on 2400 rows)
-          sel = sel.unionByName(pick).localCheckpoint(true)
+          .filter(col("rn") <= 16)
+          .select("probe_id", "vec_id", "cos", "embedding")
+          .collect()
+        // Spark's DESC NULLS LAST order on a double: NaN first, −0.0 = 0.0
+        def descOrder(a: Option[Double], b: Option[Double]): Int =
+          (a, b) match {
+            case (Some(x), Some(y)) => SQLOrderingUtil.compareDoubles(y, x)
+            case _ => a.isEmpty compare b.isEmpty
+          }
+        case class Cand(vec: Long, cos: Option[Double],
+            emb: Option[ArrayData], pen: Option[Double])
+        val picks = pool.groupBy(_.getLong(0)).toSeq.flatMap {
+          case (probe, rows) =>
+            var rest = rows.toSeq.map(r => Cand(r.getLong(1),
+              Option(r.get(2)).map(_.asInstanceOf[Double]),
+              if (r.isNullAt(3)) None
+              else Some(ArrayData.toArrayData(r.getSeq[Float](3).toArray)),
+              None))
+            val sel = scala.collection.mutable.ArrayBuffer[
+              (Long, Long, Long, Option[Double])]()
+            // the first pick is the most relevant; each later one is
+            // scored against its max pair cosine to the picks so far
+            def score(c: Cand): Option[Double] = if (sel.isEmpty) c.cos
+              else for (x <- c.cos; p <- c.pen) yield 0.5 * x - 0.5 * p
+            while (sel.length < 5 && rest.nonEmpty) {
+              val pick = rest.min(Ordering.fromLessThan[Cand] { (a, b) =>
+                val o = descOrder(score(a), score(b))
+                o < 0 || (o == 0 && a.vec < b.vec)
+              })
+              sel += ((probe, sel.length + 1L, pick.vec, score(pick)))
+              rest = rest.filter(_.vec != pick.vec).map { c =>
+                val pc = for (a <- c.emb; b <- pick.emb;
+                  v <- Option(CosineSimilarity.of(a, b))) yield v.doubleValue
+                // Spark's MAX: nulls skipped, a tie keeps the first
+                c.copy(pen = if (descOrder(pc, c.pen) < 0) pc else c.pen)
+              }
+            }
+            sel
         }
-        sel.select(col("probe_id"), col("rk"), col("vec_id"),
+        picks.toDF("probe_id", "rk", "vec_id", "mmr")
+          .select(col("probe_id"), col("rk"), col("vec_id"),
             round(col("mmr"), 6).as("mmr_score"))
           .orderBy("probe_id", "rk")
       }, {

@@ -241,6 +241,19 @@ class EngineSpec extends AnyFunSuite with SparkFixture {
     assert(fast === want)
   }
 
+  test("ensureRegistered twice replaces no registered function") {
+    val replaced = logged(
+      Seq("org.apache.spark.sql.catalyst.analysis.SimpleFunctionRegistry"),
+      Seq("replaced a previously registered function")) {
+      graft.engine.expr.GraftFunctions.ensureRegistered(spark)
+      graft.engine.expr.GraftFunctions.ensureRegistered(spark)
+    }
+    assert(replaced.isEmpty, replaced)
+    val one = Tables.embeddings(spark, sf).limit(1)
+      .select(expr("graft_cosine(embedding, embedding)")).head().getDouble(0)
+    assert(math.abs(one - 1.0) < 1e-12)
+  }
+
   test("graft_kmv sketch: k-th smallest distinct, merge-invariant") {
     graft.engine.expr.GraftFunctions.ensureRegistered(spark)
     import org.apache.spark.sql.expressions.Window

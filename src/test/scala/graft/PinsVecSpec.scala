@@ -8,7 +8,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * Bouldin and simplified silhouette, rebuilt from raw sf0.001
   * embeddings in plain Scala, mirroring the queries' exact
   * quantization points (per-dim DECIMAL(20,10) centroid sums,
-  * DECIMAL(24,12) squared terms, sequential distance folds).
+  * DECIMAL(24,12) squared terms, sequential distance folds). The
+  * greedy MMR selection of sim_search_mmr is rebuilt the same way,
+  * with its own cosine loop.
   */
 class PinsVecSpec extends AnyFunSuite with SparkFixture {
 
@@ -102,5 +104,53 @@ class PinsVecSpec extends AnyFunSuite with SparkFixture {
         1000000.0)
     // silhouette lives in [-1, 1]
     assert(mean >= -1.0 && mean <= 1.0)
+  }
+
+  test("sim_search_mmr matches a direct greedy MMR over each probe's " +
+      "top 16") {
+    def cos(a: Array[Double], b: Array[Double]): Double = {
+      var dot = 0.0
+      var na = 0.0
+      var nb = 0.0
+      for (i <- a.indices) {
+        dot += a(i) * b(i); na += a(i) * a(i); nb += b(i) * b(i)
+      }
+      dot / (math.sqrt(na) * math.sqrt(nb))
+    }
+    // best first: higher score, then lower vec_id
+    def better(x: (Long, Double), y: (Long, Double)): Boolean =
+      x._2 > y._2 || (x._2 == y._2 && x._1 < y._1)
+    val probes = vecs.groupBy(_._2).values.map(_.minBy(_._1)).toSeq
+      .sortBy(_._1)
+    val emb = vecs.map(v => v._1 -> v._3).toMap
+    val want = probes.flatMap { case (pid, _, pe) =>
+      val pool = vecs.filter(_._1 != pid).map(v => (v._1, cos(pe, v._3)))
+        .sortWith(better).take(16)
+      val picks = scala.collection.mutable.ArrayBuffer(pool.head)
+      while (picks.size < 5) {
+        val scored = pool.filterNot(c => picks.exists(_._1 == c._1))
+          .map { case (id, c) =>
+            (id, 0.5 * c - 0.5 * picks.map(p => cos(emb(id), emb(p._1))).max)
+          }
+        picks += scored.sortWith(better).head
+      }
+      picks.zipWithIndex.map { case ((id, sc), i) =>
+        (pid, i + 1L, id, r(sc, 6))
+      }
+    }
+    val got = q("sim_search_mmr").collect().map(rr =>
+      (rr.getLong(0), rr.getLong(1), rr.getLong(2), rr.getDouble(3))).toSeq
+    assert(want.size == 5 * probes.size)
+    assert(got.map(g => (g._1, g._2, g._3)) == want.map(w => (w._1, w._2, w._3)))
+    got.zip(want).foreach { case (g, w) =>
+      assert(math.abs(g._4 - w._4) < 1e-9, s"$g vs $w")
+    }
+    // the greedy pass diversifies: not every probe keeps the plain
+    // cosine top 5
+    assert(probes.exists { case (pid, _, pe) =>
+      val top5 = vecs.filter(_._1 != pid).map(v => (v._1, cos(pe, v._3)))
+        .sortWith(better).take(5).map(_._1).toSet
+      want.filter(_._1 == pid).map(_._3).toSet != top5
+    })
   }
 }

@@ -36,29 +36,35 @@ trait SparkFixture extends BeforeAndAfterAll { self: Suite =>
     * as hidden (a name starting with `_` or `.`), and `FileStreamSink`'s
     * `Assume no metadata directory`, one per read of a path that names
     * no file, such as a glob. */
-  protected def hiddenPathWarnings(body: => Any): Seq[String] = {
+  protected def hiddenPathWarnings(body: => Any): Seq[String] =
+    logged(Seq("org.apache.spark.sql.execution.datasources.DataSource",
+        "org.apache.spark.sql.execution.streaming.sinks.FileStreamSink"),
+      Seq("All paths were ignored", "Assume no metadata directory"))(body)
+
+  /** The messages the named loggers log while `body` runs that contain
+    * one of `patterns`. The appender sits on the root logger: one added
+    * to a logger that has no config of its own missed that logger's
+    * first events. */
+  protected def logged(loggerNames: Seq[String], patterns: Seq[String])(
+      body: => Any): Seq[String] = {
     import org.apache.logging.log4j.LogManager
     import org.apache.logging.log4j.core.{LogEvent, Logger}
     import org.apache.logging.log4j.core.appender.AbstractAppender
     import org.apache.logging.log4j.core.config.Property
-    val loggers = Seq(
-      "org.apache.spark.sql.execution.datasources.DataSource",
-      "org.apache.spark.sql.execution.streaming.sinks.FileStreamSink")
-      .map(LogManager.getLogger(_).asInstanceOf[Logger])
+    val root = LogManager.getRootLogger.asInstanceOf[Logger]
     val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val appender = new AbstractAppender("hidden-path-warnings", null, null,
+    val appender = new AbstractAppender("graft-test-warnings", null, null,
         true, Property.EMPTY_ARRAY) {
       override def append(e: LogEvent): Unit =
-        seen.add(e.getMessage.getFormattedMessage)
+        if (loggerNames.contains(e.getLoggerName))
+          seen.add(e.getMessage.getFormattedMessage)
     }
     appender.start()
-    loggers.foreach(_.addAppender(appender))
+    root.addAppender(appender)
     try body
-    finally { loggers.foreach(_.removeAppender(appender)); appender.stop() }
-    seen.toArray.map(_.toString).filter(m =>
-        m.contains("All paths were ignored") ||
-          m.contains("Assume no metadata directory"))
-      .toSeq
+    finally { root.removeAppender(appender); appender.stop() }
+    seen.toArray.map(_.toString)
+      .filter(m => patterns.exists(m.contains)).toSeq
   }
 }
 

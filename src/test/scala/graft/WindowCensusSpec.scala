@@ -35,6 +35,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * the census is meant to force. This suite is also the documented
   * rationale for the benign WindowExec single-partition WARNings the
   * verify run emits.
+  *
+  * The same walk is the build census: it counts the Spark jobs each
+  * key launches while it builds its DataFrame (before anything runs it)
+  * and fails on a key that launches more than `buildJobs` pins.
   */
 class WindowCensusSpec extends AnyFunSuite with SparkFixture {
 
@@ -205,16 +209,71 @@ class WindowCensusSpec extends AnyFunSuite with SparkFixture {
     case other            => other.children.forall(aggregatedOnPath)
   }
 
+  /** key -> the most Spark jobs its DataFrame construction may launch
+    * at sf0.001: the larger of a build over a cold and over a warm
+    * warehouse (artifacts built or reused). A key not listed may launch
+    * none. The IO keys write before they read; the others collect
+    * bounded state. Lower a count when a change lowers it; a new key or
+    * a higher count fails. */
+  private val buildJobs: Map[String, Int] = Map(
+    "agg_countmin_sweep" -> 4, "catalog_analyze" -> 7, "compact_files" -> 3,
+    "curate_apply" -> 15, "dedup_band_tuning" -> 3, "dedup_embedding" -> 3,
+    "dedup_embedding_knee" -> 3, "dedup_incremental" -> 2, "dedup_near" -> 4,
+    "delete_keyed" -> 2, "dq_observe" -> 1, "etl_idempotent_rerun" -> 4,
+    "etl_incremental_extract" -> 9, "etl_late_dimension" -> 4,
+    "event_markov_convergence" -> 5, "event_markov_entropy" -> 5,
+    "event_markov_stationary" -> 5, "evolve_add_column" -> 3,
+    "export_fixed_trailer" -> 3, "export_jsonl_sharded" -> 1,
+    "export_manifest" -> 4, "fn_transpose" -> 2, "graph_assortativity" -> 3,
+    "graph_closeness_sampled" -> 4, "graph_components" -> 5,
+    "graph_eigenvector_centrality" -> 2, "graph_hits" -> 3,
+    "graph_label_prop" -> 13, "graph_pagerank_personalized" -> 18,
+    "join_bloom_prefilter" -> 2, "join_bucketed" -> 2, "knn_graph" -> 3,
+    "maintain_cluster_rewrite" -> 7, "maintain_retention" -> 1,
+    "maintain_vacuum" -> 4, "mix_allocate" -> 6, "sample_coreset" -> 12,
+    "scan_binaryfile" -> 1, "scan_csv_dropmalformed" -> 1,
+    "scan_csv_formats" -> 1, "scan_csv_malformed" -> 1,
+    "scan_csv_multichar_delim" -> 1, "scan_csv_quoted" -> 1,
+    "scan_csv_roundtrip" -> 1, "scan_csv_union_evolve" -> 2,
+    "scan_glob_filtered" -> 5, "scan_ignore_corrupt" -> 2,
+    "scan_json_multiline" -> 2, "scan_jsonl_malformed" -> 1,
+    "scan_jsonl_roundtrip" -> 1, "scan_merge_schema" -> 3,
+    "scan_nested_filter_pushdown" -> 1, "scan_nested_pruning" -> 1,
+    "scan_orc_roundtrip" -> 1, "scan_row_index" -> 3, "scan_text" -> 1,
+    "scan_xml_roundtrip" -> 2, "sim_ann_ivf" -> 10,
+    "sim_ann_ivf_indexed" -> 9, "sim_ann_lsh" -> 6, "sim_index_append" -> 24,
+    "sim_index_compact" -> 30, "sim_search_batch" -> 4,
+    "sim_search_mmr" -> 5, "sink_bloom_filter" -> 1, "sink_gzip_jsonl" -> 2,
+    "sink_overwrite_dynamic" -> 2, "sink_partitioned" -> 1,
+    "sink_row_group_size" -> 1, "sink_sorted_stats" -> 3, "sink_zstd" -> 1,
+    "sql_ctas" -> 2, "sql_variables" -> 2, "stream_cdf_consume" -> 3,
+    "stream_foreach_batch" -> 13, "stream_restart_resume" -> 2,
+    "stream_state_read" -> 1, "table_changes" -> 3, "table_clone" -> 4,
+    "table_commit_log" -> 3, "table_partition_evolution" -> 6,
+    "table_time_travel" -> 2, "text_langid" -> 5,
+    "text_langid_confusion" -> 1, "text_langid_mismatch" -> 1,
+    "text_tokenize_unicode" -> 6, "time_mann_kendall" -> 2,
+    "vec_kmeans" -> 4, "vec_pq" -> 1, "vocab_bpe" -> 1,
+    "vocab_bpe_unicode" -> 1)
+
+  /** One build of every declared key, sorted by name: its physical plan
+    * (or why the build failed) and the jobs the build launched. Both
+    * tests read this one walk, so no key is built twice. */
+  private lazy val walk: Seq[(String, Either[String, SparkPlan], Int)] =
+    SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, q) =>
+      try {
+        val (df, jobs) = jobsOf(q(spark, sf))
+        (name, Right(df.queryExecution.sparkPlan), jobs)
+      } catch { case e: Throwable =>
+        (name, Left(s"plan construction failed: ${e.getMessage}"), 0)
+      }
+    }
+
   test("every unpartitioned WindowExec in all declared plans sits " +
       "above a limit or a declared grain-bounded relation") {
     val violations = scala.collection.mutable.ArrayBuffer[String]()
-    for ((name, q) <- SparkEntry.queries.toSeq.sortBy(_._1)) {
-      val plan =
-        try Some(q(spark, sf).queryExecution.sparkPlan)
-        catch { case e: Throwable =>
-          violations += s"$name: plan construction failed: ${e.getMessage}"
-          None
-        }
+    for ((name, plan, _) <- walk) {
+      plan.left.foreach(e => violations += s"$name: $e")
       plan.foreach { p =>
         val globals = p.collect {
           case w: WindowExec if w.partitionSpec.isEmpty => w
@@ -232,6 +291,22 @@ class WindowCensusSpec extends AnyFunSuite with SparkFixture {
     assert(violations.isEmpty,
       s"${violations.size} census violations:\n" +
         violations.mkString("\n---\n"))
+  }
+
+  test("no key launches more jobs while it builds than the build " +
+      "census pins") {
+    val launching = walk.filter(_._3 > 0)
+    info(s"build census: ${launching.size} keys launch " +
+      s"${launching.map(_._3).sum} jobs")
+    val over = launching.collect {
+      case (name, _, jobs) if jobs > buildJobs.getOrElse(name, 0) =>
+        s""""$name" -> $jobs (pinned ${buildJobs.getOrElse(name, 0)})"""
+    }
+    if (over.nonEmpty)
+      fail(s"${over.size} keys over their build-job pin:\n" +
+        over.mkString("\n"))
+    val stale = buildJobs.keySet -- SparkEntry.queries.keySet
+    assert(stale.isEmpty, s"pins for keys that no longer exist: $stale")
   }
 
   test("the join(limited-leg, corpus-leg) loophole is caught: a limit " +
